@@ -1,18 +1,19 @@
 """Tracked persist discipline for query-level intermediates.
 
-Operators that persist shared intermediates (dedup, decontam,
-itemsets) each carry a module-local ``_TRACKED`` list plus a
-``release_*_cache()`` sweep so a long-lived session never accumulates
-cached blocks across invocations. Query modules (pipeline5's DSIR
-features, pipeline8's langid features) had the same persists but NO
-tracking (VERDICT r10 wrong#1) — bench hid it behind its inter-query
-``clearCache()``, but a production session calling those queries
-repeatedly grew the block-manager set without bound.
-
-This module is the shared form: ``persist_tracked(df)`` registers the
-frame, and every caller's entry point starts with
-``release_query_cache()`` — so at most one invocation's intermediates
-are ever cached, exactly the operator-module contract.
+Spark's CacheManager pins a persisted plan until an explicit
+unpersist, so a library that persists inside operators or queries and
+never releases leaks executor storage across invocations (ADVICE r3;
+VERDICT r10 wrong#1 for the query modules). Every persisting entry
+point — the dedup pair generators, ``contamination_report_bloom``,
+``pair_affinity``, and the DSIR / langid / token-bucket query
+features — registers its frames here with ``persist_tracked(df)`` and
+starts with ``release_query_cache()``. Laziness is preserved (the
+frames a returned DataFrame needs stay hot until the NEXT persisting
+entry point runs), storage is bounded to one invocation, and an early
+release only ever costs a recompute, never correctness. This module
+holds the one registry; ``release_query_cache()`` is also public so
+long-lived applications can drop the last invocation's frames once
+its result has been consumed.
 
 Concurrency contract (ADVICE r11): the registry assumes SEQUENTIAL
 query invocations — every entry point's ``release_query_cache()``

@@ -27,25 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mapreducewordcount_spark.cache import persist_tracked, release_query_cache
 from mapreducewordcount_spark.functions.text_metrics import shingles
-
-#: frames persisted by the CURRENT contamination_report_bloom call —
-#: same bounded-storage discipline as operators/dedup.py._TRACKED:
-#: the next call (or an explicit release) unpersists them, so library
-#: callers never leak cached partitions across invocations.
-_TRACKED: list[DataFrame] = []
-
-
-def release_decontam_cache() -> None:
-    """Unpersist intermediates persisted by prior decontam calls."""
-    while _TRACKED:
-        _TRACKED.pop().unpersist()
-
-
-def _persist_tracked(df: DataFrame) -> DataFrame:
-    df = df.persist()
-    _TRACKED.append(df)
-    return df
 
 
 def eval_ngram_set(eval_docs: DataFrame, text_col: str = "text",
@@ -229,14 +212,14 @@ def contamination_report_bloom(train: DataFrame, eval_docs: DataFrame,
     side is only the Bloom survivors — AQE picks the strategy.
 
     The eval n-gram frame is persisted (the Bloom build and the
-    exact-verify join both consume it) through the same
-    tracked-cache discipline as ``operators/dedup.py``: each call
-    releases the PREVIOUS call's frame, so repeated library calls in
-    one session never accumulate cached partitions (ADVICE r7);
-    long-lived applications can drop the last frame explicitly via
-    :func:`release_decontam_cache` once the result is consumed."""
-    release_decontam_cache()
-    ngrams = _persist_tracked(eval_ngram_set(eval_docs, text_col, n))
+    exact-verify join both consume it) through ``cache.py``'s
+    tracked registry: each call releases the PREVIOUS invocation's
+    frames, so repeated library calls in one session never accumulate
+    cached partitions (ADVICE r7); long-lived applications can drop
+    the last frame explicitly via ``release_query_cache`` once the
+    result is consumed."""
+    release_query_cache()
+    ngrams = persist_tracked(eval_ngram_set(eval_docs, text_col, n))
     bits, m = bloom_ngram_filter(ngrams, "ngram", bits_per_elem, k)
     exploded = (train
                 .select(F.col(id_col), F.explode_outer(

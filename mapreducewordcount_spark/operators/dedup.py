@@ -30,40 +30,12 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from mapreducewordcount_spark.cache import persist_tracked, release_query_cache
 from mapreducewordcount_spark.functions.text_metrics import (
     fingerprint_md5,
     shingles,
     winnow_select,
 )
-
-
-#: intermediate frames persisted by the CURRENT pair-generator
-#: invocation. Spark's CacheManager pins persisted plans until an
-#: explicit unpersist, so a library that persists inside operators
-#: and never releases leaks executor storage across invocations
-#: (ADVICE r3). Each pair generator releases the previous
-#: invocation's frames on entry — laziness is preserved (the frames
-#: a returned DataFrame needs stay hot until the NEXT dedup call),
-#: storage is bounded to one invocation, and an early release only
-#: ever costs a recompute, never correctness.
-_TRACKED: list[DataFrame] = []
-
-
-def release_dedup_cache() -> None:
-    """Unpersist intermediates persisted by prior dedup invocations.
-
-    Called automatically at the start of every pair generator; also
-    public so long-lived applications can drop the last invocation's
-    frames once its result has been consumed.
-    """
-    while _TRACKED:
-        _TRACKED.pop().unpersist()
-
-
-def _persist_tracked(df: DataFrame) -> DataFrame:
-    df = df.persist()
-    _TRACKED.append(df)
-    return df
 
 
 def exact_dedup(docs: DataFrame, id_col: str = "doc_id",
@@ -111,8 +83,8 @@ def shingle_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
     """
     # materialized once: sizes, and both sides of the self-join,
     # otherwise re-tokenize the corpus per reference
-    release_dedup_cache()
-    sh = _persist_tracked(_doc_shingles(docs, id_col, text_col, n))
+    release_query_cache()
+    sh = persist_tracked(_doc_shingles(docs, id_col, text_col, n))
     sizes = sh.select("doc_id", F.size("shingles").alias("n_sh"))
     exploded = sh.select("doc_id", F.explode("shingles").alias("sh"))
     a, b = exploded.alias("a"), exploded.alias("b")
@@ -169,8 +141,8 @@ def prefix_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
     t = float(threshold)
     if not 0.0 < t <= 1.0:
         raise ValueError(f"threshold={t} must be in (0, 1]")
-    release_dedup_cache()
-    sh = _persist_tracked(_doc_shingles(docs, id_col, text_col, n))
+    release_query_cache()
+    sh = persist_tracked(_doc_shingles(docs, id_col, text_col, n))
     tok = sh.select("doc_id", F.size("shingles").alias("sz"),
                     F.explode("shingles").alias("e"))
     df_freq = tok.groupBy("e").agg(F.count(F.lit(1)).alias("df"))
@@ -180,7 +152,7 @@ def prefix_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
     # self-join — without it Catalyst recomputes the df-join + window
     # lineage twice (the round-1 "materialize frames referenced by
     # multiple joins" lesson; measured −44% at sf0.1)
-    prefix = _persist_tracked(
+    prefix = persist_tracked(
         tok.join(df_freq, "e")
         .withColumn("pos", F.row_number().over(w))
         .filter(F.col("pos") <= p_len)
@@ -214,38 +186,18 @@ def prefix_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
             .select("a_id", "b_id", F.round("jaccard", 4).alias("jaccard")))
 
 
-def minhash_signatures(docs: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text", n: int = 3,
-                       num_hashes: int = 64) -> DataFrame:
-    """doc_id + array<long> MinHash signature over n-gram shingles.
-
-    Hash family: each shingle is string-hashed ONCE (``xxhash64``,
-    deterministic, JVM-side), then the ``num_hashes`` permutations
-    are cheap universal hashes ``(a_i·h + b_i) mod p`` over the base
-    value — the standard one-hash MinHash construction; string
-    hashing (the dominant cost) stays O(|shingles|) instead of
-    O(|shingles|×64).
-
-    ``p`` is the Mersenne prime 2^31-1 with base hashes and
-    coefficients folded into [0, p): the product stays < 2^62 (no
-    long overflow, ANSI-safe) while wrapping the modulus ~2^31 times,
-    which is what makes the map well-mixed. (A modulus at or above
-    the product range wraps ≤ once, leaving the map
-    piecewise-monotonic in h — the "permutations" are then all
-    correlated and the min-wise property collapses; caught by a
-    planted-pair recall test.)
-
-    Computed per-row via ``array_min(transform(...))`` —
-    embarrassingly parallel, zero shuffle (the explode+groupBy
-    formulation pushes |docs|×|shingles| rows through a 64-column min
-    aggregation; this touches each doc once in place).
-    """
-    sh = _doc_shingles(docs, id_col, text_col, n)
-    return _signatures_from_shingles(sh, num_hashes)
-
-
 def _signatures_from_shingles(sh: DataFrame, num_hashes: int) -> DataFrame:
-    """(doc_id, shingles) → (doc_id, signature array<long>)."""
+    """(doc_id, shingles) → (doc_id, signature array<long>).
+
+    Hash family: each shingle is string-hashed ONCE (``xxhash64``),
+    then the ``num_hashes`` permutations are universal hashes
+    ``(a_i·h + b_i) mod p`` over the base value, with ``p`` the
+    Mersenne prime 2^31-1 and base hashes and coefficients folded into
+    [0, p): the product stays < 2^62 (ANSI-safe) while wrapping the
+    modulus ~2^31 times, which is what makes the map well-mixed. A
+    modulus at or above the product range leaves the map
+    piecewise-monotonic in h and the min-wise property collapses
+    (caught by a planted-pair recall test)."""
     p = (1 << 31) - 1  # Mersenne prime
     coeffs = _permutation_coeffs(num_hashes)
     # 64 parallel array_min(transform(...)) expressions: pays a one-time
@@ -307,8 +259,8 @@ def minhash_lsh_pairs(docs: DataFrame, id_col: str = "doc_id",
     round-1 bench tail); persisted blocks materialize inside the live
     execution and read back clean.
     """
-    release_dedup_cache()
-    sh = _persist_tracked(_doc_shingles(docs, id_col, text_col, n))
+    release_query_cache()
+    sh = persist_tracked(_doc_shingles(docs, id_col, text_col, n))
     banded = _banded_signatures(sh, num_hashes, bands)
     a, b = banded.alias("a"), banded.alias("b")
     candidates = (a.join(b, (F.col("a.band") == F.col("b.band"))
@@ -355,7 +307,7 @@ def _banded_signatures(sh: DataFrame, num_hashes: int,
             f"CAST(signature[{b * rows + r}] AS STRING)"
             for r in range(rows)) + "))"
         for b in range(bands)) + ")"
-    return _persist_tracked(sig.select(
+    return persist_tracked(sig.select(
         "doc_id",
         F.posexplode(F.expr(band_arr)).alias("band", "band_hash")))
 
@@ -376,9 +328,9 @@ def minhash_lsh_cross_pairs(index_docs: DataFrame, batch_docs: DataFrame,
     instead of O(index²-shaped) work. Output (index_id, batch_id,
     jaccard ≥ threshold), exact-verified like the self-join form.
     """
-    release_dedup_cache()
-    sh_i = _persist_tracked(_doc_shingles(index_docs, id_col, text_col, n))
-    sh_b = _persist_tracked(_doc_shingles(batch_docs, id_col, text_col, n))
+    release_query_cache()
+    sh_i = persist_tracked(_doc_shingles(index_docs, id_col, text_col, n))
+    sh_b = persist_tracked(_doc_shingles(batch_docs, id_col, text_col, n))
     banded_i = _banded_signatures(sh_i, num_hashes, bands)
     banded_b = _banded_signatures(sh_b, num_hashes, bands)
     i, b = banded_i.alias("i"), banded_b.alias("b")
@@ -591,7 +543,7 @@ def simhash_pairs(docs: DataFrame, id_col: str = "doc_id",
     Empty documents emit NO signature row — see ``simhash_docs``.
     """
     sim = simhash_docs(docs, id_col, text_col)
-    release_dedup_cache()
+    release_query_cache()
     return signature_hamming_pairs(sim, id_col="doc_id",
                                    sig_col="simhash",
                                    max_hamming=max_hamming)
@@ -676,15 +628,15 @@ def signature_hamming_pairs(sigs: DataFrame, id_col: str = "doc_id",
     the shuffle moves signatures, never the underlying content.
     """
     band_plan = hamming_band_plan(max_hamming)  # validates the radius
-    release_dedup_cache()  # bound storage to this invocation (honest-cold)
-    sig = _persist_tracked(
+    release_query_cache()  # bound storage to this invocation (honest-cold)
+    sig = persist_tracked(
         sigs.select(F.col(id_col).alias("doc_id"),
                     F.col(sig_col).alias("__sig")))
 
     if collapse_identical:
         # one representative per distinct signature (min id), via a
         # partial-aggregable groupBy — never a window over __sig
-        reps = _persist_tracked(
+        reps = persist_tracked(
             sig.groupBy("__sig").agg(F.min("doc_id").alias("doc_id")))
         star = (sig.join(reps.select("__sig",
                                      F.col("doc_id").alias("__rep")),
@@ -747,8 +699,8 @@ def embedding_dup_pairs(embeddings: DataFrame, id_col: str = "vec_id",
     from mapreducewordcount_spark.functions.vectors import dot, norm
     from mapreducewordcount_spark.sources.tables import spread
 
-    release_dedup_cache()
-    v = _persist_tracked(
+    release_query_cache()
+    v = persist_tracked(
         spread(embeddings)
         .select(F.col(id_col).alias("id"),
                 F.col(vec_col).alias("vec"),
@@ -814,8 +766,8 @@ def lsh_candidate_pairs(embeddings: DataFrame, id_col: str = "vec_id",
         band_width = derive_band_width(n)
     planes = _fixed_planes(dim, n_bands * band_width)
     mk_keys = band_keys_udf(planes, n_bands, band_width)
-    release_dedup_cache()
-    sig = _persist_tracked(
+    release_query_cache()
+    sig = persist_tracked(
         spread(embeddings)
         .select(F.col(id_col).alias("id"),
                 F.col(vec_col).alias("vec"),
@@ -980,8 +932,8 @@ def winnow_pairs(docs: DataFrame, id_col: str = "doc_id",
     quadratically within their bucket only; drop-list them upstream
     the way a production pipeline drops stop-shingles.
     """
-    release_dedup_cache()
-    fp = _persist_tracked(winnow_fingerprint_docs(docs, id_col, text_col, n, w))
+    release_query_cache()
+    fp = persist_tracked(winnow_fingerprint_docs(docs, id_col, text_col, n, w))
     exploded = fp.select("doc_id", F.explode("selected").alias("h"))
     a, b = exploded.alias("a"), exploded.alias("b")
     return (a.join(b, (F.col("a.h") == F.col("b.h"))

@@ -34,14 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_TRACKED: list[DataFrame] = []
-
-
-def release_itemsets_cache() -> None:
-    """Unpersist intermediates persisted by prior pair_affinity
-    invocations (the operators/dedup.py cache discipline)."""
-    while _TRACKED:
-        _TRACKED.pop().unpersist()
+from mapreducewordcount_spark.cache import persist_tracked, release_query_cache
 
 
 def basket_sets(items: DataFrame, basket_col: str, item_col: str,
@@ -123,14 +116,14 @@ def pair_affinity(items: DataFrame, basket_col: str, item_col: str,
     broadcast cross join for N. The min-support filter runs BEFORE
     the joins, so only surviving pairs pay join cost.
     """
-    release_itemsets_cache()
+    release_query_cache()
     # three consumers (pair counts, marginals, N) reference the basket
     # frame; unpersisted, Catalyst re-runs the fact-table scan + basket
     # shuffle once PER consumer (seen as 3× the exchanges in the plan —
     # the round-1 "materialize frames referenced by multiple joins"
     # lesson). Persisted, the groupBy lineage runs once.
-    sets = basket_sets(items, basket_col, item_col, max_basket).persist()
-    _TRACKED.append(sets)
+    sets = persist_tracked(basket_sets(items, basket_col, item_col,
+                                       max_basket))
     exploded = sets.select("basket", F.explode("items").alias("item"))
     n_baskets = sets.agg(
         F.count(F.lit(1)).alias("n_baskets"))

@@ -51,10 +51,6 @@ def word_counts(lines: DataFrame, text_col: str = "value",
     return words.groupBy("word").agg(F.count(F.lit(1)).alias("count"))
 
 
-def with_bucket(counts: DataFrame, m: int, word_col: str = "word") -> DataFrame:
-    return counts.withColumn("bucket", bucket_expr(word_col, m))
-
-
 def wordcount_pipeline(spark: SparkSession, input_dir: str,
                        mode: str = "native") -> DataFrame:
     """End-to-end: corpus directory → word counts."""

@@ -44,43 +44,17 @@ REPO_ROOT = Path(__file__).resolve().parents[2]
 ARTIFACT_ROOT = REPO_ROOT / "artifacts" / "sig_oracle"
 
 
-
-def _stat_memo(df, attr: str, compute):
-    """Memoize a per-table integer statistic on a fingerprint-guarded
-    table handle (round 13). Only handles produced by the load_table
-    cache are eligible: their object identity is tied to the file
-    bytes (a rewrite yields a new handle), so the memo can never serve
-    a stale statistic. Ad-hoc frames always recompute — the corpus
-    keys are one small agg job, the memo just stops ~20 artifact
-    queries from re-running it on every invocation."""
-    eligible = getattr(df, "_mrwc_from_table_cache", False)
-    if eligible:
-        hit = getattr(df, attr, None)
-        if hit is not None:
-            return hit
-    val = compute()
-    if eligible:
-        try:
-            setattr(df, attr, val)
-        except Exception:  # noqa: BLE001
-            pass
-    return val
-
-
 def corpus_key(docs: DataFrame) -> tuple[int, int]:
     """(n_rows, total text chars) — the cross-engine corpus id.
 
     Distinguishes every driver corpus (sf0.001 and sf0.01 both have
     500 docs but 153,156 vs 149,174 chars); DuckDB computes the same
-    pair as ``(count(*), sum(length(text)))``. Memoized on
-    fingerprint-guarded table handles (see ``_stat_memo``).
+    pair as ``(count(*), sum(length(text)))``. One small aggregate
+    job per call.
     """
-    def compute():
-        row = docs.agg(F.count(F.lit(1)).alias("n"),
-                       F.sum(F.length("text")).alias("chars")).first()
-        return int(row.n), int(row.chars or 0)
-
-    return _stat_memo(docs, "_mrwc_doc_key", compute)
+    row = docs.agg(F.count(F.lit(1)).alias("n"),
+                   F.sum(F.length("text")).alias("chars")).first()
+    return int(row.n), int(row.chars or 0)
 
 
 #: DuckDB-side expressions for the documents corpus key — must stay
@@ -120,12 +94,9 @@ LINEITEM_KEY_SQL = (
 def lineitem_corpus_key(l: DataFrame) -> tuple[int, int]:
     """(n_rows, Σ l_orderkey) — the lineitem analog of ``corpus_key``
     for artifacts whose model table derives from the fact table."""
-    def compute():
-        row = l.agg(F.count(F.lit(1)).alias("n"),
-                    F.sum("l_orderkey").alias("s")).first()
-        return int(row.n), int(row.s or 0)
-
-    return _stat_memo(l, "_mrwc_li_key", compute)
+    row = l.agg(F.count(F.lit(1)).alias("n"),
+                F.sum("l_orderkey").alias("s")).first()
+    return int(row.n), int(row.s or 0)
 
 
 def embeddings_corpus_key(emb: DataFrame,
@@ -134,15 +105,12 @@ def embeddings_corpus_key(emb: DataFrame,
     analog of ``corpus_key``: sf0.001 and sf0.01 both have 500
     vectors, but the floor-sums differ (-1712 vs 826). Integer-only
     on both engines, so the artifact WHERE clause matches exactly."""
-    def compute():
-        row = emb.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.floor(F.col(vec_col)[0].cast("double") * 1000)
-                  .cast("long")).alias("s")
-        ).first()
-        return int(row.n), int(row.s or 0)
-
-    return _stat_memo(emb, f"_mrwc_emb_key_{vec_col}", compute)
+    row = emb.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.floor(F.col(vec_col)[0].cast("double") * 1000)
+              .cast("long")).alias("s")
+    ).first()
+    return int(row.n), int(row.s or 0)
 
 
 #: (query_name, key) families whose artifact THIS process already

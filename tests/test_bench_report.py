@@ -15,6 +15,7 @@ def test_emit_orders_line_and_writes_artifact(tmp_path, monkeypatch,
     import bench
 
     monkeypatch.setattr(bench, "_REPO", str(tmp_path))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "4")
     report = {"metric": "headline_total", "value": 1.0, "unit": "sec",
               "core_total": 0.5, "queries": {"q1": 0.1, "q2": 0.2},
               "sf": "x", "env": [{"start": {"big": "blob" * 100}}]}
@@ -36,6 +37,12 @@ def test_emit_orders_line_and_writes_artifact(tmp_path, monkeypatch,
     # bench_latest.json stays as the mutable convenience copy
     latest = json.load(open(tmp_path / "artifacts" / "bench_latest.json"))
     assert latest == art
+    # the headline summary is named by round AND core count, so a run
+    # on another core count cannot shadow it
+    assert [p.name for p in tmp_path.glob("BENCH_SUMMARY_*")] == \
+        ["BENCH_SUMMARY_r1_c4.json"]
+    summary = json.load(open(tmp_path / "BENCH_SUMMARY_r1_c4.json"))
+    assert summary["cpus"] == 4 and summary["round"] == 1
 
 
 def test_emit_per_round_artifacts_are_immutable(tmp_path, monkeypatch,

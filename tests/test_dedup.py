@@ -303,13 +303,15 @@ def test_pair_generators_release_prior_invocation_cache(spark):
     invocation's intermediate frames (ADVICE r3: persist-without-
     unpersist leaked executor storage for the app lifetime), while
     the current invocation's frames stay hot for its consumer."""
-    dd.release_dedup_cache()
+    from mapreducewordcount_spark import cache
+
+    cache.release_query_cache()
     docs = spark.createDataFrame(
         [(i, f"u{i} a b c d e") for i in range(6)],
         "doc_id long, text string")
     dd.shingle_jaccard_pairs(docs).collect()
-    assert len(dd._TRACKED) == 1
-    first = dd._TRACKED[0]
+    assert len(cache._TRACKED) == 1
+    first = cache._TRACKED[0]
     assert first.storageLevel.useMemory  # hot for its own consumer
 
     # different source → different plan: otherwise storageLevel (a
@@ -321,10 +323,10 @@ def test_pair_generators_release_prior_invocation_cache(spark):
     dd.minhash_lsh_pairs(other).collect()
     # the previous invocation's frame was released...
     assert not first.storageLevel.useMemory
-    assert all(f is not first for f in dd._TRACKED)
+    assert all(f is not first for f in cache._TRACKED)
     # ...and the explicit release empties the registry entirely
-    dd.release_dedup_cache()
-    assert not dd._TRACKED
+    cache.release_query_cache()
+    assert not cache._TRACKED
 
 
 def test_simhash_rowlocal_matches_batch_form(spark):

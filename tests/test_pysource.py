@@ -15,8 +15,7 @@ from mapreducewordcount_spark.sources.pysource import (
     lpt_pack,
     register_corpus_source,
 )
-
-REF_INPUTS = "/root/reference/files/inputs"
+from tests.conftest import SF_ORACLE
 
 
 # --- planner-side units -----------------------------------------------------
@@ -81,18 +80,37 @@ def test_empty_bins_not_emitted(tmp_path):
 
 # --- end-to-end against the JVM scan ----------------------------------------
 
+@pytest.fixture(scope="module")
+def corpus_dir(tmp_path_factory):
+    """A multi-file ``*.txt`` corpus built from the TESTDATA documents
+    table: four text files of unequal size, one empty ``.txt`` and one
+    non-``.txt`` decoy the reader must skip."""
+    import pyarrow.parquet as pq
+
+    d = tmp_path_factory.mktemp("corpus")
+    texts = pq.read_table(f"{SF_ORACLE}/documents.parquet",
+                          columns=["text"])["text"].to_pylist()
+    cuts = [int(len(texts) * f) for f in (0, 0.4, 0.7, 0.9, 1)]
+    for i, (lo, hi) in enumerate(zip(cuts, cuts[1:])):
+        (d / f"part{i}.txt").write_text("\n".join(texts[lo:hi]) + "\n",
+                                        encoding="utf-8")
+    (d / "empty.txt").write_text("")
+    (d / "notes.md").write_text("decoy: not a .txt file\n")
+    return str(d)
+
+
 @pytest.fixture()
-def corpus_df(spark):
+def corpus_df(spark, corpus_dir):
     # runtime-settable; the shared test session may predate the
     # get_spark default
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     register_corpus_source(spark)
     return (spark.read.format("corpus")
-            .option("path", REF_INPUTS).option("splits", "4").load())
+            .option("path", corpus_dir).option("splits", "4").load())
 
 
-def test_corpus_source_matches_jvm_text_scan(spark, corpus_df):
-    jvm = (spark.read.option("pathGlobFilter", "*.txt").text(REF_INPUTS)
+def test_corpus_source_matches_jvm_text_scan(spark, corpus_df, corpus_dir):
+    jvm = (spark.read.option("pathGlobFilter", "*.txt").text(corpus_dir)
            .filter(F.col("value") != ""))
     ours = corpus_df.filter(F.col("line") != "")
     assert ours.count() == jvm.count()

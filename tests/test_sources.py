@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import types as T
 
 from mapreducewordcount_spark.sources import io as sio
@@ -305,72 +306,80 @@ def test_sorted_layout_files_have_disjoint_ranges(spark, tmp_path):
         assert hi <= lo, f"overlapping file ranges: {ranges}"
 
 
-def test_load_table_handle_cache_and_invalidation(spark, tmp_path):
-    """Round 13: load_table memoizes the analyzed scan handle per
-    (application, path) — the catalog shape: no data is cached, only
-    re-analysis is skipped — and the directory fingerprint drops the
-    handle the moment the path's bytes change, so overwrite-then-
-    reload always sees fresh data."""
-    import shutil
-    import time
-
-    from mapreducewordcount_spark.sources.tables import load_table, spread
-
-    src = "/root/testdata/sf0.001/region.parquet"
-    d = tmp_path / "tc"
-    d.mkdir()
-    shutil.copy(src, d / "region.parquet")
-    a1 = load_table(spark, str(d), "region")
-    a2 = load_table(spark, str(d), "region")
-    assert a1 is a2                      # same-session handle reuse
-    assert spread(a1) is spread(a2)      # spread probe memoized too
-    n1 = a1.count()
-    time.sleep(0.02)                     # ensure mtime_ns advances
-    shutil.copy("/root/testdata/sf0.01/region.parquet",
-                d / "region.parquet")
-    b = load_table(spark, str(d), "region")
-    assert b is not a1                   # rewrite invalidates
-    assert b.count() == n1               # fresh read works
-
-def test_dir_fingerprint_sees_subdirectory_rewrites(spark, tmp_path):
-    """ADVICE r13: the handle-cache fingerprint must walk RECURSIVELY —
-    for a partitioned directory table, an in-place part-file edit
-    inside a partition subdir changes neither top-level names nor the
-    top dir's mtime, and a one-level scan would serve a stale handle."""
-    from mapreducewordcount_spark.sources.tables import load_table
-
-    d = tmp_path / "pt"
-    src = load_table(spark, "/root/testdata/sf0.001", "region")
-    (src.write.mode("overwrite").partitionBy("r_regionkey")
-        .parquet(str(d / "region.parquet")))
-    a1 = load_table(spark, str(d), "region")
-    assert load_table(spark, str(d), "region") is a1
-    part = next((d / "region.parquet").rglob("part-*.parquet"))
-    assert part.parent != d / "region.parquet"  # really in a subdir
-    with open(part, "r+b") as f:  # in-place edit: no rename, no
-        f.write(b"\x00")          # directory-entry change
-    b = load_table(spark, str(d), "region")
-    assert b is not a1, "subdir rewrite must invalidate the handle"
-
-
-def test_reset_session_memos_clears_handle_and_artifact_memos(spark):
-    """Round 14 (VERDICT r13 next#1): the bench's per-rep reset must
-    drop BOTH Python-side session memo families — the table-handle
-    cache and the artifact verified-set — so every timed rep
-    re-analyzes and re-verifies instead of serving session state."""
-    from mapreducewordcount_spark.sources import sig_artifacts
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
+def test_declared_schemas_match_inferred(spark, sf):
+    """Every declared table schema equals what Spark infers from the
+    file, at every TESTDATA scale factor: a regenerated table whose
+    encoding drifts fails here instead of reading as nulls."""
     from mapreducewordcount_spark.sources.tables import (
-        _TABLE_CACHE,
+        SCHEMAS,
+        TABLES,
         load_table,
-        reset_session_memos,
     )
 
-    a1 = load_table(spark, "/root/testdata/sf0.001", "region")
-    assert _TABLE_CACHE, "load_table should have populated the cache"
+    assert set(SCHEMAS) == set(TABLES) - {"events"}
+    sf_dir = f"/root/testdata/{sf}"
+    for name in SCHEMAS:
+        inferred = spark.read.parquet(f"{sf_dir}/{name}.parquet").schema
+        assert load_table(spark, sf_dir, name).schema == inferred, name
+
+
+def test_load_table_declared_runs_no_jobs(spark):
+    """A declared-schema load is pure plan construction: zero Spark
+    jobs, where schema inference runs one per table."""
+    from mapreducewordcount_spark.sources.tables import SCHEMAS, load_table
+    from tests.conftest import SF_ORACLE
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    load_table(spark, SF_ORACLE, "region")  # ship the package first
+    try:
+        sc.setJobGroup("load_table_declared", "declared loads")
+        for name in SCHEMAS:
+            load_table(spark, SF_ORACLE, name)
+        sc.setJobGroup("load_table_inferred", "inferred load")
+        spark.read.parquet(f"{SF_ORACLE}/region.parquet")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert tracker.getJobIdsForGroup("load_table_declared") == []
+    # the counter sees jobs at all: inference on the same file runs one
+    assert tracker.getJobIdsForGroup("load_table_inferred")
+
+
+def test_load_table_sees_in_place_rewrites(spark, tmp_path):
+    """Rewrite a table's file in place and reload: the new handle
+    reads the new bytes (no handle or listing is reused)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mapreducewordcount_spark.sources.tables import load_table
+
+    def write(names):
+        pq.write_table(
+            pa.table({"r_regionkey": pa.array(range(len(names)),
+                                               type=pa.int32()),
+                      "r_name": pa.array(names, type=pa.string())}),
+            tmp_path / "region.parquet")
+
+    def rows():
+        return sorted(tuple(r) for r in
+                      load_table(spark, str(tmp_path), "region").collect())
+
+    write(["AFRICA", "ASIA"])
+    assert rows() == [(0, "AFRICA"), (1, "ASIA")]
+    write(["EUROPE", "MIDDLE EAST", "AMERICA"])
+    assert rows() == [(0, "EUROPE"), (1, "MIDDLE EAST"), (2, "AMERICA")]
+
+
+def test_reset_session_memos_clears_artifact_memos():
+    """The benchmarks' per-rep reset must drop the artifact
+    verified-set, so every timed rep re-verifies instead of serving
+    session state."""
+    from mapreducewordcount_spark.sources import sig_artifacts
+    from mapreducewordcount_spark.sources.tables import reset_session_memos
+
     sentinel = ("__reset_test__", (0, 0), "tok", ("id", "sig"))
     sig_artifacts._SESSION_VERIFIED.add(sentinel)
     reset_session_memos()
-    assert not _TABLE_CACHE
     assert sentinel not in sig_artifacts._SESSION_VERIFIED
-    b = load_table(spark, "/root/testdata/sf0.001", "region")
-    assert b is not a1, "post-reset load must build a fresh handle"
