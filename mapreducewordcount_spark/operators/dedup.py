@@ -846,8 +846,8 @@ def embedding_band_keys(embeddings: DataFrame, id_col: str = "vec_id",
                         corpus_size: int | None = None) -> DataFrame:
     """(id, band, key) exploded band table — the same fixed-plane
     construction ``lsh_candidate_pairs`` bands on, exposed standalone
-    so the gate queries can materialize it as an oracle artifact
-    (``sources/sig_artifacts.materialize_frame``) and at scale so a
+    so the gate queries can commit it as an oracle artifact
+    (``queries/dedup_queries.band_key_model``) and at scale so a
     write-time job can persist it as the corpus's LSH index."""
     from mapreducewordcount_spark.operators.similarity import (
         _fixed_planes,
@@ -874,8 +874,8 @@ def embedding_pairs_from_banded(banded: DataFrame, embeddings: DataFrame,
                                 vec_col: str = "embedding") -> DataFrame:
     """Candidate equi-join + exact-cosine verify over a PRE-COMPUTED
     (id, band, key) band table — the downstream half of
-    ``embedding_dup_pairs_lsh``, runnable against an artifact
-    readback or a persisted write-time LSH index. Identical output
+    ``embedding_dup_pairs_lsh``, runnable against a band table built
+    in-plan or a persisted write-time LSH index. Identical output
     to the one-shot operator for the same band table."""
     from mapreducewordcount_spark.functions.vectors import dot, norm
 

@@ -17,7 +17,7 @@ Engineering shape (oracle-exactness is the design driver):
   the DuckDB oracle recomputes doc features from raw text;
   ``N_BUCKETS`` divides 65536, keeping the fold exactly uniform.
 - **The bucket log-weight table is the model artifact**
-  (``sources/sig_artifacts.materialize_frame``): bucket counts for
+  (``queries/pipeline5.dsir_weight_model``): bucket counts for
   pool and target are bounded (``N_BUCKETS`` rows) driver-side
   aggregates — the same bounded-model-collect contract as BPE's
   top-V table and k-means centroids — and the ``math.log`` happens

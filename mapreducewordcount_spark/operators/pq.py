@@ -26,7 +26,7 @@ Nearest Neighbor Search*; the FAISS IndexPQ design):
 Approximate by design; recall vs the exact scan is pinned in tests
 like LSH/IVF. Since round 6 the gate row is a FULL hash oracle via
 the artifact scheme: the ADC shortlist (the float-sum model stage
-SQL can't replicate bit-for-bit) is materialized, and DuckDB
+SQL can't replicate bit-for-bit) is committed, and DuckDB
 recomputes the exact-cosine rerank + ranking from it.
 """
 
@@ -218,7 +218,7 @@ def pq_shortlist(corpus: DataFrame, queries: DataFrame,
     lowest-ADC candidates per query (ties on neighbor_id). The model
     half of PQ ANN: everything here rides the trained codebooks and
     the float ADC sums, which SQL can't replicate bit-for-bit; the
-    gate materializes this table and the oracle recomputes the exact
+    gate commits this table and the oracle recomputes the exact
     rerank downstream of it.
 
     ``candidates`` (optional frame naming the query under

@@ -30,7 +30,7 @@ evenly (n_lists is a knob — SemDeDup's paper uses ~10⁴ clusters for
 web scale); the only driver-side state is the n_lists×dim centroid
 table. Approximate by construction (k-means); planted-ground-truth pytest
 pins the semantics, and since round 6 the gate row is a FULL hash
-oracle — the assignment table is the materialized artifact and
+oracle — the assignment table is the committed artifact and
 DuckDB recomputes the prune half (pairs, recursive-CTE closure,
 keepers) from it.
 
@@ -73,7 +73,7 @@ def semantic_assignments(embeddings: DataFrame, n_lists: int = 16,
                          kmeans_iters: int = 2, id_col: str = "vec_id",
                          vec_col: str = "embedding") -> DataFrame:
     """(id, list_id) cluster routing — SemDeDup's write-time half,
-    split out so the gate query can materialize it as an oracle
+    split out so the gate query can commit it as an oracle
     artifact and a production pipeline can persist it partitioned by
     ``list_id`` (the index build runs once; pruning re-runs as
     thresholds change)."""
@@ -88,7 +88,7 @@ def semantic_dedup_from_assignments(assignments: DataFrame,
                                     id_col: str = "vec_id",
                                     vec_col: str = "embedding") -> DataFrame:
     """The prune half of SemDeDup over a PRE-COMPUTED (id, list_id)
-    assignment table (artifact readback or persisted index):
+    assignment table (built in-plan or a persisted index):
     within-cluster exact-cosine pairs → min-label components →
     (vec_id, list_id, group_id, keep). Everything here is plain
     joins/aggregates — which is what lets the DuckDB oracle recompute

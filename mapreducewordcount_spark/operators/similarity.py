@@ -377,20 +377,13 @@ def ivf_build(corpus: DataFrame, id_col: str = "vec_id",
     assigned = _assign_to_rows(c, cent_rows, "c_vec", 1)
     # literal-plan the routing table (explode of a literal struct
     # array = LocalRelation), NOT createDataFrame (whose parallelize
-    # yields a LogicalRDD with a fresh id per call): downstream plans
-    # that join the centroids — the residual IVF+PQ shortlist — must
-    # have a STABLE semanticHash or the artifact session memo
-    # (sources/sig_artifacts) misses on every invocation and re-runs
-    # the full model pipeline each time (measured 20 s vs 2 s at
-    # sf0.001). Built as ONE parsed SQL expression, not per-element
-    # F.lit(): the column-object form was n_lists×dim py4j
-    # round-trips — ~2.5 s of pure DRIVER time at the SemDeDup
-    # sf0.1 operating point (45 lists × 64 dims), measured as a
-    # job-free gap in the event log and the dominant term of the
-    # r11→r12 semantic_dedup_embeddings creep (round 13). One
-    # expr() call parses server-side in milliseconds, and the
-    # identical string yields the identical plan, so the
-    # semanticHash stability the memo needs is unchanged.
+    # yields a LogicalRDD with a fresh id per call), so the same
+    # centroids always give the same plan. Built as ONE parsed SQL
+    # expression, not per-element F.lit(): the column-object form was
+    # n_lists×dim py4j round-trips — ~2.5 s of pure DRIVER time at
+    # the SemDeDup sf0.1 operating point (45 lists × 64 dims),
+    # measured as a job-free gap in the event log (round 13). One
+    # expr() call parses server-side in milliseconds.
     if cent_rows:
         parts = ", ".join(
             "named_struct('list_id', CAST({} AS BIGINT), 'cent_vec',"

@@ -201,6 +201,15 @@ FROM lineitem GROUP BY 1
 """
 
 
+def hll_model(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(l_returnflag, approx_parts) — the HLL++ estimate table of
+    ``sketch_hll_report``."""
+    return (load_table(spark, sf_dir, "lineitem")
+            .groupBy("l_returnflag")
+            .agg(F.approx_count_distinct("l_partkey", rsd=0.02)
+                 .alias("approx_parts")))
+
+
 def sketch_hll_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sketch-calibration report: per returnflag, the HyperLogLog++
     distinct-part estimate joined against the exact count, with
@@ -211,21 +220,17 @@ def sketch_hll_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     HLL++ merges by register-wise max, so the estimate is
     partition-invariant (pinned in tests/test_sketches.py) — unlike
-    GK percentiles it CAN be artifact-oracled: the estimate table is
-    materialized as the model artifact (``sources/sig_artifacts``)
-    and DuckDB recomputes everything downstream — the exact distinct
-    counts and the error arithmetic — from the artifact plus the raw
-    lineitem table. DuckDB's own approx_count_distinct is a
-    different estimator, which is exactly why the artifact carries
-    Spark's values rather than the oracle recomputing them.
+    GK percentiles it CAN be artifact-oracled: the estimate table
+    (``hll_model``) is the committed model artifact
+    (``sources/sig_artifacts``) and DuckDB recomputes everything
+    downstream — the exact distinct counts and the error arithmetic —
+    from the artifact plus the raw lineitem table. DuckDB's own
+    approx_count_distinct is a different estimator, which is exactly
+    why the artifact carries Spark's values rather than the oracle
+    recomputing them.
     """
     l = load_table(spark, sf_dir, "lineitem")
-    hll = (l.groupBy("l_returnflag")
-           .agg(F.approx_count_distinct("l_partkey", rsd=0.02)
-                .alias("approx_parts")))
-    art = _sig_artifacts.materialize_frame(
-        hll, "sketch_hll_report",
-        _sig_artifacts.lineitem_corpus_key(l), ["l_returnflag"])
+    art = hll_model(spark, sf_dir)
     exact = (l.groupBy("l_returnflag")
              .agg(F.count_distinct(F.col("l_partkey"))
                   .alias("n_parts_exact"),

@@ -20,12 +20,13 @@ Oracle notes:
   projections, k-means, ADC float sums), but
   their JOIN/verify/rerank stages are fully oracled via the
   artifact scheme (``sources/sig_artifacts.py``): the engine's model
-  table (signatures / band keys / assignments+routing / ADC shortlist) goes to a
-  committed parquet artifact and DuckDB recomputes everything
-  downstream of it — banded joins, popcount or cosine verifies,
-  rankings — from the artifact + the raw views. The model steps
-  themselves stay pytest-pinned (parity, planted-pair recall,
-  neighbor overlap).
+  table (signatures / band keys / assignments+routing / ADC shortlist),
+  built by the ``*_model`` functions below, is committed as a parquet
+  artifact and DuckDB recomputes everything downstream of it — banded
+  joins, popcount or cosine verifies, rankings — from the artifact +
+  the raw views. The queries themselves consume the model frame
+  in-plan. The model steps stay pytest-pinned (parity, planted-pair
+  recall, neighbor overlap).
 """
 
 from __future__ import annotations
@@ -108,27 +109,22 @@ def dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dd.minhash_lsh_pairs(docs, threshold=0.5)
 
 
+def simhash_model(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, simhash) — the ``dedup_simhash_pairs`` model table."""
+    return dd.simhash_docs(load_table(spark, sf_dir, "documents"))
+
+
 def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs with the join stage under a full hash
-    oracle: the engine-computed signature table is materialized to a
-    repo-local parquet artifact (the persisted-index production
-    shape), the banded Hamming join consumes the re-read artifact,
-    and DuckDB recomputes the same join + popcount verify from the
-    same artifact (``xor`` + ``bit_count``) — flipping this row from
-    rows-only to three-check green (VERDICT r5 next#5). The xxhash64
-    hash family itself stays pytest-pinned (parity + planted-pair
-    tests); DuckDB cannot recompute it."""
-    from mapreducewordcount_spark.sources.sig_artifacts import (
-        corpus_key,
-        materialize_signatures,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    sig = materialize_signatures(dd.simhash_docs(docs),
-                                 "dedup_simhash_pairs", corpus_key(docs),
-                                 "doc_id", "simhash",
-                                 memo_token="simhash-docs")
-    return dd.signature_hamming_pairs(sig, id_col="id", sig_col="sig",
+    oracle: the engine-computed signature table (``simhash_model``) is
+    the committed artifact (the persisted-index production shape),
+    and DuckDB recomputes the same banded join + popcount verify from
+    it (``xor`` + ``bit_count``) — flipping this row from rows-only to
+    three-check green (VERDICT r5 next#5). The xxhash64 hash family
+    itself stays pytest-pinned (parity + planted-pair tests); DuckDB
+    cannot recompute it."""
+    return dd.signature_hamming_pairs(simhash_model(spark, sf_dir),
+                                      id_col="doc_id", sig_col="simhash",
                                       max_hamming=3)
 
 
@@ -233,21 +229,32 @@ FROM reach GROUP BY id
 """
 
 
+def band_key_model(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(id, band, key) sign-LSH band table — the model table of
+    ``dedup_embedding_pairs_lsh`` and ``ann_lsh_topk``."""
+    return dd.embedding_band_keys(load_table(spark, sf_dir, "embeddings"))
+
+
 def dedup_embedding_pairs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH-pruned semantic near-dups, join+verify under a full hash
-    oracle: the engine's (id, band, key) sign-LSH band table is
-    materialized to a committed artifact, the candidate equi-join
-    consumes the readback, and DuckDB recomputes the same join PLUS
-    the exact-cosine verify from the raw embeddings view — so
-    everything downstream of the (pytest-pinned, numpy-computed)
-    banding is value-checked. Recall vs the exact operator stays
-    pinned in tests. Output identical to
-    ``dd.embedding_dup_pairs_lsh(emb, threshold=0.45)`` — same
-    planes, same defaults."""
+    oracle: the engine's (id, band, key) sign-LSH band table
+    (``band_key_model``) is the committed artifact, and DuckDB
+    recomputes the candidate equi-join PLUS the exact-cosine verify
+    from it and the raw embeddings view — so everything downstream of
+    the (pytest-pinned, numpy-computed) banding is value-checked.
+    Recall vs the exact operator stays pinned in tests. Output
+    identical to ``dd.embedding_dup_pairs_lsh(emb, threshold=0.45)``
+    — same planes, same defaults."""
+    from mapreducewordcount_spark.cache import (
+        persist_tracked,
+        release_query_cache,
+    )
+
+    # both sides of the candidate self-join read the band table;
+    # persisted, the banding UDF runs once instead of ~1.5x
+    release_query_cache()
+    banded = persist_tracked(band_key_model(spark, sf_dir))
     emb = load_table(spark, sf_dir, "embeddings")
-    banded = _sig_artifacts.materialize_frame(
-        dd.embedding_band_keys(emb), "dedup_embedding_pairs_lsh",
-        _sig_artifacts.embeddings_corpus_key(emb), ["id", "band"])
     return dd.embedding_pairs_from_banded(banded, emb, threshold=0.45)
 
 
@@ -300,10 +307,10 @@ QUALIFY rank <= 5
 
 def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH-bucketed approximate ANN with the probe+rerank under a
-    full hash oracle: the corpus band table (identical construction
-    to ``sim.lsh_topk``'s — same planes, same derived width) goes to
-    a committed artifact; query rows (vec_id < 10) probe the
-    readback's buckets, and the exact-cosine re-rank runs on
+    full hash oracle: the corpus band table (``band_key_model``,
+    identical construction to ``sim.lsh_topk``'s — same planes, same
+    derived width) is the committed artifact; query rows (vec_id <
+    10) probe its buckets, and the exact-cosine re-rank runs on
     candidates only. DuckDB recomputes probe, join, cosine and
     ranking from the same artifact + the raw embeddings view; the
     banding itself stays pytest-pinned (recall vs exact top-k).
@@ -313,9 +320,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreducewordcount_spark.functions.vectors import cosine
 
     emb = load_table(spark, sf_dir, "embeddings")
-    kb = _sig_artifacts.materialize_frame(
-        dd.embedding_band_keys(emb), "ann_lsh_topk",
-        _sig_artifacts.embeddings_corpus_key(emb), ["id", "band"])
+    kb = band_key_model(spark, sf_dir)
     qb = (kb.filter(F.col("id") < 10)
           .select(F.col("id").alias("query_id"), "band", "key"))
     cand = (kb.join(F.broadcast(qb), ["band", "key"])
@@ -369,34 +374,41 @@ QUALIFY rank <= 5
 """
 
 
+def _ann_queries(emb: DataFrame) -> DataFrame:
+    """The ANN probe batch: vec_ids 0-9 as (query_id, embedding)."""
+    return (emb.filter(F.col("vec_id") < 10)
+            .select(F.col("vec_id").alias("query_id"), "embedding"))
+
+
+def ivf_topk_model(spark: SparkSession,
+                   sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """``ann_ivf_topk``'s two model tables: the (id, list_id)
+    assignment and the (query_id, list_id) probe routing."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    assigned, cent = sim.ivf_build(emb, n_lists=16, kmeans_iters=2)
+    return (assigned.select(F.col("neighbor_id").alias("id"), "list_id"),
+            sim.ivf_route(_ann_queries(emb), cent))
+
+
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF centroid-routed approximate ANN with the rerank under a
-    full hash oracle: the two model tables — the (id, list_id)
-    assignment and the (query_id, list_id) probe routing, both
-    products of the numpy k-means/argmax steps that SQL can't
-    replicate — are materialized as committed artifacts, and DuckDB
-    recomputes the probed-list join, exact cosine and top-k ranking
-    from those artifacts + the raw embeddings view. Recall vs brute
-    force stays pytest-pinned. Output matches
-    ``sim.ivf_topk(emb, queries, k=5)`` (same build parameters)."""
+    full hash oracle: the two model tables (``ivf_topk_model``) — the
+    (id, list_id) assignment and the (query_id, list_id) probe
+    routing, both products of the numpy k-means/argmax steps that SQL
+    can't replicate — are committed artifacts, and DuckDB recomputes
+    the probed-list join, exact cosine and top-k ranking from those
+    artifacts + the raw embeddings view. Recall vs brute force stays
+    pytest-pinned. Output matches ``sim.ivf_topk(emb, queries, k=5)``
+    (same build parameters)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = (emb.filter(F.col("vec_id") < 10)
-               .select(F.col("vec_id").alias("query_id"), "embedding"))
-    assigned, cent = sim.ivf_build(emb, n_lists=16, kmeans_iters=2)
-    key = _sig_artifacts.embeddings_corpus_key(emb)
-    asn = _sig_artifacts.materialize_frame(
-        assigned.select(F.col("neighbor_id").alias("id"), "list_id"),
-        "ann_ivf_topk_assign", key, ["id"])
-    routed = _sig_artifacts.materialize_frame(
-        sim.ivf_route(queries, cent), "ann_ivf_topk_routed", key,
-        ["query_id", "list_id"])
+    asn, routed = ivf_topk_model(spark, sf_dir)
     assigned_vecs = (asn
                      .join(emb.select(F.col("vec_id").alias("id"),
                                       F.col("embedding").alias("c_vec")),
                            "id")
                      .select(F.col("id").alias("neighbor_id"), "c_vec",
                              "list_id"))
-    return sim.ivf_rerank(assigned_vecs, routed, queries, k=5)
+    return sim.ivf_rerank(assigned_vecs, routed, _ann_queries(emb), k=5)
 
 
 ANN_IVF_SQL = f"""
@@ -422,24 +434,27 @@ QUALIFY rank <= 5
 """
 
 
+def pq_shortlist_model(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``ann_pq_topk``'s ADC shortlist."""
+    from mapreducewordcount_spark.operators.pq import pq_shortlist
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    return pq_shortlist(emb, _ann_queries(emb))
+
+
 def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN: 8×16 codebooks, ADC prefilter, exact
     cosine re-rank (recall measured in tests; 32× vector compression
     is the 100 TB memory story — see operators/pq.py). The ADC
-    shortlist — the float-sum model stage SQL can't replicate
-    bit-for-bit — is materialized as a committed artifact and DuckDB
-    recomputes the exact rerank + ranking from it. Output matches
-    ``pq_topk(emb, queries, k=5)``."""
-    from mapreducewordcount_spark.operators.pq import pq_rerank, pq_shortlist
+    shortlist (``pq_shortlist_model``) — the float-sum model stage SQL
+    can't replicate bit-for-bit — is the committed artifact and
+    DuckDB recomputes the exact rerank + ranking from it. Output
+    matches ``pq_topk(emb, queries, k=5)``."""
+    from mapreducewordcount_spark.operators.pq import pq_rerank
 
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = (emb.filter(F.col("vec_id") < 10)
-               .select(F.col("vec_id").alias("query_id"), "embedding"))
-    sl = _sig_artifacts.materialize_frame(
-        pq_shortlist(emb, queries), "ann_pq_topk_shortlist",
-        _sig_artifacts.embeddings_corpus_key(emb),
-        ["query_id", "neighbor_id"])
-    return pq_rerank(sl, emb, queries, k=5)
+    return pq_rerank(pq_shortlist_model(spark, sf_dir), emb,
+                     _ann_queries(emb), k=5)
 
 
 def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -450,27 +465,28 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     8-byte codes (32× memory) encoding the RESIDUAL
     ``vector − centroid[list]`` (VERDICT r10 next#7 — the full
     IndexIVFPQ recipe; ``operators/pq.ivfpq_shortlist``), and exact
-    cosine re-ranks the ADC shortlist. The shortlist — downstream of
-    all three float model stages SQL can't replicate — is the
-    committed artifact; DuckDB recomputes the exact rerank + ranking
-    from it (the ann_pq_topk recipe). Residual recall ≥ raw-encoding
-    recall is pytest-pinned alongside the single-stage variants."""
-    from mapreducewordcount_spark.operators.pq import (
-        ivfpq_shortlist,
-        pq_rerank,
-    )
+    cosine re-ranks the ADC shortlist. The shortlist
+    (``ivfpq_shortlist_model``) — downstream of all three float model
+    stages SQL can't replicate — is the committed artifact; DuckDB
+    recomputes the exact rerank + ranking from it (the ann_pq_topk
+    recipe). Residual recall ≥ raw-encoding recall is pytest-pinned
+    alongside the single-stage variants."""
+    from mapreducewordcount_spark.operators.pq import pq_rerank
 
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = (emb.filter(F.col("vec_id") < 10)
-               .select(F.col("vec_id").alias("query_id"), "embedding"))
+    return pq_rerank(ivfpq_shortlist_model(spark, sf_dir), emb,
+                     _ann_queries(emb), k=5)
+
+
+def ivfpq_shortlist_model(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``ann_ivfpq_topk``'s residual IVF+PQ ADC shortlist."""
+    from mapreducewordcount_spark.operators.pq import ivfpq_shortlist
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    queries = _ann_queries(emb)
     assigned, cent = sim.ivf_build(emb, n_lists=16, kmeans_iters=2)
     routed = sim.ivf_route(queries, cent, n_probe=4)
-    sl = _sig_artifacts.materialize_frame(
-        ivfpq_shortlist(assigned, cent, queries, routed, refine=32),
-        "ann_ivfpq_topk_shortlist",
-        _sig_artifacts.embeddings_corpus_key(emb),
-        ["query_id", "neighbor_id"])
-    return pq_rerank(sl, emb, queries, k=5)
+    return ivfpq_shortlist(assigned, cent, queries, routed, refine=32)
 
 
 #: the committed recall sweep: n_lists=16, so 16 probes IS the
@@ -500,26 +516,14 @@ def ivfpq_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     reproduced by a shared-window running count
     (``operators/pq.ivfpq_shortlist_sweep``), bitwise-identical to
     the per-level calls it replaced at ~half the scoring work. The
-    (n_probe-tagged) shortlist union — downstream of the three float
-    model stages SQL can't replicate — is the committed artifact;
-    DuckDB recomputes BOTH reranks (approx per level, exact from raw
-    embeddings) and the recall arithmetic from it."""
-    from mapreducewordcount_spark.operators import pq
-
+    (n_probe-tagged) shortlist union (``ivfpq_recall_model``) —
+    downstream of the three float model stages SQL can't replicate —
+    is the committed artifact; DuckDB recomputes BOTH reranks (approx
+    per level, exact from raw embeddings) and the recall arithmetic
+    from it."""
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = (emb.filter(F.col("vec_id") < 10)
-               .select(F.col("vec_id").alias("query_id"), "embedding"))
-    assigned, cent = sim.ivf_build(emb, n_lists=16, kmeans_iters=2)
-    prebuilt = pq.ivfpq_build(assigned, cent)
-    routed = sim.ivf_route(queries, cent, n_probe=max(IVFPQ_PROBES),
-                           with_rank=True)
-    sl_all = _sig_artifacts.materialize_frame(
-        pq.ivfpq_shortlist_sweep(assigned, cent, queries, routed,
-                                 IVFPQ_PROBES, refine=32,
-                                 prebuilt=prebuilt),
-        "ivfpq_recall_shortlists",
-        _sig_artifacts.embeddings_corpus_key(emb),
-        ["n_probe", "query_id", "neighbor_id"])
+    queries = _ann_queries(emb)
+    sl_all = ivfpq_recall_model(spark, sf_dir)
 
     q = queries.select("query_id", F.col("embedding").alias("q_vec"))
     c = emb.select(F.col("vec_id").alias("neighbor_id"),
@@ -550,6 +554,21 @@ def ivfpq_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .alias("recall_at_5")))
 
 
+def ivfpq_recall_model(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``ivfpq_recall_curve``'s n_probe-tagged shortlist union."""
+    from mapreducewordcount_spark.operators import pq
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    queries = _ann_queries(emb)
+    assigned, cent = sim.ivf_build(emb, n_lists=16, kmeans_iters=2)
+    prebuilt = pq.ivfpq_build(assigned, cent)
+    routed = sim.ivf_route(queries, cent, n_probe=max(IVFPQ_PROBES),
+                           with_rank=True)
+    return pq.ivfpq_shortlist_sweep(assigned, cent, queries, routed,
+                                    IVFPQ_PROBES, refine=32,
+                                    prebuilt=prebuilt)
+
+
 #: vec_id % MOD == MOD−1 is the "new batch" in the append scenario
 #: (~20% of the corpus) — integer arithmetic both engines share
 IVFPQ_APPEND_MOD = 5
@@ -559,6 +578,34 @@ IVFPQ_APPEND_MOD = 5
 #: list, i.e. the frozen centroids are describing the new data ~50%
 #: worse than the data they were trained on
 IVFPQ_RETRAIN_DRIFT = 1.5
+
+
+def ivfpq_append_model(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``ivfpq_append_report``'s per-vector table: (vec_id, list_id,
+    is_new, µ-scaled integer residual norm) after building the index
+    on the base corpus and appending the new batch."""
+    from mapreducewordcount_spark.operators import pq
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    is_new = F.col("vec_id") % IVFPQ_APPEND_MOD == IVFPQ_APPEND_MOD - 1
+    base, batch = emb.filter(~is_new), emb.filter(is_new)
+    assigned_base, cent = sim.ivf_build(base, n_lists=16,
+                                        kmeans_iters=2)
+    _codes_base, books = pq.ivfpq_build(assigned_base, cent)
+    assigned_new, _codes_new = pq.ivfpq_append(batch, cent, books)
+
+    def res2_rows(assigned: DataFrame, flag: bool) -> DataFrame:
+        # the SHARED µ-scaled integer residual norm (pq.res2_micro —
+        # one definition with the streaming maintenance loop). Float
+        # arithmetic stays ENGINE-side (the artifact pins it);
+        # everything downstream aggregates exact integers.
+        return (pq.ivfpq_residuals(assigned, cent)
+                .select(F.col("neighbor_id").alias("vec_id"),
+                        "list_id", F.lit(flag).alias("is_new"),
+                        pq.res2_micro("res").alias("res2_u")))
+
+    return (res2_rows(assigned_base, False)
+            .unionByName(res2_rows(assigned_new, True)))
 
 
 def ivfpq_append_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -585,36 +632,10 @@ def ivfpq_append_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: the model stages (k-means, float residual norms) are not
     SQL-replicable, so the per-vector table (vec_id, list_id,
     is_new, µ-scaled integer residual norm) is the committed
-    artifact; BOTH engines compute the report — integer sums, then
-    the identical round()-of-double-division expressions — from
-    those bytes."""
-    from mapreducewordcount_spark.operators import pq
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    is_new = F.col("vec_id") % IVFPQ_APPEND_MOD == IVFPQ_APPEND_MOD - 1
-    base, batch = emb.filter(~is_new), emb.filter(is_new)
-    assigned_base, cent = sim.ivf_build(base, n_lists=16,
-                                        kmeans_iters=2)
-    _codes_base, books = pq.ivfpq_build(assigned_base, cent)
-    assigned_new, _codes_new = pq.ivfpq_append(batch, cent, books)
-
-    def res2_rows(assigned: DataFrame, flag: bool) -> DataFrame:
-        # the SHARED µ-scaled integer residual norm (pq.res2_micro —
-        # one definition with the streaming maintenance loop). Float
-        # arithmetic stays ENGINE-side (the artifact pins it);
-        # everything downstream aggregates exact integers.
-        return (pq.ivfpq_residuals(assigned, cent)
-                .select(F.col("neighbor_id").alias("vec_id"),
-                        "list_id", F.lit(flag).alias("is_new"),
-                        pq.res2_micro("res").alias("res2_u")))
-
-    art = _sig_artifacts.materialize_frame(
-        res2_rows(assigned_base, False)
-        .unionByName(res2_rows(assigned_new, True)),
-        "ivfpq_append_assign",
-        _sig_artifacts.embeddings_corpus_key(emb),
-        ["vec_id"])
-    agg = (art.groupBy("list_id")
+    artifact (``ivfpq_append_model``); BOTH engines compute the
+    report — integer sums, then the identical round()-of-double-
+    division expressions — from that table."""
+    agg = (ivfpq_append_model(spark, sf_dir).groupBy("list_id")
            .agg(F.sum(F.when(~F.col("is_new"), 1).otherwise(0))
                 .cast("long").alias("n_base"),
                 F.sum(F.when(F.col("is_new"), 1).otherwise(0))

@@ -309,6 +309,53 @@ IPF_ITERS = 25
 IPF_TOL = 1e-4
 
 
+def _ipf_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(source, lang, n_docs, tokens_available) — the IPF grid."""
+    from mapreducewordcount_spark.functions.text_metrics import (
+        token_count,
+    )
+
+    docs = spread(load_table(spark, sf_dir, "documents"))
+    return (docs
+            .select("source", "lang",
+                    token_count("text").cast("long").alias("n_tok"))
+            .groupBy("source", "lang")
+            .agg(F.count(F.lit(1)).alias("n_docs"),
+                 F.sum("n_tok").alias("tokens_available")))
+
+
+def ipf_grid_model(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(source, lang, target_micro) — ``mixture_ipf_grid``'s fitted
+    table: the bounded grid collect + the driver IPF alternation."""
+    from mapreducewordcount_spark.operators.ipf import (
+        MICRO,
+        ipf_fit,
+        ipf_residuals,
+    )
+    from mapreducewordcount_spark.queries.pipeline2 import (
+        MIX_BUDGET,
+        MIX_WEIGHTS,
+    )
+
+    cells = {(r["source"], r["lang"]): float(r["tokens_available"])
+             for r in _ipf_inventory(spark, sf_dir).collect()}
+    srcs = sorted({s for s, _l in cells})
+    langs = sorted({l for _s, l in cells})
+    total_w = sum(MIX_WEIGHTS.values())
+    row_t = {s: MIX_BUDGET / len(srcs) for s in srcs}
+    col_t = {l: MIX_WEIGHTS.get(l, 0.0) / total_w * MIX_BUDGET
+             for l in langs}
+    fit = ipf_fit(cells, row_t, col_t, n_iters=IPF_ITERS)
+    res = ipf_residuals(fit, row_t, col_t)
+    if max(res) > IPF_TOL:
+        raise ValueError(
+            f"IPF marginal residuals {res} exceed {IPF_TOL} after "
+            f"{IPF_ITERS} iterations — grid too sparse for the brief")
+    return spark.createDataFrame(
+        sorted((s, l, round(v * MICRO)) for (s, l), v in fit.items()),
+        "source string, lang string, target_micro long")
+
+
 def mixture_ipf_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-marginal training-mixture calibration (``operators/ipf``):
     fit per-(source, lang) token targets whose ROW sums give every
@@ -326,54 +373,10 @@ def mixture_ipf_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     back. Languages outside MIX_WEIGHTS get explicit zero column
     targets (drained, still reported); marginal residuals above
     IPF_TOL raise rather than ship a bad plan."""
-    from mapreducewordcount_spark.functions.text_metrics import (
-        token_count,
-    )
-    from mapreducewordcount_spark.operators.ipf import (
-        MICRO,
-        ipf_fit,
-        ipf_residuals,
-    )
-    from mapreducewordcount_spark.queries.pipeline2 import (
-        MIX_BUDGET,
-        MIX_WEIGHTS,
-    )
-    from mapreducewordcount_spark.sources import sig_artifacts
+    from mapreducewordcount_spark.operators.ipf import MICRO
 
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    inv = (docs
-           .select("source", "lang",
-                   token_count("text").cast("long").alias("n_tok"))
-           .groupBy("source", "lang")
-           .agg(F.count(F.lit(1)).alias("n_docs"),
-                F.sum("n_tok").alias("tokens_available")))
-    def _fit_grid():
-        # the bounded grid collect + driver IPF alternation, behind
-        # the lazy-artifact thunk (round 13): a session that has
-        # already verified this artifact serves the committed bytes
-        # without re-collecting the grid or re-running the fit
-        cells = {(r["source"], r["lang"]): float(r["tokens_available"])
-                 for r in inv.collect()}
-        srcs = sorted({s for s, _l in cells})
-        langs = sorted({l for _s, l in cells})
-        total_w = sum(MIX_WEIGHTS.values())
-        row_t = {s: MIX_BUDGET / len(srcs) for s in srcs}
-        col_t = {l: MIX_WEIGHTS.get(l, 0.0) / total_w * MIX_BUDGET
-                 for l in langs}
-        fit = ipf_fit(cells, row_t, col_t, n_iters=IPF_ITERS)
-        res = ipf_residuals(fit, row_t, col_t)
-        if max(res) > IPF_TOL:
-            raise ValueError(
-                f"IPF marginal residuals {res} exceed {IPF_TOL} after "
-                f"{IPF_ITERS} iterations — grid too sparse for the brief")
-        return spark.createDataFrame(
-            sorted((s, l, round(v * MICRO)) for (s, l), v in fit.items()),
-            "source string, lang string, target_micro long")
-
-    wt = sig_artifacts.materialize_frame(
-        _fit_grid, "mixture_ipf_grid", sig_artifacts.corpus_key(docs),
-        ["source", "lang"], memo_token="ipf-grid-equal-src-mix-lang",
-        columns=["source", "lang", "target_micro"], spark=spark)
+    inv = _ipf_inventory(spark, sf_dir)
+    wt = ipf_grid_model(spark, sf_dir)
     target_tok = F.col("target_micro") / F.lit(float(MICRO))
     return (inv.join(wt, ["source", "lang"])
             .select("source", "lang", "n_docs", "tokens_available",
@@ -511,23 +514,16 @@ def bpe_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     a low-chars-per-token language silently gets less TEXT per token
     budgeted — this report is where that shows up before training.
 
-    Composes the committed BPE serving table (the ``doc_bpe_tokens``
-    word→token-count artifact — same family, same builder expression)
-    with a per-LANG rollup instead of per-doc: one tokenize explode +
-    the vocabulary join + a |langs|-row aggregate. Oracle recomputes
-    everything downstream of the artifact."""
+    Composes the BPE serving table (``bpe_vocab_model``, the
+    ``doc_bpe_tokens`` word→token-count artifact) with a per-LANG
+    rollup instead of per-doc: one tokenize explode + the vocabulary
+    join + a |langs|-row aggregate. Oracle recomputes everything
+    downstream of the artifact."""
     from mapreducewordcount_spark.functions.text_metrics import words
-    from mapreducewordcount_spark.operators.bpe import (
-        bpe_train,
-        bpe_vocab_token_counts,
-    )
-    from mapreducewordcount_spark.sources import sig_artifacts
+    from mapreducewordcount_spark.queries.pipeline2 import bpe_vocab_model
 
     docs = spread(load_table(spark, sf_dir, "documents"))
-    merges = bpe_train(docs, n_merges=32, v_max_words=4096)
-    vt = sig_artifacts.materialize_frame(
-        bpe_vocab_token_counts(docs, merges), "doc_bpe_tokens",
-        sig_artifacts.corpus_key(docs), ["word"])
+    vt = bpe_vocab_model(spark, sf_dir)
     tok = docs.select("lang", F.explode(words("text")).alias("word"))
     # no broadcast hint on vt (the doc_bpe_tokens policy): it holds
     # every distinct corpus word and grows with vocabulary

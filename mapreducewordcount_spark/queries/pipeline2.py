@@ -332,27 +332,30 @@ FROM u
 """
 
 
-def doc_compression_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-doc zlib compressibility (compressed/raw bytes, level 6).
-    Thresholds pinned on planted repetitive-vs-natural text in
-    tests/test_text_metrics.py.
-
-    Round 6: the zlib byte count — the only non-SQL piece — is
-    materialized as a committed artifact, and DuckDB recomputes the
-    denominator (``octet_length`` of the UTF-8 text), the division
-    and the rounding from it, flipping this row from rows-only to a
-    full value-hash check of the ratio arithmetic."""
+def zlib_size_model(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, comp_bytes) — ``doc_compression_ratio``'s zlib table."""
     from mapreducewordcount_spark.functions.text_metrics import (
         compressed_size_udf,
     )
 
     docs = spread(load_table(spark, sf_dir, "documents"))
-    comp = docs.select("doc_id",
+    return docs.select("doc_id",
                        compressed_size_udf()("text").alias("comp_bytes"))
-    rb = _sig_artifacts.materialize_frame(
-        comp, "doc_compression_ratio",
-        _sig_artifacts.corpus_key(docs), ["doc_id"])
-    return (rb.join(docs.select("doc_id", "text"), "doc_id")
+
+
+def doc_compression_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-doc zlib compressibility (compressed/raw bytes, level 6).
+    Thresholds pinned on planted repetitive-vs-natural text in
+    tests/test_text_metrics.py.
+
+    Round 6: the zlib byte count (``zlib_size_model``) — the only
+    non-SQL piece — is a committed artifact, and DuckDB recomputes
+    the denominator (``octet_length`` of the UTF-8 text), the
+    division and the rounding from it, flipping this row from
+    rows-only to a full value-hash check of the ratio arithmetic."""
+    docs = load_table(spark, sf_dir, "documents")
+    return (zlib_size_model(spark, sf_dir)
+            .join(docs.select("doc_id", "text"), "doc_id")
             .select("doc_id",
                     F.when(F.octet_length("text") > 0,
                            F.round(F.col("comp_bytes")
@@ -648,20 +651,9 @@ FROM p GROUP BY 1, 2
 """
 
 
-def doc_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-doc subword token counts under a corpus-trained 32-merge
-    BPE. Train = distributed word count + central merge loop on the
-    bounded top-V table; merge semantics pinned against hand-computed
-    ground truth in tests/test_bpe.py.
-
-    Round 6: the per-WORD token-count table — the iterative BPE apply
-    SQL can't replicate — is materialized as a committed artifact
-    (the serving-table form of the tokenizer model), and both engines
-    recompute the per-document counting from it: tokenize → join the
-    word table → per-doc count/sum, with empty docs kept at 0/0. The
-    output is identical to the Arrow-cached ``bpe_token_stats`` form
-    (same tokenizer, same merges; pinned in tests/test_bpe.py)."""
-    from mapreducewordcount_spark.functions.text_metrics import words
+def bpe_vocab_model(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(word, n_tokens) under the corpus-trained 32-merge BPE — the
+    model table of ``doc_bpe_tokens`` and ``bpe_fertility_by_lang``."""
     from mapreducewordcount_spark.operators.bpe import (
         bpe_train,
         bpe_vocab_token_counts,
@@ -669,9 +661,27 @@ def doc_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = spread(load_table(spark, sf_dir, "documents"))
     merges = bpe_train(docs, n_merges=32, v_max_words=4096)
-    vt = _sig_artifacts.materialize_frame(
-        bpe_vocab_token_counts(docs, merges), "doc_bpe_tokens",
-        _sig_artifacts.corpus_key(docs), ["word"])
+    return bpe_vocab_token_counts(docs, merges)
+
+
+def doc_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-doc subword token counts under a corpus-trained 32-merge
+    BPE. Train = distributed word count + central merge loop on the
+    bounded top-V table; merge semantics pinned against hand-computed
+    ground truth in tests/test_bpe.py.
+
+    Round 6: the per-WORD token-count table (``bpe_vocab_model``) —
+    the iterative BPE apply SQL can't replicate — is a committed
+    artifact (the serving-table form of the tokenizer model), and
+    both engines recompute the per-document counting from it:
+    tokenize → join the word table → per-doc count/sum, with empty
+    docs kept at 0/0. The output is identical to the Arrow-cached
+    ``bpe_token_stats`` form (same tokenizer, same merges; pinned in
+    tests/test_bpe.py)."""
+    from mapreducewordcount_spark.functions.text_metrics import words
+
+    docs = spread(load_table(spark, sf_dir, "documents"))
+    vt = bpe_vocab_model(spark, sf_dir)
     tok = docs.select("doc_id", F.explode(words("text")).alias("word"))
     # No broadcast hint on vt: it holds every DISTINCT corpus word
     # (bpe_train's v_max_words bounds only the training table), so it
@@ -725,26 +735,33 @@ def semantic_dedup_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     test-scale k=16 (VERDICT r5 next#8).
 
     Round 6: the prune half is under a FULL hash oracle — the
-    k-means assignment (the only non-SQL-expressible piece) is
-    materialized to a committed artifact, the engine prunes from the
-    readback, and DuckDB recomputes within-cluster cosine pairs,
-    the recursive-CTE transitive closure, min-id keepers and keep
-    flags from the same artifact + the raw embeddings view."""
+    k-means assignment (``semantic_assignment_model``, the only
+    non-SQL-expressible piece) is a committed artifact, and DuckDB
+    recomputes within-cluster cosine pairs, the recursive-CTE
+    transitive closure, min-id keepers and keep flags from it + the
+    raw embeddings view."""
+    from mapreducewordcount_spark.operators.semdedup import (
+        semantic_dedup_from_assignments,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    return semantic_dedup_from_assignments(
+        semantic_assignment_model(spark, sf_dir), emb, threshold=0.8)
+
+
+def semantic_assignment_model(spark: SparkSession,
+                              sf_dir: str) -> DataFrame:
+    """(id, list_id) k-means assignment at ``n_lists ≈ √n`` — the
+    model table of ``semantic_dedup_embeddings``."""
     import math
 
     from mapreducewordcount_spark.operators.semdedup import (
         semantic_assignments,
-        semantic_dedup_from_assignments,
     )
-    from mapreducewordcount_spark.sources import sig_artifacts
 
     emb = load_table(spark, sf_dir, "embeddings")
     n_lists = max(8, round(math.sqrt(emb.count())))
-    asn = sig_artifacts.materialize_frame(
-        semantic_assignments(emb, n_lists=n_lists, kmeans_iters=2),
-        "semantic_dedup_embeddings",
-        sig_artifacts.embeddings_corpus_key(emb), ["id"])
-    return semantic_dedup_from_assignments(asn, emb, threshold=0.8)
+    return semantic_assignments(emb, n_lists=n_lists, kmeans_iters=2)
 
 
 _SEM_COS = """CASE WHEN sqrt(list_dot_product(a.embedding::DOUBLE[], a.embedding::DOUBLE[])) > 0
@@ -829,6 +846,18 @@ ORDER BY d.doc_id
    .replace("{weights}", _WEIGHTS_SQL)
 
 
+def kmeans_model(spark: SparkSession,
+                 sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """``embedding_cluster_stats``'s two model tables: the (vec_id,
+    cluster_id) assignment and the (cluster_id, cent_vec) centroids
+    of spherical Lloyd at k=8, 2 rounds."""
+    from mapreducewordcount_spark.operators.clustering import kmeans
+
+    assigned, cent = kmeans(load_table(spark, sf_dir, "embeddings"),
+                            k=8, iters=2)
+    return assigned.select("vec_id", "cluster_id"), cent
+
+
 def embedding_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-class k-means over the embeddings table: spherical
     Lloyd (k=8, 2 rounds), then the k-row per-cluster summary (size,
@@ -836,31 +865,21 @@ def embedding_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Planted-cluster recovery is pinned in tests/test_clustering.py.
 
     Round 6: the summary half is under a FULL hash oracle — the two
-    model tables the Lloyd loop produces (the (vec_id, cluster_id)
-    assignment and the (cluster_id, cent_vec) centroids) go to
-    committed artifacts, the engine recomputes cosine-to-centroid
-    from the readbacks, and DuckDB recomputes the same cosines and
-    all the aggregates (size, mean/min, argmax exemplar) from the
-    artifacts + the raw embeddings view."""
+    model tables the Lloyd loop produces (``kmeans_model``: the
+    (vec_id, cluster_id) assignment and the (cluster_id, cent_vec)
+    centroids) are committed artifacts, and DuckDB recomputes the
+    same cosines and all the aggregates (size, mean/min, argmax
+    exemplar) from them + the raw embeddings view."""
     from mapreducewordcount_spark.functions.vectors import cosine
-    from mapreducewordcount_spark.operators.clustering import (
-        cluster_stats,
-        kmeans,
-    )
+    from mapreducewordcount_spark.operators.clustering import cluster_stats
 
     emb = load_table(spark, sf_dir, "embeddings")
-    assigned, cent = kmeans(emb, k=8, iters=2)
-    key = _sig_artifacts.embeddings_corpus_key(emb)
-    asn = _sig_artifacts.materialize_frame(
-        assigned.select("vec_id", "cluster_id"),
-        "embedding_cluster_stats_assign", key, ["vec_id"])
-    cent_rb = _sig_artifacts.materialize_frame(
-        cent, "embedding_cluster_stats_cent", key, ["cluster_id"])
+    asn, cent = kmeans_model(spark, sf_dir)
     scored = (asn
               .join(emb.select("vec_id",
                                F.col("embedding").alias("__vec")),
                     "vec_id")
-              .join(F.broadcast(cent_rb), "cluster_id")
+              .join(F.broadcast(cent), "cluster_id")
               .withColumn("cos", F.round(cosine("__vec", "cent_vec"), 6))
               .select("vec_id", "cluster_id", "cos"))
     return cluster_stats(scored)

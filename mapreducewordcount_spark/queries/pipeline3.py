@@ -37,7 +37,7 @@ notes:
 - ``media_image_dhash_pairs`` / ``media_audio_fp_pairs`` — the
   PNG/zlib and WAV codecs aren't SQL-replicable (signature semantics
   pinned by invariance pytests), but the banded Hamming JOIN stage
-  is fully oracled from the materialized signature artifact
+  is fully oracled from the committed signature artifact
   (``sources/sig_artifacts.py``).
 """
 
@@ -446,36 +446,39 @@ def media_image_dhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     dHash semantics (brightness-shift invariance, edit locality) —
     but the JOIN stage is fully oracled via the signature-artifact
     scheme (``sources/sig_artifacts.py``): the engine's dhash table
-    is materialized to a committed parquet artifact and DuckDB
-    recomputes the star-mode banded join + popcount verify from it
-    (VERDICT r5 next#5). The corpus's shared-prefix near-dups
+    (``image_dhash_model``) is a committed parquet artifact and
+    DuckDB recomputes the star-mode banded join + popcount verify
+    from it (VERDICT r5 next#5). The corpus's shared-prefix near-dups
     surface as Hamming-0 pairs.
     """
+    return dd.signature_hamming_pairs(image_dhash_model(spark, sf_dir),
+                                      id_col="media_id", sig_col="dhash",
+                                      max_hamming=3,
+                                      collapse_identical=True)
+
+
+def _media_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Non-blank documents as (doc_id, text): blank/NULL docs
+    synthesize no media (same contract as simhash_docs dropping blank
+    docs: k empty texts would yield k IDENTICAL images or zero-sample
+    WAVs → a fabricated Hamming-0 star). The artifact's corpus key
+    stays computed over the FULL table — the oracle derives it from
+    the unfiltered documents view."""
+    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    return d.filter(F.col("text").isNotNull() & (F.length("text") > 0))
+
+
+def image_dhash_model(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(media_id, dhash) over genuine PNGs — the model table of
+    ``media_image_dhash_pairs``."""
     from mapreducewordcount_spark.operators.multimodal import (
         extract_image_dhash,
         size_bucketed,
     )
-    from mapreducewordcount_spark.sources.sig_artifacts import (
-        corpus_key,
-        materialize_signatures,
-    )
 
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    # blank/NULL docs synthesize no media (same contract as
-    # simhash_docs dropping blank docs: k empty texts would yield k
-    # IDENTICAL images → a fabricated Hamming-0 star). The corpus key
-    # stays computed over the FULL table — the oracle derives it from
-    # the unfiltered documents view.
-    src = d.filter(F.col("text").isNotNull() & (F.length("text") > 0))
-    media = src.mapInPandas(_png_synth,
-                            schema="media_id long, payload binary")
-    hashes = materialize_signatures(
-        extract_image_dhash(size_bucketed(media)),
-        "media_image_dhash_pairs", corpus_key(d), "media_id", "dhash",
-        memo_token="media-image-dhash")
-    return dd.signature_hamming_pairs(hashes, id_col="id",
-                                      sig_col="sig", max_hamming=3,
-                                      collapse_identical=True)
+    media = _media_sources(spark, sf_dir).mapInPandas(
+        _png_synth, schema="media_id long, payload binary")
+    return extract_image_dhash(size_bucketed(media))
 
 
 # --- audio perceptual near-dup (energy-delta fingerprint) -------------------
@@ -517,32 +520,28 @@ def media_audio_fp_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the banded Hamming join in cluster-star mode. The codec isn't
     SQL-replicable (invariance pytests pin the fingerprint
     semantics), but the JOIN stage is fully oracled via the
-    signature-artifact scheme — see ``media_image_dhash_pairs``.
+    signature-artifact scheme (``audio_fp_model``) — see
+    ``media_image_dhash_pairs``.
     """
+    return dd.signature_hamming_pairs(audio_fp_model(spark, sf_dir),
+                                      id_col="media_id",
+                                      sig_col="fingerprint",
+                                      max_hamming=3,
+                                      collapse_identical=True)
+
+
+def audio_fp_model(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(media_id, fingerprint) over genuine WAV clips — the model
+    table of ``media_audio_fp_pairs`` (the 65-frame grid is undefined
+    at length 0, one more reason blank docs synthesize no clip)."""
     from mapreducewordcount_spark.operators.multimodal import (
         extract_audio_fingerprints,
         size_bucketed,
     )
-    from mapreducewordcount_spark.sources.sig_artifacts import (
-        corpus_key,
-        materialize_signatures,
-    )
 
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    # blank/NULL docs synthesize no clip (see media_image_dhash_pairs:
-    # identical zero-sample WAVs would fabricate a Hamming-0 star, and
-    # the 65-frame grid is undefined at length 0); corpus key stays on
-    # the full table to match the oracle's derivation
-    src = d.filter(F.col("text").isNotNull() & (F.length("text") > 0))
-    media = src.mapInPandas(_afp_synth,
-                            schema="media_id long, payload binary")
-    fps = materialize_signatures(
-        extract_audio_fingerprints(size_bucketed(media)),
-        "media_audio_fp_pairs", corpus_key(d), "media_id", "fingerprint",
-        memo_token="media-audio-fp")
-    return dd.signature_hamming_pairs(fps, id_col="id",
-                                      sig_col="sig", max_hamming=3,
-                                      collapse_identical=True)
+    media = _media_sources(spark, sf_dir).mapInPandas(
+        _afp_synth, schema="media_id long, payload binary")
+    return extract_audio_fingerprints(size_bucketed(media))
 
 
 # --- k-NN label accuracy (embedding-quality probe) --------------------------

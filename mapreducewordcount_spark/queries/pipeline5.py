@@ -463,14 +463,22 @@ SELECT node, pr AS rank_micro FROM {prev}
 DSIR_TOP_K = 100
 
 
+def dsir_weight_model(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(bucket, w_micro) — the DSIR importance weights against the
+    lang='en' target, ``dsir_selection``'s model table."""
+    from mapreducewordcount_spark.operators import dsir
+
+    docs = spread(load_table(spark, sf_dir, "documents"))
+    return dsir.dsir_weights(docs, docs.filter(F.col("lang") == "en"))
+
+
 def dsir_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR importance selection (Xie et al. 2023): hashed-n-gram
     importance scores against the lang='en' target model, top-100
-    selected. The bucket log-weight table is the committed model
-    artifact; both engines recompute features and scoring from raw
-    text + that table (``operators/dsir.py``)."""
+    selected. The bucket log-weight table (``dsir_weight_model``) is
+    the committed model artifact; both engines recompute features and
+    scoring from raw text + that table (``operators/dsir.py``)."""
     from mapreducewordcount_spark.operators import dsir
-    from mapreducewordcount_spark.sources import sig_artifacts
 
     from mapreducewordcount_spark.cache import (
         persist_tracked,
@@ -486,15 +494,9 @@ def dsir_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     release_query_cache()
     feats = persist_tracked(dsir.doc_bucket_counts(docs))
     target = docs.filter(F.col("lang") == "en")
-    # fit behind the lazy-artifact thunk (round 13): a session that
-    # already verified the weight artifact skips the pool/target
-    # collect + createDataFrame on later invocations
-    wt = sig_artifacts.materialize_frame(
-        lambda: dsir.dsir_weights(docs, target, feats=feats,
-                                  target_ids=target.select("doc_id")),
-        "dsir_selection", sig_artifacts.corpus_key(docs),
-        ["bucket"], memo_token="dsir-weights-en-target",
-        columns=["bucket", "w_micro"], spark=spark)
+    # dsir_weight_model's fit, reusing the persisted features
+    wt = dsir.dsir_weights(docs, target, feats=feats,
+                           target_ids=target.select("doc_id"))
     scores = dsir.dsir_scores(docs, wt, feats=feats)
     topk = (scores.orderBy(F.col("dsir_score_micro").desc(),
                            F.col("doc_id"))

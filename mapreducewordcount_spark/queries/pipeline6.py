@@ -620,27 +620,32 @@ FROM top
 """
 
 
+def cdc_chunk_model(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, chunk_idx, offset, length, chunk_md5) — the chunk
+    table the whole chunk family (``doc_cdc_chunks``,
+    ``doc_cdc_chunk_dedup``, ``doc_chunk_share_pairs``,
+    ``doc_chunk_gc_report``) consumes."""
+    from mapreducewordcount_spark.operators.cdchunk import cdc_chunk_table
+
+    return cdc_chunk_table(spread(load_table(spark, sf_dir, "documents")))
+
+
 def doc_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Content-defined chunking dedup report
-    (``operators/cdchunk.py``): the engine's chunk table (rolling-
-    hash boundaries — not SQL-expressible) is materialized as a
-    committed oracle artifact, and DuckDB re-verifies EVERY chunk
-    independently via ``md5(substring(text, offset+1, length))``
-    before recomputing the per-source dedup accounting — so a wrong
-    boundary, length, or hash breaks the gate row, not just a
-    count. ``n_verify_fail`` must be 0 on both engines."""
+    (``operators/cdchunk.py``): the engine's chunk table
+    (``cdc_chunk_model``; rolling-hash boundaries — not
+    SQL-expressible) is a committed oracle artifact, and DuckDB
+    re-verifies EVERY chunk independently via
+    ``md5(substring(text, offset+1, length))`` before recomputing the
+    per-source dedup accounting — so a wrong boundary, length, or
+    hash breaks the gate row, not just a count. ``n_verify_fail``
+    must be 0 on both engines."""
     from mapreducewordcount_spark.operators.cdchunk import (
-        cdc_chunk_table,
         chunk_dedup_report,
     )
-    from mapreducewordcount_spark.sources import sig_artifacts
 
     docs = load_table(spark, sf_dir, "documents")
-    chunks = cdc_chunk_table(spread(docs))
-    art = sig_artifacts.materialize_frame(
-        chunks, "doc_cdc_chunks", sig_artifacts.corpus_key(docs),
-        ["doc_id", "chunk_idx"])
-    rep = chunk_dedup_report(art, docs)
+    rep = chunk_dedup_report(cdc_chunk_model(spark, sf_dir), docs)
     return (rep.select(F.col("grp").alias("source"), "n_chunks",
                        "n_unique_chunks", "total_chars", "dup_chars",
                        "n_verify_fail"))

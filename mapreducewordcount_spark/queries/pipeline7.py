@@ -12,10 +12,10 @@ Oracle notes:
 
 - ``doc_cdc_chunk_dedup`` — reuses the committed ``doc_cdc_chunks``
   artifact (the chunk table a dedup store persists; boundaries are
-  rolling-hash, not SQL-expressible), so the oracle probes the SAME
-  bytes the engine reads: DuckDB rebuilds the index/batch split, the
-  first-in-batch accounting, and the per-source byte totals from the
-  artifact with plain SQL. Pure integer accounting — nothing float
+  rolling-hash, not SQL-expressible), which holds the same chunk
+  table the engine builds in-plan: DuckDB rebuilds the index/batch
+  split, the first-in-batch accounting, and the per-source byte
+  totals from the artifact with plain SQL. Pure integer accounting — nothing float
   crosses the engines.
 - ``doc_hybrid_bm25`` — the ranker-agnostic swap
   ``doc_hybrid_search``'s docstring promises: the lexical pool is
@@ -39,10 +39,24 @@ from mapreducewordcount_spark.queries.pipeline6 import (
     HYBRID_TOP,
     RRF_K,
     RRF_SCALE,
+    cdc_chunk_model,
     vec_rank_ctes,
     vec_rank_pool,
 )
 from mapreducewordcount_spark.sources.tables import load_table, spread
+
+
+def _chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The chunk table (``cdc_chunk_model``), persisted for the
+    queries that read it on several plan branches, so the chunking
+    UDF runs once per query."""
+    from mapreducewordcount_spark.cache import (
+        persist_tracked,
+        release_query_cache,
+    )
+
+    release_query_cache()
+    return persist_tracked(cdc_chunk_model(spark, sf_dir))
 
 
 def doc_cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -55,20 +69,16 @@ def doc_cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-flags only the chunks it touches (pinned in
     tests/test_cdchunk.py); see
     ``operators/cdchunk.chunk_incremental_report`` for the plan
-    shape. The chunk table is the committed ``doc_cdc_chunks``
-    artifact, so both engines account over identical bytes."""
+    shape. The chunk table (``cdc_chunk_model``) is the committed
+    ``doc_cdc_chunks`` artifact, so both engines account over
+    identical chunks."""
     from mapreducewordcount_spark.operators.cdchunk import (
-        cdc_chunk_table,
         chunk_incremental_report,
     )
-    from mapreducewordcount_spark.sources import sig_artifacts
 
     docs = load_table(spark, sf_dir, "documents")
-    chunks = cdc_chunk_table(spread(docs))
-    art = sig_artifacts.materialize_frame(
-        chunks, "doc_cdc_chunks", sig_artifacts.corpus_key(docs),
-        ["doc_id", "chunk_idx"])
-    rep = chunk_incremental_report(art, docs, INDEX_SOURCE)
+    rep = chunk_incremental_report(_chunks(spark, sf_dir), docs,
+                                   INDEX_SOURCE)
     return rep.select(F.col("grp").alias("source"), "n_chunks",
                       "total_chars", "n_dup_index", "dup_index_chars",
                       "n_dup_batch", "dup_batch_chars", "n_new",
@@ -198,17 +208,11 @@ def doc_chunk_share_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the committed ``doc_cdc_chunks`` artifact; the oracle recomputes
     the cap, the pair join, and the integer Jaccard from it."""
     from mapreducewordcount_spark.operators.cdchunk import (
-        cdc_chunk_table,
         chunk_share_pairs,
     )
-    from mapreducewordcount_spark.sources import sig_artifacts
 
-    docs = load_table(spark, sf_dir, "documents")
-    chunks = cdc_chunk_table(spread(docs))
-    art = sig_artifacts.materialize_frame(
-        chunks, "doc_cdc_chunks", sig_artifacts.corpus_key(docs),
-        ["doc_id", "chunk_idx"])
-    return chunk_share_pairs(art, min_shared=CHUNK_PAIR_MIN_SHARED,
+    return chunk_share_pairs(_chunks(spark, sf_dir),
+                             min_shared=CHUNK_PAIR_MIN_SHARED,
                              fanout_cap=CHUNK_FANOUT_CAP)
 
 
@@ -264,17 +268,10 @@ def doc_chunk_gc_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     packed min rank (``rk div 1e6``), so ownership costs no extra
     join against the chunk table; the only row-proportional join is
     the broadcast-sized docs(doc_id → source) projection."""
-    from mapreducewordcount_spark.operators.cdchunk import (
-        cdc_chunk_table,
-        packed_rank,
-    )
-    from mapreducewordcount_spark.sources import sig_artifacts
+    from mapreducewordcount_spark.operators.cdchunk import packed_rank
 
     docs = load_table(spark, sf_dir, "documents")
-    chunks = cdc_chunk_table(spread(docs))
-    art = sig_artifacts.materialize_frame(
-        chunks, "doc_cdc_chunks", sig_artifacts.corpus_key(docs),
-        ["doc_id", "chunk_idx"])
+    art = cdc_chunk_model(spark, sf_dir)
     live = (F.col("doc_id") % 13 != 0).cast("long")
     rk = packed_rank(F.col("doc_id"), F.col("chunk_idx"))
     per_hash = (art

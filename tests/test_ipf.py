@@ -75,8 +75,6 @@ def test_mixture_ipf_grid_planted(spark, tmp_path):
     """End-to-end on a planted parquet corpus: every observed source
     gets an equal row share, columns hit MIX_WEIGHTS, and
     sample_rate replays target_micro/1e6/available."""
-    import shutil
-
     from pyspark.sql import functions as F
 
     from mapreducewordcount_spark.operators.ipf import MICRO
@@ -87,7 +85,6 @@ def test_mixture_ipf_grid_planted(spark, tmp_path):
     from mapreducewordcount_spark.queries.pipeline10 import (
         mixture_ipf_grid,
     )
-    from mapreducewordcount_spark.sources import sig_artifacts
 
     rows = []
     did = 0
@@ -102,12 +99,7 @@ def test_mixture_ipf_grid_planted(spark, tmp_path):
         rows, "doc_id long, lang string, source string, text string") \
         .withColumn("n_chars", F.length("text").cast("long"))
     docs.write.parquet(f"{tmp_path}/documents.parquet")
-    key = sig_artifacts.corpus_key(docs)
-    try:
-        got = mixture_ipf_grid(spark, str(tmp_path)).collect()
-    finally:
-        shutil.rmtree(sig_artifacts.ARTIFACT_ROOT / "mixture_ipf_grid"
-                      / f"k={key[0]}_{key[1]}", ignore_errors=True)
+    got = mixture_ipf_grid(spark, str(tmp_path)).collect()
     by_src: dict[str, float] = {}
     by_lang: dict[str, float] = {}
     for r in got:

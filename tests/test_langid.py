@@ -147,24 +147,11 @@ def test_mixture_on_predicted_labels_planted(spark, tmp_path):
         mixture_on_predicted_lang,
     )
 
-    import shutil
-
-    from mapreducewordcount_spark.sources import sig_artifacts
-
     docs = _corpus(spark).withColumn("source", F.lit("src0")) \
         .withColumn("n_chars", F.length("text").cast("long"))
     docs.write.parquet(f"{tmp_path}/documents.parquet")
-    n, s = sig_artifacts.corpus_key(docs)
-    try:
-        got = {r.pred_lang: r for r in
-               mixture_on_predicted_lang(spark, str(tmp_path)).collect()}
-    finally:
-        # the planted corpus materializes its own weight artifact —
-        # scrub it so committed artifact dirs stay clean
-        # (the test_roundtrip pattern)
-        shutil.rmtree(sig_artifacts.ARTIFACT_ROOT
-                      / "mixture_on_predicted_lang"
-                      / f"k={n}_{s}", ignore_errors=True)
+    got = {r.pred_lang: r for r in
+           mixture_on_predicted_lang(spark, str(tmp_path)).collect()}
     assert set(got) == {"en", "es", "de"}  # predicted groups only
     total_w = sum(MIX_WEIGHTS.values())
     for lang, r in got.items():
@@ -209,17 +196,16 @@ def test_repeated_invocations_hold_bounded_cache(spark):
 def test_holdout_eval_band_never_contributes_to_fit(spark, tmp_path):
     """VERDICT r10 next#4: doc_language_ngram fits on the train band
     only — corrupting every EVAL-band document's text and label must
-    leave the committed weight table bit-identical, and the confusion
-    report must count only eval-band docs."""
-    import shutil
-
+    leave the fitted weight table (``langid_holdout_model``)
+    bit-identical, and the confusion report must count only eval-band
+    docs."""
     from mapreducewordcount_spark.queries.pipeline8 import (
         LANGID_SALT,
         LANGID_SPLIT,
         doc_language_ngram,
+        langid_holdout_model,
     )
     from mapreducewordcount_spark.functions.sampling import dataset_split
-    from mapreducewordcount_spark.sources import sig_artifacts
 
     base = _corpus(spark)
     # widen the corpus so both bands are non-empty deterministically
@@ -243,21 +229,11 @@ def test_holdout_eval_band_never_contributes_to_fit(spark, tmp_path):
                     .otherwise(F.col("lang")))
 
     def run(frame, sub):
-        d = tmp_path / sub
+        d = str(tmp_path / sub)
         frame.write.parquet(f"{d}/documents.parquet")
-        key = sig_artifacts.corpus_key(frame)
-        try:
-            rep = {(r.lang, r.pred_lang): r.n_docs for r in
-                   doc_language_ngram(spark, str(d)).collect()}
-            wt = sorted(map(tuple, spark.read.parquet(
-                str(sig_artifacts.ARTIFACT_ROOT / "doc_language_ngram"
-                    / f"k={key[0]}_{key[1]}" / "data.parquet"))
-                .drop("k_rows", "k_sum").collect()))
-        finally:
-            shutil.rmtree(sig_artifacts.ARTIFACT_ROOT
-                          / "doc_language_ngram"
-                          / f"k={key[0]}_{key[1]}",
-                          ignore_errors=True)
+        rep = {(r.lang, r.pred_lang): r.n_docs for r in
+               doc_language_ngram(spark, d).collect()}
+        wt = sorted(map(tuple, langid_holdout_model(spark, d).collect()))
         return rep, wt
 
     rep_clean, wt_clean = run(docs, "clean")

@@ -1,22 +1,41 @@
-"""Signature-artifact oracle plumbing (sources/sig_artifacts.py).
+"""Oracle-artifact plumbing (sources/sig_artifacts.py,
+queries/artifact_families.py, tools/refresh_artifacts.py).
 
-The full three-check comparison of the signature queries against
-their artifact oracles runs in tests/test_oracle.py's registry sweep;
-here we pin the plumbing that sweep relies on: the cross-engine
-corpus key, and the artifact's byte-stable layout.
+The full three-check comparison of the artifact queries against
+their oracles runs in tests/test_oracle.py's registry sweep; here we
+pin the plumbing that sweep relies on: the cross-engine corpus key,
+the artifact's byte-stable layout, committed bytes that equal what
+the queries compute (at any partitioning), and queries that never
+write the artifact tree.
 """
 
 from __future__ import annotations
 
+import hashlib
+import importlib.util
+from pathlib import Path
+
 import duckdb
 import pytest
 
+from mapreducewordcount_spark.queries.artifact_families import (
+    ARTIFACT_FAMILIES,
+)
 from mapreducewordcount_spark.sources.sig_artifacts import (
     ARTIFACT_ROOT,
+    REPO_ROOT,
     corpus_key,
     materialize_signatures,
 )
-from tests.conftest import SF_ORACLE
+from tests.conftest import SF_ORACLE, SF_SMOKE
+
+
+def _refresh_tool():
+    spec = importlib.util.spec_from_file_location(
+        "refresh_artifacts", REPO_ROOT / "tools" / "refresh_artifacts.py")
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
 
 
 def test_corpus_key_matches_duckdb(spark):
@@ -43,29 +62,25 @@ def test_corpus_key_distinguishes_driver_corpora(spark):
     assert len(keys) == 2
 
 
-def test_materialize_roundtrip_and_stable_layout(spark, tmp_path):
+def test_materialize_roundtrip_and_stable_layout(spark, tmp_path,
+                                                 monkeypatch):
+    from mapreducewordcount_spark.sources import sig_artifacts
+
+    monkeypatch.setattr(sig_artifacts, "ARTIFACT_ROOT", tmp_path)
     sigs = spark.createDataFrame(
         [(3, 7), (1, -5), (2, 0)], "doc_id long, s long")
     key = (3, 42)
-    # writes into the committed artifacts tree (materialize_signatures
-    # has no root override by design) — clean up even on assert failure
-    # or the leftover pollutes git status and later glob-scanning runs
-    import shutil
-
-    try:
-        back = materialize_signatures(sigs, "test_roundtrip", key,
-                                      "doc_id", "s")
-        assert {(r.id, r.sig) for r in back.collect()} \
-            == {(3, 7), (1, -5), (2, 0)}
-        art = ARTIFACT_ROOT / "test_roundtrip" / "k=3_42"
-        assert [p.name for p in art.iterdir()] == ["sig.parquet"]
-        # key columns ride every row so the oracle's WHERE can select
-        row = duckdb.sql(f"SELECT DISTINCT n_docs, text_chars "
-                         f"FROM '{art}/sig.parquet'").fetchone()
-        assert row == (3, 42)
-    finally:
-        shutil.rmtree(ARTIFACT_ROOT / "test_roundtrip",
-                      ignore_errors=True)
+    target = materialize_signatures(sigs, "test_roundtrip", key,
+                                    "doc_id", "s")
+    back = spark.read.parquet(str(target)).select("id", "sig")
+    assert {(r.id, r.sig) for r in back.collect()} \
+        == {(3, 7), (1, -5), (2, 0)}
+    art = tmp_path / "test_roundtrip" / "k=3_42"
+    assert [p.name for p in art.iterdir()] == ["sig.parquet"]
+    # key columns ride every row so the oracle's WHERE can select
+    row = duckdb.sql(f"SELECT DISTINCT n_docs, text_chars "
+                     f"FROM '{art}/sig.parquet'").fetchone()
+    assert row == (3, 42)
 
 
 def test_emb_corpus_key_matches_duckdb(spark):
@@ -89,89 +104,88 @@ def test_emb_corpus_key_matches_duckdb(spark):
     assert embeddings_corpus_key(emb) == (dn, ds)
 
 
-#: registry queries that materialize committed artifacts, mapped to
-#: the artifact families they own (dir names under ARTIFACT_ROOT).
-ARTIFACT_QUERIES = {
-    "dedup_simhash_pairs": ("dedup_simhash_pairs",),
-    "media_image_dhash_pairs": ("media_image_dhash_pairs",),
-    "media_audio_fp_pairs": ("media_audio_fp_pairs",),
-    "dedup_embedding_pairs_lsh": ("dedup_embedding_pairs_lsh",),
-    "ann_lsh_topk": ("ann_lsh_topk",),
-    "ann_ivf_topk": ("ann_ivf_topk_assign", "ann_ivf_topk_routed"),
-    "ann_pq_topk": ("ann_pq_topk_shortlist",),
-    "ann_ivfpq_topk": ("ann_ivfpq_topk_shortlist",),
-    "ivfpq_recall_curve": ("ivfpq_recall_shortlists",),
-    "ivfpq_append_report": ("ivfpq_append_assign",),
-    "semantic_dedup_embeddings": ("semantic_dedup_embeddings",),
-    "embedding_cluster_stats": ("embedding_cluster_stats_assign",
-                                "embedding_cluster_stats_cent"),
-    "doc_compression_ratio": ("doc_compression_ratio",),
-    "doc_bpe_tokens": ("doc_bpe_tokens",),
-    "sketch_hll_report": ("sketch_hll_report",),
-    "dsir_selection": ("dsir_selection",),
-    "doc_cdc_chunks": ("doc_cdc_chunks",),
-    "doc_language_ngram": ("doc_language_ngram",),
-    "mixture_on_predicted_lang": ("mixture_on_predicted_lang",),
-    "mixture_ipf_grid": ("mixture_ipf_grid",),
-}
+def _artifact_queries() -> list[str]:
+    """Registry queries whose oracle reads the artifact tree."""
+    from mapreducewordcount_spark.queries import all_queries
+
+    return sorted(n for n, q in all_queries().items()
+                  if q.oracle_sql and str(ARTIFACT_ROOT) in q.oracle_sql)
 
 
-def _artifact_digests() -> dict:
-    import hashlib
-
-    return {p.relative_to(ARTIFACT_ROOT).as_posix():
-            hashlib.md5(p.read_bytes()).hexdigest()
-            for p in sorted(ARTIFACT_ROOT.rglob("*.parquet"))
-            if ".tmp" not in p.parts and "test_roundtrip" not in p.parts}
+def _tree_digest(root: Path) -> dict:
+    return {p.relative_to(root).as_posix():
+            hashlib.sha256(p.read_bytes()).hexdigest()
+            for p in sorted(root.rglob("*")) if p.is_file()}
 
 
 @pytest.mark.slow  # heavy sweep: default tier skips (pytest.ini, r14)
 def test_committed_artifacts_match_fresh_recompute(spark):
-    """The committed artifact bytes are what make the oracle
-    independent of execution order (a fresh checkout's oracle may
-    read them before the engine ever runs). _write_artifact silently
-    self-heals (overwrites) on value drift, so without this test a
-    regression in ANY model stage (simhash, dHash, audio FP, band
-    keys, k-means assignments, ADC shortlist, zlib counts, BPE table)
-    would rewrite its artifact and the gate would still pass green
-    (ADVICE r6). Recompute EVERY artifact family at the oracle sf and
-    assert no committed byte moved — including files for the other
-    corpora, which these runs must not touch."""
+    """The committed artifact bytes are what the oracles read, and a
+    query matches its oracle only while they equal the model frame
+    the query builds in-plan. Run the refresh path in check mode over
+    EVERY family at the oracle sf: a regression in any model stage
+    (simhash, dHash, audio FP, band keys, k-means assignments, ADC
+    shortlist, zlib counts, BPE table, ...) shows up here as a stale
+    artifact, and nothing is written."""
+    on_disk = {p.name for p in ARTIFACT_ROOT.iterdir()
+               if p.is_dir() and p.name != ".tmp"}
+    assert on_disk == set(ARTIFACT_FAMILIES), \
+        "artifact family map out of date — update ARTIFACT_FAMILIES"
+    before = _tree_digest(ARTIFACT_ROOT)
+    stale = _refresh_tool().refresh(spark, SF_ORACLE, check=True)
+    assert not stale, \
+        f"model frames differ from committed artifacts: {stale} — a " \
+        "model stage changed; run tools/refresh_artifacts.py and " \
+        "commit the new artifacts"
+    assert _tree_digest(ARTIFACT_ROOT) == before
+
+
+@pytest.mark.parametrize("family", sorted(ARTIFACT_FAMILIES))
+def test_family_model_is_partition_invariant(spark, family):
+    """Queries consume their model frames in-plan, so each must equal
+    its committed artifact however the session partitions the work:
+    1 and 7 shuffle partitions, sf0.001."""
+    tool = _refresh_tool()
+    conf = "spark.sql.shuffle.partitions"
+    prior = spark.conf.get(conf)
+    try:
+        for parts in ("1", "7"):
+            spark.conf.set(conf, parts)
+            assert not tool.refresh(spark, SF_SMOKE, check=True,
+                                    families=[family]), \
+                f"{family} differs from its artifact at {parts} partitions"
+    finally:
+        spark.conf.set(conf, prior)
+
+
+def test_artifact_queries_never_write(spark, monkeypatch):
+    """Running a query never writes into the repository: every query
+    whose oracle reads an artifact runs with the artifact writer
+    disabled, and the ``artifacts/`` tree is byte-identical after."""
     from mapreducewordcount_spark.queries import all_queries
     from mapreducewordcount_spark.sources import sig_artifacts
 
-    # a prior test in this session may have verified a family already
-    # — clear the session memo so THIS recompute is genuine
-    sig_artifacts._SESSION_VERIFIED.clear()
+    def refuse(*_args, **_kwargs):
+        raise AssertionError("a query tried to write an artifact")
 
-    before = _artifact_digests()
-    expected_dirs = {f for fams in ARTIFACT_QUERIES.values()
-                     for f in fams}
-    on_disk = {p.name for p in ARTIFACT_ROOT.iterdir()
-               if p.is_dir() and p.name not in (".tmp", "test_roundtrip")}
-    assert on_disk == expected_dirs, \
-        "artifact family map out of date — update ARTIFACT_QUERIES"
-
-    qs = all_queries()
-    for name in ARTIFACT_QUERIES:
-        qs[name].spark_fn(spark, SF_ORACLE)  # materializes eagerly
-
-    after = _artifact_digests()
-    drifted = sorted(k for k in before
-                     if after.get(k) != before[k]) + \
-        sorted(set(after) - set(before))
-    assert not drifted, \
-        f"regenerated artifacts differ from committed bytes: {drifted} " \
-        "— a hash family changed; re-run the three-sf generation and " \
-        "commit the new artifacts"
+    monkeypatch.setattr(sig_artifacts, "_write_artifact", refuse)
+    specs, names = all_queries(), _artifact_queries()
+    read = {f for f in ARTIFACT_FAMILIES for n in names
+            if f"/{f}/" in specs[n].oracle_sql}
+    assert read == set(ARTIFACT_FAMILIES)  # every family is exercised
+    before = _tree_digest(REPO_ROOT / "artifacts")
+    for name in names:
+        (specs[name].spark_fn(spark, SF_SMOKE)
+         .write.mode("overwrite").format("noop").save())
+    assert _tree_digest(REPO_ROOT / "artifacts") == before
 
 
 def test_artifact_query_paths_match_one_shot_operators(spark):
-    """The gate queries route through materialize→readback; their
-    docstrings claim output identical to the one-shot operators for
-    the same parameters. Pin it — a drifted default (band count,
-    refine, k) would silently decouple what the gate verifies from
-    what the library ships."""
+    """The gate queries compose a model builder with a downstream
+    stage; their docstrings claim output identical to the one-shot
+    operators for the same parameters. Pin it — a drifted default
+    (band count, refine, k) would silently decouple what the gate
+    verifies from what the library ships."""
     from mapreducewordcount_spark.operators import dedup as dd
     from mapreducewordcount_spark.operators.pq import pq_topk
     from mapreducewordcount_spark.operators.similarity import lsh_topk
@@ -201,174 +215,6 @@ def test_artifact_query_paths_match_one_shot_operators(spark):
     via_artifact = {tuple(r) for r in ann_pq_topk(spark, SF_ORACLE).collect()}
     direct = {tuple(r) for r in pq_topk(emb, queries, k=5).collect()}
     assert via_artifact == direct
-
-
-def test_materialize_frame_session_memo(spark, monkeypatch):
-    """Second materialize_frame call for the same (name, key) in one
-    session skips the verify/write path entirely (the chunk family's
-    four gate queries share one artifact; each redundant verify costs
-    ~1.8s at sf0.1) — while a different key still verifies."""
-    import shutil
-
-    from mapreducewordcount_spark.sources import sig_artifacts
-
-    calls = []
-    real = sig_artifacts._write_artifact
-
-    def counting(out, path, filename, sort_cols):
-        calls.append(str(path))
-        return real(out, path, filename, sort_cols)
-
-    monkeypatch.setattr(sig_artifacts, "_write_artifact", counting)
-    df = spark.createDataFrame([(1, "a"), (2, "b")],
-                               "doc_id long, v string")
-    try:
-        sig_artifacts._SESSION_VERIFIED.discard(("test_memo", (2, 9)))
-        sig_artifacts._SESSION_VERIFIED.discard(("test_memo", (2, 10)))
-        a = sig_artifacts.materialize_frame(df, "test_memo", (2, 9),
-                                            ["doc_id"])
-        b = sig_artifacts.materialize_frame(df, "test_memo", (2, 9),
-                                            ["doc_id"])
-        assert len(calls) == 1          # second call memoized
-        assert sorted(map(tuple, a.collect())) \
-            == sorted(map(tuple, b.collect()))
-        sig_artifacts.materialize_frame(df, "test_memo", (2, 10),
-                                        ["doc_id"])
-        assert len(calls) == 2          # different key → fresh verify
-    finally:
-        for k in [k for k in sig_artifacts._SESSION_VERIFIED
-                  if k[0] == "test_memo"]:
-            sig_artifacts._SESSION_VERIFIED.discard(k)
-        shutil.rmtree(sig_artifacts.ARTIFACT_ROOT / "test_memo",
-                      ignore_errors=True)
-
-
-@pytest.mark.slow  # heavy sweep: default tier skips (pytest.ini, r14)
-def test_memo_token_misses_on_column_set_change(spark, monkeypatch):
-    """ADVICE r11: a ``memo_token`` REPLACES the plan fingerprint in
-    the memo key, so a same-session plan change at a token-keyed call
-    site would otherwise silently serve the committed bytes. The
-    sorted column set is folded into the key: same token + same
-    columns memo-hits, same token + different columns falls through
-    to the recompute-and-verify path."""
-    import shutil
-
-    from mapreducewordcount_spark.sources import sig_artifacts
-
-    calls = []
-    real = sig_artifacts._write_artifact
-
-    def counting(out, path, filename, sort_cols):
-        calls.append(str(path))
-        return real(out, path, filename, sort_cols)
-
-    monkeypatch.setattr(sig_artifacts, "_write_artifact", counting)
-    df1 = spark.createDataFrame([(1, "a")], "doc_id long, v string")
-    df2 = spark.createDataFrame([(1, "a", 7)],
-                                "doc_id long, v string, w long")
-    try:
-        sig_artifacts.materialize_frame(df1, "test_memo_tok", (1, 5),
-                                        ["doc_id"], memo_token="tok")
-        sig_artifacts.materialize_frame(df1, "test_memo_tok", (1, 5),
-                                        ["doc_id"], memo_token="tok")
-        assert len(calls) == 1          # token+columns stable → hit
-        sig_artifacts.materialize_frame(df2, "test_memo_tok", (1, 5),
-                                        ["doc_id"], memo_token="tok")
-        assert len(calls) == 2          # column-set change → miss
-    finally:
-        for k in [k for k in sig_artifacts._SESSION_VERIFIED
-                  if k[0] == "test_memo_tok"]:
-            sig_artifacts._SESSION_VERIFIED.discard(k)
-        shutil.rmtree(sig_artifacts.ARTIFACT_ROOT / "test_memo_tok",
-                      ignore_errors=True)
-
-
-def test_materialize_frame_lazy_thunk_skips_fit_on_hit(spark, monkeypatch):
-    """Round 13: a token-keyed call site may pass a ZERO-ARG THUNK —
-    on a session-memo hit the thunk (the bounded model fit behind it)
-    is never invoked; the first call still materializes and verifies,
-    and a declared-column mismatch raises instead of writing."""
-    import shutil
-
-    import pytest
-
-    from mapreducewordcount_spark.sources import sig_artifacts
-
-    fits = []
-
-    def thunk():
-        fits.append(1)
-        return spark.createDataFrame([(1, 10), (2, 20)],
-                                     "bucket long, w long")
-
-    try:
-        a = sig_artifacts.materialize_frame(
-            thunk, "test_lazy", (3, 7), ["bucket"],
-            memo_token="lazy-tok", columns=["bucket", "w"], spark=spark)
-        assert len(fits) == 1           # first call runs the fit
-        b = sig_artifacts.materialize_frame(
-            thunk, "test_lazy", (3, 7), ["bucket"],
-            memo_token="lazy-tok", columns=["bucket", "w"], spark=spark)
-        assert len(fits) == 1           # memo hit: thunk NOT invoked
-        assert sorted(map(tuple, a.collect())) \
-            == sorted(map(tuple, b.collect()))
-        # declared columns must match the materialized frame
-        with pytest.raises(ValueError, match="declared"):
-            sig_artifacts.materialize_frame(
-                thunk, "test_lazy", (3, 8), ["bucket"],
-                memo_token="lazy-tok", columns=["bucket", "wrong"],
-                spark=spark)
-        # lazy form without its required kwargs is an error
-        with pytest.raises(ValueError, match="lazy"):
-            sig_artifacts.materialize_frame(
-                thunk, "test_lazy", (3, 9), ["bucket"])
-    finally:
-        for k in [k for k in sig_artifacts._SESSION_VERIFIED
-                  if k[0] == "test_lazy"]:
-            sig_artifacts._SESSION_VERIFIED.discard(k)
-        shutil.rmtree(sig_artifacts.ARTIFACT_ROOT / "test_lazy",
-                      ignore_errors=True)
-
-
-def test_materialize_signatures_session_memo(spark, monkeypatch):
-    """Round 13: materialize_signatures with a memo_token gains the
-    materialize_frame session-memo contract — first call per session
-    writes/verifies, the second serves the committed bytes without
-    re-entering the write path; omitting the token keeps the old
-    always-verify behavior."""
-    import shutil
-
-    from mapreducewordcount_spark.sources import sig_artifacts
-
-    calls = []
-    real = sig_artifacts._write_artifact
-
-    def counting(out, path, filename, sort_cols):
-        calls.append(str(path))
-        return real(out, path, filename, sort_cols)
-
-    monkeypatch.setattr(sig_artifacts, "_write_artifact", counting)
-    sigs = spark.createDataFrame([(1, 111), (2, 222)],
-                                 "doc_id long, simhash long")
-    try:
-        a = sig_artifacts.materialize_signatures(
-            sigs, "test_sig_memo", (2, 42), "doc_id", "simhash",
-            memo_token="sig-tok")
-        b = sig_artifacts.materialize_signatures(
-            sigs, "test_sig_memo", (2, 42), "doc_id", "simhash",
-            memo_token="sig-tok")
-        assert len(calls) == 1          # memo hit: no second verify
-        assert sorted(map(tuple, a.collect())) \
-            == sorted(map(tuple, b.collect()))
-        sig_artifacts.materialize_signatures(
-            sigs, "test_sig_memo", (2, 42), "doc_id", "simhash")
-        assert len(calls) == 2          # tokenless call still verifies
-    finally:
-        for k in [k for k in sig_artifacts._SESSION_VERIFIED
-                  if k[0] == "test_sig_memo"]:
-            sig_artifacts._SESSION_VERIFIED.discard(k)
-        shutil.rmtree(sig_artifacts.ARTIFACT_ROOT / "test_sig_memo",
-                      ignore_errors=True)
 
 
 def test_content_match_one_job_semantics(spark):
@@ -406,14 +252,15 @@ def test_write_artifact_skips_rewrite_when_values_match(spark, tmp_path,
 
     monkeypatch.setattr(sig_artifacts, "ARTIFACT_ROOT", tmp_path)
     df = spark.createDataFrame([(1, 10), (2, 20)], "id long, sig long")
-    out = sig_artifacts.materialize_signatures(
+    target = sig_artifacts.materialize_signatures(
         df, "test_skip_rewrite", (2, 7), "id", "sig")
-    target = tmp_path / "test_skip_rewrite" / "k=2_7" / "sig.parquet"
+    assert target == tmp_path / "test_skip_rewrite" / "k=2_7" / "sig.parquet"
+    out = spark.read.parquet(str(target)).select("id", "sig").collect()
     st0 = os.stat(target)
-    out2 = sig_artifacts.materialize_signatures(
+    sig_artifacts.materialize_signatures(
         df, "test_skip_rewrite", (2, 7), "id", "sig")
     st1 = os.stat(target)
     assert (st0.st_mtime_ns, st0.st_ino, st0.st_size) \
         == (st1.st_mtime_ns, st1.st_ino, st1.st_size)
-    assert sorted(map(tuple, out.collect())) \
-        == sorted(map(tuple, out2.collect()))
+    out2 = spark.read.parquet(str(target)).select("id", "sig").collect()
+    assert sorted(map(tuple, out)) == sorted(map(tuple, out2))

@@ -370,16 +370,3 @@ def test_load_table_sees_in_place_rewrites(spark, tmp_path):
     assert rows() == [(0, "AFRICA"), (1, "ASIA")]
     write(["EUROPE", "MIDDLE EAST", "AMERICA"])
     assert rows() == [(0, "EUROPE"), (1, "MIDDLE EAST"), (2, "AMERICA")]
-
-
-def test_reset_session_memos_clears_artifact_memos():
-    """The benchmarks' per-rep reset must drop the artifact
-    verified-set, so every timed rep re-verifies instead of serving
-    session state."""
-    from mapreducewordcount_spark.sources import sig_artifacts
-    from mapreducewordcount_spark.sources.tables import reset_session_memos
-
-    sentinel = ("__reset_test__", (0, 0), "tok", ("id", "sig"))
-    sig_artifacts._SESSION_VERIFIED.add(sentinel)
-    reset_session_memos()
-    assert sentinel not in sig_artifacts._SESSION_VERIFIED
