@@ -12,8 +12,7 @@ shuffle as narrow as possible:
 - shuffle ``(group, xxhash64(line))`` — a 16-ish-byte key — instead
   of raw line strings (a cookie banner is hundreds of bytes ×
   billions of rows). Collision risk is n²/2⁶⁵ per group — negligible
-  below ~10⁹ distinct lines per source; go 128-bit (two seeds) past
-  that;
+  below ~10⁹ distinct lines per source;
 - explode ONCE: doc-frequency is a **partial-aggregated**
   ``groupBy(group, hash).count()`` joined back onto the exploded
   lines. The earlier in-place window form
@@ -46,44 +45,21 @@ from pyspark.sql import functions as F
 from mapreducewordcount_spark.functions.repetition import lines
 
 
-def hash_key(col, wide: bool = False):
-    """Shuffle key for a string: 64-bit ``xxhash64``, or a two-lane
-    128-bit struct for corpora past ~10⁹ distinct strings per group
-    (where n²/2⁶⁵ birthday collisions stop being negligible).
-
-    The second lane re-hashes the string with a ``\\x01``
-    domain-separation suffix — effectively a second hash function of
-    the same family with a different seed, so a joint collision
-    needs n²/2¹²⁹. Struct keys group/partition/window exactly like
-    scalar keys; the shuffle rows just carry 16 bytes instead of 8.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    if not wide:
-        return F.xxhash64(c)
-    return F.struct(
-        F.xxhash64(c).alias("h1"),
-        F.xxhash64(F.concat(c, F.lit("\x01"))).alias("h2"))
-
-
 def boilerplate_report(docs: DataFrame, min_docs: int = 3,
                        id_col: str = "doc_id", text_col: str = "text",
-                       group_col: str = "source",
-                       wide_keys: bool = False) -> DataFrame:
+                       group_col: str = "source") -> DataFrame:
     """Per doc: distinct-line count, how many of those lines are
     boilerplate (appear in ≥ ``min_docs`` docs of the same group),
     and the boilerplate fraction.
 
     Returns one row per input doc (zero counts for line-less docs).
-    ``wide_keys`` switches the line shuffle key from 64-bit to the
-    two-lane 128-bit form (``hash_key``) — same output, collision
-    headroom for >10⁹ distinct lines per source.
     """
     base = docs.select(id_col, group_col, text_col)
     per_doc_lines = (base
                      .select(id_col, group_col,
                              F.explode(F.array_distinct(lines(text_col)))
                              .alias("line"))
-                     .withColumn("line_key", hash_key("line", wide_keys))
+                     .withColumn("line_key", F.xxhash64("line"))
                      .drop("line"))
     # doc-frequency as a PARTIAL AGGREGATE + join-back (not a window):
     # lines are distinct per doc, so count(*) per (group, line_key) ==

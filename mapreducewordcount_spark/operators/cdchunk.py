@@ -9,12 +9,11 @@ identical passages chunk identically wherever they appear. This is
 the primitive behind dedup storage (restic/borg/LBFS), delta-sync,
 and chunk-level corpus dedup between crawl snapshots.
 
-Implementation is the engine's measured hybrid (the exact-substring
-lesson): symbols are Unicode CODE POINTS (``str`` → utf-32 view, so
-offsets are exactly Python/SQL character positions), the window hash
-is the same vectorized uint64 polynomial as
-``exact_substring._rolling_keys_udf`` (one strided numpy
-multiply-add per doc — no per-byte Python), and only the SPARSE
+Implementation is a measured hybrid: symbols are Unicode CODE POINTS
+(``str`` → utf-32 view, so offsets are exactly Python/SQL character
+positions), the window hash is a vectorized uint64 polynomial (one
+strided numpy multiply-add per doc — no per-byte Python), and only
+the SPARSE
 boundary candidates (density 2^-mask_bits) pass through the
 min/max-size enforcement loop. Chunk ids are md5 of the chunk's
 utf-8 bytes — which DuckDB reproduces as
@@ -92,8 +91,9 @@ def _chunk_udf(window: int, mask_bits: int, min_chunk: int,
     from pyspark.sql import types as T
     from pyspark.sql.functions import pandas_udf
 
-    # power table via masked Python ints (no numpy scalar-overflow
-    # warnings — the exact_substring lesson, ADVICE r7)
+    # power table via masked Python ints: numpy SCALAR uint64
+    # multiplies warn on overflow in every executor log (ADVICE r7);
+    # the array ops below wrap silently by design
     mask64 = (1 << 64) - 1
     plist, p = [], 1
     for _ in range(window):

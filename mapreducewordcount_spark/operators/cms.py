@@ -11,13 +11,13 @@ overestimate bounded by collisions (≤ 2N/WIDTH with probability
 1 − 2^−DEPTH per the classic bound).
 
 Why this one is FULLY oracled with no artifact (unlike GK
-percentiles, which stay behind the ``sketch_stats(approximate=True)``
-flag): every CMS cell is an INTEGER SUM over rows selected by a
-deterministic hash — merge-order- and partition-invariant — and the
-hash is the engine's cross-engine recipe (md5 first-4-hex-digits mod
-WIDTH, exactly uniform because WIDTH divides 65536). DuckDB rebuilds
-the identical sketch from raw text and the identical estimates from
-the sketch.
+percentiles, which are merge-order-sensitive, so ``sketch_stats``
+gates the exact ``percentile_disc`` form instead): every CMS cell
+is an INTEGER SUM over rows selected by a deterministic hash —
+merge-order- and partition-invariant — and the hash is the engine's
+cross-engine recipe (md5 first-4-hex-digits mod WIDTH, exactly
+uniform because WIDTH divides 65536). DuckDB rebuilds the identical
+sketch from raw text and the identical estimates from the sketch.
 
 Scale shape: the build is one partial-agg ``groupBy(depth, cell)``
 bounded at DEPTH × WIDTH rows regardless of corpus size (map-side

@@ -847,7 +847,7 @@ def embedding_band_keys(embeddings: DataFrame, id_col: str = "vec_id",
     """(id, band, key) exploded band table — the same fixed-plane
     construction ``lsh_candidate_pairs`` bands on, exposed standalone
     so the gate queries can commit it as an oracle artifact
-    (``queries/dedup_queries.band_key_model``) and at scale so a
+    (``queries/dedup_queries.lsh_band_model``) and at scale so a
     write-time job can persist it as the corpus's LSH index."""
     from mapreducewordcount_spark.operators.similarity import (
         _fixed_planes,

@@ -28,8 +28,8 @@ row per upstream task; the join-back is a skewed equi-join AQE *can*
 split (the count side is one row per key). The occurrence frame is
 derived twice (count side + probe side, both column-pruned narrow
 scans) — scans parallelize arbitrarily, hot window partitions do
-not. Collision risk n²/2⁶⁵ on the hash — switch to a two-seed
-128-bit key past ~10⁹ distinct spans.
+not. Collision risk n²/2⁶⁵ on the hash — negligible below ~10⁹
+distinct spans.
 """
 
 from __future__ import annotations
@@ -61,23 +61,17 @@ def _ngram_strings(text_col: str, n: int):
 
 def duplicate_span_stats(docs: DataFrame, n: int = 5, min_count: int = 2,
                          id_col: str = "doc_id",
-                         text_col: str = "text",
-                         wide_keys: bool = False) -> DataFrame:
+                         text_col: str = "text") -> DataFrame:
     """doc → (n_ngrams, n_dup_ngrams, dup_fraction).
 
     An occurrence is *duplicated* when its n-gram occurs ≥
     ``min_count`` times corpus-wide (other docs or repeats within the
     same doc — both are the same bytes to a training run).
-    ``wide_keys`` switches the span shuffle key to the two-lane
-    128-bit form (``operators.boilerplate.hash_key``) for corpora
-    past ~10⁹ distinct spans.
     """
-    from mapreducewordcount_spark.operators.boilerplate import hash_key
-
     grams = (docs
              .select(id_col,
                      F.explode(_ngram_strings(text_col, n)).alias("ng"))
-             .withColumn("key", hash_key("ng", wide_keys))
+             .withColumn("key", F.xxhash64("ng"))
              .drop("ng"))
     # corpus frequency via partial-agg groupBy + join-back (module
     # docstring) — the hot span map-side-combines, no window straggler

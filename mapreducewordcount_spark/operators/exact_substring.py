@@ -22,10 +22,11 @@ Scale shape (the ``operators/dupspans.py`` discipline, which this
 module extends from *counting* duplicated n-grams to *removing* the
 maximal duplicated spans):
 
-- The shuffle carries 8-byte ``xxhash64`` keys (``wide_keys`` switches
-  to the two-lane 128-bit struct past ~10^9 distinct L-grams), never
-  the L-token strings themselves — at L=50 a raw key would be ~300
-  bytes/row.
+- The shuffle carries 8-byte ``xxhash64`` keys, never the L-token
+  strings themselves — at L=50 a raw key would be ~300 bytes/row.
+  A 64-bit key space sees its first birthday collision near ~4·10^9
+  distinct L-grams; a collision can only over-remove, never miss a
+  duplicate.
 - Corpus frequency is a partial-aggregated ``groupBy(key).count()``
   joined back onto the occurrences: a corpus-universal span (license
   boilerplate — guaranteed in web data) map-side-combines to one row
@@ -34,12 +35,9 @@ maximal duplicated spans):
   partitioned by doc_id, bounded by the document's own length, so no
   cross-doc skew is possible.
 - Building the L-gram string per start position is O(n_tokens * L)
-  character movement inside one narrow projection (no shuffle). For
-  book-length documents a per-doc Arrow rolling-hash would cut that
-  to O(n_tokens); at the corpus profile this engine targets (web docs,
-  mean span far under 10k tokens) the expression form stays
-  whole-stage-codegen'd and JVM-side, which measures faster than the
-  Arrow round-trip below ~50k tokens/doc.
+  character movement inside one narrow projection (no shuffle), which
+  stays whole-stage-codegen'd and JVM-side at the corpus profile this
+  engine targets (web docs, mean span far under 10k tokens).
 
 Tokenization is the engine's native normalizer
 (``functions.text_metrics.words``), so "token" here matches every
@@ -48,12 +46,10 @@ other text operator and the DuckDB oracle's ``_WORDS_CTE``.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from mapreducewordcount_spark.functions.text_metrics import words
-from mapreducewordcount_spark.operators.boilerplate import hash_key
 from mapreducewordcount_spark.operators.dupspans import _ngram_strings
 
 #: Lee et al. 2022's published operating point (50 BPE tokens). Gate
@@ -62,7 +58,7 @@ DEFAULT_MIN_TOKENS = 50
 
 
 def _lgram_occurrences(docs: DataFrame, min_tokens: int, id_col: str,
-                       text_col: str, wide_keys: bool) -> DataFrame:
+                       text_col: str) -> DataFrame:
     """(doc_id, s, key): every L-gram start position (1-based token
     index) with its hashed shuffle key. Multiplicity preserved —
     within-doc repeats are duplicates too (same bytes to a training
@@ -72,83 +68,14 @@ def _lgram_occurrences(docs: DataFrame, min_tokens: int, id_col: str,
                     F.posexplode(_ngram_strings(text_col, min_tokens))
                     .alias("pos0", "ng"))
             .select(id_col, (F.col("pos0") + 1).alias("s"),
-                    hash_key("ng", wide_keys).alias("key")))
-
-
-#: FNV-64 prime — any odd constant works as the rolling-hash base;
-#: odd ⇒ invertible mod 2^64, so windows differing in one token get
-#: distinct contributions at every position.
-_ROLL_BASE = 1099511628211
-
-
-def _rolling_keys_udf(min_tokens: int):
-    """array<long> token hashes → array<long> of L-gram window hashes
-    (polynomial in uint64 wraparound arithmetic), Arrow-batched.
-
-    The long-document scale path: the expression form builds the
-    L-token STRING per start position — O(n·L) character movement
-    plus an L-token hash each — while this variant does O(n·L)
-    uint64 multiply-adds on a strided numpy view (no allocation per
-    window, C speed) over token hashes computed once JVM-side. Keys
-    differ from the expression form's (polynomial-of-xxhash64 vs
-    xxhash64-of-string) but the DUPLICATE RELATION they induce is
-    identical up to hash collisions, so spans/stats/rewrite outputs
-    are equal — pinned by tests/test_exact_substring.py's
-    expr-vs-arrow parity sweep.
-    """
-    import numpy as np
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
-    # power table in Python ints masked to 64 bits (the wraparound is
-    # the point — polynomial hash mod 2^64), converted once: numpy
-    # SCALAR uint64 multiplies emit RuntimeWarning on overflow, which
-    # would pollute every executor log that builds this UDF (ADVICE
-    # r7; array ops below wrap silently by design).
-    mask = (1 << 64) - 1
-    plist, p = [], 1
-    for _ in range(min_tokens):
-        plist.append(p)
-        p = (p * _ROLL_BASE) & mask
-    powers = np.array(list(reversed(plist)), dtype=np.uint64)
-
-    @pandas_udf(T.ArrayType(T.LongType()))
-    def roll(tok_hashes: pd.Series) -> pd.Series:
-        out = []
-        for lst in tok_hashes:
-            if lst is None or len(lst) < min_tokens:
-                out.append([])
-                continue
-            t = np.asarray(lst, dtype=np.int64).view(np.uint64)
-            win = np.lib.stride_tricks.sliding_window_view(t, min_tokens)
-            h = (win * powers).sum(axis=1, dtype=np.uint64)
-            out.append(h.view(np.int64).tolist())
-        return pd.Series(out)
-
-    return roll
-
-
-def _lgram_occurrences_arrow(docs: DataFrame, min_tokens: int,
-                             id_col: str, text_col: str) -> DataFrame:
-    """Arrow rolling-hash form of ``_lgram_occurrences`` — same
-    (doc_id, s, key) contract, built from JVM-side per-token xxhash64
-    plus a numpy polynomial window hash (see ``_rolling_keys_udf``)."""
-    roll = _rolling_keys_udf(min_tokens)
-    tok_hashes = F.transform(words(text_col), lambda w: F.xxhash64(w))
-    return (docs
-            .select(id_col, roll(tok_hashes).alias("__keys"))
-            .select(id_col,
-                    F.posexplode("__keys").alias("pos0", "key"))
-            .select(id_col, (F.col("pos0") + 1).alias("s"), "key"))
+                    F.xxhash64("ng").alias("key")))
 
 
 def exact_substring_spans(docs: DataFrame,
                           min_tokens: int = DEFAULT_MIN_TOKENS,
                           min_count: int = 2,
                           id_col: str = "doc_id",
-                          text_col: str = "text",
-                          wide_keys: bool = False,
-                          key_mode: str = "expr") -> DataFrame:
+                          text_col: str = "text") -> DataFrame:
     """Maximal duplicated token spans per document.
 
     Returns (id_col, span_start, span_end): 1-based inclusive token
@@ -157,21 +84,8 @@ def exact_substring_spans(docs: DataFrame,
     runs (overlapping or ADJACENT covered intervals fuse — the removal
     set is a set of positions, so two abutting duplicated windows are
     one maximal removed run).
-
-    ``key_mode``: ``"expr"`` (default — codegen'd md-free string
-    window + xxhash64; the oracle-parity form) or ``"arrow"`` (numpy
-    rolling polynomial over JVM token hashes — the long-document
-    path; same spans, different key family, no ``wide_keys``).
     """
-    if key_mode == "arrow":
-        if wide_keys:
-            raise ValueError("arrow key_mode is single-lane 64-bit; "
-                             "use expr mode for wide_keys")
-        occ = _lgram_occurrences_arrow(docs, min_tokens, id_col,
-                                       text_col)
-    else:
-        occ = _lgram_occurrences(docs, min_tokens, id_col, text_col,
-                                 wide_keys)
+    occ = _lgram_occurrences(docs, min_tokens, id_col, text_col)
     dup_keys = (occ.groupBy("key")
                 .agg(F.count(F.lit(1)).alias("cnt"))
                 .filter(F.col("cnt") >= min_count)
@@ -202,9 +116,7 @@ def exact_substring_dedup(docs: DataFrame,
                           min_tokens: int = DEFAULT_MIN_TOKENS,
                           min_count: int = 2,
                           id_col: str = "doc_id",
-                          text_col: str = "text",
-                          wide_keys: bool = False,
-                          key_mode: str = "expr") -> DataFrame:
+                          text_col: str = "text") -> DataFrame:
     """The rewrite: per doc, duplicated-span stats + the text that
     survives span removal.
 
@@ -221,7 +133,7 @@ def exact_substring_dedup(docs: DataFrame,
     per doc are bounded by the doc's own length.
     """
     spans = exact_substring_spans(docs, min_tokens, min_count, id_col,
-                                  text_col, wide_keys, key_mode)
+                                  text_col)
     per = (spans.groupBy(id_col)
            .agg(F.count(F.lit(1)).alias("n_dup_spans"),
                 F.sum(F.col("span_end") - F.col("span_start") + 1)

@@ -30,9 +30,7 @@ Scale shape (same discipline as boilerplate/dupspans):
   (doc_id, pos) — unique per occurrence, so the trailing ``line``
   field rides along without ever tie-breaking. The shuffle is keyed
   on an 8-byte hash, never on raw line strings; 2⁻⁶⁴ collisions
-  would merge two distinct lines — the standard accepted trade, and
-  the reason the 128-bit ``operators.boilerplate.hash_key`` escape
-  hatch exists;
+  would merge two distinct lines — the standard accepted trade;
 - the rebuild is one groupBy(doc_id) assembling surviving lines via
   an in-array sort on position — no second corpus scan, no window
   over the full text.

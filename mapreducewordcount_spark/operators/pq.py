@@ -123,14 +123,6 @@ def pq_encode(corpus: DataFrame, books: list, id_col: str = "vec_id",
             .mapInPandas(encode, schema="neighbor_id long, codes array<int>"))
 
 
-#: above this many queries the per-query ADC tables stop riding the
-#: task closure and become a broadcast-joined DataFrame: the closure
-#: form re-serializes tables per TASK (Q × m × n_cent × 8 B each
-#: time — ~1 MB/task at 1k queries, ~1 GB at 1M), while a broadcast
-#: join ships them once per executor. See SCALE.md §PQ.
-PQ_CLOSURE_MAX_QUERIES = 1024
-
-
 def _adc_tables_df(queries: DataFrame, books: list,
                    query_id_col: str, vec_col: str,
                    passthrough: tuple[str, ...] = ()) -> DataFrame:
@@ -172,7 +164,7 @@ def _adc_tables_df(queries: DataFrame, books: list,
 def pq_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
             id_col: str = "vec_id", vec_col: str = "embedding",
             query_id_col: str = "query_id", m: int = 8, n_cent: int = 16,
-            refine: int = 32, adc_mode: str = "auto") -> DataFrame:
+            refine: int = 32) -> DataFrame:
     """One-shot PQ ANN: ``pq_shortlist`` (build + ADC prefilter) +
     ``pq_rerank`` (exact cosine re-rank) — split so the gate query
     can materialize the shortlist as an oracle artifact.
@@ -181,29 +173,9 @@ def pq_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     persist the codes, and run only the ADC+refine read path. The ADC
     pass touches codes only (m ints/vector); the exact re-rank joins
     back the ``refine`` surviving candidate vectors per query.
-
-    ``adc_mode`` picks how the per-query distance tables reach the
-    executors:
-
-    - ``"closure"`` — tables are computed driver-side and ship inside
-      the ``mapInPandas`` closure; numpy-batch scoring. Fastest for
-      bounded batches, but the closure (Q × m × n_cent doubles) is
-      re-serialized per task — fine at hundreds of queries, a
-      per-task megabyte tax beyond.
-    - ``"join"`` — tables become a DataFrame (built distributed, only
-      codebooks in the closure) broadcast-joined against the codes;
-      the ADC sum is pure codegen array algebra (``zip_with`` lookup
-      fold), shipped once per executor, no Python in the scoring
-      path. The scale form for large query batches.
-    - ``"auto"`` — ``closure`` up to ``PQ_CLOSURE_MAX_QUERIES``
-      queries, ``join`` above.
-
-    Both modes compute the identical ADC metric and share the same
-    refine + exact-re-rank tail (recall pinned through both in
-    tests/test_similarity_asof.py).
     """
     cand = pq_shortlist(corpus, queries, id_col, vec_col, query_id_col,
-                        m, n_cent, refine, adc_mode)
+                        m, n_cent, refine)
     return pq_rerank(cand, corpus, queries, k, id_col, vec_col,
                      query_id_col)
 
@@ -212,7 +184,6 @@ def pq_shortlist(corpus: DataFrame, queries: DataFrame,
                  id_col: str = "vec_id", vec_col: str = "embedding",
                  query_id_col: str = "query_id", m: int = 8,
                  n_cent: int = 16, refine: int = 32,
-                 adc_mode: str = "auto",
                  candidates: DataFrame | None = None) -> DataFrame:
     """(query_id, neighbor_id) ADC shortlist — the ``refine``
     lowest-ADC candidates per query (ties on neighbor_id). The model
@@ -221,19 +192,25 @@ def pq_shortlist(corpus: DataFrame, queries: DataFrame,
     gate commits this table and the oracle recomputes the exact
     rerank downstream of it.
 
+    The query batch is collected and its per-query ADC tables are
+    computed driver-side; they ship inside the ``mapInPandas``
+    closure and every code row is scored against every query with
+    numpy lookups. The closure (Q × m × n_cent doubles) is
+    re-serialized per task, which suits the bounded batches the
+    registry sends (10 queries).
+
     ``candidates`` (optional frame naming the query under
     ``query_id_col`` (or canonical ``query_id``) and the corpus
     vector under ``id_col`` (or canonical ``neighbor_id``)) restricts
     the ADC scan to those pairs — the IVF+PQ composition seam: a
     coarse quantizer prunes the corpus per query BEFORE any ADC work,
     turning the inherent O(N×Q) scan into O(routed×Q). Scoring then
-    rides two equi-joins (codes on neighbor_id, ADC tables on
-    query_id) with the same codegen lookup fold as join mode. The
-    tables join carries no forced broadcast hint (ADVICE r10): AQE
-    broadcasts it while the query batch fits and degrades to a
-    shuffle join — not a job abort — at the ~1 GB/1M-query scale."""
-    if adc_mode not in ("auto", "closure", "join"):
-        raise ValueError(f"adc_mode={adc_mode!r} not in auto/closure/join")
+    rides two equi-joins (codes on neighbor_id, ADC tables built
+    map-side by ``_adc_tables_df`` on query_id) and the codegen
+    lookup fold ``_adc_fold``. The tables join carries no forced
+    broadcast hint (ADVICE r10): AQE broadcasts it while the query
+    batch fits and degrades to a shuffle join — not a job abort — at
+    the ~1 GB/1M-query scale."""
     codes, books = pq_build(corpus, id_col, vec_col, m=m, k=n_cent)
     if candidates is not None:
         qtab = _adc_tables_df(queries, books, query_id_col, vec_col)
@@ -249,46 +226,7 @@ def pq_shortlist(corpus: DataFrame, queries: DataFrame,
         scored = (cand.select("query_id", "neighbor_id")
                   .join(codes, "neighbor_id")
                   .join(qtab, "query_id")
-                  .withColumn("adc", F.aggregate(
-                      F.zip_with(
-                          "codes",
-                          F.sequence(F.lit(0), F.lit(m - 1)),
-                          lambda c, j: F.element_at(
-                              F.col("adc_tab"),
-                              (j * n_cent + c + 1).cast("int"))),
-                      F.lit(0.0), lambda acc, x: acc + x))
-                  .select("query_id", "neighbor_id", "adc"))
-        wa = (Window.partitionBy("query_id")
-              .orderBy(F.col("adc"), F.col("neighbor_id")))
-        return (scored
-                .filter(F.col("query_id") != F.col("neighbor_id"))
-                .withColumn("__r", F.row_number().over(wa))
-                .filter(F.col("__r") <= refine)
-                .select("query_id", "neighbor_id"))
-    if adc_mode == "auto":
-        # probe with take(threshold+1), not count(): queries can be
-        # an arbitrary upstream plan, and count() would execute it in
-        # full once just to pick a mode (then again for the real work)
-        probe = queries.select(query_id_col) \
-            .take(PQ_CLOSURE_MAX_QUERIES + 1)
-        adc_mode = ("closure"
-                    if len(probe) <= PQ_CLOSURE_MAX_QUERIES
-                    else "join")
-
-    if adc_mode == "join":
-        qtab = _adc_tables_df(queries, books, query_id_col, vec_col)
-        # every code row scores against every query — the inherent
-        # O(N×Q) ADC scan, expressed as a broadcast nested-loop with
-        # the tiny side broadcast and the lookup fold in codegen
-        scored = (codes.crossJoin(F.broadcast(qtab))
-                  .withColumn("adc", F.aggregate(
-                      F.zip_with(
-                          "codes",
-                          F.sequence(F.lit(0), F.lit(m - 1)),
-                          lambda c, j: F.element_at(
-                              F.col("adc_tab"),
-                              (j * n_cent + c + 1).cast("int"))),
-                      F.lit(0.0), lambda acc, x: acc + x))
+                  .withColumn("adc", _adc_fold(m, n_cent))
                   .select("query_id", "neighbor_id", "adc"))
     else:
         qrows = queries.select(F.col(query_id_col).alias("query_id"),

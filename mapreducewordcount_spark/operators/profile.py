@@ -14,12 +14,8 @@ deliberately NOT one aggregate: mixing distinct and non-distinct
 functions makes Catalyst carry every min/max/count partial through
 the Expand's per-distinct-tuple hash table (one wide buffer per
 distinct value), measured 11.4 s vs 0.3 s + 1.8 s for the split form
-on sf0.1 lineitem — a 5× win from one fewer "optimization". Exact
-distinct counts are the oracle-able gate form; at 100 TB pass
-``approximate=True`` to swap in ``approx_count_distinct`` (HLL++,
-partition-invariant — see tests/test_sketches.py), which folds the
-distincts back into the single plain pass at a bounded relative
-error (pinned in tests/test_profile_cusum.py).
+on sf0.1 lineitem — a 5× win from one fewer "optimization". Distinct
+counts are exact, so the profile is the oracle-able gate form.
 
 Typed rendering keeps the gate hash stable cross-engine: numeric
 min/max surface as DOUBLE (exact for integers to 2^53), strings as
@@ -48,23 +44,12 @@ _IDENT = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
 
 def profile_columns(df: DataFrame, numeric_cols: Sequence[str],
                     string_cols: Sequence[str] = (),
-                    ts_cols: Sequence[str] = (), *,
-                    approximate: bool = False) -> DataFrame:
+                    ts_cols: Sequence[str] = ()) -> DataFrame:
     """One row per profiled column:
     ``(column_name, n_rows, n_nulls, n_distinct, min_num, max_num,
     min_str, max_str)`` — ``min_num``/``max_num`` NULL for
     non-numeric columns, ``min_str``/``max_str`` NULL for numeric
     ones (timestamps render into the string slots at ``TS_FMT``).
-
-    ``approximate=True`` swaps exact ``count_distinct`` for
-    ``approx_count_distinct`` (HLL++, default rsd 0.05) — the
-    documented 100 TB mode: the distinct estimates then live in the
-    SAME single aggregate pass as the min/max/null counts (no Expand,
-    no second scan — HLL partials merge like any other partial), at
-    a bounded relative error pinned in tests/test_profile_cusum.py.
-    HLL++ register merges are partition-invariant
-    (tests/test_sketches.py), so the estimate is deterministic. The
-    exact form stays the gate/oracle query.
     """
     cols = [*numeric_cols, *string_cols, *ts_cols]
     if not cols:
@@ -93,19 +78,11 @@ def profile_columns(df: DataFrame, numeric_cols: Sequence[str],
                          .alias(f"__min_{c}"))
             plain.append(F.date_format(F.max(c), TS_FMT)
                          .alias(f"__max_{c}"))
-    if approximate:
-        # HLL++ partials are ordinary aggregate buffers — they ride
-        # the SAME pass as the plain stats: one scan, no Expand
-        plain.extend(F.approx_count_distinct(F.col(c))
-                     .alias(f"__nd_{c}") for c in cols)
-        stats = df.agg(*plain)
-    else:
-        distincts = [F.count_distinct(F.col(c)).alias(f"__nd_{c}")
-                     for c in cols]
-        # two 1-row frames (see module docstring for why they must
-        # not be one aggregate), crossJoined — a broadcast NLJ of
-        # single rows
-        stats = df.agg(*plain).crossJoin(df.agg(*distincts))
+    distincts = [F.count_distinct(F.col(c)).alias(f"__nd_{c}")
+                 for c in cols]
+    # two 1-row frames (see module docstring for why they must not be
+    # one aggregate), crossJoined — a broadcast NLJ of single rows
+    stats = df.agg(*plain).crossJoin(df.agg(*distincts))
 
     # pivot the stats row to one output row per column: stack() is a
     # generator expression over the already-computed row — no rescan

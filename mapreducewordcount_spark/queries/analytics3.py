@@ -126,8 +126,7 @@ GROUP BY p.label, n.n_vecs
 """
 
 
-def sketch_stats(spark: SparkSession, sf_dir: str,
-                 approximate: bool = False) -> DataFrame:
+def sketch_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-returnflag price percentiles (p25/p50/p75) — round 10
     retires the registry's last rows-only row via the profiler
     precedent (VERDICT r9 next#4): the GATE form is the EXACT
@@ -136,18 +135,11 @@ def sketch_stats(spark: SparkSession, sf_dir: str,
     data value, so both engines hand back the identical parquet
     double bit-for-bit and DuckDB's ``quantile_disc`` oracles it
     directly; rank rule ``sorted(vals)[ceil(q·n)−1]`` replay-pinned
-    in tests/test_sketches.py).
-
-    ``approximate=True`` is the documented 100 TB swap: GK
-    ``approx_percentile`` — constant memory per group, one scan,
-    mergeable across partitions, the form this query takes when the
-    per-group sort behind an exact percentile stops fitting. It
-    stays OFF the gate because GK is merge-ORDER-sensitive (measured
-    at sf0.01: p50(A) = 52826.91 / 52832.76 / 52833.8 at 32/1/64
-    input partitions — neither a DuckDB recompute nor a pinned
-    artifact survives the gate's foreign-session partitioning
-    sweeps); its tolerance vs the exact form is pinned in
-    tests/test_sketches.py.
+    in tests/test_sketches.py). GK ``approx_percentile`` is not a
+    drop-in: it is merge-ORDER-sensitive (measured at sf0.01: p50(A)
+    = 52826.91 / 52832.76 / 52833.8 at 32/1/64 input partitions), so
+    neither a DuckDB recompute nor a pinned artifact would survive
+    the gate's foreign-session partitioning sweeps.
 
     Exact-form plan (round 13): one ``cume_dist`` window + a
     partial-agg groupBy on the SAME key (no second exchange), not
@@ -173,13 +165,6 @@ def sketch_stats(spark: SparkSession, sf_dir: str,
     TPC-H, so the equivalence holds here.
     """
     l = load_table(spark, sf_dir, "lineitem")
-    if approximate:
-        pctl = [F.expr(f"approx_percentile(l_extendedprice, {q}, 10000)")
-                .alias(a) for q, a in
-                ((0.25, "price_p25"), (0.5, "price_p50"),
-                 (0.75, "price_p75"))]
-        return (l.groupBy("l_returnflag")
-                .agg(F.count(F.lit(1)).alias("n_rows"), *pctl))
     w = Window.partitionBy("l_returnflag").orderBy("l_extendedprice")
     ranked = l.select("l_returnflag", "l_extendedprice",
                       F.cume_dist().over(w).alias("__cd"))

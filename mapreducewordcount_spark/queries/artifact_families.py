@@ -57,8 +57,8 @@ ARTIFACT_FAMILIES: dict[str, ArtifactFamily] = {
     "media_audio_fp_pairs": ArtifactFamily(
         p3.audio_fp_model, DOCS, ("id",), ("media_id", "fingerprint")),
     "dedup_embedding_pairs_lsh": ArtifactFamily(
-        dq.band_key_model, EMB, ("id", "band")),
-    "ann_lsh_topk": ArtifactFamily(dq.band_key_model, EMB, ("id", "band")),
+        dq.lsh_band_model, EMB, ("id", "band")),
+    "ann_lsh_topk": ArtifactFamily(dq.lsh_band_model, EMB, ("id", "band")),
     "ann_ivf_topk_assign": ArtifactFamily(
         _part(dq.ivf_topk_model, 0), EMB, ("id",)),
     "ann_ivf_topk_routed": ArtifactFamily(

@@ -229,7 +229,7 @@ FROM reach GROUP BY id
 """
 
 
-def band_key_model(spark: SparkSession, sf_dir: str) -> DataFrame:
+def lsh_band_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(id, band, key) sign-LSH band table — the model table of
     ``dedup_embedding_pairs_lsh`` and ``ann_lsh_topk``."""
     return dd.embedding_band_keys(load_table(spark, sf_dir, "embeddings"))
@@ -238,7 +238,7 @@ def band_key_model(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_embedding_pairs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH-pruned semantic near-dups, join+verify under a full hash
     oracle: the engine's (id, band, key) sign-LSH band table
-    (``band_key_model``) is the committed artifact, and DuckDB
+    (``lsh_band_model``) is the committed artifact, and DuckDB
     recomputes the candidate equi-join PLUS the exact-cosine verify
     from it and the raw embeddings view — so everything downstream of
     the (pytest-pinned, numpy-computed) banding is value-checked.
@@ -253,7 +253,7 @@ def dedup_embedding_pairs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both sides of the candidate self-join read the band table;
     # persisted, the banding UDF runs once instead of ~1.5x
     release_query_cache()
-    banded = persist_tracked(band_key_model(spark, sf_dir))
+    banded = persist_tracked(lsh_band_model(spark, sf_dir))
     emb = load_table(spark, sf_dir, "embeddings")
     return dd.embedding_pairs_from_banded(banded, emb, threshold=0.45)
 
@@ -307,7 +307,7 @@ QUALIFY rank <= 5
 
 def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH-bucketed approximate ANN with the probe+rerank under a
-    full hash oracle: the corpus band table (``band_key_model``,
+    full hash oracle: the corpus band table (``lsh_band_model``,
     identical construction to ``sim.lsh_topk``'s — same planes, same
     derived width) is the committed artifact; query rows (vec_id <
     10) probe its buckets, and the exact-cosine re-rank runs on
@@ -320,7 +320,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreducewordcount_spark.functions.vectors import cosine
 
     emb = load_table(spark, sf_dir, "embeddings")
-    kb = band_key_model(spark, sf_dir)
+    kb = lsh_band_model(spark, sf_dir)
     qb = (kb.filter(F.col("id") < 10)
           .select(F.col("id").alias("query_id"), "band", "key"))
     cand = (kb.join(F.broadcast(qb), ["band", "key"])

@@ -16,7 +16,7 @@ Oracle notes:
   keys while the oracle groups the L-gram STRINGS themselves (the
   ``doc_dup_spans`` precedent: equality of the two relations is exact
   up to a 2^-64 birthday collision in the hash, which the committed
-  corpora don't exhibit and which ``wide_keys`` retires at scale).
+  corpora don't exhibit).
   Everything downstream — occurrence counting, interval merge
   (gaps-and-islands), span stats, and the token-level rewrite — is
   replicated in portable SQL; the cleaned TEXT itself is hash-checked,

@@ -336,8 +336,7 @@ FROM owned GROUP BY 1
 SEMANTIC_DECONTAM_TAU = 0.35
 
 
-def semantic_decontam_report(spark: SparkSession, sf_dir: str,
-                             method: str = "exact") -> DataFrame:
+def semantic_decontam_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-level eval-set decontamination — the semantic member
     of the decontam family (exact n-gram `decontam_report`, Bloom
     `decontam_bloom_report`, cross-source `source_overlap_matrix`):
@@ -359,23 +358,6 @@ def semantic_decontam_report(spark: SparkSession, sf_dir: str,
     instead of 2·|pairs| times, leaving ONE interpreted fold per pair
     (measured 6.1 s → see SCALE.md; values bit-identical, so the
     oracle's per-pair evaluation still hash-matches).
-
-    ``method="lsh"`` is the LARGE-EVAL composition the posture
-    paragraph promises (VERDICT r9 next#2) — for when the eval set
-    outgrows the broadcast budget: both sides take the banded
-    sign-LSH keys of ``dedup_embedding_pairs_lsh``
-    (``similarity.band_keys_udf``), only (batch, eval) pairs agreeing
-    on ≥1 band are exact-cosine verified, and the per-doc max runs
-    over the verified candidates. SAME schema; semantics deltas,
-    documented: the contamination STATUS is exact whenever every
-    above-tau pair is a band candidate (recall 1.0 is guaranteed for
-    sign-identical pairs, e.g. scaled copies, and is the standard
-    ``1-(1-p^w)^b`` curve otherwise — pinned on a planted corpus in
-    tests/test_pipeline7.py), while ``max_eval_cos`` is a LOWER bound
-    for docs whose true max pair was never a candidate (clean docs
-    with no candidates report 0.0 — which may sit above a NEGATIVE
-    true max; both read "clean" under any sane tau). The gate stays
-    on the exact form.
     """
     from mapreducewordcount_spark.functions.vectors import dot, norm
 
@@ -385,8 +367,7 @@ def semantic_decontam_report(spark: SparkSession, sf_dir: str,
         docs.select(F.col("doc_id").alias("vec_id"), "source"),
         "vec_id")
     ev = (with_src.filter(F.col("source") == INDEX_SOURCE)
-          .select(F.col("vec_id").alias("ev_id"),
-                  F.col("embedding").alias("ev_vec"))
+          .select(F.col("embedding").alias("ev_vec"))
           .withColumn("__en", norm("ev_vec")))
     batch = (with_src.filter(F.col("source") != INDEX_SOURCE)
              .withColumn("__bn", norm("embedding")))
@@ -394,59 +375,16 @@ def semantic_decontam_report(spark: SparkSession, sf_dir: str,
                  dot("ev_vec", "embedding")
                  / (F.col("__en") * F.col("__bn"))) \
         .otherwise(F.lit(0.0))
-    if method == "lsh":
-        mc = _semantic_decontam_lsh_max(batch, ev, cos)
-    else:
-        mc = (batch.crossJoin(F.broadcast(ev.drop("ev_id")))
-              .select(F.col("vec_id").alias("doc_id"), "source",
-                      cos.alias("__cos"))
-              .groupBy("doc_id", "source")
-              .agg(F.max("__cos").alias("__mc")))
+    mc = (batch.crossJoin(F.broadcast(ev))
+          .select(F.col("vec_id").alias("doc_id"), "source",
+                  cos.alias("__cos"))
+          .groupBy("doc_id", "source")
+          .agg(F.max("__cos").alias("__mc")))
     return (mc.select("doc_id", "source",
                       F.round("__mc", 6).alias("max_eval_cos"),
                       F.when(F.col("__mc") > SEMANTIC_DECONTAM_TAU,
                              "contaminated").otherwise("clean")
                       .alias("status")))
-
-
-def _semantic_decontam_lsh_max(batch: DataFrame, ev: DataFrame,
-                               cos) -> DataFrame:
-    """LSH-prefiltered per-doc max cosine: band both sides with the
-    shared fixed hyperplanes, equi-join on (band, key) — the ONLY
-    row-proportional shuffle, 16-byte-ish keys — then evaluate the
-    exact cosine on the surviving candidate pairs only. Docs with no
-    candidate report 0.0 (below any sane tau). Scale shape: neither
-    side broadcasts; candidate mass is the banded-join bound
-    (~n·bands at derive_band_width keys), and the per-doc max is the
-    same partial aggregate as the exact form."""
-    from mapreducewordcount_spark.operators.similarity import (
-        _fixed_planes,
-        band_keys_udf,
-        derive_band_width,
-    )
-
-    n_bands = 16
-    width = derive_band_width(max(batch.count(), ev.count()))
-    mk = band_keys_udf(_fixed_planes(64, n_bands * width),
-                       n_bands, width)
-    bk = (batch.withColumn("__keys", mk(F.col("embedding")))
-          .select("vec_id", "source", "embedding", "__bn",
-                  F.posexplode("__keys").alias("band", "key")))
-    ek = (ev.withColumn("__keys", mk(F.col("ev_vec")))
-          .select("ev_id", "ev_vec", "__en",
-                  F.posexplode("__keys").alias("band", "key")))
-    cand = (bk.join(ek, ["band", "key"])
-            .select("vec_id", "source", "embedding", "__bn",
-                    "ev_id", "ev_vec", "__en")
-            .dropDuplicates(["vec_id", "ev_id"]))
-    mc = (cand.select(F.col("vec_id").alias("doc_id"), "source",
-                      cos.alias("__cos"))
-          .groupBy("doc_id", "source")
-          .agg(F.max("__cos").alias("__mc")))
-    return (batch.select(F.col("vec_id").alias("doc_id"), "source")
-            .join(mc, ["doc_id", "source"], "left")
-            .select("doc_id", "source",
-                    F.coalesce("__mc", F.lit(0.0)).alias("__mc")))
 
 
 SEMANTIC_DECONTAM_SQL = f"""

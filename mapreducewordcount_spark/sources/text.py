@@ -21,18 +21,9 @@ which the reference's whole-file assignment could not do).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
-def read_corpus(spark: SparkSession, input_dir: str, glob: str = "*.txt",
-                with_lineage: bool = False) -> DataFrame:
-    """Scan a directory of text files → ``DataFrame[value: string]``.
-
-    ``with_lineage=True`` adds ``file_name`` via ``input_file_name()``
-    for per-file accounting (the analog of the reference's map-task →
-    file assignment being observable).
-    """
-    df = spark.read.option("pathGlobFilter", glob).text(input_dir)
-    if with_lineage:
-        df = df.withColumn("file_name", F.input_file_name())
-    return df
+def read_corpus(spark: SparkSession, input_dir: str,
+                glob: str = "*.txt") -> DataFrame:
+    """Scan a directory of text files → ``DataFrame[value: string]``."""
+    return spark.read.option("pathGlobFilter", glob).text(input_dir)

@@ -9,8 +9,6 @@ span arithmetic on corpora where the right answer is hand-computable.
 
 from __future__ import annotations
 
-import pytest
-
 from mapreducewordcount_spark.operators.exact_substring import (
     exact_substring_dedup,
     exact_substring_spans,
@@ -113,18 +111,6 @@ def test_min_count_threshold(spark):
     assert all(thrice[i].cleaned_text == "" for i in range(3))
 
 
-def test_wide_keys_parity(spark):
-    d = _docs(spark,
-              _uw("a", 5) + " " + SHARED20 + " " + _uw("b", 7),
-              _uw("c", 3) + " " + SHARED20,
-              _uw("d", 40))
-    narrow = sorted(map(tuple, exact_substring_dedup(
-        d, min_tokens=15).collect()))
-    wide = sorted(map(tuple, exact_substring_dedup(
-        d, min_tokens=15, wide_keys=True).collect()))
-    assert narrow == wide
-
-
 def test_partitioning_invariance(spark):
     """The removal set is a corpus-level fact — repartitioning the
     input must not move a span boundary."""
@@ -136,32 +122,6 @@ def test_partitioning_invariance(spark):
     r1 = sorted(map(tuple, exact_substring_dedup(d1, min_tokens=15).collect()))
     r7 = sorted(map(tuple, exact_substring_dedup(d7, min_tokens=15).collect()))
     assert r1 == r7
-
-
-def test_arrow_key_mode_parity(spark):
-    """The Arrow rolling-hash key family (long-document path) must
-    induce the same duplicate relation as the expression form — the
-    whole dedup output (spans, stats, cleaned text) is key-family
-    independent. Sweep the planted corpora AND the gate corpus."""
-    from mapreducewordcount_spark.sources.tables import load_table
-    from tests.conftest import SF_ORACLE
-
-    planted = _docs(spark,
-                    _uw("a", 5) + " " + SHARED20 + " " + _uw("b", 7),
-                    _uw("c", 3) + " " + SHARED20,
-                    SHARED20 + " " + SHARED20,
-                    _uw("d", 40), "tiny")
-    corpora = [planted, load_table(spark, SF_ORACLE, "documents")]
-    for d in corpora:
-        expr = sorted(map(tuple, exact_substring_dedup(
-            d, min_tokens=15).collect()))
-        arrow = sorted(map(tuple, exact_substring_dedup(
-            d, min_tokens=15, key_mode="arrow").collect()))
-        assert expr == arrow
-
-    with pytest.raises(ValueError):
-        exact_substring_dedup(planted, min_tokens=15,
-                              wide_keys=True, key_mode="arrow")
 
 
 def test_gate_query_nontrivial_at_oracle_sf(spark):

@@ -259,51 +259,6 @@ def test_repetition_fractions_bounded_random(spark):
             assert 0.0 <= v <= 1.0, r
 
 
-def test_wide_keys_match_default_output(spark):
-    """The 128-bit two-lane key (collision headroom past ~10⁹
-    distinct strings) must be a pure shuffle-key swap: identical
-    output to the 64-bit default on the same corpus."""
-    from mapreducewordcount_spark.operators.dupspans import (
-        duplicate_span_stats,
-    )
-
-    header = "COOKIE BANNER"
-    rows = [(i, "srcA", f"{header}\nrun of shared words here {i}")
-            for i in range(4)]
-    rows += [(9, "srcA", "run of shared words here too")]
-    docs = spark.createDataFrame(rows,
-                                 "doc_id long, source string, text string")
-    narrow = sorted(map(tuple, boilerplate_report(docs).collect()))
-    wide = sorted(map(tuple,
-                      boilerplate_report(docs, wide_keys=True).collect()))
-    assert narrow == wide
-    n_spans = sorted(map(tuple, duplicate_span_stats(docs, n=3).collect()))
-    w_spans = sorted(map(tuple,
-                         duplicate_span_stats(docs, n=3,
-                                              wide_keys=True).collect()))
-    assert n_spans == w_spans
-
-
-def test_hash_key_lanes_are_independent(spark):
-    """The two lanes must behave as different hash functions: equal
-    inputs agree on both lanes, and across a planted input set the
-    lane-2 values are not a function applied uniformly to lane-1
-    (no shared-seed degeneracy)."""
-    from mapreducewordcount_spark.operators.boilerplate import hash_key
-
-    vals = [(f"line {i}",) for i in range(64)] + [("line 0",)]
-    df = spark.createDataFrame(vals, "s string")
-    rows = df.select(hash_key("s", wide=True).alias("k")).collect()
-    keys = [(r.k.h1, r.k.h2) for r in rows]
-    assert keys[-1] == keys[0]          # determinism on equal input
-    assert len(set(keys[:64])) == 64    # distinct inputs → distinct keys
-    # lanes disagree with each other (a degenerate h2==h1 would
-    # silently halve the key width)
-    assert all(h1 != h2 for h1, h2 in keys)
-    # lane-2 offsets vary: h2 - h1 is not a constant shift
-    assert len({(h2 - h1) for h1, h2 in keys[:64]}) > 1
-
-
 def test_epoch_shuffle_reproducible_and_epoch_sensitive(spark):
     """Same (key, epoch) → same order everywhere; different epoch →
     different order (that's the whole point of the salt)."""

@@ -184,18 +184,17 @@ def test_rank_overlap_matches_python_replay(spark):
 
 def test_semantic_decontam_lsh_mode_matches_exact_on_planted(
         spark, tmp_path):
-    """The large-eval composition (VERDICT r9 next#2): LSH-banded
-    prefilter + exact-cosine verify must reproduce the brute-force
-    form's contamination decisions on a planted corpus — recall is
-    exactly 1.0 for the planted above-tau pairs because they are
-    sign-identical with their eval twin (scaled copies and
-    no-sign-flip paraphrases share every band key deterministically).
-    The documented delta: max_eval_cos is a LOWER bound for clean
-    docs whose true max pair was never a candidate (0.0 when no
-    candidate at all)."""
+    """The brute-force max-cosine scan on a planted corpus: every
+    planted leak (scaled copies and a same-sign paraphrase of an
+    eval vector) is flagged, and every doc's status and max cosine
+    equal a pure-Python replay over all (doc, eval) pairs."""
+    import math
     import random as _random
 
+    import numpy as np
+
     from mapreducewordcount_spark.queries.pipeline7 import (
+        SEMANTIC_DECONTAM_TAU,
         semantic_decontam_report,
     )
 
@@ -230,23 +229,24 @@ def test_semantic_decontam_lsh_mode_matches_exact_on_planted(
 
     exact = {r.doc_id: r for r in
              semantic_decontam_report(spark, str(tmp_path)).collect()}
-    lsh = {r.doc_id: r for r in
-           semantic_decontam_report(spark, str(tmp_path),
-                                    method="lsh").collect()}
-    assert set(exact) == set(lsh)
-    for d, e in exact.items():
-        assert lsh[d].status == e.status, (d, e.status, lsh[d].status)
-        # lower-bound contract on the reported max (the no-candidate
-        # floor is 0.0, which may sit above a NEGATIVE true max —
-        # both are below any sane tau, so status is unaffected)
-        assert lsh[d].max_eval_cos <= max(e.max_eval_cos, 0.0) + 1e-9, d
-    # the planted leaks are all flagged, with the exact max preserved
+
+    # replay at the stored float32 precision
+    def f32(v):
+        return [float(x) for x in np.asarray(v, dtype=np.float32)]
+
+    def cos(a, b):
+        na = math.sqrt(sum(x * x for x in a))
+        nb = math.sqrt(sum(x * x for x in b))
+        return sum(x * y for x, y in zip(a, b)) / (na * nb)
+
+    evs = [f32(v) for v in ev_vecs]
+    want = {vid: max(cos(f32(v), e) for e in evs)
+            for vid, v, _ in emb if vid >= 100}
+    assert set(exact) == set(want)
+    for d, mc in want.items():
+        status = "contaminated" if mc > SEMANTIC_DECONTAM_TAU else "clean"
+        assert exact[d].status == status, (d, mc, exact[d].status)
+        assert abs(exact[d].max_eval_cos - mc) < 1e-6, d
+    # the planted leaks are all flagged
     for d in (100, 101, 102, 110):
         assert exact[d].status == "contaminated"
-        assert lsh[d].max_eval_cos == exact[d].max_eval_cos, d
-    # and the prefilter genuinely pruned: some clean doc never met a
-    # candidate, reporting the documented 0.0 floor
-    floors = [d for d, r in lsh.items()
-              if exact[d].status == "clean" and r.max_eval_cos == 0.0
-              and exact[d].max_eval_cos != 0.0]
-    assert floors, "prefilter pruned nothing — banding degenerated"

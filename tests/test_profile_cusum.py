@@ -79,44 +79,6 @@ def test_profile_rejects_hostile_and_duplicate_names(spark):
         profile_columns(df, numeric_cols=["k"], string_cols=["k"])
 
 
-def test_profile_approximate_mode(spark):
-    """approximate=True: distinct estimates within HLL++ tolerance of
-    exact (deterministic — HLL++ merges are partition-invariant), all
-    non-distinct cells IDENTICAL, and the plan collapses to ONE
-    aggregate pass — no Expand, a single scan."""
-    import re
-
-    from mapreducewordcount_spark.plans import explain_str
-    from mapreducewordcount_spark.sources.tables import load_table
-    from tests.conftest import SF_SMOKE
-
-    li = load_table(spark, SF_SMOKE, "lineitem")
-    kw = dict(numeric_cols=["l_orderkey", "l_quantity",
-                            "l_extendedprice"],
-              string_cols=["l_returnflag", "l_linestatus"],
-              ts_cols=["l_shipdate"])
-    exact = {r.column_name: r for r in profile_columns(li, **kw).collect()}
-    approx_df = profile_columns(li, approximate=True, **kw)
-    approx = {r.column_name: r for r in approx_df.collect()}
-    assert set(exact) == set(approx)
-    for c in exact:
-        e, a = exact[c], approx[c]
-        # HLL++ at default rsd 0.05: generous deterministic bound
-        assert abs(a.n_distinct - e.n_distinct) <= max(
-            3, 0.15 * e.n_distinct), (c, e.n_distinct, a.n_distinct)
-        for f in ("n_rows", "n_nulls", "min_num", "max_num",
-                  "min_str", "max_str"):
-            assert getattr(a, f) == getattr(e, f), (c, f)
-    plan = explain_str(approx_df)
-    assert "Expand" not in plan
-    # one unique scan NODE (AQE may print it under both the Initial
-    # and Final plan with the same node id)
-    scan_ids = set(re.findall(r"Scan parquet\s*\((\d+)\)", plan))
-    assert len(scan_ids) == 1, plan
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
 def test_cusum_peak_matches_python_replay(spark):
     """events_rate_cusum's window identity
     ``S_i = cum_i − min(0, min_{j≤i} cum_j)`` must equal the textbook

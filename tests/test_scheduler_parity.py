@@ -27,7 +27,8 @@ def test_every_file_assigned_exactly_once(spark, tmp_path):
     for i in range(11):
         (tmp_path / f"f{i}.txt").write_text("".join(
             f"line{i}_{j}\n" for j in range(i + 1)))
-    df = read_corpus(spark, str(tmp_path), with_lineage=True)
+    df = (read_corpus(spark, str(tmp_path))
+          .withColumn("file_name", F.input_file_name()))
     per_file = {os.path.basename(r.file_name): r.cnt for r in
                 df.groupBy("file_name").agg(F.count(F.lit(1)).alias("cnt")).collect()}
     assert per_file == {f"f{i}.txt": i + 1 for i in range(11)}
@@ -74,7 +75,7 @@ def test_split_count_bounded_by_files(spark, tmp_path):
     splits — verified via per-partition lineage."""
     for i in range(3):
         (tmp_path / f"f{i}.txt").write_text(f"w{i}\n")
-    df = read_corpus(spark, str(tmp_path), with_lineage=True)
+    df = read_corpus(spark, str(tmp_path))
     n_parts = (df.select(F.spark_partition_id().alias("p"))
                .filter(F.col("p").isNotNull()).distinct().count())
     assert n_parts <= 3

@@ -144,38 +144,26 @@ def test_pq_recall_at_5(spark, emb):
     assert recall >= 0.4, f"PQ recall collapsed: {recall}"
 
 
-def test_pq_join_adc_matches_closure_adc(spark, emb):
-    """The broadcast-join ADC form (the large-query-batch scale path)
-    must produce the same result as the closure form: same numpy
-    table math on both sides, same (adc, neighbor_id) refine order,
-    same exact re-rank — so the outputs are identical, not merely
-    recall-equivalent."""
-    from mapreducewordcount_spark.operators.pq import pq_topk
+def test_pq_shortlist_model_construction_runs_two_jobs(spark):
+    """Building the registry's PQ shortlist runs exactly two Spark
+    jobs before any action: the codebook training-sample collect and
+    the query-batch collect that feeds the closure ADC tables."""
+    from mapreducewordcount_spark.queries.dedup_queries import (
+        pq_shortlist_model,
+    )
+    from mapreducewordcount_spark.sources.tables import load_table
+    from tests.conftest import SF_SMOKE
 
-    closure = {tuple(r) for r in
-               pq_topk(emb, _queries(emb), k=5,
-                       adc_mode="closure").collect()}
-    joined = {tuple(r) for r in
-              pq_topk(emb, _queries(emb), k=5,
-                      adc_mode="join").collect()}
-    assert closure == joined
-
-
-def test_pq_auto_mode_flips_on_batch_size(spark, emb, monkeypatch):
-    """auto = closure under the threshold, join above (the closure
-    re-serializes Q×m×k doubles per task — SCALE.md §PQ)."""
-    from mapreducewordcount_spark.operators import pq
-
-    calls = []
-    real = pq._adc_tables_df
-    monkeypatch.setattr(pq, "_adc_tables_df",
-                        lambda *a, **kw: (calls.append(1), real(*a, **kw))[1])
-    q = _queries(emb)
-    pq.pq_topk(emb, q, k=5, adc_mode="auto").collect()
-    assert not calls  # small batch → closure path
-    monkeypatch.setattr(pq, "PQ_CLOSURE_MAX_QUERIES", 0)
-    pq.pq_topk(emb, q, k=5, adc_mode="auto").collect()
-    assert calls  # above threshold → join path
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    load_table(spark, SF_SMOKE, "embeddings")  # ship the package first
+    try:
+        sc.setJobGroup("pq_shortlist_construct", "pq shortlist build")
+        pq_shortlist_model(spark, SF_SMOKE)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(tracker.getJobIdsForGroup("pq_shortlist_construct")) == 2
 
 
 def test_pq_codes_are_compact_and_deterministic(spark, emb):
