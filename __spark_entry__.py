@@ -36,5 +36,4 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    return {name: spec.oracle_sql for name, spec in all_queries().items()
-            if spec.oracle_sql is not None}
+    return {name: spec.oracle_sql for name, spec in all_queries().items()}

@@ -29,6 +29,14 @@ def bucket_expr(word: Column | str, m: int) -> Column:
     return F.pmod(F.ascii(F.lower(word)), F.lit(m)).cast("int")
 
 
+def hex4(col: Column) -> Column:
+    """The first 4 hex digits of ``md5(col)`` as a long in [0, 65536) —
+    the hashed-bucket fold of the CMS, DSIR and langid feature tables
+    (``pmod(hex4(...), N)`` is exactly uniform for any N dividing
+    65536). ``queries/pipeline2._hex4_sql`` is its DuckDB twin."""
+    return F.conv(F.substring(F.md5(col), 1, 4), 16, 10).cast("long")
+
+
 def salted_key(key: Column | str, buckets: int,
                salt_from: Column | str | None = None) -> Column:
     """Append a deterministic salt to a hot key for two-phase aggregation.

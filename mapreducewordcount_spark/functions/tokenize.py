@@ -64,8 +64,10 @@ def tokenize_expr(col: Column | str) -> Column:
     per-token ends-strip+lower → drop empties, i.e. reference stages
     D4,D5,D6,D7 (SURVEY.md §2.1) minus Treebank contraction rules.
     """
-    # (?U) → Unicode-aware \s (NBSP etc.), matching Python str.split()
-    words = F.split(F.col(col) if isinstance(col, str) else col, r"(?U)\s+")
+    # the split set of Python str.split(): (?U) → Unicode-aware \s (NBSP
+    # etc.), plus the U+001C-U+001F separators Java's \s leaves out
+    words = F.split(F.col(col) if isinstance(col, str) else col,
+                    r"(?U)[\s\x1c-\x1f]+")
     cleaned = F.transform(words, lambda w: F.lower(F.regexp_replace(w, _STRIP_ENDS, "")))
     return F.filter(cleaned, lambda w: F.length(w) > 0)
 

@@ -32,17 +32,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mapreducewordcount_spark.functions.buckets import hex4
+
 WIDTH = 2048        # must divide 65536 (exact-uniform md5-hex4 fold)
 DEPTH = 4
 _SALT = "cms"       # row d salts as f"cms{d}:"
 
 
-def _hex4(col):
-    return F.conv(F.substring(F.md5(col), 1, 4), 16, 10).cast("long")
-
-
 def _cell(word_col, d: int):
-    return F.pmod(_hex4(F.concat(F.lit(f"{_SALT}{d}:"), word_col)),
+    return F.pmod(hex4(F.concat(F.lit(f"{_SALT}{d}:"), word_col)),
                   F.lit(WIDTH))
 
 

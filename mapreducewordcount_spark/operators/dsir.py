@@ -43,16 +43,13 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mapreducewordcount_spark.functions.buckets import hex4
 from mapreducewordcount_spark.functions.tokenize import tokenize_expr
 
 N_BUCKETS = 1024          # must divide 65536 (exact-uniform md5 fold)
 LOG_SCALE = 1_000_000     # micro-nats per weight unit
 SMOOTH = 0.5              # add-a smoothing for both models
 _SALT = "dsir:"
-
-
-def _hex4(col):
-    return F.conv(F.substring(F.md5(col), 1, 4), 16, 10).cast("long")
 
 
 def doc_bucket_counts(docs: DataFrame, *, id_col: str = "doc_id",
@@ -73,7 +70,7 @@ def doc_bucket_counts(docs: DataFrame, *, id_col: str = "doc_id",
             F.slice("words", 2, F.greatest(F.size("words") - 1, F.lit(0))),
             lambda a, b: F.concat(a, F.lit(" "), b))).alias("ng"))
     ng = uni.unionByName(big)
-    bucket = F.pmod(_hex4(F.concat(F.lit(_SALT), F.col("ng"))),
+    bucket = F.pmod(hex4(F.concat(F.lit(_SALT), F.col("ng"))),
                     F.lit(N_BUCKETS))
     return (ng.select("doc_id", bucket.alias("bucket"))
               .groupBy("doc_id", "bucket")

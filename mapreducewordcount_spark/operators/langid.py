@@ -45,16 +45,14 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mapreducewordcount_spark.functions.buckets import hex4
+
 N_BUCKETS = 4096          # must divide 65536 (exact-uniform md5 fold)
 LOG_SCALE = 1_000_000     # micro-nats per weight unit
 SMOOTH = 0.5              # add-α smoothing per bucket
 NGRAM = 3
 PRIOR_BUCKET = -1         # artifact rows carrying log p(lang)
 _SALT = "lang:"
-
-
-def _hex4(col):
-    return F.conv(F.substring(F.md5(col), 1, 4), 16, 10).cast("long")
 
 
 def char_ngram_counts(docs: DataFrame, *, id_col: str = "doc_id",
@@ -77,7 +75,7 @@ def char_ngram_counts(docs: DataFrame, *, id_col: str = "doc_id",
             f"i -> substring(lower({text_col}), i, {NGRAM})) "
             f"ELSE array() END"))
         .alias("g"))
-    bucket = F.pmod(_hex4(F.concat(F.lit(_SALT), F.col("g"))),
+    bucket = F.pmod(hex4(F.concat(F.lit(_SALT), F.col("g"))),
                     F.lit(N_BUCKETS))
     return (grams.select("doc_id", bucket.alias("bucket"))
             .groupBy("doc_id", "bucket")

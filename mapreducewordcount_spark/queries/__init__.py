@@ -3,10 +3,9 @@
 Each entry is ``name -> QuerySpec(spark_fn, oracle_sql)`` where
 ``spark_fn(spark, sf_dir) -> DataFrame`` is the DataFrame-first
 implementation and ``oracle_sql`` is equivalent ANSI SQL a DuckDB
-instance can run over the same parquet tables (None for ops whose
-semantics are hash-family-specific and not SQL-expressible — the
-driver then records a rows-only check; pytest covers them against
-planted ground truth instead).
+instance can run over the same parquet tables. Every entry has one:
+hash-family-specific results are checked against their committed
+artifacts (``artifacts/sig_oracle``) read back through SQL.
 
 Column names are part of the contract: the correctness gate sorts
 columns by name and hashes values, so every computed column is
@@ -18,7 +17,7 @@ timestamp group keys are rendered as strings to pin formatting.
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Callable, Optional
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -26,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 @dataclass(frozen=True)
 class QuerySpec:
     spark_fn: Callable[[SparkSession, str], DataFrame]
-    oracle_sql: Optional[str]
+    oracle_sql: str
 
 
 def all_queries() -> dict[str, QuerySpec]:

@@ -6,7 +6,6 @@ from mapreducewordcount_spark.streaming.jobs import (  # noqa: F401
     stream_session_windows,
     stream_simhash_dedup,
     stream_source_token_budget,
-    stream_source_token_budget_tws,
     stream_cms_cells,
     stream_event_transitions,
     stream_hll_registers,

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mapreducewordcount_spark.functions.tokenize import tokenize_expr
+from mapreducewordcount_spark.streaming.state import StateStore, write_version
 
 
 def stream_word_counts(lines: DataFrame) -> DataFrame:
@@ -140,6 +141,8 @@ def start_cms_heavy_hitters(lines: DataFrame, *, state_dir: str,
 
     spark = lines.sparkSession
     pool = pool if pool is not None else 4 * k
+    cells = StateStore(spark, f"{state_dir}/cells")
+    cand = StateStore(spark, f"{state_dir}/cand")
 
     def refresh(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -148,36 +151,25 @@ def start_cms_heavy_hitters(lines: DataFrame, *, state_dir: str,
         words = batch.select(
             F.explode(tokenize_expr("value")).alias("word"))
         bcells = cms_build(words)
-        # replay-input resolution (ADVICE r11): highest version ≤
-        # batch_id — empty batches leave holes, min(batch_id, latest)
-        # would read one and crash-loop the restarted stream
-        in_version = latest_state_version(spark, f"{state_dir}/cells",
-                                          at_most=batch_id)
+        in_version = cells.input_version(batch_id)
         if in_version is None:
             merged = bcells
             prev_cand = words.select("word").limit(0)
         else:
-            prev = read_state_version(spark, f"{state_dir}/cells",
-                                      in_version)
-            merged = (prev.unionByName(bcells)
+            merged = (cells.read(in_version).unionByName(bcells)
                       .groupBy("d", "cell").agg(F.sum("c").alias("c")))
-            prev_cand = read_state_version(
-                spark, f"{state_dir}/cand", in_version).select("word")
-        merged.write.mode("overwrite").parquet(
-            f"{state_dir}/cells/v{batch_id + 1}")
-        sketch = spark.read.parquet(
-            f"{state_dir}/cells/v{batch_id + 1}")
+            prev_cand = cand.read(in_version).select("word")
+        out_version = batch_id + 1
+        cells.commit(merged, out_version)
         cand_words = (prev_cand
                       .unionByName(words.select("word"))
                       .distinct())
-        est = cms_estimate(cand_words, sketch)
-        top_pool = (est.orderBy(F.col("cms_count").desc(), "word")
-                    .limit(pool))
-        top_pool.write.mode("overwrite").parquet(
-            f"{state_dir}/cand/v{batch_id + 1}")
-        (spark.read.parquet(f"{state_dir}/cand/v{batch_id + 1}")
-         .orderBy(F.col("cms_count").desc(), "word").limit(k)
-         .write.mode("overwrite").parquet(f"{out_dir}/v{batch_id + 1}"))
+        est = cms_estimate(cand_words, cells.read(out_version))
+        cand.commit(est.orderBy(F.col("cms_count").desc(), "word")
+                    .limit(pool), out_version)
+        write_version(cand.read(out_version)
+                      .orderBy(F.col("cms_count").desc(), "word").limit(k),
+                      out_dir, out_version)
 
     return (lines.writeStream.outputMode("append")
             .option("checkpointLocation", checkpoint_dir)
@@ -210,7 +202,7 @@ def start_source_drift_monitor(docs: DataFrame, *, state_dir: str,
         tv_drift_vs_rest,
     )
 
-    spark = docs.sparkSession
+    cnt = StateStore(docs.sparkSession, f"{state_dir}/cnt")
 
     def refresh(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -218,21 +210,14 @@ def start_source_drift_monitor(docs: DataFrame, *, state_dir: str,
         batch = batch_df.localCheckpoint(eager=True)  # cut stream lineage
         bcnt = token_bucket_counts(batch, group_col=source_col,
                                    text_col=text_col)
-        # replay-input resolution (ADVICE r11): highest version ≤
-        # batch_id, never a hole left by an empty predecessor batch
-        in_version = latest_state_version(spark, f"{state_dir}/cnt",
-                                          at_most=batch_id)
+        in_version = cnt.input_version(batch_id)
         if in_version is not None:
-            prev = read_state_version(spark, f"{state_dir}/cnt",
-                                      in_version)
-            bcnt = (prev.unionByName(bcnt)
+            bcnt = (cnt.read(in_version).unionByName(bcnt)
                     .groupBy("grp", "bucket")
                     .agg(F.sum("c").alias("c")))
-        bcnt.write.mode("overwrite").parquet(
-            f"{state_dir}/cnt/v{batch_id + 1}")
-        merged = spark.read.parquet(f"{state_dir}/cnt/v{batch_id + 1}")
-        tv_drift_vs_rest(merged).write.mode("overwrite").parquet(
-            f"{out_dir}/v{batch_id + 1}")
+        cnt.commit(bcnt, batch_id + 1)
+        write_version(tv_drift_vs_rest(cnt.read(batch_id + 1)), out_dir,
+                      batch_id + 1)
 
     return (docs.writeStream.outputMode("append")
             .option("checkpointLocation", checkpoint_dir)
@@ -643,14 +628,8 @@ def stream_source_token_budget(docs: DataFrame,
     admit-if-any-room (a doc may overshoot its budget by at most one
     document — the same contract as greedy packing).
 
-    API note: built on ``applyInPandasWithState``. Spark 4's
-    successor API (``transformWithStateInPandas``) is implemented as
-    ``stream_source_token_budget_tws`` below around the SAME admission
-    core (``_admit_micro_batch``); its Python worker speaks protobuf
-    to the JVM state server, which this environment does not ship, so
-    that variant import-gates on ``google.protobuf`` and its pytest
-    skips where protobuf is absent. Both variants share the admission
-    loop, so the cross-batch contract is pinned once.
+    Built on ``applyInPandasWithState``; the per-source admission loop
+    is ``_admit_micro_batch``.
 
     Output: (source, doc_id, n_tokens, admitted, consumed_after).
     """
@@ -672,19 +651,18 @@ def stream_source_token_budget(docs: DataFrame,
             .groupBy("source")
             .applyInPandasWithState(
                 enforce,
-                outputStructType=_BUDGET_OUTPUT_SCHEMA,
+                outputStructType=("source string, doc_id long, "
+                                  "n_tokens long, admitted boolean, "
+                                  "consumed_after long"),
                 stateStructType="used long",
                 outputMode="append",
                 timeoutConf=GroupStateTimeout.NoTimeout))
 
 
-_BUDGET_OUTPUT_SCHEMA = ("source string, doc_id long, n_tokens long, "
-                         "admitted boolean, consumed_after long")
-
-
 def _admit_micro_batch(source: str, budget: int, used: int,
                        pdfs) -> tuple[pd.DataFrame, int]:
-    """Shared admission core for both stateful-API variants.
+    """Admission core of :func:`stream_source_token_budget` for one
+    source's micro-batch.
 
     ``pdfs`` is an ITERATOR of Arrow chunks (split at
     maxRecordsPerBatch); sorting per-chunk would order only within a
@@ -709,154 +687,13 @@ def _admit_micro_batch(source: str, budget: int, used: int,
     return frame, used
 
 
-def _has_protobuf() -> bool:
-    """find_spec('google.protobuf') raises when the 'google' namespace
-    package itself is absent (this sandbox), so gate via import."""
-    try:
-        import google.protobuf  # noqa: F401
-        return True
-    except ImportError:
-        return False
-
-
-def stream_source_token_budget_tws(docs: DataFrame,
-                                   budgets: dict[str, int],
-                                   default_budget: int = 0) -> DataFrame:
-    """``stream_source_token_budget`` on Spark 4's successor stateful
-    API: ``transformWithStateInPandas`` + a ``StatefulProcessor``.
-
-    Same semantics, same shared admission core; only the state
-    plumbing differs — the single consumed-tokens long lives in a
-    typed ``ValueState`` obtained from the processor handle instead of
-    an untyped ``GroupState`` tuple. The new API's Python worker
-    communicates with the JVM state server over protobuf, so this
-    variant raises ImportError where ``google.protobuf`` is absent
-    (this sandbox); the pytest for it skips accordingly and the
-    applyInPandasWithState twin remains the environment-portable path.
-    """
-    if not _has_protobuf():
-        raise ImportError(
-            "transformWithStateInPandas requires protobuf "
-            "(pip install protobuf); use stream_source_token_budget")
-
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    from mapreducewordcount_spark.functions.text_metrics import token_count
-
-    class BudgetProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._used = handle.getValueState("consumed", "used long")
-
-        def handleInputRows(self, key, rows, timerValues):
-            source = key[0]
-            budget = budgets.get(source, default_budget)
-            used = self._used.get()[0] if self._used.exists() else 0
-            out, used = _admit_micro_batch(source, budget, used, rows)
-            self._used.update((used,))
-            yield out
-
-        def close(self) -> None:
-            pass
-
-    sized = docs.select("source", "doc_id",
-                        token_count("text").cast("long").alias("n_tokens"))
-    return (sized
-            .groupBy("source")
-            .transformWithStateInPandas(
-                statefulProcessor=BudgetProcessor(),
-                outputStructType=_BUDGET_OUTPUT_SCHEMA,
-                outputMode="Append",
-                timeMode="None"))
-
-
 # --- streaming CDC: incremental view maintenance over a change feed ---------
-
-def latest_state_version(spark, state_dir: str,
-                         at_most: int | None = None) -> int | None:
-    """Highest committed ``v<N>`` subdirectory of a versioned state
-    dir, or None when unseeded. ``at_most`` bounds the search: the
-    replay-input resolution (ADVICE r11) — a redelivered batch reads
-    the highest version ≤ its batch id, NOT ``v{batch_id}`` blindly,
-    because an empty predecessor batch writes no version at all and
-    ``min(batch_id, latest)`` would then name a hole and crash-loop
-    the stream on every restart."""
-    import os
-
-    if not os.path.isdir(state_dir):
-        return None
-    versions = [int(name[1:]) for name in os.listdir(state_dir)
-                if name.startswith("v") and name[1:].isdigit()
-                and (at_most is None or int(name[1:]) <= at_most)]
-    return max(versions) if versions else None
-
-
-def read_state_version(spark, state_dir: str,
-                       version: int | None = None) -> DataFrame:
-    """Read one committed version (default: latest)."""
-    if version is None:
-        version = latest_state_version(spark, state_dir)
-    if version is None:
-        raise ValueError(f"no committed state under {state_dir}")
-    return spark.read.parquet(f"{state_dir}/v{version}")
-
-
-def gc_versioned_state(state_dir: str, keep_last: int = 2) -> dict:
-    """Retention for PLAIN versioned-parquet state dirs — the
-    manifest-GC analog for the simple format (every version is a
-    full self-contained copy, so GC is just dropping old ``v<N>``
-    dirs): keep the ``keep_last`` HIGHEST committed versions, delete
-    the rest. Version sequences legitimately have holes (empty
-    batches commit nothing), so "last K" counts existing versions,
-    not ids. Same contract as ``gc_manifest_state``: run from the
-    commit thread (the loops' ``gc_every_n_batches``) or with the
-    stream stopped; ``keep_last`` ≥ 2 covers the replay horizon
-    (a redelivered batch reads the highest version ≤ its id).
-    Idempotent; returns {kept_versions, removed_versions}."""
-    import os
-    import shutil
-
-    if keep_last < 1:
-        raise ValueError(f"keep_last must be >= 1, got {keep_last}")
-    if not os.path.isdir(state_dir):
-        return {"kept_versions": [], "removed_versions": []}
-    versions = sorted(int(n[1:]) for n in os.listdir(state_dir)
-                      if n.startswith("v") and n[1:].isdigit())
-    kept = versions[-keep_last:]
-    removed = []
-    for v in versions[:-keep_last] if len(versions) > keep_last else []:
-        shutil.rmtree(os.path.join(state_dir, f"v{v}"))
-        removed.append(v)
-    return {"kept_versions": kept, "removed_versions": removed}
-
-
-def _check_loop_gc_keep_last(gc_every_n_batches, gc_keep_last) -> None:
-    """Replay-horizon floor for LOOP-WIRED GC (ADVICE r12). With
-    ``keep_last=1``, a crash between the ``v{b+1}`` state write and
-    the streaming-checkpoint commit leaves no version ≤ b: GC already
-    deleted ``v{≤b}``, so the redelivered batch resolves
-    ``latest_state_version(at_most=b)`` to None — seeded jobs raise,
-    but the reservoir's no-seed contract treats None as EMPTY state
-    and silently resets the accumulated sample. ``keep_last=1`` stays
-    legal only for offline/manual :func:`gc_versioned_state` use
-    (stream stopped ⇒ no redelivery window)."""
-    if gc_every_n_batches and gc_keep_last < 2:
-        raise ValueError(
-            f"gc_keep_last must be >= 2 when gc_every_n_batches is "
-            f"set (got {gc_keep_last}): keep_last=1 cannot cover the "
-            "checkpoint replay horizon — a crash between the state "
-            "write and the checkpoint commit would leave the "
-            "redelivered batch no version <= its batch_id to read")
-
 
 def start_cdc_agg_refresh(changes: DataFrame, *, snapshot_dir: str,
                           view_dir: str, checkpoint_dir: str,
                           keys, group_col: str, value_col: str,
                           version_col: str = "_version",
                           op_col: str = "_op",
-                          state_format: str = "versioned",
                           gc_every_n_batches: int | None = None,
                           gc_keep_last: int = 2):
     """Streaming IVM — the MUTATION leg of the streaming family
@@ -866,51 +703,38 @@ def start_cdc_agg_refresh(changes: DataFrame, *, snapshot_dir: str,
     (``operators/ivm.incremental_agg_refresh``) so stream/batch
     parity is an assertion, not a hope.
 
-    State is the pair (snapshot, view) kept as VERSIONED parquet
-    dirs ON THE LOCAL FILESYSTEM (version discovery walks the dir
-    with ``os.listdir`` — a remote object store needs the table-
-    format swap below): the caller MUST seed ``{snapshot_dir}/v0``
-    with the initial table before ``start()`` (an unseeded dir
-    raises immediately, not as an opaque AnalysisException inside
-    the stream — ADVICE r8); micro-batch ``b`` reads version ``b``
-    and commits version ``b+1`` of both dirs. Version-addressed writes make redelivery
-    idempotent (a replayed batch rewrites ITS OWN output version and
-    re-reads its original input — epoch-based exactly-once at the
-    sink), and old versions double as time travel for the diff/SCD2
-    companions. A production deployment swaps the dirs for a table
-    format with atomic commit; the refresh algebra is unchanged.
+    State is the pair (snapshot, view), both version-addressed dirs ON
+    THE LOCAL FILESYSTEM (``streaming/state``): the caller MUST seed
+    the snapshot before ``start()`` (an unseeded dir raises
+    immediately, not as an opaque AnalysisException inside the stream
+    — ADVICE r8); micro-batch ``b`` reads the highest committed
+    snapshot version ≤ b and commits version ``b+1`` of both dirs.
+    Version-addressed writes make redelivery idempotent (a replayed
+    batch rewrites ITS OWN output version and re-reads its original
+    input — epoch-based exactly-once at the sink), and old versions
+    double as time travel for the diff/SCD2 companions. A production
+    deployment swaps the dirs for a table format with atomic commit;
+    the refresh algebra is unchanged.
 
     Per batch the snapshot is read ONLY through the delta path's
     changed-key semi-join plus the merge's anti-join — O(changes +
-    groups) compute; the snapshot rewrite here is the simple full
-    copy (the honest cost of plain parquet state).
+    groups) compute. The seed picks the snapshot's commit: seeded at
+    ``{snapshot_dir}/v0`` the commit is a full copy (the honest cost
+    of plain parquet state); seeded with
+    ``state.seed_manifest_state(df, snapshot_dir, keys)`` (the
+    table-format seam, VERDICT r9 next#6) it rewrites ONLY the
+    buckets the batch's keys touch (copy-on-write) and swaps the
+    manifest in atomically — O(changed buckets), not O(|state|). The
+    version/redelivery contract is identical.
 
-    ``state_format="manifest"`` is the table-format seam (VERDICT r9
-    next#6, ``streaming/manifest_state``): the snapshot lives as
-    immutable hash-bucketed segments named by a tiny per-version
-    manifest; the commit rewrites ONLY the buckets the batch's keys
-    touch (copy-on-write) and swaps the manifest in atomically —
-    O(changed buckets), not O(|state|). Seed with
-    ``manifest_state.seed_manifest_state(df, snapshot_dir, keys)``;
-    the version/redelivery contract is identical.
-
-    ``gc_every_n_batches`` (VERDICT r11 next#5) wires retention INTO
-    the loop: after every Nth commit the batch thread GCs the
-    SNAPSHOT state — ``gc_manifest_state`` in manifest format,
-    ``gc_versioned_state`` for plain versioned dirs — so a
-    long-running stream's storage is O(live state × gc_keep_last),
-    not O(stream length), with no out-of-band job. Running it on the
-    commit thread (never concurrently with a commit) is what makes
-    it safe; the manifest GC's future-version guard additionally
-    protects any misconfigured external runner. ``gc_keep_last``
-    must cover the checkpoint replay horizon: a redelivered batch
-    re-reads the highest committed version ≤ its batch_id, and Spark
-    replays at most the youngest uncommitted batch, so the default 2
-    (current + previous) is the floor — raise it only to keep extra
-    time-travel versions. The VIEW dir is deliberately not GC'd: it
-    is the stream's output history (the diff/SCD2 time-travel
-    surface), not recoverable state — prune it with an explicit
-    ``gc_versioned_state(view_dir, ...)`` if history isn't wanted.
+    ``gc_every_n_batches``/``gc_keep_last`` (VERDICT r11 next#5) wire
+    retention of the SNAPSHOT into the commit thread
+    (:class:`~mapreducewordcount_spark.streaming.state.StateStore`,
+    which also enforces the replay-horizon floor on ``gc_keep_last``).
+    The VIEW dir is deliberately not GC'd: it is the stream's output
+    history (the diff/SCD2 time-travel surface), not recoverable
+    state — prune it with an explicit ``gc_versioned_state(view_dir,
+    ...)`` if history isn't wanted.
 
     Returns the started StreamingQuery (caller stops it).
     """
@@ -918,83 +742,33 @@ def start_cdc_agg_refresh(changes: DataFrame, *, snapshot_dir: str,
         incremental_agg_refresh,
     )
     from mapreducewordcount_spark.operators.merge import merge_upsert
-    from mapreducewordcount_spark.streaming import manifest_state as ms
 
-    _check_loop_gc_keep_last(gc_every_n_batches, gc_keep_last)
-    spark = changes.sparkSession
     klist = list(keys)
-    manifest = state_format == "manifest"
-    latest0 = (ms.latest_manifest_version(snapshot_dir) if manifest
-               else latest_state_version(spark, snapshot_dir))
-    if latest0 is None:
-        raise ValueError(
-            f"no committed state under {snapshot_dir}: seed "
-            + (f"it with manifest_state.seed_manifest_state before "
-               if manifest else f"{snapshot_dir}/v0 with the initial "
-               "snapshot before ")
-            + "start() (note: state dirs are local-filesystem only — "
-            "version discovery uses os.listdir)")
+    snapshot = StateStore(changes.sparkSession, snapshot_dir,
+                          seed="the initial snapshot",
+                          gc_every_n_batches=gc_every_n_batches,
+                          gc_keep_last=gc_keep_last)
 
     def refresh(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         # normal flow: input version == batch id (seed v0, batch b
         # commits v{b+1}); redelivery re-reads its ORIGINAL input even
-        # though its own output version already exists. Resolution is
-        # the highest committed version ≤ batch_id (ADVICE r11): empty
-        # batches commit nothing, so the version sequence has holes a
-        # blind min(batch_id, latest) would read and crash-loop on.
-        # The start() seed check does not survive a state dir removed
-        # MID-stream, so re-raise the seed-first error here instead of
-        # an opaque failure (ADVICE r9).
-        in_version = (ms.latest_manifest_version(snapshot_dir,
-                                                 at_most=batch_id)
-                      if manifest
-                      else latest_state_version(spark, snapshot_dir,
-                                                at_most=batch_id))
-        if in_version is None:
-            raise ValueError(
-                f"no committed state under {snapshot_dir}: the state "
-                "dir lost its versions mid-stream — re-seed "
-                f"{snapshot_dir} before restarting")
-        snap = (ms.read_manifest_state(spark, snapshot_dir, in_version)
-                if manifest
-                else read_state_version(spark, snapshot_dir, in_version))
+        # though its own output version already exists
+        in_version = snapshot.input_version(batch_id)
+        snap = snapshot.read(in_version)
         batch = batch_df.localCheckpoint(eager=True)  # cut stream lineage
 
         view = incremental_agg_refresh(snap, batch, klist, group_col,
                                        value_col, version_col=version_col,
                                        op_col=op_col)
-        view.write.mode("overwrite").parquet(
-            f"{view_dir}/v{batch_id + 1}")
-        if manifest:
-            # copy-on-write: merge and rewrite ONLY the buckets the
-            # batch touches; untouched segments carry forward as
-            # manifest entries (zero data bytes moved)
-            man = ms._load_manifest(snapshot_dir, in_version)
-            changed = ms.changed_buckets_of(batch, man["key_cols"],
-                                            man["n_buckets"])
-            snap_changed = ms.read_manifest_state(
-                spark, snapshot_dir, in_version, buckets=changed)
-            new_changed = merge_upsert(snap_changed, batch, klist,
-                                       version_col=version_col,
-                                       op_col=op_col)
-            ms.commit_cow(new_changed, changed, snapshot_dir,
-                          in_version, batch_id + 1)
-            if (gc_every_n_batches
-                    and (batch_id + 1) % gc_every_n_batches == 0):
-                ms.gc_manifest_state(snapshot_dir,
-                                     keep_last=gc_keep_last)
-        else:
-            new_snap = merge_upsert(snap, batch, klist,
-                                    version_col=version_col,
-                                    op_col=op_col)
-            new_snap.write.mode("overwrite").parquet(
-                f"{snapshot_dir}/v{batch_id + 1}")
-            if (gc_every_n_batches
-                    and (batch_id + 1) % gc_every_n_batches == 0):
-                gc_versioned_state(snapshot_dir,
-                                   keep_last=gc_keep_last)
+        write_version(view, view_dir, batch_id + 1)
+        snapshot.upsert(
+            snap, batch,
+            lambda cur: merge_upsert(cur, batch, klist,
+                                     version_col=version_col,
+                                     op_col=op_col),
+            in_version, batch_id + 1)
 
     return (changes.writeStream.outputMode("append")
             .option("checkpointLocation", checkpoint_dir)
@@ -1006,7 +780,6 @@ def start_chunk_index_maintenance(docs: DataFrame, *, index_dir: str,
                                   id_col: str = "doc_id",
                                   source_col: str = "source",
                                   text_col: str = "text",
-                                  state_format: str = "versioned",
                                   gc_every_n_batches: int | None = None,
                                   gc_keep_last: int = 2):
     """Streaming twin of the round-9 chunk family: as document
@@ -1017,75 +790,48 @@ def start_chunk_index_maintenance(docs: DataFrame, *, index_dir: str,
     only for the chunks it actually changed.
 
     State discipline is identical to :func:`start_cdc_agg_refresh`:
-    the index is a VERSIONED parquet dir on the LOCAL filesystem,
-    seeded at ``{index_dir}/v0`` (an empty frame with schema
-    ``chunk_md5 string, length int`` is a legitimate seed — but it
-    must exist, and an unseeded dir raises before ``start()``);
-    micro-batch ``b`` reads ``min(b, latest)`` and writes ``v{b+1}``
-    of the index plus ``v{b+1}`` of the report, so redelivery
-    rewrites its own output version idempotently.
+    the index is a version-addressed dir on the LOCAL filesystem that
+    must be seeded before ``start()`` (an empty frame with schema
+    ``chunk_md5 string, length int`` is a legitimate seed);
+    micro-batch ``b`` reads the highest committed version ≤ b and
+    writes ``v{b+1}`` of the index plus ``v{b+1}`` of the report, so
+    redelivery rewrites its own output version idempotently.
 
     Per batch the index is touched ONLY through the hash anti-join
     (16-byte keys); chunk bodies never shuffle; the report is one
-    grouped aggregate over the batch. The full-index rewrite per
-    version is plain-parquet state's honest cost;
-    ``state_format="manifest"`` (``streaming/manifest_state``) is the
-    table-format seam: the index is append-only, so each batch
-    commits ONE new segment holding its genuinely-new hashes plus a
-    tiny manifest naming the live segments — O(new chunks) write
-    cost, not O(|index|). Seed with
-    ``manifest_state.seed_manifest_state(df, index_dir,
-    ["chunk_md5"])``; version/redelivery contract identical.
+    grouped aggregate over the batch. Seeded at ``{index_dir}/v0``,
+    each version is a full index copy (plain-parquet state's honest
+    cost); seeded with ``state.seed_manifest_state(df, index_dir,
+    ["chunk_md5"])`` the append-only index commits ONE new segment
+    holding the batch's genuinely-new hashes plus a tiny manifest —
+    O(new chunks) write cost, not O(|index|).
 
     ``gc_every_n_batches``/``gc_keep_last`` wire index retention
     into the commit thread exactly as in
-    :func:`start_cdc_agg_refresh` (see there for the replay-horizon
-    floor on ``gc_keep_last``): manifest format GCs superseded
-    manifests (for this append-only index all live segments are
-    shared, so manifests are the only garbage — the parameter
-    matters more the day a compaction rewrite supersedes segments);
-    plain versioned format drops old full-copy ``v<N>`` dirs, where
-    the win is the entire O(|index|) copy per batch.
+    :func:`start_cdc_agg_refresh`: for a manifest index all live
+    segments are shared, so superseded manifests are the only garbage
+    (the parameter matters more the day a compaction rewrite
+    supersedes segments); for a versioned index GC drops old
+    full-copy ``v<N>`` dirs, where the win is the entire O(|index|)
+    copy per batch.
 
     Returns the started StreamingQuery (caller stops it).
     """
     from mapreducewordcount_spark.operators.cdchunk import (
         cdc_chunk_table,
     )
-    from mapreducewordcount_spark.streaming import manifest_state as ms
 
-    _check_loop_gc_keep_last(gc_every_n_batches, gc_keep_last)
-    spark = docs.sparkSession
-    manifest = state_format == "manifest"
-    latest0 = (ms.latest_manifest_version(index_dir) if manifest
-               else latest_state_version(spark, index_dir))
-    if latest0 is None:
-        raise ValueError(
-            f"no committed state under {index_dir}: seed "
-            + ("it with manifest_state.seed_manifest_state "
-               if manifest else f"{index_dir}/v0 ")
-            + "(an empty chunk_md5/length frame is fine) before "
-            "start(); state dirs are local-filesystem only")
+    store = StateStore(docs.sparkSession, index_dir,
+                       seed="the initial index (an empty "
+                            "chunk_md5/length frame is fine)",
+                       gc_every_n_batches=gc_every_n_batches,
+                       gc_keep_last=gc_keep_last)
 
     def refresh(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        # highest committed version ≤ batch_id (ADVICE r11 — see
-        # start_cdc_agg_refresh for the empty-batch-hole rationale)
-        in_version = (ms.latest_manifest_version(index_dir,
-                                                 at_most=batch_id)
-                      if manifest
-                      else latest_state_version(spark, index_dir,
-                                                at_most=batch_id))
-        if in_version is None:  # state dir removed mid-stream (ADVICE r9)
-            raise ValueError(
-                f"no committed state under {index_dir}: the state "
-                "dir lost its versions mid-stream — re-seed "
-                f"{index_dir} before restarting")
-        index = (ms.read_manifest_state(spark, index_dir, in_version)
-                 if manifest
-                 else read_state_version(spark, index_dir, in_version)) \
-            .select("chunk_md5", "length")
+        in_version = store.input_version(batch_id)
+        index = store.read(in_version).select("chunk_md5", "length")
         batch = batch_df.localCheckpoint(eager=True)
 
         chunks = cdc_chunk_table(batch, id_col=id_col,
@@ -1107,30 +853,16 @@ def start_chunk_index_maintenance(docs: DataFrame, *, index_dir: str,
                                     F.col("length")).otherwise(F.lit(0)))
                        .cast("long").alias("dup_index_chars"))
                   .withColumn("batch_id", F.lit(batch_id).cast("long")))
-        report.write.mode("overwrite").parquet(
-            f"{report_dir}/v{batch_id + 1}")
+        write_version(report, report_dir, batch_id + 1)
 
         fresh = (probed.filter(F.col("__idx").isNull())
                  .groupBy("chunk_md5")
                  .agg(F.min("length").alias("length")))
-        if manifest:
-            # append-only commit: one segment with the new hashes,
-            # manifest names it — no index bytes rewritten
-            ms.commit_append(fresh.select("chunk_md5", "length"),
-                             index_dir, in_version, batch_id + 1)
-            if (gc_every_n_batches
-                    and (batch_id + 1) % gc_every_n_batches == 0):
-                ms.gc_manifest_state(index_dir,
-                                     keep_last=gc_keep_last)
-        else:
-            new_index = index.unionByName(
-                fresh.select("chunk_md5", "length")).distinct()
-            new_index.write.mode("overwrite").parquet(
-                f"{index_dir}/v{batch_id + 1}")
-            if (gc_every_n_batches
-                    and (batch_id + 1) % gc_every_n_batches == 0):
-                gc_versioned_state(index_dir,
-                                   keep_last=gc_keep_last)
+        # only the versioned commit dedups its rewritten union (a seed
+        # with duplicate rows comes out as a set); the manifest append
+        # writes just the anti-joined new hashes and never dedups
+        store.append(index, fresh.select("chunk_md5", "length"),
+                     in_version, batch_id + 1, distinct=True)
 
     return (docs.writeStream.outputMode("append")
             .option("checkpointLocation", checkpoint_dir)
@@ -1162,13 +894,14 @@ def start_reservoir_maintenance(docs: DataFrame, *, state_dir: str,
     versioned parquet, NO caller seed (an absent dir IS the empty
     reservoir), batch ``b`` reads the highest committed version ≤ b
     and writes ``v{b+1}`` (idempotent redelivery), and
-    ``gc_every_n_batches``/``gc_keep_last`` wire
-    :func:`gc_versioned_state` into the commit thread.
+    ``gc_every_n_batches``/``gc_keep_last`` wire retention into the
+    commit thread.
 
     Returns the started StreamingQuery (caller stops it).
     """
-    _check_loop_gc_keep_last(gc_every_n_batches, gc_keep_last)
-    spark = docs.sparkSession
+    store = StateStore(docs.sparkSession, state_dir,
+                       gc_every_n_batches=gc_every_n_batches,
+                       gc_keep_last=gc_keep_last)
 
     def refresh(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -1181,14 +914,13 @@ def start_reservoir_maintenance(docs: DataFrame, *, state_dir: str,
                  .groupBy("grp", "id")
                  .agg(F.count(F.lit(1)).alias("n_seen"))
                  .localCheckpoint(eager=True))
-        in_version = latest_state_version(spark, state_dir,
-                                          at_most=batch_id)
+        in_version = store.input_version(batch_id)
         if in_version is None:
             pool = batch
             prev_counts = batch.select("grp").limit(0) \
                 .withColumn("n_prev", F.lit(0).cast("long"))
         else:
-            prev = read_state_version(spark, state_dir, in_version)
+            prev = store.read(in_version)
             pool = prev.select("grp", "id",
                                F.lit(1).cast("long").alias("n_seen")) \
                 .unionByName(batch)
@@ -1217,13 +949,8 @@ def start_reservoir_maintenance(docs: DataFrame, *, state_dir: str,
                           (F.coalesce("n_prev", F.lit(0))
                            + F.coalesce("n_batch", F.lit(0)))
                           .alias("n_seen_grp")))
-        out = kept.join(counts, "grp").select(
-            "grp", "id", F.col("n_seen_grp").cast("long"))
-        out.write.mode("overwrite").parquet(
-            f"{state_dir}/v{batch_id + 1}")
-        if (gc_every_n_batches
-                and (batch_id + 1) % gc_every_n_batches == 0):
-            gc_versioned_state(state_dir, keep_last=gc_keep_last)
+        store.commit(kept.join(counts, "grp").select(
+            "grp", "id", F.col("n_seen_grp").cast("long")), batch_id + 1)
 
     return (docs.writeStream.outputMode("append")
             .option("checkpointLocation", checkpoint_dir)
@@ -1235,7 +962,6 @@ def start_ann_index_maintenance(embs: DataFrame, *, index_dir: str,
                                 centroids: DataFrame, books: list,
                                 id_col: str = "vec_id",
                                 vec_col: str = "embedding",
-                                state_format: str = "versioned",
                                 gc_every_n_batches: int | None = None,
                                 gc_keep_last: int = 2):
     """Streaming twin of the incremental ANN append path (VERDICT r12
@@ -1253,21 +979,21 @@ def start_ann_index_maintenance(embs: DataFrame, *, index_dir: str,
     State discipline is :func:`start_chunk_index_maintenance`'s
     verbatim — the codes index is append-only:
 
-    - versioned parquet seeded at ``{index_dir}/v0`` with the
-      offline build's codes ``(neighbor_id long, list_id long,
-      codes array<int>)`` (an empty frame with that schema is a
-      legitimate cold start — the model artifacts still come from an
-      offline train); an unseeded dir raises before ``start()``;
+    - seeded before ``start()`` with the offline build's codes
+      ``(neighbor_id long, list_id long, codes array<int>)`` (an empty
+      frame with that schema is a legitimate cold start — the model
+      artifacts still come from an offline train), either at
+      ``{index_dir}/v0`` (full copy per version) or with
+      ``state.seed_manifest_state(codes_df, index_dir,
+      ["neighbor_id"])`` (ONE segment of new codes + a manifest per
+      version: O(new vectors), not O(|index|)); an unseeded dir
+      raises before ``start()``;
     - batch ``b`` reads the highest committed version ≤ b and writes
       ``v{b+1}`` of index AND report — idempotent redelivery; empty
       batches commit nothing (version holes expected);
     - already-indexed ids are dropped by an anti-join on the 8-byte
       key (a re-delivered or re-crawled vector must not occupy two
       index slots);
-    - ``state_format="manifest"`` commits ONE segment holding the
-      batch's new codes + a manifest (O(new vectors), not
-      O(|index|)); seed with ``manifest_state.seed_manifest_state(
-      codes_df, index_dir, ["neighbor_id"])``;
     - ``gc_every_n_batches``/``gc_keep_last`` wire retention into
       the commit thread (replay-horizon floor enforced).
 
@@ -1283,41 +1009,20 @@ def start_ann_index_maintenance(embs: DataFrame, *, index_dir: str,
     Returns the started StreamingQuery (caller stops it).
     """
     from mapreducewordcount_spark.operators import pq
-    from mapreducewordcount_spark.streaming import manifest_state as ms
 
-    _check_loop_gc_keep_last(gc_every_n_batches, gc_keep_last)
-    spark = embs.sparkSession
-    manifest = state_format == "manifest"
-    latest0 = (ms.latest_manifest_version(index_dir) if manifest
-               else latest_state_version(spark, index_dir))
-    if latest0 is None:
-        raise ValueError(
-            f"no committed state under {index_dir}: seed "
-            + ("it with manifest_state.seed_manifest_state "
-               if manifest else f"{index_dir}/v0 ")
-            + "with the offline build's codes (an empty "
-            "neighbor_id/list_id/codes frame is a legitimate cold "
-            "start) before start(); state dirs are local-filesystem "
-            "only")
+    store = StateStore(embs.sparkSession, index_dir,
+                       seed="the offline build's codes (an empty "
+                            "neighbor_id/list_id/codes frame is a "
+                            "legitimate cold start)",
+                       gc_every_n_batches=gc_every_n_batches,
+                       gc_keep_last=gc_keep_last)
 
     def refresh(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        in_version = (ms.latest_manifest_version(index_dir,
-                                                 at_most=batch_id)
-                      if manifest
-                      else latest_state_version(spark, index_dir,
-                                                at_most=batch_id))
-        if in_version is None:  # state dir removed mid-stream
-            raise ValueError(
-                f"no committed state under {index_dir}: the state "
-                "dir lost its versions mid-stream — re-seed "
-                f"{index_dir} before restarting")
-        index = (ms.read_manifest_state(spark, index_dir, in_version)
-                 if manifest
-                 else read_state_version(spark, index_dir,
-                                         in_version)) \
-            .select("neighbor_id", "list_id", "codes")
+        in_version = store.input_version(batch_id)
+        index = store.read(in_version).select("neighbor_id", "list_id",
+                                              "codes")
         batch = batch_df.localCheckpoint(eager=True)
 
         fresh = (batch
@@ -1353,24 +1058,10 @@ def start_ann_index_maintenance(embs: DataFrame, *, index_dir: str,
                           .alias("mean_res2_new"),
                           F.lit(batch_id).cast("long")
                           .alias("batch_id")))
-        report.write.mode("overwrite").parquet(
-            f"{report_dir}/v{batch_id + 1}")
-
-        new_rows = codes_new.select("neighbor_id", "list_id", "codes")
-        if manifest:
-            ms.commit_append(new_rows, index_dir, in_version,
-                             batch_id + 1)
-            if (gc_every_n_batches
-                    and (batch_id + 1) % gc_every_n_batches == 0):
-                ms.gc_manifest_state(index_dir,
-                                     keep_last=gc_keep_last)
-        else:
-            index.unionByName(new_rows).write.mode("overwrite") \
-                .parquet(f"{index_dir}/v{batch_id + 1}")
-            if (gc_every_n_batches
-                    and (batch_id + 1) % gc_every_n_batches == 0):
-                gc_versioned_state(index_dir,
-                                   keep_last=gc_keep_last)
+        write_version(report, report_dir, batch_id + 1)
+        store.append(index,
+                     codes_new.select("neighbor_id", "list_id", "codes"),
+                     in_version, batch_id + 1)
 
     return (embs.writeStream.outputMode("append")
             .option("checkpointLocation", checkpoint_dir)

@@ -65,9 +65,9 @@ def test_cli_run_produces_reference_layout(spark, tmp_path):
     assert (out / "out-1").read_text() == ""
 
 
-def test_cli_reference_corpus_byte_parity(spark, tmp_path):
+def test_cli_reference_corpus_byte_parity(spark, tmp_path, corpus_dir):
     """BASELINE.md gate row 4 as a committed test: full CLI run over
-    the reference's own corpus (config-schema N=6 / M=4, parity
+    a multi-file corpus (config-schema N=6 / M=4, parity
     tokenizer) and the merged ``out-*`` bytes equal the single-process
     Counter-oracle rendering byte-for-byte — the engine's complete
     output contract (tokenization, bucketing, per-bucket code-point
@@ -79,10 +79,6 @@ def test_cli_reference_corpus_byte_parity(spark, tmp_path):
 
     from mapreducewordcount_spark.functions.tokenize import word_tokenize_port
 
-    corpus = "/root/reference/files/inputs"
-    if not os.path.isdir(corpus):
-        import pytest
-        pytest.skip("reference corpus not present")
     out = tmp_path / "out"
     cfg = tmp_path / "config.yaml"
     cfg.write_text(textwrap.dedent(f"""\
@@ -90,16 +86,16 @@ def test_cli_reference_corpus_byte_parity(spark, tmp_path):
           num_map_tasks: 6
           num_reduce_tasks: 4
         directories:
-          input: "{corpus}"
+          input: "{corpus_dir}"
           output: "{out}"
         """))
     rc = main(["run", "--config", str(cfg), "--mode", "parity"])
     assert rc == 0
 
     counts: Counter = Counter()
-    for name in sorted(os.listdir(corpus)):
+    for name in sorted(os.listdir(corpus_dir)):
         if name.endswith(".txt"):
-            with open(os.path.join(corpus, name), encoding="utf-8") as f:
+            with open(os.path.join(corpus_dir, name), encoding="utf-8") as f:
                 for line in f:
                     for tok in word_tokenize_port(line):
                         w = tok.strip(string.punctuation).lower()

@@ -20,8 +20,6 @@ from mapreducewordcount_spark.queries import all_queries
 from tests.conftest import SF_ORACLE
 
 SPECS = all_queries()
-WITH_ORACLE = sorted(n for n, s in SPECS.items() if s.oracle_sql)
-ROWS_ONLY = sorted(n for n, s in SPECS.items() if not s.oracle_sql)
 
 #: the heaviest oracle rows (≥8 s each at sf0.01 in the r14 timing
 #: sweep — dedup component pipelines, BM25 legs, curation
@@ -74,7 +72,7 @@ def _values_equal(a, b) -> bool:
 @pytest.mark.parametrize(
     "name",
     [pytest.param(n, marks=pytest.mark.slow) if n in SLOW_ORACLE else n
-     for n in WITH_ORACLE])
+     for n in sorted(SPECS)])
 def test_query_matches_duckdb_oracle(spark, duck, name):
     spec = SPECS[name]
     got = _canon(spec.spark_fn(spark, SF_ORACLE).toPandas())
@@ -102,14 +100,3 @@ def test_query_matches_duckdb_oracle(spark, duck, name):
         bad = [(i, x, y) for i, (x, y) in enumerate(zip(ga, wa))
                if not _values_equal(x, y)]
         assert not bad, f"{name}.{col}: first mismatches {bad[:5]}"
-
-
-@pytest.mark.parametrize(
-    "name", ROWS_ONLY or [pytest.param(
-        "__registry_fully_oracled__",
-        marks=pytest.mark.skip(
-            reason="no rows-only queries left — every registry entry "
-                   "has a DuckDB/artifact oracle (round 10)"))])
-def test_rows_only_queries_run(spark, name):
-    df = SPECS[name].spark_fn(spark, SF_ORACLE)
-    assert df.count() >= 0 and len(df.schema) > 0

@@ -1,7 +1,7 @@
 """Custom Python DataSource (sources/pysource.py): planner unit
 tests (no Spark needed — listing, LPT packing, filter pushdown are
 plain driver-side Python) plus end-to-end parity against the JVM
-text scan on the reference corpus.
+text scan on the in-repo corpus (``corpus_dir`` in tests/conftest.py).
 """
 
 from __future__ import annotations
@@ -15,7 +15,6 @@ from mapreducewordcount_spark.sources.pysource import (
     lpt_pack,
     register_corpus_source,
 )
-from tests.conftest import SF_ORACLE
 
 
 # --- planner-side units -----------------------------------------------------
@@ -79,25 +78,6 @@ def test_empty_bins_not_emitted(tmp_path):
 
 
 # --- end-to-end against the JVM scan ----------------------------------------
-
-@pytest.fixture(scope="module")
-def corpus_dir(tmp_path_factory):
-    """A multi-file ``*.txt`` corpus built from the TESTDATA documents
-    table: four text files of unequal size, one empty ``.txt`` and one
-    non-``.txt`` decoy the reader must skip."""
-    import pyarrow.parquet as pq
-
-    d = tmp_path_factory.mktemp("corpus")
-    texts = pq.read_table(f"{SF_ORACLE}/documents.parquet",
-                          columns=["text"])["text"].to_pylist()
-    cuts = [int(len(texts) * f) for f in (0, 0.4, 0.7, 0.9, 1)]
-    for i, (lo, hi) in enumerate(zip(cuts, cuts[1:])):
-        (d / f"part{i}.txt").write_text("\n".join(texts[lo:hi]) + "\n",
-                                        encoding="utf-8")
-    (d / "empty.txt").write_text("")
-    (d / "notes.md").write_text("decoy: not a .txt file\n")
-    return str(d)
-
 
 @pytest.fixture()
 def corpus_df(spark, corpus_dir):

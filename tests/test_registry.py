@@ -48,8 +48,8 @@ def test_gate_window_rotation_round14():
 def test_registry_is_complete_and_unique():
     qs = all_queries()
     assert len(qs) >= 86
-    # every spec is callable; oracle entries are non-empty strings
+    # every spec is callable and carries a non-empty oracle
     for name, spec in qs.items():
         assert callable(spec.spark_fn), name
-        assert spec.oracle_sql is None or (
-            isinstance(spec.oracle_sql, str) and spec.oracle_sql.strip()), name
+        assert isinstance(spec.oracle_sql, str) and spec.oracle_sql.strip(), \
+            name

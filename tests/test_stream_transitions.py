@@ -378,26 +378,21 @@ def test_version_resolution_at_most_bounds():
     import os
     import tempfile
 
-    from mapreducewordcount_spark.streaming.jobs import (
-        latest_state_version,
-    )
-    from mapreducewordcount_spark.streaming.manifest_state import (
-        latest_manifest_version,
-    )
+    from mapreducewordcount_spark.streaming.state import latest_version
 
     with tempfile.TemporaryDirectory() as d:
         for v in (0, 1, 3, 7):
             os.makedirs(f"{d}/v{v}")
-        assert latest_state_version(None, d) == 7
-        assert latest_state_version(None, d, at_most=7) == 7
-        assert latest_state_version(None, d, at_most=6) == 3
-        assert latest_state_version(None, d, at_most=2) == 1
-        assert latest_state_version(None, d, at_most=-1) is None
+        assert latest_version(d) == 7
+        assert latest_version(d, at_most=7) == 7
+        assert latest_version(d, at_most=6) == 3
+        assert latest_version(d, at_most=2) == 1
+        assert latest_version(d, at_most=-1) is None
 
     with tempfile.TemporaryDirectory() as d:
         for v in (0, 2, 5):
             with open(f"{d}/manifest-v{v}.json", "w") as f:
                 f.write("{}")
-        assert latest_manifest_version(d) == 5
-        assert latest_manifest_version(d, at_most=4) == 2
-        assert latest_manifest_version(d, at_most=1) == 0
+        assert latest_version(d) == 5
+        assert latest_version(d, at_most=4) == 2
+        assert latest_version(d, at_most=1) == 0

@@ -357,43 +357,8 @@ def test_stream_source_token_budget_enforces_across_batches(spark, tmp_path):
     _run_token_budget_scenario(spark, tmp_path, stream_source_token_budget)
 
 
-def test_stream_source_token_budget_tws_across_batches(spark, tmp_path):
-    """Same contract through Spark 4's transformWithStateInPandas;
-    skips where the API's protobuf worker dependency is absent."""
-    from mapreducewordcount_spark.streaming.jobs import _has_protobuf
-
-    if not _has_protobuf():
-        pytest.skip("transformWithStateInPandas needs protobuf")
-
-    from mapreducewordcount_spark.streaming.jobs import (
-        stream_source_token_budget_tws,
-    )
-
-    _run_token_budget_scenario(
-        spark, tmp_path, stream_source_token_budget_tws)
-
-
-def test_tws_variant_raises_without_protobuf(spark):
-    """The env-gate is a loud ImportError at call time, not a silent
-    fallback — callers choose the portable twin explicitly."""
-    from mapreducewordcount_spark.streaming.jobs import _has_protobuf
-
-    if _has_protobuf():
-        pytest.skip("protobuf present; gate inactive")
-
-    from mapreducewordcount_spark.streaming.jobs import (
-        stream_source_token_budget_tws,
-    )
-
-    schema = "source string, doc_id long, text string"
-    docs = (spark.readStream.format("rate").load()
-            .selectExpr("'A' source", "value doc_id", "'w' text"))
-    with pytest.raises(ImportError, match="protobuf"):
-        stream_source_token_budget_tws(docs, {"A": 10})
-
-
 def test_admit_micro_batch_chunk_order_invariance():
-    """The shared admission core must produce identical admissions
+    """The admission core must produce identical admissions
     whether the group arrives as one Arrow chunk or many — the
     concat-then-sort contract (round-4 dbae897 regression guard)."""
     import pandas as pd

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import string
+import sys
 
 import pytest
 from pyspark.sql import functions as F
@@ -69,6 +70,19 @@ def test_native_mode(spark, text, expected):
     df = spark.createDataFrame([(text,)], "value string")
     got = df.select(tokenize_expr("value").alias("w")).collect()[0].w
     assert got == expected
+
+
+def test_native_split_matches_str_split_on_every_whitespace(spark):
+    """The native tokenizer splits where Python ``str.split()`` does:
+    on every code point ``str.isspace()`` accepts, including the
+    U+001C-U+001F separators that Java's Unicode ``\\s`` leaves out."""
+    spaces = [chr(c) for c in range(sys.maxunicode + 1) if chr(c).isspace()]
+    texts = [f"{sp}ab{sp}cd{sp}{sp}ef{sp}" for sp in spaces]
+    df = spark.createDataFrame([(t,) for t in texts], "value string")
+    got = [r.w for r in df.select(tokenize_expr("value").alias("w"))
+           .collect()]
+    assert dict(zip(spaces, got)) == {sp: t.split()
+                                      for sp, t in zip(spaces, texts)}
 
 
 def test_normalize_matches_python_strip(spark):

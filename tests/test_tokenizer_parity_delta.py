@@ -128,21 +128,20 @@ def _unguarded_cascade(text: str) -> list[str]:
     return text.split()
 
 
-@pytest.mark.skipif(not CORPUS_AVAILABLE, reason="reference corpus absent")
-def test_guards_are_exact_supersets():
+def test_guards_are_exact_supersets(corpus_dir):
     """treebank_word_tokenize gates each regex pass on a literal
     containment check; a guard that is not a NECESSARY condition for
     its pattern would silently skip a live rule. Sweep every sentence
-    of the full reference corpus guarded vs unguarded."""
+    of the test corpus guarded vs unguarded."""
     from mapreducewordcount_spark.functions.tokenize import (
         sent_split_port,
         treebank_word_tokenize,
     )
 
-    for name in sorted(os.listdir(REFERENCE_CORPUS)):
+    for name in sorted(os.listdir(corpus_dir)):
         if not name.endswith(".txt"):
             continue
-        with open(os.path.join(REFERENCE_CORPUS, name),
+        with open(os.path.join(corpus_dir, name),
                   encoding="utf-8") as f:
             for line in f:
                 for sent in sent_split_port(line):

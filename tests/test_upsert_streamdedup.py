@@ -161,9 +161,9 @@ def test_stream_simhash_dedup_collapses_signature_twins(spark, tmp_path):
         q.stop()
 
 
-@pytest.mark.parametrize("state_format", ["versioned", "manifest"])
+@pytest.mark.parametrize("seed_format", ["versioned", "manifest"])
 def test_stream_cdc_view_refresh_matches_batch(spark, tmp_path,
-                                               state_format):
+                                               seed_format):
     """Streaming IVM twin (VERDICT r7 next#6): a CDC feed refreshes
     the materialized aggregate across micro-batches through the batch
     delta rules; the final view must equal a from-scratch recompute
@@ -175,10 +175,8 @@ def test_stream_cdc_view_refresh_matches_batch(spark, tmp_path,
     import json
 
     from mapreducewordcount_spark.operators.merge import merge_upsert
-    from mapreducewordcount_spark.streaming import manifest_state as ms
+    from mapreducewordcount_spark.streaming import state as store
     from mapreducewordcount_spark.streaming.jobs import (
-        latest_state_version,
-        read_state_version,
         start_cdc_agg_refresh,
     )
 
@@ -188,8 +186,8 @@ def test_stream_cdc_view_refresh_matches_batch(spark, tmp_path,
         [(1, "a", 100), (2, "a", 200), (3, "b", 300), (4, "b", 400),
          (5, "c", 500)],
         "k long, grp string, v long")
-    if state_format == "manifest":
-        ms.seed_manifest_state(seed, snap_dir, ["k"], n_buckets=4)
+    if seed_format == "manifest":
+        store.seed_manifest_state(seed, snap_dir, ["k"], n_buckets=4)
     else:
         seed.write.parquet(f"{snap_dir}/v0")
 
@@ -212,8 +210,7 @@ def test_stream_cdc_view_refresh_matches_batch(spark, tmp_path,
     q = start_cdc_agg_refresh(
         stream, snapshot_dir=snap_dir, view_dir=view_dir,
         checkpoint_dir=str(tmp_path / "ckpt"),
-        keys=["k"], group_col="grp", value_col="v",
-        state_format=state_format)
+        keys=["k"], group_col="grp", value_col="v")
     try:
         q.processAllAvailable()
         (src / "b2.json").write_text(
@@ -234,7 +231,7 @@ def test_stream_cdc_view_refresh_matches_batch(spark, tmp_path,
                 merged.groupBy("grp").agg(F.count(F.lit(1)).alias("n"),
                                           F.sum("v").alias("t")).collect()}
 
-    assert latest_state_version(spark, view_dir) == 2
+    assert store.latest_version(view_dir) == 2
     # unseeded state dir fails FAST at start() with the seed-first
     # message, not as an AnalysisException inside the stream
     # (ADVICE r8)
@@ -242,19 +239,19 @@ def test_stream_cdc_view_refresh_matches_batch(spark, tmp_path,
         start_cdc_agg_refresh(
             stream, snapshot_dir=str(tmp_path / "never_seeded"),
             view_dir=view_dir, checkpoint_dir=str(tmp_path / "ckpt2"),
-            keys=["k"], group_col="grp", value_col="v",
-            state_format=state_format)
+            keys=["k"], group_col="grp", value_col="v")
     # intermediate version: view after batch 1 only
-    assert _view(read_state_version(spark, view_dir, 1)) == _recompute(b1)
+    views = store.StateStore(spark, view_dir)
+    assert _view(views.read(1)) == _recompute(b1)
     # final: across-batch state carried through the versioned snapshot
-    assert _view(read_state_version(spark, view_dir)) == _recompute(b1, b2)
+    assert _view(views.read()) == _recompute(b1, b2)
     # group moves/extinction audit: 'c' survives with only the insert
-    assert _view(read_state_version(spark, view_dir))["c"] == (1, 900)
-    if state_format == "manifest":
+    assert _view(views.read())["c"] == (1, 900)
+    if seed_format == "manifest":
         # the committed SNAPSHOT itself must equal the from-scratch
         # merge, read through the manifest (union of live segments)
         final = {(r.k, r.grp, r.v) for r in
-                 ms.read_manifest_state(spark, snap_dir).collect()}
+                 store.read_manifest_state(spark, snap_dir).collect()}
         want = {(r.k, r.grp, r.v) for r in
                 merge_upsert(seed, spark.createDataFrame(
                     [tuple(r.values()) for b in (b1, b2) for r in b],
@@ -264,15 +261,15 @@ def test_stream_cdc_view_refresh_matches_batch(spark, tmp_path,
         # copy-on-write really happened: v2 rewrote only the buckets
         # batch 2 touched, so at least one OLDER segment is still
         # live (carried forward by path, zero bytes moved)
-        man = ms._load_manifest(snap_dir, 2)
+        man = store._load_manifest(snap_dir, 2)
         live = [p for ps in man["buckets"].values() for p in ps]
         assert any(not p.startswith("seg/v2/") for p in live), live
         assert any(p.startswith("seg/v2/") for p in live), live
 
 
-@pytest.mark.parametrize("state_format", ["versioned", "manifest"])
+@pytest.mark.parametrize("seed_format", ["versioned", "manifest"])
 def test_stream_chunk_index_maintenance_matches_batch(spark, tmp_path,
-                                                      state_format):
+                                                      seed_format):
     """Streaming chunk-index twin (round 9): micro-batches chunk,
     probe, report, and grow the versioned index; the final index must
     equal the batch chunker's distinct hash set over all documents,
@@ -285,10 +282,8 @@ def test_stream_chunk_index_maintenance_matches_batch(spark, tmp_path,
     from mapreducewordcount_spark.operators.cdchunk import (
         cdc_chunk_table,
     )
-    from mapreducewordcount_spark.streaming import manifest_state as ms
+    from mapreducewordcount_spark.streaming import state as store
     from mapreducewordcount_spark.streaming.jobs import (
-        latest_state_version,
-        read_state_version,
         start_chunk_index_maintenance,
     )
 
@@ -301,9 +296,9 @@ def test_stream_chunk_index_maintenance_matches_batch(spark, tmp_path,
     rep_dir = str(tmp_path / "chunk_reports")
     # seed: the empty index
     empty = spark.createDataFrame([], "chunk_md5 string, length int")
-    if state_format == "manifest":
-        ms.seed_manifest_state(empty, idx_dir, ["chunk_md5"],
-                               n_buckets=4)
+    if seed_format == "manifest":
+        store.seed_manifest_state(empty, idx_dir, ["chunk_md5"],
+                                  n_buckets=4)
     else:
         empty.write.parquet(f"{idx_dir}/v0")
 
@@ -319,8 +314,7 @@ def test_stream_chunk_index_maintenance_matches_batch(spark, tmp_path,
     stream = spark.readStream.schema(schema).json(str(src))
     q = start_chunk_index_maintenance(
         stream, index_dir=idx_dir, report_dir=rep_dir,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        state_format=state_format)
+        checkpoint_dir=str(tmp_path / "ckpt"))
     try:
         q.processAllAvailable()
         (src / "b2.json").write_text("\n".join([
@@ -332,18 +326,18 @@ def test_stream_chunk_index_maintenance_matches_batch(spark, tmp_path,
     finally:
         q.stop()
 
-    if state_format == "manifest":
-        assert ms.latest_manifest_version(idx_dir) == 2
-        final_df = ms.read_manifest_state(spark, idx_dir)
+    if seed_format == "manifest":
+        assert store.latest_version(idx_dir) == 2
+        final_df = store.read_manifest_state(spark, idx_dir)
         # append-only commits: the final manifest unions segments
         # from BOTH batch versions, nothing rewritten
-        man = ms._load_manifest(idx_dir, 2)
+        man = store._load_manifest(idx_dir, 2)
         live = [p for ps in man["buckets"].values() for p in ps]
         assert any(p.startswith("seg/v1/") for p in live), live
         assert any(p.startswith("seg/v2/") for p in live), live
     else:
-        assert latest_state_version(spark, idx_dir) == 2
-        final_df = read_state_version(spark, idx_dir)
+        assert store.latest_version(idx_dir) == 2
+        final_df = store.StateStore(spark, idx_dir).read()
     all_docs = spark.createDataFrame(
         [(1, text_a), (2, text_a), (3, text_b)],
         "doc_id long, text string")
@@ -354,7 +348,7 @@ def test_stream_chunk_index_maintenance_matches_batch(spark, tmp_path,
     assert final == expected
 
     rep2 = {r.source: r for r in
-            read_state_version(spark, rep_dir, 2).collect()}
+            store.StateStore(spark, rep_dir).read(2).collect()}
     # the exact re-crawl is ALL index dups; the new doc all new
     assert rep2["recrawl"].n_dup_index == rep2["recrawl"].n_chunks
     assert rep2["recrawl"].dup_index_chars == len(text_a)
@@ -363,8 +357,7 @@ def test_stream_chunk_index_maintenance_matches_batch(spark, tmp_path,
     with pytest.raises(ValueError, match="seed "):
         start_chunk_index_maintenance(
             stream, index_dir=str(tmp_path / "nope"),
-            report_dir=rep_dir, checkpoint_dir=str(tmp_path / "c2"),
-            state_format=state_format)
+            report_dir=rep_dir, checkpoint_dir=str(tmp_path / "c2"))
 
 
 def test_stream_state_dir_removed_mid_stream_fails_with_seed_error(
@@ -422,22 +415,22 @@ def test_manifest_gc_removes_exactly_unreferenced(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from mapreducewordcount_spark.streaming import manifest_state as ms
+    from mapreducewordcount_spark.streaming import state as store
 
     d = str(tmp_path / "state")
     seed = spark.createDataFrame(
         [(i, f"v{i}") for i in range(40)], "k long, val string")
-    ms.seed_manifest_state(seed, d, ["k"], n_buckets=4)
-    man0 = ms._load_manifest(d, 0)
+    store.seed_manifest_state(seed, d, ["k"], n_buckets=4)
+    man0 = store._load_manifest(d, 0)
 
     # COW commit: replace bucket 0's content (k=1000 upserted there)
     new_rows = spark.createDataFrame([(1000, "new")],
                                      "k long, val string")
-    target = ms.changed_buckets_of(new_rows, ["k"], 4)
-    old_b = ms.read_manifest_state(spark, d, buckets=target) \
+    target = store.changed_buckets_of(new_rows, ["k"], 4)
+    old_b = store.read_manifest_state(spark, d, buckets=target) \
         .withColumn("__b", F.pmod(F.xxhash64("k"), F.lit(4))) \
         .filter(F.col("__b").isin([int(b) for b in target])).drop("__b")
-    ms.commit_cow(old_b.unionByName(new_rows), target, d, 0, 1)
+    store.commit_cow(old_b.unionByName(new_rows), target, d, 0, 1)
     superseded = {f"seg/v0/b{b}" for b in target
                   if man0["buckets"][str(b)]}
     carried = {p for b, ps in man0["buckets"].items()
@@ -453,8 +446,8 @@ def test_manifest_gc_removes_exactly_unreferenced(spark, tmp_path):
     open(f"{d}/seg/v9/inflight/part-data.parquet", "w").write("x")
 
     before = {tuple(sorted(r.asDict().items()))
-              for r in ms.read_manifest_state(spark, d).collect()}
-    report = ms.gc_manifest_state(d, keep_last=1)
+              for r in store.read_manifest_state(spark, d).collect()}
+    report = store.gc_manifest_state(d, keep_last=1)
     assert report["kept_versions"] == [1]
     assert report["removed_manifests"] == ["manifest-v0.json"]
     assert set(report["removed_segments"]) == superseded | {
@@ -464,20 +457,20 @@ def test_manifest_gc_removes_exactly_unreferenced(spark, tmp_path):
     for rel in carried:
         assert os.path.isdir(f"{d}/{rel}")
     after = {tuple(sorted(r.asDict().items()))
-             for r in ms.read_manifest_state(spark, d).collect()}
+             for r in store.read_manifest_state(spark, d).collect()}
     assert after == before
     # dropped versions fail loudly, never return partial state
     import pytest as _pytest
     with _pytest.raises(FileNotFoundError):
-        ms.read_manifest_state(spark, d, version=0)
+        store.read_manifest_state(spark, d, version=0)
     # idempotent
-    again = ms.gc_manifest_state(d, keep_last=1)
+    again = store.gc_manifest_state(d, keep_last=1)
     assert again["removed_manifests"] == []
     assert again["removed_segments"] == []
     # once a LATER commit supersedes the stranded version, the next
     # GC collects the now-provably-zombie segment
-    ms.commit_cow(new_rows, target, d, 1, 10)
-    report3 = ms.gc_manifest_state(d, keep_last=1)
+    store.commit_cow(new_rows, target, d, 1, 10)
+    report3 = store.gc_manifest_state(d, keep_last=1)
     assert "seg/v9/inflight" in report3["removed_segments"]
     assert not os.path.isdir(f"{d}/seg/v9")
 
@@ -494,7 +487,7 @@ def test_stream_gc_collects_superseded_segments_mid_stream(
     import os
 
     from mapreducewordcount_spark.operators.merge import merge_upsert
-    from mapreducewordcount_spark.streaming import manifest_state as ms
+    from mapreducewordcount_spark.streaming import state as store
     from mapreducewordcount_spark.streaming.jobs import (
         start_cdc_agg_refresh,
     )
@@ -503,7 +496,7 @@ def test_stream_gc_collects_superseded_segments_mid_stream(
     seed = spark.createDataFrame(
         [(1, "a", 100), (2, "a", 200), (3, "b", 300), (4, "b", 400)],
         "k long, grp string, v long")
-    ms.seed_manifest_state(seed, snap_dir, ["k"], n_buckets=4)
+    store.seed_manifest_state(seed, snap_dir, ["k"], n_buckets=4)
 
     src = tmp_path / "cdc"
     src.mkdir()
@@ -524,7 +517,6 @@ def test_stream_gc_collects_superseded_segments_mid_stream(
         view_dir=str(tmp_path / "view"),
         checkpoint_dir=str(tmp_path / "ckpt"),
         keys=["k"], group_col="grp", value_col="v",
-        state_format="manifest",
         gc_every_n_batches=1, gc_keep_last=2)
     try:
         q.processAllAvailable()
@@ -548,7 +540,7 @@ def test_stream_gc_collects_superseded_segments_mid_stream(
         == ["manifest-v1.json", "manifest-v2.json"]
     live = set()
     for v in (1, 2):
-        man = ms._load_manifest(snap_dir, v)
+        man = store._load_manifest(snap_dir, v)
         live |= {p for ps in man["buckets"].values() for p in ps}
     on_disk = set()
     seg_root = os.path.join(snap_dir, "seg")
@@ -558,7 +550,7 @@ def test_stream_gc_collects_superseded_segments_mid_stream(
     assert on_disk == live
     # and the retained state equals the from-scratch recompute
     final = {(r.k, r.grp, r.v) for r in
-             ms.read_manifest_state(spark, snap_dir).collect()}
+             store.read_manifest_state(spark, snap_dir).collect()}
     chg = spark.createDataFrame(
         [tuple(r.values()) for b in (b1, b2) for r in b],
         "k long, grp string, v long, _version int, _op string")
@@ -575,7 +567,7 @@ def test_gc_versioned_state_keeps_last_k_existing(tmp_path):
 
     import pytest as _pytest
 
-    from mapreducewordcount_spark.streaming.jobs import (
+    from mapreducewordcount_spark.streaming.state import (
         gc_versioned_state,
     )
 
@@ -603,8 +595,8 @@ def test_stream_gc_versioned_format_drops_old_copies(spark, tmp_path):
     import os
 
     from mapreducewordcount_spark.operators.merge import merge_upsert
+    from mapreducewordcount_spark.streaming import state as store
     from mapreducewordcount_spark.streaming.jobs import (
-        read_state_version,
         start_cdc_agg_refresh,
     )
 
@@ -630,7 +622,6 @@ def test_stream_gc_versioned_format_drops_old_copies(spark, tmp_path):
         snapshot_dir=snap_dir, view_dir=str(tmp_path / "view"),
         checkpoint_dir=str(tmp_path / "ckpt"),
         keys=["k"], group_col="grp", value_col="v",
-        state_format="versioned",
         gc_every_n_batches=1, gc_keep_last=2)
     try:
         q.processAllAvailable()
@@ -645,7 +636,7 @@ def test_stream_gc_versioned_format_drops_old_copies(spark, tmp_path):
 
     assert sorted(os.listdir(snap_dir)) == ["v1", "v2"]  # v0 collected
     final = {(r.k, r.grp, r.v) for r in
-             read_state_version(spark, snap_dir).collect()}
+             store.StateStore(spark, snap_dir).read().collect()}
     chg = spark.createDataFrame(
         [tuple(r.values()) for b in (b1, b2) for r in b],
         "k long, grp string, v long, _version int, _op string")
@@ -664,8 +655,8 @@ def test_stream_reservoir_matches_batch_bottom_k(spark, tmp_path):
     import json
     import os
 
+    from mapreducewordcount_spark.streaming import state as store
     from mapreducewordcount_spark.streaming.jobs import (
-        read_state_version,
         start_reservoir_maintenance,
     )
 
@@ -697,7 +688,7 @@ def test_stream_reservoir_matches_batch_bottom_k(spark, tmp_path):
     # GC kept the retained versions: only two exist, both within
     # the keep_last=2 replay horizon (ADVICE r12 floor)
     assert sorted(os.listdir(st)) == ["v1", "v2"]
-    state = read_state_version(spark, st).collect()
+    state = store.StateStore(spark, st).read().collect()
 
     def bottom_k(ids):
         return set(sorted(
@@ -775,9 +766,33 @@ def test_loop_gc_keep_last_floor_is_enforced(spark, tmp_path):
             gc_keep_last=1)
 
 
-@pytest.mark.parametrize("state_format", ["versioned", "manifest"])
+def test_state_dir_seeded_in_both_formats_raises_at_start(spark, tmp_path):
+    """The seed picks a state dir's format; a dir holding both a
+    ``v0/`` copy and a ``manifest-v0.json`` has no single format, so
+    start() refuses and names both layouts."""
+    from mapreducewordcount_spark.streaming import state as store
+    from mapreducewordcount_spark.streaming.jobs import (
+        start_chunk_index_maintenance,
+    )
+
+    idx_dir = str(tmp_path / "chunk_index")
+    empty = spark.createDataFrame([], "chunk_md5 string, length int")
+    empty.write.parquet(f"{idx_dir}/v0")
+    store.seed_manifest_state(empty, idx_dir, ["chunk_md5"], n_buckets=4)
+    (tmp_path / "docs").mkdir()
+    docs = spark.readStream.schema(
+        "doc_id long, source string, text string").json(
+        str(tmp_path / "docs"))
+    with pytest.raises(ValueError,
+                       match=r"both v<N>/ .* and manifest-v<N>\.json"):
+        start_chunk_index_maintenance(
+            docs, index_dir=idx_dir, report_dir=str(tmp_path / "rep"),
+            checkpoint_dir=str(tmp_path / "ckpt"))
+
+
+@pytest.mark.parametrize("seed_format", ["versioned", "manifest"])
 def test_stream_ann_index_maintenance_matches_scratch(spark, tmp_path,
-                                                      state_format):
+                                                      seed_format):
     """Streaming ANN append loop (round 13): seed the index with the
     offline build on the base corpus, stream the remaining vectors in
     two micro-batches (the second REDELIVERS one already-indexed id),
@@ -792,9 +807,8 @@ def test_stream_ann_index_maintenance_matches_scratch(spark, tmp_path,
     from mapreducewordcount_spark.operators import similarity as sim
     from mapreducewordcount_spark.operators.similarity import ivf_assign
     from mapreducewordcount_spark.sources.tables import load_table
-    from mapreducewordcount_spark.streaming import manifest_state as ms
+    from mapreducewordcount_spark.streaming import state as store
     from mapreducewordcount_spark.streaming.jobs import (
-        read_state_version,
         start_ann_index_maintenance,
     )
     from tests.conftest import SF_ORACLE
@@ -810,9 +824,9 @@ def test_stream_ann_index_maintenance_matches_scratch(spark, tmp_path,
 
     idx_dir = str(tmp_path / "ann_index")
     rep_dir = str(tmp_path / "ann_reports")
-    if state_format == "manifest":
-        ms.seed_manifest_state(seed, idx_dir, ["neighbor_id"],
-                               n_buckets=4)
+    if seed_format == "manifest":
+        store.seed_manifest_state(seed, idx_dir, ["neighbor_id"],
+                                  n_buckets=4)
     else:
         seed.write.parquet(f"{idx_dir}/v0")
 
@@ -839,7 +853,7 @@ def test_stream_ann_index_maintenance_matches_scratch(spark, tmp_path,
         spark.readStream.schema(schema).json(str(src)),
         index_dir=idx_dir, report_dir=rep_dir,
         checkpoint_dir=str(tmp_path / "ckpt"),
-        centroids=cent, books=books, state_format=state_format)
+        centroids=cent, books=books)
     try:
         q.processAllAvailable()
         # batch 2: the rest, plus a REDELIVERY of a b1 vector — the
@@ -849,9 +863,9 @@ def test_stream_ann_index_maintenance_matches_scratch(spark, tmp_path,
     finally:
         q.stop()
 
-    final = (ms.read_manifest_state(spark, idx_dir)
-             if state_format == "manifest"
-             else read_state_version(spark, idx_dir))
+    final = (store.read_manifest_state(spark, idx_dir)
+             if seed_format == "manifest"
+             else store.StateStore(spark, idx_dir).read())
     got = {(r.neighbor_id, r.list_id, tuple(r.codes))
            for r in final.collect()}
     scratch_assigned = ivf_assign(emb, cent)
@@ -884,45 +898,45 @@ def test_manifest_compaction_resets_segment_growth(spark, tmp_path):
     then collects the superseded pre-compaction segments."""
     import os
 
-    from mapreducewordcount_spark.streaming import manifest_state as ms
+    from mapreducewordcount_spark.streaming import state as store
 
     st = str(tmp_path / "mstate")
     seed = spark.createDataFrame(
         [(i, f"s{i}") for i in range(8)], "k long, v string")
-    ms.seed_manifest_state(seed, st, ["k"], n_buckets=4)
+    store.seed_manifest_state(seed, st, ["k"], n_buckets=4)
     rows = {(i, f"s{i}") for i in range(8)}
     for batch in range(3):
         new = spark.createDataFrame(
             [(100 + batch * 10 + j, f"b{batch}_{j}") for j in range(6)],
             "k long, v string")
-        ms.commit_append(new, st, batch, batch + 1)
+        store.commit_append(new, st, batch, batch + 1)
         rows |= {(100 + batch * 10 + j, f"b{batch}_{j}")
                  for j in range(6)}
-    man = ms._load_manifest(st, 3)
+    man = store._load_manifest(st, 3)
     assert max(len(ps) for ps in man["buckets"].values()) >= 3
 
-    stats = ms.compact_manifest_state(spark, st)
+    stats = store.compact_manifest_state(spark, st)
     assert stats["version"] == 3
     assert stats["segments_after"] < stats["segments_before"]
-    man2 = ms._load_manifest(st, 3)
+    man2 = store._load_manifest(st, 3)
     assert all(len(ps) <= 1 for ps in man2["buckets"].values())
-    got = [(r.k, r.v) for r in ms.read_manifest_state(spark, st).collect()]
+    got = [(r.k, r.v) for r in store.read_manifest_state(spark, st).collect()]
     assert len(got) == len(rows)          # no duplicated rows
     assert set(got) == rows               # identical content
 
     # the loop continues: an append against the compacted manifest
     new = spark.createDataFrame([(999, "post")], "k long, v string")
-    ms.commit_append(new, st, 3, 4)
+    store.commit_append(new, st, 3, 4)
     rows.add((999, "post"))
     assert {(r.k, r.v) for r in
-            ms.read_manifest_state(spark, st).collect()} == rows
+            store.read_manifest_state(spark, st).collect()} == rows
 
     # GC with keep_last=2 retains v3+v4; pre-compaction segments are
     # no longer referenced by any retained manifest -> collected
-    out = ms.gc_manifest_state(st, keep_last=2)
+    out = store.gc_manifest_state(st, keep_last=2)
     assert any("append" in s for s in out["removed_segments"])
     assert {(r.k, r.v) for r in
-            ms.read_manifest_state(spark, st).collect()} == rows
+            store.read_manifest_state(spark, st).collect()} == rows
     # compacted segments survived on disk
     seg_root = os.path.join(st, "seg")
     live = [f"seg/{v}/{t}" for v in os.listdir(seg_root)

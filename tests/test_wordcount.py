@@ -1,10 +1,10 @@
 """End-to-end word count vs a single-process Counter oracle.
 
-SURVEY.md §5 test plan item 3: run the full pipeline over the
-reference's own Gutenberg corpus (``/root/reference/files/inputs/``,
-read-only fixture) and hash-compare against an in-process
-``collections.Counter`` applying identical tokenizer semantics —
-the oracle the reference itself never had.
+SURVEY.md §5 test plan item 3: run the full pipeline over a
+multi-file text corpus (``corpus_dir`` in tests/conftest.py: the
+TESTDATA documents plus hand-written edge files) and hash-compare
+against an in-process ``collections.Counter`` applying identical
+tokenizer semantics — the oracle the reference itself never had.
 """
 
 from __future__ import annotations
@@ -13,7 +13,6 @@ import os
 import string
 from collections import Counter
 
-import pytest
 from pyspark.sql import functions as F
 
 from mapreducewordcount_spark.functions.buckets import bucket_expr
@@ -23,9 +22,6 @@ from mapreducewordcount_spark.operators.wordcount import (
     wordcount_pipeline,
     write_wordcount_output,
 )
-from tests.conftest import REFERENCE_CORPUS
-
-CORPUS_AVAILABLE = os.path.isdir(REFERENCE_CORPUS)
 
 
 def _native_tokenize(line: str) -> list[str]:
@@ -51,23 +47,20 @@ def _oracle_counts(input_dir: str, tokenize) -> Counter:
     return counts
 
 
-@pytest.mark.skipif(not CORPUS_AVAILABLE, reason="reference corpus not present")
-def test_corpus_native_mode_matches_counter_oracle(spark):
+def test_corpus_native_mode_matches_counter_oracle(spark, corpus_dir):
     got = {r.word: r["count"]
-           for r in wordcount_pipeline(spark, REFERENCE_CORPUS, mode="native").collect()}
-    want = _oracle_counts(REFERENCE_CORPUS, str.split)
+           for r in wordcount_pipeline(spark, corpus_dir, mode="native").collect()}
+    want = _oracle_counts(corpus_dir, str.split)
     assert got == dict(want)
 
 
-@pytest.mark.skipif(not CORPUS_AVAILABLE, reason="reference corpus not present")
-def test_corpus_parity_mode_matches_counter_oracle(spark):
+def test_corpus_parity_mode_matches_counter_oracle(spark, corpus_dir):
     got = {r.word: r["count"]
-           for r in wordcount_pipeline(spark, REFERENCE_CORPUS, mode="parity").collect()}
-    want = _oracle_counts(REFERENCE_CORPUS, word_tokenize_port)
+           for r in wordcount_pipeline(spark, corpus_dir, mode="parity").collect()}
+    want = _oracle_counts(corpus_dir, word_tokenize_port)
     assert got == dict(want)
 
 
-@pytest.mark.skipif(not CORPUS_AVAILABLE, reason="reference corpus not present")
 def test_non_txt_files_ignored(spark, tmp_path):
     """Scan-level parity with tests/test_task_manager.py:150-162."""
     (tmp_path / "a.txt").write_text("alpha beta alpha\n")

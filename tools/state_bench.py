@@ -28,7 +28,7 @@ def main() -> None:
     batch_rows = int(sys.argv[3]) if len(sys.argv) > 3 else 10_000
 
     from mapreducewordcount_spark.session import get_spark
-    from mapreducewordcount_spark.streaming import manifest_state as ms
+    from mapreducewordcount_spark.streaming import state
 
     spark = get_spark("state_bench")
     root = tempfile.mkdtemp(prefix="state_bench_")
@@ -60,7 +60,7 @@ def main() -> None:
         new_index = (index.unionByName(fresh).distinct()
                      .localCheckpoint(eager=True))
         t0 = time.perf_counter()
-        new_index.write.mode("overwrite").parquet(f"{vdir}/v{b + 1}")
+        state.write_version(new_index, vdir, b + 1)
         commit_s += time.perf_counter() - t0
         loop_s += time.perf_counter() - t_loop
     out["versioned_commit_s"] = round(commit_s / n_batches, 3)
@@ -68,16 +68,16 @@ def main() -> None:
 
     # --- manifest: append segment + JSON swap ------------------------
     mdir = f"{root}/manifest"
-    ms.seed_manifest_state(seed, mdir, ["chunk_md5"])
+    state.seed_manifest_state(seed, mdir, ["chunk_md5"])
     commit_s = loop_s = 0.0
     for b in range(n_batches):
         t_loop = time.perf_counter()
-        index = ms.read_manifest_state(spark, mdir, b)
+        index = state.read_manifest_state(spark, mdir, b)
         fresh = index_rows(n_state + b * batch_rows, batch_rows)
         new = (fresh.join(index.select("chunk_md5"), "chunk_md5",
                           "left_anti").localCheckpoint(eager=True))
         t0 = time.perf_counter()
-        ms.commit_append(new, mdir, b, b + 1)
+        state.commit_append(new, mdir, b, b + 1)
         commit_s += time.perf_counter() - t0
         loop_s += time.perf_counter() - t_loop
     out["manifest_commit_s"] = round(commit_s / n_batches, 3)
@@ -87,7 +87,7 @@ def main() -> None:
 
     # read-path cost of the segmented layout (union of K+1 segments)
     t0 = time.perf_counter()
-    n = ms.read_manifest_state(spark, mdir).count()
+    n = state.read_manifest_state(spark, mdir).count()
     out["manifest_full_read_s"] = round(time.perf_counter() - t0, 3)
     t0 = time.perf_counter()
     n2 = spark.read.parquet(f"{vdir}/v{n_batches}").count()
