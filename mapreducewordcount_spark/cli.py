@@ -23,6 +23,18 @@ import os
 import sys
 
 
+def _count(text: str) -> int:
+    """argparse type for bucket and worker counts: an int >= 1."""
+    try:
+        n = int(text)
+    except ValueError:
+        raise argparse.ArgumentTypeError(
+            f"invalid int value: {text!r}") from None
+    if n < 1:
+        raise argparse.ArgumentTypeError(f"must be at least 1, got {n}")
+    return n
+
+
 def _build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(prog="mapreducewordcount_spark")
     sub = p.add_subparsers(dest="cmd", required=True)
@@ -30,9 +42,9 @@ def _build_parser() -> argparse.ArgumentParser:
     run.add_argument("--config", help="reference-schema config.yaml")
     run.add_argument("--input", help="input directory of *.txt files")
     run.add_argument("--output", help="output directory")
-    run.add_argument("-m", "--reduce-tasks", type=int, default=None,
+    run.add_argument("-m", "--reduce-tasks", type=_count, default=None,
                      help="number of output buckets (M)")
-    run.add_argument("--workers", type=int, default=None,
+    run.add_argument("--workers", type=_count, default=None,
                      help="local parallelism (maps to local[n])")
     run.add_argument("--mode", choices=("native", "parity"), default=None,
                      help="tokenizer mode")
@@ -42,7 +54,7 @@ def _build_parser() -> argparse.ArgumentParser:
         "(counts refresh as new files land in the input dir)")
     stream.add_argument("--input", required=True)
     stream.add_argument("--output", required=True)
-    stream.add_argument("-m", "--reduce-tasks", type=int, default=4)
+    stream.add_argument("-m", "--reduce-tasks", type=_count, default=4)
     stream.add_argument("--checkpoint", default=None,
                         help="checkpoint dir (default: <output>.checkpoint — "
                         "a sibling, NOT inside the output dir, which each "

@@ -61,10 +61,14 @@ def load_config(path: str, base_dir: str | None = None) -> EngineConfig:
 
     dirs = raw.get("directories", {})
     mr = raw.get("mapreduce", {})
+    counts = {"num_map_tasks": int(mr.get("num_map_tasks", 6)),
+              "num_reduce_tasks": int(mr.get("num_reduce_tasks", 4))}
+    for key, n in counts.items():
+        if n < 1:
+            raise ValueError(f"mapreduce.{key} must be at least 1, got {n}")
     return EngineConfig(
         input_dir=resolve(dirs.get("input", "inputs")),
         output_dir=resolve(dirs.get("output", "out")),
-        num_map_tasks=int(mr.get("num_map_tasks", 6)),
-        num_reduce_tasks=int(mr.get("num_reduce_tasks", 4)),
+        **counts,
         tokenizer_mode=raw.get("engine", {}).get("tokenizer_mode", "native"),
     )

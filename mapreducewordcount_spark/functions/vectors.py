@@ -9,7 +9,6 @@ summation order; left-to-right in both).
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -28,101 +27,18 @@ def norm(a: Column | str) -> Column:
     return F.sqrt(F.aggregate(_d(a), F.lit(0.0), lambda acc, x: acc + x * x))
 
 
+def cosine_from_norms(a: Column | str, b: Column | str,
+                      a_n: Column | str, b_n: Column | str) -> Column:
+    """Cosine similarity from precomputed norms; 0.0 when either norm
+    is zero. Pair stages precompute ``norm()`` once per vector, so the
+    per-pair work is one dot; the expression tree is the one
+    ``cosine`` builds, so the doubles are bit-identical either way."""
+    a_n = F.col(a_n) if isinstance(a_n, str) else a_n
+    b_n = F.col(b_n) if isinstance(b_n, str) else b_n
+    return F.when((a_n > 0) & (b_n > 0),
+                  dot(a, b) / (a_n * b_n)).otherwise(F.lit(0.0))
+
+
 def cosine(a: Column | str, b: Column | str) -> Column:
     """Cosine similarity; 0.0 when either vector has zero norm."""
-    na, nb = norm(a), norm(b)
-    return F.when((na > 0) & (nb > 0), dot(a, b) / (na * nb)).otherwise(F.lit(0.0))
-
-
-def arrow_cosine_udf():
-    """Arrow-batched cosine — ``cos(a_vec, b_vec, a_n, b_n)``,
-    drop-in for the ``zip_with``+``aggregate`` expression form.
-
-    Kept as an AVAILABLE kernel, not the default: VERDICT r7 next#2
-    hypothesized the banded pair joins' exact verify was bound by the
-    interpreted per-pair fold, but the round-8 1M-signature A/B
-    refuted that — over 94 M candidates the verify stage is
-    JOIN-bound (two wide vector joins), measuring 118 s steady-state
-    with the expression fold vs 132 s through this kernel (Arrow
-    serialization of the wide pair rows eats what the numpy loop
-    saves; SCALE.md round-8 section). Use this form only when the
-    per-row compute is genuinely heavy relative to row width — the
-    simhash lesson (r5) stays valid for that regime.
-
-    BIT PARITY is the contract that lets the artifact oracles stay
-    hash-exact: the expression form is a sequential left-to-right
-    float64 fold, and so is DuckDB's list dot. numpy's ``.sum()`` /
-    BLAS ``dot`` use pairwise/blocked summation — a DIFFERENT order,
-    1-ulp drift at 4dp rounding boundaries. So the kernel vectorizes
-    across the PAIR axis and keeps the DIMENSION loop sequential:
-    ``acc = acc + A[:, d] * B[:, d]`` is, per pair, exactly the JVM
-    fold ``acc + x*y`` in IEEE float64. Norms stay JVM-computed
-    (callers pass the same ``norm()`` columns as before), divisions
-    are single IEEE ops — every output bit matches the expression.
-
-    Degenerate inputs mirror the expression's semantics: zero/NULL
-    norm → 0.0; mismatched vector lengths with positive norms →
-    NULL (``zip_with`` pads with nulls → null dot). Constructed at
-    call time — ``@pandas_udf`` at module import needs a live
-    session for DDL parsing (similarity.py lesson).
-    """
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    def _row(av, bv, an, bn):
-        if not (an > 0.0 and bn > 0.0):  # False for NaN too
-            return 0.0
-        if av is None or bv is None or len(av) != len(bv):
-            return None  # zip_with pads → null dot → null cos
-        acc = 0.0
-        for x, y in zip(av, bv):
-            acc += float(x) * float(y)
-        return acc / (an * bn)
-
-    @pandas_udf("double")
-    def cos(a_vec: pd.Series, b_vec: pd.Series,
-            a_n: pd.Series, b_n: pd.Series) -> pd.Series:
-        an = a_n.to_numpy(dtype=np.float64, na_value=np.nan)
-        bn = b_n.to_numpy(dtype=np.float64, na_value=np.nan)
-        try:
-            A = np.asarray(a_vec.tolist(), dtype=np.float64)
-            B = np.asarray(b_vec.tolist(), dtype=np.float64)
-            fast = A.ndim == 2 and B.ndim == 2 and A.shape == B.shape
-        except (ValueError, TypeError):
-            fast = False
-        if fast:
-            acc = np.zeros(A.shape[0], dtype=np.float64)
-            for d in range(A.shape[1]):
-                acc = acc + A[:, d] * B[:, d]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                out = np.where((an > 0.0) & (bn > 0.0),
-                               acc / (an * bn), 0.0)
-            return pd.Series(out)
-        # ragged / null fallback — exact per-row replay of the
-        # expression semantics (degenerate inputs only; never the
-        # corpus path)
-        return pd.Series(
-            [_row(av, bv, an[i], bn[i])
-             for i, (av, bv) in enumerate(zip(a_vec.tolist(),
-                                              b_vec.tolist()))],
-            dtype=object)
-
-    return cos
-
-
-def hyperplane_bits(vec: Column | str, planes: list[list[float]]) -> Column:
-    """Sign-random-projection LSH key: one bit per hyperplane.
-
-    ``planes`` is a small driver-side list of fixed-seed hyperplanes —
-    embedded as literals into the plan (broadcast by value), so the
-    bucketing is a pure column expression. Vectors with the same bit
-    string land in the same LSH bucket; cosine-similar vectors agree
-    on most hyperplane signs.
-    """
-    bits = []
-    for plane in planes:
-        arr = F.array(*[F.lit(float(x)) for x in plane])
-        d = F.aggregate(F.zip_with(_d(vec), arr, lambda x, y: x * y),
-                        F.lit(0.0), lambda acc, x: acc + x)
-        bits.append(F.when(d >= 0, F.lit("1")).otherwise(F.lit("0")))
-    return F.concat(*bits)
+    return cosine_from_norms(a, b, norm(a), norm(b))

@@ -21,7 +21,8 @@ Scale ladder (which one to use at which size):
    small-corpus tool, not the 100 TB path.
 4. ``simhash_pairs`` — 64-bit simhash + banded Hamming candidates;
    cheapest signature, coarser than MinHash.
-5. ``embedding_dup_pairs`` — semantic near-dups over embeddings.
+5. ``embedding_dup_pairs`` — semantic near-dups over embeddings;
+   ``embedding_dup_pairs_lsh`` is its OR-banded sign-LSH scale path.
 """
 
 from __future__ import annotations
@@ -31,6 +32,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from mapreducewordcount_spark.cache import persist_tracked, release_query_cache
+from mapreducewordcount_spark.functions.vectors import cosine_from_norms, norm
 from mapreducewordcount_spark.functions.text_metrics import (
     fingerprint_md5,
     shingles,
@@ -686,9 +688,8 @@ def embedding_dup_pairs(embeddings: DataFrame, id_col: str = "vec_id",
     """Semantic near-dup pairs: cosine >= threshold over embeddings.
 
     Brute all-pairs (self-join on a range-split key). Correct at any
-    size but O(n²); the scale path is LSH bucketing
-    (``operators.similarity.lsh_topk``) which prunes the join to
-    same-bucket pairs.
+    size but O(n²); the scale path is ``embedding_dup_pairs_lsh``,
+    which prunes the join to pairs sharing an LSH band bucket.
     """
     # norms precomputed per vector (not per pair): same expression →
     # bit-identical cosine, but the pair stage runs ONE array
@@ -696,7 +697,6 @@ def embedding_dup_pairs(embeddings: DataFrame, id_col: str = "vec_id",
     # expression ON PURPOSE: the r8 1M-signature A/B showed the
     # verify stage is JOIN-bound, not fold-bound — see
     # embedding_dup_pairs_lsh's docstring and SCALE.md (round 8).
-    from mapreducewordcount_spark.functions.vectors import dot, norm
     from mapreducewordcount_spark.sources.tables import spread
 
     release_query_cache()
@@ -709,79 +709,11 @@ def embedding_dup_pairs(embeddings: DataFrame, id_col: str = "vec_id",
                  F.col("nrm").alias("a_n"))
     b = v.select(F.col("id").alias("b_id"), F.col("vec").alias("b_vec"),
                  F.col("nrm").alias("b_n"))
-    cos = F.when((F.col("a_n") > 0) & (F.col("b_n") > 0),
-                 dot("a_vec", "b_vec") / (F.col("a_n") * F.col("b_n"))) \
-        .otherwise(F.lit(0.0))
     return (a.join(b, F.col("a_id") < F.col("b_id"))
-            .withColumn("cos", cos)
+            .withColumn("cos", cosine_from_norms("a_vec", "b_vec",
+                                                 "a_n", "b_n"))
             .filter(F.col("cos") >= threshold)
             .select("a_id", "b_id", F.round("cos", 4).alias("cos")))
-
-
-def lsh_candidate_pairs(embeddings: DataFrame, id_col: str = "vec_id",
-                        vec_col: str = "embedding", dim: int = 64,
-                        n_bands: int = 64,
-                        band_width: int | None = None,
-                        corpus_size: int | None = None
-                        ) -> tuple[DataFrame, DataFrame]:
-    """OR-banded sign-LSH candidate pairs — the candidate stage of
-    ``embedding_dup_pairs_lsh``, exposed so the candidate-growth
-    contract can be measured directly.
-
-    Returns ``(candidates, sig)``: the distinct ``(a_id, b_id)``
-    candidate frame (a_id < b_id) plus the persisted
-    ``(id, vec, nrm, keys)`` signature frame it was banded from —
-    callers feed ``sig`` to both sides of the exact verify so the
-    vectors are computed once.
-
-    Each vector gets ``n_bands × band_width`` sign bits packed into
-    ``n_bands`` integer band keys (one Arrow matrix product per
-    batch — ``similarity.band_keys_udf``); a pair is a candidate iff
-    it agrees exactly on ≥1 band. ``band_width`` defaults to
-    ``derive_band_width(|corpus|)`` ≈ log2 n bits, giving each band
-    ~n buckets: random bucket mass stays O(1) and candidates grow
-    ~O(n × bands), sub-quadratic by construction (pinned by
-    tests/test_dedup.py::test_lsh_candidate_growth_subquadratic).
-    The r5 pigeonhole form's 2-bit bands (4 buckets) degenerated
-    toward all-pairs at any real corpus size — VERDICT r5 weak#2.
-
-    The caller's exact verify makes candidate excess a compute cost,
-    never an output change; candidate MISSES are the recall trade,
-    measured per pair at sign-agreement rate p as ``1-(1-p^w)^b``
-    (high for cosine-close pairs, pinned vs the exact operator in
-    tests). The vector frame is persisted here (keys + both verify
-    sides read it); callers must NOT pre-persist.
-    """
-    from mapreducewordcount_spark.functions.vectors import norm
-    from mapreducewordcount_spark.operators.similarity import (
-        _fixed_planes,
-        band_keys_udf,
-        derive_band_width,
-    )
-    from mapreducewordcount_spark.sources.tables import spread
-
-    if band_width is None:
-        n = (corpus_size if corpus_size is not None
-             else embeddings.count())
-        band_width = derive_band_width(n)
-    planes = _fixed_planes(dim, n_bands * band_width)
-    mk_keys = band_keys_udf(planes, n_bands, band_width)
-    release_query_cache()
-    sig = persist_tracked(
-        spread(embeddings)
-        .select(F.col(id_col).alias("id"),
-                F.col(vec_col).alias("vec"),
-                norm(vec_col).alias("nrm"),
-                mk_keys(F.col(vec_col)).alias("keys")))
-    banded = sig.select("id", F.posexplode("keys").alias("band", "key"))
-    a, b = banded.alias("a"), banded.alias("b")
-    cand = (a.join(b, (F.col("a.band") == F.col("b.band"))
-                   & (F.col("a.key") == F.col("b.key"))
-                   & (F.col("a.id") < F.col("b.id")))
-            .select(F.col("a.id").alias("a_id"),
-                    F.col("b.id").alias("b_id"))
-            .distinct())
-    return cand, sig
 
 
 def embedding_dup_pairs_lsh(embeddings: DataFrame, id_col: str = "vec_id",
@@ -790,9 +722,10 @@ def embedding_dup_pairs_lsh(embeddings: DataFrame, id_col: str = "vec_id",
                             n_bands: int = 64,
                             band_width: int | None = None,
                             corpus_size: int | None = None) -> DataFrame:
-    """Scale path for semantic near-dups: OR-banded LSH candidates
-    (``lsh_candidate_pairs`` — corpus-derived band width, ~O(n×bands)
-    candidate growth) + exact cosine verification. Output contract
+    """Scale path for semantic near-dups: OR-banded LSH candidates +
+    exact cosine verification — ``embedding_pairs_from_banded`` over a
+    persisted ``embedding_band_keys`` table, the composition the
+    ``dedup_embedding_pairs_lsh`` registry query runs. Output contract
     matches ``embedding_dup_pairs`` up to LSH recall: the exact
     verify emits no false positives, and recall per pair at
     sign-agreement rate p is ``1-(1-p^w)^b`` — near 1 for
@@ -806,37 +739,22 @@ def embedding_dup_pairs_lsh(embeddings: DataFrame, id_col: str = "vec_id",
     O(n²)/2 pairs (the round-1 plan shape; pinned away in
     tests/test_plans.py).
 
-    The verify dot is the JVM expression fold BY MEASUREMENT
-    (VERDICT r7 next#2 asked for an Arrow-batched verify; the r8
-    1M-signature A/B refuted its premise): over the 94 M candidates
-    the verify stage is JOIN-bound — steady-state wall 118 s with
-    the expression fold vs 132 s with the bit-identical Arrow kernel
-    (`vectors.arrow_cosine_udf`, kept available + parity-tested) —
+    The verify dot is the JVM expression fold BY MEASUREMENT: over
+    the 94 M candidates of the r8 1M-signature A/B the verify stage
+    was JOIN-bound — steady-state wall 118 s with the expression fold
+    vs 132 s with a bit-identical Arrow kernel (SCALE.md round 8) —
     because two wide joins ship ~60 GB of vector rows while the fold
     itself is a vanishing fraction. Cutting verify cost further means
     cutting CANDIDATES (band width) or vector bytes, not the fold.
     """
-    from mapreducewordcount_spark.functions.vectors import dot
-
-    candidates, sig = lsh_candidate_pairs(embeddings, id_col, vec_col,
-                                          dim, n_bands, band_width,
-                                          corpus_size)
-    a_sig = sig.select(F.col("id").alias("a_id"), F.col("vec").alias("a_vec"),
-                       F.col("nrm").alias("a_n"))
-    b_sig = sig.select(F.col("id").alias("b_id"), F.col("vec").alias("b_vec"),
-                       F.col("nrm").alias("b_n"))
-    cos = F.when((F.col("a_n") > 0) & (F.col("b_n") > 0),
-                 dot("a_vec", "b_vec") / (F.col("a_n") * F.col("b_n"))) \
-        .otherwise(F.lit(0.0))
-    # no forced broadcast: candidates grow with the corpus (738k rows
-    # at just 20k vectors — SCALE.md growth study), so a hint would
-    # FAIL the job past the broadcast limit; AQE broadcasts when the
-    # runtime size fits (vector table stays shuffle-free) and
-    # degrades to a shuffle join when it doesn't
-    return (candidates.join(a_sig, "a_id").join(b_sig, "b_id")
-            .withColumn("cos", cos)
-            .filter(F.col("cos") >= threshold)
-            .select("a_id", "b_id", F.round("cos", 4).alias("cos")))
+    # both sides of the candidate self-join read the band table;
+    # persisted, the banding UDF runs once instead of ~1.5x
+    release_query_cache()
+    banded = persist_tracked(
+        embedding_band_keys(embeddings, id_col, vec_col, dim, n_bands,
+                            band_width, corpus_size))
+    return embedding_pairs_from_banded(banded, embeddings, threshold,
+                                       id_col, vec_col)
 
 
 def embedding_band_keys(embeddings: DataFrame, id_col: str = "vec_id",
@@ -844,11 +762,25 @@ def embedding_band_keys(embeddings: DataFrame, id_col: str = "vec_id",
                         n_bands: int = 64,
                         band_width: int | None = None,
                         corpus_size: int | None = None) -> DataFrame:
-    """(id, band, key) exploded band table — the same fixed-plane
-    construction ``lsh_candidate_pairs`` bands on, exposed standalone
-    so the gate queries can commit it as an oracle artifact
-    (``queries/dedup_queries.lsh_band_model``) and at scale so a
-    write-time job can persist it as the corpus's LSH index."""
+    """(id, band, key) exploded OR-banded sign-LSH table — the one
+    band-key builder behind ``embedding_dup_pairs_lsh`` and
+    ``similarity.lsh_topk``, and the model table the gate queries
+    commit as an oracle artifact (``queries/dedup_queries.
+    lsh_band_model``); at scale a write-time job persists it as the
+    corpus's LSH index.
+
+    Each vector gets ``n_bands × band_width`` sign bits packed into
+    ``n_bands`` integer band keys (one Arrow matrix product per
+    batch — ``similarity.band_keys_udf``); two vectors are
+    candidates iff they agree exactly on ≥1 band. ``band_width``
+    defaults to ``derive_band_width(|corpus|)`` ≈ log2 n bits, giving
+    each band ~n buckets: random bucket mass stays O(1) and candidates
+    grow ~O(n × bands), sub-quadratic by construction (pinned by
+    tests/test_dedup.py::test_lsh_candidate_growth_subquadratic).
+    The r5 pigeonhole form's 2-bit bands (4 buckets) degenerated
+    toward all-pairs at any real corpus size — VERDICT r5 weak#2.
+    NULL and all-zero vectors get no band rows, so they never become
+    candidates."""
     from mapreducewordcount_spark.operators.similarity import (
         _fixed_planes,
         band_keys_udf,
@@ -868,6 +800,19 @@ def embedding_band_keys(embeddings: DataFrame, id_col: str = "vec_id",
             .select("id", F.posexplode("keys").alias("band", "key")))
 
 
+def embedding_band_candidates(banded: DataFrame) -> DataFrame:
+    """Distinct ``(a_id, b_id)`` candidate pairs (a_id < b_id) of an
+    ``embedding_band_keys`` table: the ``(band, key)`` self equi-join.
+    A pair agreeing on several bands is one candidate."""
+    a, b = banded.alias("a"), banded.alias("b")
+    return (a.join(b, (F.col("a.band") == F.col("b.band"))
+                   & (F.col("a.key") == F.col("b.key"))
+                   & (F.col("a.id") < F.col("b.id")))
+            .select(F.col("a.id").alias("a_id"),
+                    F.col("b.id").alias("b_id"))
+            .distinct())
+
+
 def embedding_pairs_from_banded(banded: DataFrame, embeddings: DataFrame,
                                 threshold: float = 0.45,
                                 id_col: str = "vec_id",
@@ -875,17 +820,10 @@ def embedding_pairs_from_banded(banded: DataFrame, embeddings: DataFrame,
     """Candidate equi-join + exact-cosine verify over a PRE-COMPUTED
     (id, band, key) band table — the downstream half of
     ``embedding_dup_pairs_lsh``, runnable against a band table built
-    in-plan or a persisted write-time LSH index. Identical output
-    to the one-shot operator for the same band table."""
-    from mapreducewordcount_spark.functions.vectors import dot, norm
-
-    a, b = banded.alias("a"), banded.alias("b")
-    cand = (a.join(b, (F.col("a.band") == F.col("b.band"))
-                   & (F.col("a.key") == F.col("b.key"))
-                   & (F.col("a.id") < F.col("b.id")))
-            .select(F.col("a.id").alias("a_id"),
-                    F.col("b.id").alias("b_id"))
-            .distinct())
+    in-plan or a persisted write-time LSH index. The caller's exact
+    verify makes candidate excess a compute cost, never an output
+    change; candidate MISSES are the recall trade."""
+    cand = embedding_band_candidates(banded)
     v = embeddings.select(F.col(id_col).alias("id"),
                           F.col(vec_col).alias("vec"),
                           norm(vec_col).alias("nrm"))
@@ -893,13 +831,14 @@ def embedding_pairs_from_banded(banded: DataFrame, embeddings: DataFrame,
                    F.col("nrm").alias("a_n"))
     b_v = v.select(F.col("id").alias("b_id"), F.col("vec").alias("b_vec"),
                    F.col("nrm").alias("b_n"))
-    cos = F.when((F.col("a_n") > 0) & (F.col("b_n") > 0),
-                 dot("a_vec", "b_vec") / (F.col("a_n") * F.col("b_n"))) \
-        .otherwise(F.lit(0.0))
-    # unhinted for the same reason as embedding_dup_pairs_lsh: the
-    # candidate list grows with the corpus; AQE picks the strategy
+    # no forced broadcast: candidates grow with the corpus (738k rows
+    # at just 20k vectors — SCALE.md growth study), so a hint would
+    # FAIL the job past the broadcast limit; AQE broadcasts when the
+    # runtime size fits (vector table stays shuffle-free) and
+    # degrades to a shuffle join when it doesn't
     return (cand.join(a_v, "a_id").join(b_v, "b_id")
-            .withColumn("cos", cos)
+            .withColumn("cos", cosine_from_norms("a_vec", "b_vec",
+                                                 "a_n", "b_n"))
             .filter(F.col("cos") >= threshold)
             .select("a_id", "b_id", F.round("cos", 4).alias("cos")))
 

@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from mapreducewordcount_spark.functions.vectors import cosine
+from mapreducewordcount_spark.operators.similarity import shortlist_rerank
 
 
 def _train_codebooks(samples, m: int, k: int, iters: int, seed: int = 13):
@@ -166,8 +166,8 @@ def pq_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
             query_id_col: str = "query_id", m: int = 8, n_cent: int = 16,
             refine: int = 32) -> DataFrame:
     """One-shot PQ ANN: ``pq_shortlist`` (build + ADC prefilter) +
-    ``pq_rerank`` (exact cosine re-rank) — split so the gate query
-    can materialize the shortlist as an oracle artifact.
+    ``similarity.shortlist_rerank`` (exact cosine re-rank) — split so
+    the gate query can materialize the shortlist as an oracle artifact.
 
     Anything serving repeated query batches should ``pq_build`` once,
     persist the codes, and run only the ADC+refine read path. The ADC
@@ -176,8 +176,8 @@ def pq_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     """
     cand = pq_shortlist(corpus, queries, id_col, vec_col, query_id_col,
                         m, n_cent, refine)
-    return pq_rerank(cand, corpus, queries, k, id_col, vec_col,
-                     query_id_col)
+    return shortlist_rerank(cand, corpus, queries, k, id_col, vec_col,
+                            query_id_col)
 
 
 def pq_shortlist(corpus: DataFrame, queries: DataFrame,
@@ -393,7 +393,8 @@ def ivfpq_shortlist(assigned: DataFrame, centroids: DataFrame,
 
     Output contract matches ``pq_shortlist``: the ``refine``
     lowest-ADC (query_id, neighbor_id) rows per query, self-pairs
-    excluded — feed to ``pq_rerank`` for the exact tail.
+    excluded — feed to ``similarity.shortlist_rerank`` for the
+    exact tail.
 
     ``prebuilt`` takes an :func:`ivfpq_build` result so repeated
     query batches (or an ``n_probe`` sweep) skip the train+encode.
@@ -507,24 +508,3 @@ def ivfpq_shortlist_sweep(assigned: DataFrame, centroids: DataFrame,
                     F.explode(in_levels).alias("n_probe"))
             .select(F.col("n_probe").cast("int").alias("n_probe"),
                     "query_id", "neighbor_id"))
-
-
-def pq_rerank(cand: DataFrame, corpus: DataFrame, queries: DataFrame,
-              k: int = 5, id_col: str = "vec_id",
-              vec_col: str = "embedding",
-              query_id_col: str = "query_id") -> DataFrame:
-    """Exact-cosine top-k over a (query_id, neighbor_id) shortlist —
-    pure joins + window, SQL-expressible (the artifact-oracled
-    tail)."""
-    q = queries.select(F.col(query_id_col).alias("query_id"),
-                       F.col(vec_col).alias("q_vec"))
-    c = corpus.select(F.col(id_col).alias("neighbor_id"),
-                      F.col(vec_col).alias("c_vec"))
-    w = (Window.partitionBy("query_id")
-         .orderBy(F.col("cos").desc(), F.col("neighbor_id")))
-    return (F.broadcast(cand)
-            .join(c, "neighbor_id").join(F.broadcast(q), "query_id")
-            .withColumn("cos", F.round(cosine("q_vec", "c_vec"), 6))
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank", "cos"))

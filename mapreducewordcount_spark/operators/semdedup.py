@@ -43,7 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from mapreducewordcount_spark.functions.vectors import cosine
+from mapreducewordcount_spark.functions.vectors import cosine_from_norms, norm
 from mapreducewordcount_spark.operators.dedup import dup_groups
 from mapreducewordcount_spark.operators.similarity import ivf_build
 
@@ -95,8 +95,6 @@ def semantic_dedup_from_assignments(assignments: DataFrame,
     it end-to-end from the same assignment artifact."""
     if not 0.0 < threshold <= 1.0:
         raise ValueError(f"threshold={threshold} must be in (0, 1]")
-    from mapreducewordcount_spark.functions.vectors import dot, norm
-
     base = (assignments
             .join(embeddings.select(F.col(id_col).alias("id"),
                                     F.col(vec_col).alias("vec"),
@@ -106,12 +104,10 @@ def semantic_dedup_from_assignments(assignments: DataFrame,
                     F.col("vec").alias("a_vec"), F.col("nrm").alias("a_n"))
     b = base.select("list_id", F.col("id").alias("b_id"),
                     F.col("vec").alias("b_vec"), F.col("nrm").alias("b_n"))
-    cos = F.when((F.col("a_n") > 0) & (F.col("b_n") > 0),
-                 dot("a_vec", "b_vec") / (F.col("a_n") * F.col("b_n"))) \
-        .otherwise(F.lit(0.0))
     pairs = (a.join(b, "list_id")
              .filter(F.col("a_id") < F.col("b_id"))
-             .withColumn("cos", cos)
+             .withColumn("cos", cosine_from_norms("a_vec", "b_vec",
+                                                  "a_n", "b_n"))
              .filter(F.col("cos") >= threshold)
              .select("a_id", "b_id"))
     # dup_groups runs eager actions per label-propagation round, and

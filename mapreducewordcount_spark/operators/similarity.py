@@ -1,15 +1,23 @@
 """Similarity search over embedding columns (extension scope).
 
-Two tiers, same output contract:
+Every top-k operator here has the same output contract
+``(query_id, neighbor_id, rank, cos)`` and splits into an index stage
+that prunes candidates and one exact refinement over the survivors:
 
 - ``cosine_topk`` — exact brute-force scan: broadcast the query set,
   score every (query, candidate) pair JVM-side, window top-k. The
   baseline and the verifier.
-- ``lsh_topk`` — sign-random-projection LSH: candidates limited to
-  buckets within a Hamming radius of the query's bucket, exact
-  cosine re-rank on candidates only. The 100 TB path: the corpus is
-  hashed once (write-time), a query touches a constant number of
-  buckets instead of every row.
+- ``lsh_topk`` — OR-banded sign-random-projection LSH: queries probe
+  the corpus's ``(band, key)`` buckets (``lsh_probe`` over
+  ``dedup.embedding_band_keys`` tables) and ``shortlist_rerank``
+  scores the candidates by exact cosine. The corpus band table is a
+  write-time index; a query touches ``n_bands`` buckets instead of
+  every row.
+- ``ivf_probe`` — IVF: queries route to their nearest k-means lists
+  and ``ivf_rerank`` scores the probed lists.
+
+``shortlist_rerank`` is also the exact tail of the PQ operators
+(``operators/pq.py``).
 """
 
 from __future__ import annotations
@@ -20,7 +28,12 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from mapreducewordcount_spark.functions.vectors import cosine
+from mapreducewordcount_spark.functions.vectors import (
+    cosine,
+    cosine_from_norms,
+    norm,
+)
+from mapreducewordcount_spark.operators.dedup import embedding_band_keys
 
 
 def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
@@ -33,8 +46,6 @@ def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     queries); the corpus side streams through without a shuffle.
     Ties break on neighbor id for determinism.
     """
-    from mapreducewordcount_spark.functions.vectors import dot, norm
-
     # per-vector norms precomputed (same expression → bit-identical
     # cosine); the per-pair stage runs one dot, not three aggregates
     q = queries.select(F.col(query_id_col).alias("query_id"),
@@ -43,9 +54,7 @@ def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     c = corpus.select(F.col(id_col).alias("neighbor_id"),
                       F.col(vec_col).alias("c_vec"),
                       norm(vec_col).alias("c_n"))
-    cos = F.when((F.col("q_n") > 0) & (F.col("c_n") > 0),
-                 dot("q_vec", "c_vec") / (F.col("q_n") * F.col("c_n"))) \
-        .otherwise(F.lit(0.0))
+    cos = cosine_from_norms("q_vec", "c_vec", "q_n", "c_n")
     w = (Window.partitionBy("query_id")
          .orderBy(F.col("cos").desc(), F.col("neighbor_id")))
     return (c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
@@ -104,7 +113,7 @@ def band_keys_udf(planes: list[list[float]], n_bands: int,
 
     One numpy matrix product per Arrow batch — the measured hybrid
     that beats per-plane column expressions by an order of magnitude:
-    the expression form (``hyperplane_bits``) builds one interpreted
+    a per-plane expression form builds one interpreted
     zip_with+aggregate fold and 64 literals PER PLANE, which at the
     ≥256 planes this banding uses is multi-second py4j construction
     plus allocation-bound execution (the same failure mode measured
@@ -182,34 +191,48 @@ def lsh_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     if band_width is None:
         n = corpus_size if corpus_size is not None else corpus.count()
         band_width = derive_band_width(n)
-    planes = _fixed_planes(dim, n_bands * band_width)
-    mk_keys = band_keys_udf(planes, n_bands, band_width)
-    c = (corpus.select(F.col(id_col).alias("neighbor_id"),
-                       F.col(vec_col).alias("c_vec"))
-         .withColumn("c_keys", mk_keys("c_vec")))
-    q = (queries.select(F.col(query_id_col).alias("query_id"),
-                        F.col(vec_col).alias("q_vec"))
-         .withColumn("q_keys", mk_keys("q_vec")))
+    kb = embedding_band_keys(corpus, id_col, vec_col, dim, n_bands,
+                             band_width)
+    qb = (embedding_band_keys(queries, query_id_col, vec_col, dim,
+                              n_bands, band_width)
+          .select(F.col("id").alias("query_id"), "band", "key"))
+    return shortlist_rerank(lsh_probe(kb, qb), corpus, queries, k,
+                            id_col, vec_col, query_id_col)
 
-    def banded(df: DataFrame, key: str, keys_col: str) -> DataFrame:
-        return df.select(key, F.posexplode(keys_col).alias("band", "key"))
 
-    # the query side is the bounded batch → broadcast; the corpus side
-    # streams through the band hash join without shuffling. distinct
-    # collapses multi-band agreements to one candidate row.
-    candidates = (banded(c, "neighbor_id", "c_keys")
-                  .join(F.broadcast(banded(q, "query_id", "q_keys")),
-                        ["band", "key"])
-                  .filter(F.col("query_id") != F.col("neighbor_id"))
-                  .select("query_id", "neighbor_id")
-                  .distinct())
-    # exact cosine re-rank on survivors only; the candidate list is
-    # broadcast into both verify joins so the corpus never shuffles
+def lsh_probe(banded: DataFrame, query_banded: DataFrame) -> DataFrame:
+    """Distinct ``(query_id, neighbor_id)`` LSH candidates: each query's
+    ``(query_id, band, key)`` rows probe the corpus's ``(id, band,
+    key)`` table by hash equi-join. Self-matches are excluded; a pair
+    agreeing on several bands is one candidate. The query side is the
+    bounded batch → broadcast; the corpus side streams through the
+    join without shuffling."""
+    return (banded.join(F.broadcast(query_banded), ["band", "key"])
+            .filter(F.col("id") != F.col("query_id"))
+            .select("query_id", F.col("id").alias("neighbor_id"))
+            .distinct())
+
+
+def shortlist_rerank(cand: DataFrame, corpus: DataFrame,
+                     queries: DataFrame, k: int = 5,
+                     id_col: str = "vec_id", vec_col: str = "embedding",
+                     query_id_col: str = "query_id") -> DataFrame:
+    """Exact-cosine top-k over a ``(query_id, neighbor_id)`` shortlist —
+    the one refinement behind ``lsh_topk`` and the PQ operators. Pure
+    joins + window, SQL-expressible (the artifact-oracled tail).
+
+    The shortlist is broadcast into both vector joins so the corpus
+    never shuffles. Ties on ``cos`` break by ascending neighbor id; a
+    zero-norm vector scores 0.0. Self-matches are the shortlist
+    builder's to exclude."""
+    q = queries.select(F.col(query_id_col).alias("query_id"),
+                       F.col(vec_col).alias("q_vec"))
+    c = corpus.select(F.col(id_col).alias("neighbor_id"),
+                      F.col(vec_col).alias("c_vec"))
     w = (Window.partitionBy("query_id")
          .orderBy(F.col("cos").desc(), F.col("neighbor_id")))
-    return (F.broadcast(candidates)
-            .join(c.select("neighbor_id", "c_vec"), "neighbor_id")
-            .join(F.broadcast(q.select("query_id", "q_vec")), "query_id")
+    return (F.broadcast(cand)
+            .join(c, "neighbor_id").join(F.broadcast(q), "query_id")
             .withColumn("cos", F.round(cosine("q_vec", "c_vec"), 6))
             .withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k)

@@ -237,25 +237,15 @@ def lsh_band_model(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def dedup_embedding_pairs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH-pruned semantic near-dups, join+verify under a full hash
-    oracle: the engine's (id, band, key) sign-LSH band table
-    (``lsh_band_model``) is the committed artifact, and DuckDB
-    recomputes the candidate equi-join PLUS the exact-cosine verify
-    from it and the raw embeddings view — so everything downstream of
-    the (pytest-pinned, numpy-computed) banding is value-checked.
-    Recall vs the exact operator stays pinned in tests. Output
-    identical to ``dd.embedding_dup_pairs_lsh(emb, threshold=0.45)``
-    — same planes, same defaults."""
-    from mapreducewordcount_spark.cache import (
-        persist_tracked,
-        release_query_cache,
-    )
-
-    # both sides of the candidate self-join read the band table;
-    # persisted, the banding UDF runs once instead of ~1.5x
-    release_query_cache()
-    banded = persist_tracked(lsh_band_model(spark, sf_dir))
-    emb = load_table(spark, sf_dir, "embeddings")
-    return dd.embedding_pairs_from_banded(banded, emb, threshold=0.45)
+    oracle: ``dd.embedding_dup_pairs_lsh(emb, threshold=0.45)`` itself.
+    Its in-plan (id, band, key) band table is ``lsh_band_model``'s,
+    which is the committed artifact, and DuckDB recomputes the
+    candidate equi-join PLUS the exact-cosine verify from it and the
+    raw embeddings view — so everything downstream of the
+    (pytest-pinned, numpy-computed) banding is value-checked. Recall
+    vs the exact operator stays pinned in tests."""
+    return dd.embedding_dup_pairs_lsh(
+        load_table(spark, sf_dir, "embeddings"), threshold=0.45)
 
 
 LSH_PAIRS_SQL = f"""
@@ -315,32 +305,12 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranking from the same artifact + the raw embeddings view; the
     banding itself stays pytest-pinned (recall vs exact top-k).
     Output matches ``sim.lsh_topk(emb, queries, k=5)``."""
-    from pyspark.sql import Window
-
-    from mapreducewordcount_spark.functions.vectors import cosine
-
     emb = load_table(spark, sf_dir, "embeddings")
     kb = lsh_band_model(spark, sf_dir)
     qb = (kb.filter(F.col("id") < 10)
           .select(F.col("id").alias("query_id"), "band", "key"))
-    cand = (kb.join(F.broadcast(qb), ["band", "key"])
-            .filter(F.col("id") != F.col("query_id"))
-            .select("query_id", F.col("id").alias("neighbor_id"))
-            .distinct())
-    vecs = emb.select(F.col("vec_id"), F.col("embedding"))
-    w = (Window.partitionBy("query_id")
-         .orderBy(F.col("cos").desc(), F.col("neighbor_id")))
-    return (F.broadcast(cand)
-            .join(vecs.select(F.col("vec_id").alias("neighbor_id"),
-                              F.col("embedding").alias("c_vec")),
-                  "neighbor_id")
-            .join(F.broadcast(vecs.select(
-                F.col("vec_id").alias("query_id"),
-                F.col("embedding").alias("q_vec"))), "query_id")
-            .withColumn("cos", F.round(cosine("q_vec", "c_vec"), 6))
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= 5)
-            .select("query_id", "neighbor_id", "rank", "cos"))
+    return sim.shortlist_rerank(sim.lsh_probe(kb, qb), emb, emb, k=5,
+                                query_id_col="vec_id")
 
 
 _GUARDED_COS_6 = """round(CASE WHEN sqrt(list_dot_product(eq.embedding::DOUBLE[], eq.embedding::DOUBLE[])) > 0
@@ -450,11 +420,9 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     can't replicate bit-for-bit — is the committed artifact and
     DuckDB recomputes the exact rerank + ranking from it. Output
     matches ``pq_topk(emb, queries, k=5)``."""
-    from mapreducewordcount_spark.operators.pq import pq_rerank
-
     emb = load_table(spark, sf_dir, "embeddings")
-    return pq_rerank(pq_shortlist_model(spark, sf_dir), emb,
-                     _ann_queries(emb), k=5)
+    return sim.shortlist_rerank(pq_shortlist_model(spark, sf_dir), emb,
+                                _ann_queries(emb), k=5)
 
 
 def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -471,11 +439,9 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes the exact rerank + ranking from it (the ann_pq_topk
     recipe). Residual recall ≥ raw-encoding recall is pytest-pinned
     alongside the single-stage variants."""
-    from mapreducewordcount_spark.operators.pq import pq_rerank
-
     emb = load_table(spark, sf_dir, "embeddings")
-    return pq_rerank(ivfpq_shortlist_model(spark, sf_dir), emb,
-                     _ann_queries(emb), k=5)
+    return sim.shortlist_rerank(ivfpq_shortlist_model(spark, sf_dir), emb,
+                                _ann_queries(emb), k=5)
 
 
 def ivfpq_shortlist_model(spark: SparkSession, sf_dir: str) -> DataFrame:

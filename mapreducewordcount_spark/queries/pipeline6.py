@@ -484,15 +484,12 @@ def vec_rank_pool(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``HYBRID_POOL``-row (doc_id, rank_vec) frame ranked by cosine to
     the fixed query embedding. TakeOrdered bounds the global work;
     the rank window runs on the already-cut pool."""
-    from mapreducewordcount_spark.functions.vectors import dot, norm
+    from mapreducewordcount_spark.functions.vectors import cosine
 
     emb = load_table(spark, sf_dir, "embeddings")
     qv = (emb.filter(F.col("vec_id") == HYBRID_QUERY_VEC)
           .select(F.col("embedding").alias("q_vec")))
-    cos = F.when((norm("q_vec") > 0) & (norm("embedding") > 0),
-                 dot("q_vec", "embedding")
-                 / (norm("q_vec") * norm("embedding"))) \
-        .otherwise(F.lit(0.0))
+    cos = cosine("q_vec", "embedding")
     vec_cut = (emb.filter(F.col("vec_id") != HYBRID_QUERY_VEC)
                .crossJoin(F.broadcast(qv))   # 1-row query frame
                .select(F.col("vec_id").alias("doc_id"),

@@ -359,7 +359,10 @@ def semantic_decontam_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     (measured 6.1 s → see SCALE.md; values bit-identical, so the
     oracle's per-pair evaluation still hash-matches).
     """
-    from mapreducewordcount_spark.functions.vectors import dot, norm
+    from mapreducewordcount_spark.functions.vectors import (
+        cosine_from_norms,
+        norm,
+    )
 
     docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings")
@@ -371,10 +374,7 @@ def semantic_decontam_report(spark: SparkSession, sf_dir: str) -> DataFrame:
           .withColumn("__en", norm("ev_vec")))
     batch = (with_src.filter(F.col("source") != INDEX_SOURCE)
              .withColumn("__bn", norm("embedding")))
-    cos = F.when((F.col("__en") > 0) & (F.col("__bn") > 0),
-                 dot("ev_vec", "embedding")
-                 / (F.col("__en") * F.col("__bn"))) \
-        .otherwise(F.lit(0.0))
+    cos = cosine_from_norms("ev_vec", "embedding", "__en", "__bn")
     mc = (batch.crossJoin(F.broadcast(ev))
           .select(F.col("vec_id").alias("doc_id"), "source",
                   cos.alias("__cos"))

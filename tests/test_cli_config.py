@@ -11,6 +11,8 @@ from __future__ import annotations
 import os
 import textwrap
 
+import pytest
+
 from mapreducewordcount_spark.cli import main
 from mapreducewordcount_spark.config import load_config
 
@@ -128,3 +130,31 @@ def test_cli_stream_once(spark, tmp_path):
             w, c = ln.rsplit(" ", 1)
             merged[w] = int(c)
     assert merged == {"stream": 2, "me": 1}
+
+
+@pytest.mark.parametrize("cmd, flag, value", [
+    ("run", "-m", "0"),          # a bare `or 4` turned this into 4 buckets
+    ("run", "-m", "-2"),         # reached repartition(-2) in Spark
+    ("stream", "-m", "0"),
+    ("run", "--workers", "0"),   # silently ignored
+], ids=["run-m0", "run-m-2", "stream-m0", "run-workers0"])
+def test_cli_rejects_counts_below_one(tmp_path, capsys, cmd, flag, value):
+    (tmp_path / "in").mkdir()
+    with pytest.raises(SystemExit) as exc:
+        main([cmd, "--input", str(tmp_path / "in"),
+              "--output", str(tmp_path / "out"), flag, value])
+    assert exc.value.code == 2
+    err = capsys.readouterr().err
+    assert f"argument {flag}" in err and "at least 1" in err
+    assert not (tmp_path / "out").exists()
+
+
+def test_config_rejects_zero_reduce_tasks(tmp_path):
+    cfg_file = tmp_path / "config.yaml"
+    cfg_file.write_text(textwrap.dedent("""\
+        mapreduce:
+          num_map_tasks: 6
+          num_reduce_tasks: 0
+    """))
+    with pytest.raises(ValueError, match="num_reduce_tasks"):
+        load_config(str(cfg_file))

@@ -177,7 +177,7 @@ def test_lsh_candidate_growth_subquadratic(spark):
     for sf in ("/root/testdata/sf0.01", "/root/testdata/sf0.1"):
         emb = load_table(spark, sf, "embeddings")
         n = emb.count()
-        cand, _sig = dd.lsh_candidate_pairs(emb)
+        cand = dd.embedding_band_candidates(dd.embedding_band_keys(emb))
         counts[n] = cand.count()
     (n1, c1), (n2, c2) = sorted(counts.items())
     frac1, frac2 = c1 / (n1 * (n1 - 1) / 2), c2 / (n2 * (n2 - 1) / 2)
@@ -469,8 +469,7 @@ def test_lsh_degenerate_vectors_never_band(spark):
                banded.filter(F.col("id") >= 100).collect()}
     assert bad_ids == set(), bad_ids
 
-    cand, _sig = dd.lsh_candidate_pairs(dirty, dim=8, n_bands=4,
-                                        band_width=4)
+    cand = dd.embedding_band_candidates(banded)
     assert cand.filter((F.col("a_id") >= 100)
                        | (F.col("b_id") >= 100)).count() == 0
 
@@ -480,63 +479,6 @@ def test_lsh_degenerate_vectors_never_band(spark):
         dirty, threshold=0.3, dim=8, n_bands=4, band_width=4).collect()}
     assert out_clean == out_dirty
 
-
-def test_arrow_cosine_bit_parity_with_expression_fold(spark):
-    """The Arrow verify kernel must match the zip_with/aggregate
-    expression BIT-FOR-BIT at full precision (no rounding) — that is
-    the contract that keeps the artifact oracles hash-exact
-    (VERDICT r7 next#2). Checked over every corpus pair id 120 apart
-    (~unfiltered cosines, both signs) plus degenerate rows."""
-    from mapreducewordcount_spark.functions.vectors import (
-        arrow_cosine_udf,
-        cosine,
-        norm,
-    )
-    from mapreducewordcount_spark.sources.tables import load_table
-
-    emb = load_table(spark, SF_ORACLE, "embeddings")
-    v = emb.select(F.col("vec_id").alias("id"),
-                   F.col("embedding").alias("vec"),
-                   norm("embedding").alias("nrm"))
-    a = v.select(F.col("id").alias("a_id"), F.col("vec").alias("a_vec"),
-                 F.col("nrm").alias("a_n"))
-    b = v.select(F.col("id").alias("b_id"), F.col("vec").alias("b_vec"),
-                 F.col("nrm").alias("b_n"))
-    pairs = a.join(b, F.col("a_id") + 120 == F.col("b_id"))
-    both = pairs.select(
-        "a_id", "b_id",
-        cosine("a_vec", "b_vec").alias("expr_cos"),
-        arrow_cosine_udf()(F.col("a_vec"), F.col("b_vec"),
-                           F.col("a_n"), F.col("b_n")).alias("arrow_cos"))
-    rows = both.collect()
-    assert len(rows) > 300
-    for r in rows:
-        assert r.expr_cos == r.arrow_cos, (r.a_id, r.b_id)
-
-
-def test_arrow_cosine_degenerate_rows_match_expression(spark):
-    """Zero-norm → 0.0; NULL vec → 0.0; length mismatch with
-    positive norms → NULL (zip_with pads with nulls → null dot)."""
-    from mapreducewordcount_spark.functions.vectors import (
-        arrow_cosine_udf,
-        norm,
-    )
-
-    df = spark.createDataFrame(
-        [(1, [1.0, 2.0], [3.0, 4.0]),      # normal
-         (2, [0.0, 0.0], [1.0, 1.0]),      # zero norm
-         (3, None, [1.0, 1.0]),            # null vec
-         (4, [1.0, 2.0, 3.0], [1.0, 1.0])  # ragged
-         ],
-        "id long, a array<double>, b array<double>")
-    got = {r.id: r.cos for r in df.select(
-        "id",
-        arrow_cosine_udf()(F.col("a"), F.col("b"),
-                           norm("a"), norm("b")).alias("cos")).collect()}
-    assert got[1] == pytest.approx(11.0 / ((5.0 ** 0.5) * (25.0 ** 0.5)))
-    assert got[2] == 0.0
-    assert got[3] == 0.0
-    assert got[4] is None
 
 def test_dup_groups_double_halving_round_budget(spark):
     """Round 14: double pointer-halving contracts label distance ~4×

@@ -66,6 +66,70 @@ def test_cosine_topk_excludes_self_and_ranks(spark, emb):
         assert cs == sorted(cs, reverse=True)
 
 
+def _planted(spark):
+    """Hand-placed 4-d corpus: ids 2 and 3 are parallel to id 1 (a cos
+    tie at exactly 1.0), id 4 sits at 45 degrees, id 5 is the zero
+    vector, id 6 is orthogonal to id 1."""
+    corpus = spark.createDataFrame(
+        [(1, [1.0, 0.0, 0.0, 0.0]), (2, [2.0, 0.0, 0.0, 0.0]),
+         (3, [3.0, 0.0, 0.0, 0.0]), (4, [1.0, 1.0, 0.0, 0.0]),
+         (5, [0.0, 0.0, 0.0, 0.0]), (6, [0.0, 1.0, 0.0, 0.0])],
+        "vec_id long, embedding array<float>")
+    queries = spark.createDataFrame(
+        [(1, [1.0, 0.0, 0.0, 0.0]), (10, [0.0, 0.0, 1.0, 0.0]),
+         (11, [0.0, 0.0, 0.0, 0.0])],
+        "query_id long, embedding array<float>")
+    return corpus, queries
+
+
+def test_shortlist_rerank_ties_zero_norm_and_k(spark):
+    """The one exact top-k re-rank: ties on cos break by ascending
+    neighbor_id, a zero-norm vector on either side scores exactly 0.0,
+    each query keeps at most k rows, and a query with fewer than k
+    candidates keeps all of them."""
+    from mapreducewordcount_spark.operators.similarity import (
+        shortlist_rerank,
+    )
+
+    corpus, queries = _planted(spark)
+    cand = spark.createDataFrame(
+        [(1, 6), (1, 5), (1, 4), (1, 3), (1, 2),  # more than k
+         (10, 6), (10, 5),                        # fewer than k
+         (11, 2)],                                # zero-norm query
+        "query_id long, neighbor_id long")
+    got = sorted(tuple(r) for r in
+                 shortlist_rerank(cand, corpus, queries, k=3).collect())
+    assert got == [
+        (1, 2, 1, 1.0), (1, 3, 2, 1.0), (1, 4, 3, 0.707107),
+        (10, 5, 1, 0.0), (10, 6, 2, 0.0),
+        (11, 2, 1, 0.0)]
+
+
+def test_lsh_probe_rerank_excludes_self_matches(spark):
+    """A query that is also a corpus vector agrees with itself on every
+    band; the probe → re-rank path must still never return it as its
+    own neighbor."""
+    from mapreducewordcount_spark.operators.dedup import embedding_band_keys
+    from mapreducewordcount_spark.operators.similarity import (
+        lsh_probe,
+        shortlist_rerank,
+    )
+
+    corpus, queries = _planted(spark)
+    kb = embedding_band_keys(corpus, dim=4, n_bands=4, band_width=2)
+    qb = (embedding_band_keys(queries, "query_id", dim=4, n_bands=4,
+                              band_width=2)
+          .select(F.col("id").alias("query_id"), "band", "key"))
+    cand = lsh_probe(kb, qb)
+    assert cand.filter(F.col("query_id") == 1).count() > 0
+    assert cand.filter(F.col("query_id") == F.col("neighbor_id")).count() == 0
+    rows = shortlist_rerank(cand, corpus, queries, k=5).collect()
+    assert rows and all(r.query_id != r.neighbor_id for r in rows)
+    via_op = lsh_topk(corpus, queries, k=5, dim=4, n_bands=4,
+                      band_width=2).collect()
+    assert sorted(map(tuple, via_op)) == sorted(map(tuple, rows))
+
+
 def test_asof_backward_semantics(spark):
     TS = dt.datetime
     left = spark.createDataFrame(
@@ -201,9 +265,8 @@ def test_ivfpq_recall_and_containment(spark, emb):
     sl_rows = {(r.query_id, r.neighbor_id) for r in sl.collect()}
     cand_rows = {(r.query_id, r.neighbor_id) for r in cand.collect()}
     assert sl_rows <= cand_rows          # containment: IVF prunes first
-    from mapreducewordcount_spark.operators.pq import pq_rerank
     approx = {(r.query_id, r.neighbor_id)
-              for r in pq_rerank(sl, emb, q, k=5).collect()}
+              for r in sim.shortlist_rerank(sl, emb, q, k=5).collect()}
     recall = len(exact & approx) / len(exact)
     # doubly approximate: must still decisively beat the random
     # 32/N-scan baseline on near-random 64-d vectors
@@ -221,7 +284,7 @@ def test_ivfpq_recall_and_containment(spark, emb):
     rsl_rows = {(r.query_id, r.neighbor_id) for r in rsl.collect()}
     assert rsl_rows <= cand_rows
     r_approx = {(r.query_id, r.neighbor_id)
-                for r in pq_rerank(rsl, emb, q, k=5).collect()}
+                for r in sim.shortlist_rerank(rsl, emb, q, k=5).collect()}
     r_recall = len(exact & r_approx) / len(exact)
     assert r_recall >= recall, \
         f"residual encoding regressed recall: {r_recall} < {recall}"

@@ -1,0 +1,83 @@
+"""The scripts under ``tools/`` and ``bench.py`` import package names
+that must exist.
+
+The scripts are not run (``tools/banding_stress.py`` parses
+``sys.argv`` at import); their source is parsed with ``ast`` and every
+``from mapreducewordcount_spark... import name`` — top-level or nested
+inside a function — is resolved against the package. A rename or
+deletion in the package that leaves a script behind fails here.
+"""
+
+from __future__ import annotations
+
+import ast
+import importlib
+import importlib.util
+from pathlib import Path
+
+import pytest
+
+REPO = Path(__file__).resolve().parent.parent
+PACKAGE = "mapreducewordcount_spark"
+SCRIPTS = sorted((REPO / "tools").glob("*.py")) + [REPO / "bench.py"]
+
+
+def _package_imports(path: Path) -> list[tuple[str, str | None]]:
+    """``(module, name)`` for every package import in ``path``;
+    ``name`` is None for a plain ``import module``."""
+    found = []
+    for node in ast.walk(ast.parse(path.read_text(), str(path))):
+        if isinstance(node, ast.ImportFrom) and node.level == 0 \
+                and (node.module or "").split(".")[0] == PACKAGE:
+            found += [(node.module, a.name) for a in node.names]
+        elif isinstance(node, ast.Import):
+            found += [(a.name, None) for a in node.names
+                      if a.name.split(".")[0] == PACKAGE]
+    return found
+
+
+def _resolves(module: str, name: str | None) -> bool:
+    mod = importlib.import_module(module)
+    if name is None or name == "*" or hasattr(mod, name):
+        return True
+    try:  # `from pkg import submodule`
+        importlib.import_module(f"{module}.{name}")
+    except ModuleNotFoundError:
+        return False
+    return True
+
+
+@pytest.mark.parametrize("script", SCRIPTS, ids=lambda p: p.name)
+def test_script_package_imports_resolve(script):
+    imports = _package_imports(script)
+    missing = [f"{m}:{n}" for m, n in imports if not _resolves(m, n)]
+    assert not missing, f"{script.name} imports missing names: {missing}"
+
+
+def test_import_scan_sees_nested_imports(tmp_path):
+    src = tmp_path / "s.py"
+    src.write_text(
+        "import sys\n"
+        f"from {PACKAGE}.operators.dedup import no_such_name\n"
+        "def f():\n"
+        f"    from {PACKAGE}.operators import similarity\n")
+    imports = _package_imports(src)
+    assert imports == [(f"{PACKAGE}.operators.dedup", "no_such_name"),
+                       (f"{PACKAGE}.operators", "similarity")]
+    assert not _resolves(*imports[0])
+    assert _resolves(*imports[1])
+
+
+def test_dump_plans_normalizes_session_counters():
+    spec = importlib.util.spec_from_file_location(
+        "dump_plans", REPO / "tools" / "dump_plans.py")
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    a = ("Project [x#12L, lambda x_493#7] plan_id=59882 "
+         "MapPartitionsRDD[708]")
+    b = ("Project [x#40L, lambda x_12#9] plan_id=3 "
+         "MapPartitionsRDD[7]")
+    assert mod.normalize_plan(a) == mod.normalize_plan(b) == (
+        "Project [x#NL, lambda x_N#N] plan_id=N MapPartitionsRDD[N]")
+    # names that merely end in digits are plan content, not counters
+    assert mod.normalize_plan("col_1#3") == "col_1#N"

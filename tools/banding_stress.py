@@ -16,7 +16,8 @@ guarantee is radius-preserving in both). Results feed SCALE.md's
 round-6 section.
 
 Round 7 adds an ``lsh`` mode for the OTHER reworked banding family —
-OR-banded embedding sign-LSH (``lsh_candidate_pairs``): synthetic
+OR-banded embedding sign-LSH (``embedding_band_keys`` +
+``embedding_band_candidates``): synthetic
 gaussian 64-dim vectors (again adversarial: zero cluster structure)
 plus 100 planted cosine-near twins, measuring candidate mass, the
 full verified-pair wall clock, and planted recall at each n. The
@@ -137,10 +138,9 @@ def make_embeddings(spark, n: int, dim: int = 64):
     return spark.read.parquet(path), expected
 
 
-def lsh_candidate_mass(sig) -> int:
+def lsh_candidate_mass(banded) -> int:
     """Pre-distinct band-join output rows: Σ over (band, key) buckets
     of C(bucket, 2) — the LSH analog of ``candidate_rows``."""
-    banded = sig.select(F.posexplode("keys").alias("band", "key"))
     per_bucket = banded.groupBy("band", "key") \
         .agg(F.count(F.lit(1)).alias("c"))
     row = per_bucket.agg(
@@ -150,8 +150,9 @@ def lsh_candidate_mass(sig) -> int:
 
 def lsh_main(spark) -> None:
     from mapreducewordcount_spark.operators.dedup import (
+        embedding_band_candidates,
+        embedding_band_keys,
         embedding_dup_pairs_lsh,
-        lsh_candidate_pairs,
     )
     from mapreducewordcount_spark.operators.similarity import (
         derive_band_width,
@@ -163,9 +164,10 @@ def lsh_main(spark) -> None:
     for n in SIZES:
         emb, expected = make_embeddings(spark, n)
         w = derive_band_width(n)
-        cand, sig = lsh_candidate_pairs(emb, corpus_size=n)
-        mass = lsh_candidate_mass(sig)
-        n_cand = cand.count()
+        banded = embedding_band_keys(emb, corpus_size=n).cache()
+        mass = lsh_candidate_mass(banded)
+        n_cand = embedding_band_candidates(banded).count()
+        banded.unpersist()
         t0 = time.perf_counter()
         got = {(r.a_id, r.b_id) for r in
                embedding_dup_pairs_lsh(emb, threshold=0.8,

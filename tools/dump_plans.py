@@ -9,6 +9,12 @@ are named. Plan capture only — nothing is executed, so this is safe
 to run in a contended window. The optimization-round deliverable
 (``plans/r13/*_{before,after}.txt``) is produced with this tool so
 the judge can diff plan claims against committed text.
+
+Session counters are normalized before writing — expression ids
+(``#123`` → ``#N``), exchange plan ids, lambda variable suffixes and
+RDD ids — so two checkouts' dumps compare with plain ``diff``: a line
+that differs is a plan change, not a counter that moved because an
+earlier query built more or fewer expressions.
 """
 
 from __future__ import annotations
@@ -16,10 +22,25 @@ from __future__ import annotations
 import contextlib
 import io
 import os
+import re
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+
+_COUNTERS = (
+    (re.compile(r"#\d+"), "#N"),
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    (re.compile(r"(lambda \w+?)_\d+"), r"\1_N"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
+)
+
+
+def normalize_plan(text: str) -> str:
+    """Replace the session-counter ids in an explain dump with ``N``."""
+    for pattern, repl in _COUNTERS:
+        text = pattern.sub(repl, text)
+    return text
 
 
 def main() -> int:
@@ -46,7 +67,7 @@ def main() -> int:
                 df.explain("formatted")
             with open(os.path.join(outdir, f"{name}_{suffix}.txt"),
                       "w") as f:
-                f.write(buf.getvalue())
+                f.write(normalize_plan(buf.getvalue()))
             print(f"{name}: ok")
         except Exception as exc:  # noqa: BLE001
             rc = 1

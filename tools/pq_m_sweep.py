@@ -45,7 +45,7 @@ def main() -> None:
         sl = pq.ivfpq_shortlist(assigned, cent, queries, routed,
                                 m=m, refine=32)
         top5 = {(r.query_id, r.neighbor_id)
-                for r in pq.pq_rerank(sl, emb, queries, k=5)
+                for r in sim.shortlist_rerank(sl, emb, queries, k=5)
                 .select("query_id", "neighbor_id").collect()}
         rec = len(top5 & exact) / (5 * n_q)
         print(f"| {m} | {rec:.2f} |")
