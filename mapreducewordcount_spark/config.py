@@ -5,10 +5,12 @@ Accepts the reference's ``config.yaml`` schema (driver host/port,
 ``task_settings`` — see reference ``config.yaml:1-20``) and maps each
 knob to its Spark meaning:
 
-- ``num_map_tasks`` (N) → input-split parallelism hint: a
-  ``repartition(N)`` after read when exact-N behavior is wanted;
-  otherwise Spark's file bin-packing supersedes the reference's LPT
-  balancer (``src/driver.py:41-68``).
+- ``num_map_tasks`` (N) → accepted and validated (at least 1), but
+  nothing reads it: map parallelism comes from the split setting the
+  word-count sink runs under (``per_file_splits`` in
+  ``sources/text.py``), which gives each small input file its own
+  split, largest first — the reference's LPT balancer
+  (``src/driver.py:41-68``).
 - ``num_reduce_tasks`` (M) → output bucket count for the parity sink.
 - ``directories.input`` / ``directories.output`` → scan / sink paths.
   ``directories.intermediate`` has **no equivalent** — Spark owns

@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from mapreducewordcount_spark.functions.buckets import bucket_expr
 from mapreducewordcount_spark.functions.tokenize import tokenize_expr, tokenize_parity
-from mapreducewordcount_spark.sources.text import read_corpus
+from mapreducewordcount_spark.sources.text import per_file_splits, read_corpus
 
 
 def word_counts(lines: DataFrame, text_col: str = "value",
@@ -71,16 +71,21 @@ def write_wordcount_output(counts: DataFrame, out_dir: str, m: int) -> None:
     — parity wants exactly M files. At real scale drop the repartition
     and let each bucket write many files; the bucket → file-set
     mapping (not file *count*) is the durable contract.
+
+    The write runs under ``per_file_splits``, so the corpus scan gives
+    each input file its own map split, largest first.
     """
-    (counts
-     .withColumn("bucket", bucket_expr("word", m))
-     .repartition(m, "bucket")
-     # sort by (bucket, word): satisfies the partitioned writer's
-     # required ordering on the partition column, so it keeps our
-     # secondary word order instead of re-sorting by bucket alone
-     .sortWithinPartitions("bucket", "word")
-     .select("bucket", F.concat_ws(" ", "word", "count").alias("value"))
-     .write.mode("overwrite").partitionBy("bucket").text(out_dir))
+    out = (counts
+           .withColumn("bucket", bucket_expr("word", m))
+           .repartition(m, "bucket")
+           # sort by (bucket, word): satisfies the partitioned writer's
+           # required ordering on the partition column, so it keeps our
+           # secondary word order instead of re-sorting by bucket alone
+           .sortWithinPartitions("bucket", "word")
+           .select("bucket",
+                   F.concat_ws(" ", "word", "count").alias("value")))
+    with per_file_splits(counts.sparkSession):
+        out.write.mode("overwrite").partitionBy("bucket").text(out_dir)
 
 
 def rename_to_reference_layout(out_dir: str, m: int) -> None:

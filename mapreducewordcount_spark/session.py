@@ -6,9 +6,10 @@ spawning a Flask driver and N polling workers, we build one
 SparkSession and let Spark own scheduling, shuffle and fault
 tolerance (SURVEY.md §2.2).
 
-The defaults here are chosen to be correct on ``local[32]`` for the
-test scale factors *and* to be the right starting point on a real
-multi-executor cluster at 100 TB:
+The defaults here are chosen to be correct on ``local[N]`` (N from
+``SPARK_GRAFT_CPUS``, else the host's cores) for the test scale
+factors *and* to be the right starting point on a real multi-executor
+cluster at 100 TB:
 
 - **AQE on** (runtime partition coalescing, skew-join splitting):
   the reference's ``ord(first_char) % M`` partitioner is
@@ -17,6 +18,10 @@ multi-executor cluster at 100 TB:
   of defense before explicit salting.
 - **shuffle.partitions** sized from the env (cores locally; on a
   cluster this should be ~2-3× total cores — AQE coalesces down).
+- **file splits** keep Spark's defaults: a session-wide
+  ``files.minPartitionNum`` would reach every file scan, so the
+  word-count sink sets it around its own action only
+  (``sources/text.py``, ``per_file_splits``).
 - **Arrow enabled** so any unavoidable Python stage (parity
   tokenizer, embedding UDFs) pays batch, not per-row, serde cost.
 - **session timezone UTC** so timestamp semantics match the DuckDB

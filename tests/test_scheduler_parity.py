@@ -12,12 +12,28 @@ empty-but-valid outputs, and M output buckets always materialize.
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
+import pytest
 from pyspark.sql import functions as F
 
 from mapreducewordcount_spark.cli import main
-from mapreducewordcount_spark.operators.wordcount import word_counts
-from mapreducewordcount_spark.sources.text import read_corpus
+from mapreducewordcount_spark.operators.wordcount import (
+    word_counts,
+    write_wordcount_output,
+)
+from mapreducewordcount_spark.sources.tables import TABLES, load_table
+from mapreducewordcount_spark.sources.text import (
+    MIN_PARTITION_NUM,
+    per_file_splits,
+    read_corpus,
+)
+from tests.conftest import SF_ORACLE
+
+#: byte share of each file in the split-balance corpus, largest first.
+#: The two largest hold 48% of the bytes: a split that packs them
+#: together breaks the balance bound on 4 slots.
+FILE_SHARES = (0.28, 0.20, 0.15, 0.12, 0.10, 0.08, 0.05, 0.02)
 
 
 def test_every_file_assigned_exactly_once(spark, tmp_path):
@@ -79,3 +95,93 @@ def test_split_count_bounded_by_files(spark, tmp_path):
     n_parts = (df.select(F.spark_partition_id().alias("p"))
                .filter(F.col("p").isNotNull()).distinct().count())
     assert n_parts <= 3
+
+
+def _skewed_corpus(root: Path) -> dict[str, int]:
+    """``book-<i>.txt`` files in the ``FILE_SHARES`` proportions of
+    ~80 KB; returns each file's bytes."""
+    line = "lorem ipsum dolor sit amet consectetur adipiscing elit\n"
+    root.mkdir(exist_ok=True)
+    sizes = {}
+    for i, share in enumerate(FILE_SHARES):
+        path = root / f"book-{i:02d}.txt"
+        path.write_text(line * int(share * 80_000 / len(line)))
+        sizes[path.name] = path.stat().st_size
+    return sizes
+
+
+def test_scan_splits_balanced_like_lpt(spark, tmp_path):
+    """No map split holds more bytes than max(largest file,
+    total / slots) — the balance the reference's LPT packing guarantees
+    (reference tests/test_task_manager.py:136-148). Spark's default
+    split size would put the two largest files (48% of the bytes) into
+    one split; ``per_file_splits`` drops the split size to its
+    open-cost floor, so each small file is its own split."""
+    sizes = _skewed_corpus(tmp_path)
+    with per_file_splits(spark):
+        rows = (read_corpus(spark, str(tmp_path))
+                .select(F.spark_partition_id().alias("split"),
+                        F.input_file_name().alias("file"))
+                .distinct().collect())
+    files_of = {}
+    for r in rows:
+        files_of.setdefault(r.split, set()).add(os.path.basename(r.file))
+    assert set().union(*files_of.values()) == set(sizes)
+    split_bytes = {s: sum(sizes[f] for f in fs) for s, fs in files_of.items()}
+    slots = spark.sparkContext.defaultParallelism
+    bound = max(max(sizes.values()), sum(sizes.values()) / slots)
+    assert max(split_bytes.values()) <= bound, files_of
+    # each file's 4 MB open cost alone fills the floor-sized split once
+    # the 3 x slots minimum outnumbers the files
+    if 3 * slots > len(FILE_SHARES):
+        assert all(len(fs) == 1 for fs in files_of.values()), files_of
+
+
+def test_wordcount_sink_maps_one_task_per_file(spark, tmp_path):
+    """The word-count sink runs its corpus scan under
+    ``per_file_splits``: the map stage has one task per input file."""
+    _skewed_corpus(tmp_path / "corpus")
+    slots = spark.sparkContext.defaultParallelism
+    if 3 * slots <= len(FILE_SHARES):
+        pytest.skip(f"{slots} slot(s) pack files even at the split floor")
+    sc = spark.sparkContext
+    group = f"one-task-per-file-{tmp_path.name}"
+    sc.setJobGroup(group, "word-count sink")
+    try:
+        write_wordcount_output(
+            word_counts(read_corpus(spark, str(tmp_path / "corpus"))),
+            str(tmp_path / "out"), m=2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    first_stage = min(s for j in tracker.getJobIdsForGroup(group)
+                      for s in tracker.getJobInfo(j).stageIds)
+    assert tracker.getStageInfo(first_stage).numTasks == len(FILE_SHARES)
+
+
+def test_table_scans_keep_partition_counts(spark, tmp_path):
+    """The split setting stays inside the word-count sink. After a sink
+    ran, the engine session has no ``files.minPartitionNum``, and every
+    TESTDATA table at every scale factor, plus a directory of more
+    small files than slots (the shape of a state version or a manifest
+    state's segments), has the partition count it has in a session
+    without that setting."""
+    (tmp_path / "corpus").mkdir()
+    (tmp_path / "corpus" / "a.txt").write_text("one two\n")
+    write_wordcount_output(word_counts(read_corpus(spark, str(tmp_path / "corpus"))),
+                           str(tmp_path / "out"), m=2)
+    assert spark.conf.get(MIN_PARTITION_NUM, None) is None
+    plain = spark.newSession()
+    plain.conf.unset(MIN_PARTITION_NUM)
+    k = 6 * spark.sparkContext.defaultParallelism
+    many = str(tmp_path / "many")
+    spark.range(0, 10 * k, 1, k).write.parquet(many)
+    sf_dirs = sorted(str(d) for d in Path(SF_ORACLE).parent.glob("sf*")
+                     if (d / "lineitem.parquet").exists())
+    assert sf_dirs
+    counts = {(sf, t): (load_table(spark, sf, t).rdd.getNumPartitions(),
+                        load_table(plain, sf, t).rdd.getNumPartitions())
+              for sf in sf_dirs for t in TABLES}
+    counts["many"] = (spark.read.parquet(many).rdd.getNumPartitions(),
+                      plain.read.parquet(many).rdd.getNumPartitions())
+    assert {key: v for key, v in counts.items() if v[0] != v[1]} == {}
