@@ -20,4 +20,11 @@ combine map-side, and every Python-side function is Arrow-vectorized.
 
 __version__ = "0.1.0"
 
-from mapreducewordcount_spark.session import get_spark  # noqa: F401
+from mapreducewordcount_spark.session import (  # noqa: F401
+    _skip_unchanged_zip_rereads,
+    get_spark,
+)
+
+# every engine UDF unpickles a function from this package, so a Python
+# worker's first engine task imports it and installs the hook there
+_skip_unchanged_zip_rereads()

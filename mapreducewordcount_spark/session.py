@@ -24,6 +24,15 @@ cluster at 100 TB:
   (``sources/text.py``, ``per_file_splits``).
 - **Arrow enabled** so any unavoidable Python stage (parity
   tokenizer, embedding UDFs) pays batch, not per-row, serde cost.
+- **zip directories re-read only when the archive changed.** A reused
+  Python worker runs ``importlib.invalidate_caches()`` before every
+  task, and before Python 3.13 each ``zipimporter`` on the worker's
+  path then re-reads its archive's central directory: Spark's core jar
+  (~5,000 entries, read twice), ``pyspark.zip`` (once per subpackage)
+  and the shipped package, ~0.2 s of CPU per task. On 3.13+ the call
+  only drops the cached directory, and the next lookup reads it if
+  needed. The package's import hook (``_skip_unchanged_zip_rereads``)
+  keeps the cached directory while the archive's stat is unchanged.
 - **session timezone UTC** so timestamp semantics match the DuckDB
   oracle and are deployment-independent.
 """
@@ -89,9 +98,17 @@ def _ship_package(spark: SparkSession) -> None:
     the package. ``addPyFile`` with a zip of the package covers both
     cluster executors and local-mode workers launched from a
     different CWD.
+
+    Ships once per SparkContext: ``get_spark`` and every ``load_table``
+    call this (the correctness driver hands ``load_table`` sessions
+    ``get_spark`` did not build), and only the first call on a context
+    hashes the package and adds the zip.
     """
     import zipfile
 
+    sc = spark.sparkContext
+    if getattr(sc, "_mrwc_pkg_shipped", False):
+        return
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     zip_path = os.path.join(tempfile.gettempdir(),
                             f"mapreducewordcount_spark-{__spark_pkg_version()}.zip")
@@ -109,7 +126,50 @@ def _ship_package(spark: SparkSession) -> None:
                         rel = os.path.relpath(full, os.path.dirname(pkg_dir))
                         zf.write(full, rel)
         os.replace(tmp, zip_path)
-    spark.sparkContext.addPyFile(zip_path)
+    sc.addPyFile(zip_path)
+    # flagged only after a successful add: a failed ship leaves the
+    # next call free to retry
+    sc._mrwc_pkg_shipped = True
+
+
+def _skip_unchanged_zip_rereads() -> None:
+    """In a Python worker before 3.13, make ``zipimporter.invalidate_caches``
+    re-read an archive's directory only when the archive changed.
+
+    PySpark's worker calls ``importlib.invalidate_caches()`` before each
+    task, and on 3.11/3.12 that re-reads every zip on the worker's path
+    (module docstring). The wrapper stats the archive first and keeps
+    the cached directory while ``(mtime_ns, size, inode)`` equals the
+    stamp taken before its last read, so a changed or new archive is
+    still read, and path finders are invalidated as before. Installed
+    once per process, on the package's import in a task.
+    """
+    import sys
+    import zipimport
+
+    from pyspark import TaskContext
+
+    reread = zipimport.zipimporter.invalidate_caches
+    if (sys.version_info >= (3, 13) or TaskContext.get() is None
+            or hasattr(reread, "stamps")):
+        return
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+        except OSError:  # the read fails too and drops the cached entry
+            return reread(self)
+        stamp = (st.st_mtime_ns, st.st_size, st.st_ino)
+        files = zipimport._zip_directory_cache.get(self.archive)
+        if files is not None \
+                and invalidate_caches.stamps.get(self.archive) == stamp:
+            self._files = files
+            return
+        reread(self)
+        invalidate_caches.stamps[self.archive] = stamp
+
+    invalidate_caches.stamps = {}
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
 
 
 def __spark_pkg_version() -> str:

@@ -11,6 +11,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from mapreducewordcount_spark.session import _ship_package
+
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
@@ -84,8 +86,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # signatures) need the package importable on executor Python
     # workers — a foreign session launched from another CWD throws
     # ModuleNotFoundError otherwise (caught by a foreign-session sweep
-    # of the rows-only queries, round 5). Ship once per context.
-    _ensure_package_on_executors(spark)
+    # of the rows-only queries, round 5). _ship_package ships once per
+    # context.
+    try:
+        _ship_package(spark)
+    except Exception:  # noqa: BLE001 — shipping is best-effort; a
+        # same-CWD session imports the package fine without it
+        pass
     path = f"{sf_dir}/{name}.parquet"
     if name != "events":
         return spark.read.schema(SCHEMAS[name]).parquet(path)
@@ -101,26 +108,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     return normalize_events_ts(spark.read.parquet(path))
-
-
-def _ensure_package_on_executors(spark: SparkSession) -> None:
-    """Idempotent per-SparkContext package shipping (session.py's
-    ``_ship_package``, guarded so hot loaders don't re-zip/re-add)."""
-    sc = spark.sparkContext
-    if getattr(sc, "_mrwc_pkg_shipped", False):
-        return
-    from mapreducewordcount_spark.session import _ship_package
-
-    try:
-        _ship_package(spark)
-        # flag only on SUCCESS: a transient zip/addPyFile failure must
-        # leave the next load_table free to retry, or every later
-        # Python-worker stage on this context hits the executor
-        # ModuleNotFoundError this helper exists to prevent
-        sc._mrwc_pkg_shipped = True
-    except Exception:  # noqa: BLE001 — shipping is best-effort; a
-        # same-CWD session imports the package fine without it
-        pass
 
 
 def load_tables(spark: SparkSession, sf_dir: str,

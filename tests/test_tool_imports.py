@@ -81,3 +81,14 @@ def test_dump_plans_normalizes_session_counters():
         "Project [x#NL, lambda x_N#N] plan_id=N MapPartitionsRDD[N]")
     # names that merely end in digits are plan content, not counters
     assert mod.normalize_plan("col_1#3") == "col_1#N"
+
+
+def test_py_task_overhead_gaps_per_worker():
+    spec = importlib.util.spec_from_file_location(
+        "py_task_overhead", REPO / "tools" / "py_task_overhead.py")
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    # (pid, start, end) in collection order; gaps never cross workers
+    rows = [(7, 5.0, 5.5), (9, 1.0, 1.25), (7, 1.0, 2.0), (9, 2.0, 3.0),
+            (7, 2.25, 3.0), (8, 0.0, 1.0)]
+    assert sorted(mod.worker_gaps(rows)) == [0.25, 0.75, 2.0]
