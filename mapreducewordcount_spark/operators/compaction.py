@@ -3,8 +3,9 @@ target-size output bins.
 
 The operational inverse of the reference's split step — the
 reference driver cuts big inputs into worker-sized ranges
-(/root/reference/src/driver.py:41-68, LPT bin-packing re-expressed
-at sources/pysource.py:55); a 100 TB table that has been ingested
+(reference ``src/driver.py:41-68``, LPT bin-packing, which the
+engine's corpus scan gets from Spark's size-sorted file packing under
+``sources/text.per_file_splits``); a 100 TB table that has been ingested
 incrementally has the opposite problem: millions of KB-scale files
 whose per-file open/footer/seek overhead dominates scan time, fixed
 by periodically rewriting them into ~target-size outputs.
@@ -23,9 +24,10 @@ overflow region — both acceptable for scan sizing (the point is
 killing the per-file constant, not byte-exact bins).
 
 Cross-partition balance (many small partitions → skewed bin counts)
-is the LPT problem the reference's splitter already solves; reuse
-`sources/pysource.lpt_pack` over per-partition totals when bins must
-also balance across partitions.
+is the LPT problem the reference's splitter solves; when bins must
+also balance across partitions, let Spark's built-in file packing do
+it on the rewrite's scan, as ``sources/text.per_file_splits`` does
+for the corpus.
 """
 
 from __future__ import annotations

@@ -32,7 +32,8 @@ zone maps a writer would persist; the pruning win is pinned by
 
 Reference parity: none — extension surface (§2.5); the reference's
 only layout decision is LPT file-packing (``src/driver.py:41-68``),
-covered by ``sources/pysource.py``.
+covered by Spark's size-sorted file packing under
+``sources/text.per_file_splits``.
 """
 
 from __future__ import annotations

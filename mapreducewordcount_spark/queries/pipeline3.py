@@ -859,8 +859,8 @@ def incremental_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     the index fits); the within-batch decision is the partial-agg
     ``groupBy(fp).agg(min)`` + join-back form — no fp window. At
     100 TB the index table is the persisted output of the previous
-    run (`sources/upsert.py` maintains it); nothing about this plan
-    touches historical document bodies.
+    run (`operators/merge.merge_upsert` maintains it); nothing about
+    this plan touches historical document bodies.
     """
     docs = load_table(spark, sf_dir, "documents")
     with_fp = docs.select("doc_id", "source",

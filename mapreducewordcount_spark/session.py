@@ -74,9 +74,6 @@ def get_spark(app_name: str = "mapreducewordcount_spark",
         # TIMESTAMP(NANOS) parquet (events.ts) reads as long; the
         # events loader converts to timestamp at microsecond precision
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # custom Python data sources (sources/pysource.py) advertise
-        # file-level pushdown; off by default in Spark 4.1
-        .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )

@@ -1,46 +1,22 @@
-"""Generic source/sink helpers beyond the reference's local text files.
+"""Parquet and binary-file helpers beyond the reference's local text files.
 
-The reference reads/writes only newline text on a shared local
-filesystem (SURVEY.md §2.4). This engine's canonical interchange is
-parquet (columnar, pushdown, splittable); CSV/JSON are supported as
-explicit-schema edges — ``inferSchema`` is banned in pipeline code
-because it triggers an extra full scan and produces drifting types.
+The reference reads and writes only newline text on a shared local
+filesystem (SURVEY.md §2.4). This module holds the two file-level
+operations Spark's reader and writer do not give in one call:
 
-Delta/Iceberg/Hudi connectors need jars not present in this image;
-``open_table_format_available`` gates them behind an import-try so
-deployments with the jars get them and tests skip cleanly without.
+- ``compact_parquet``: rewrite a small-file parquet dataset into
+  target-size files, optionally range-clustered, committed by rename;
+- ``read_binary_files``: ingest raw files (images, audio) as rows in
+  the engine's media contract.
 """
 
 from __future__ import annotations
 
+import os
+import shutil
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-
-def read_csv(spark: SparkSession, path: str, schema: T.StructType,
-             header: bool = True) -> DataFrame:
-    return spark.read.schema(schema).option("header", header).csv(path)
-
-
-def read_json(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
-    return spark.read.schema(schema).json(path)
-
-
-def write_csv(df: DataFrame, path: str, header: bool = True) -> None:
-    df.write.mode("overwrite").option("header", header).csv(path)
-
-
-def write_json(df: DataFrame, path: str) -> None:
-    df.write.mode("overwrite").json(path)
-
-
-def write_parquet(df: DataFrame, path: str,
-                  partition_by: list[str] | None = None) -> None:
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
 
 
 def compact_parquet(spark: SparkSession, path: str,
@@ -57,14 +33,21 @@ def compact_parquet(spark: SparkSession, path: str,
     range-partitions on ``sort_by`` (globally clustered output —
     min/max pruning works on the sort keys afterwards).
 
-    Written via a temp directory + atomic rename so a crashed compact
-    never leaves the dataset half-replaced; the rename is the commit
-    point. (Lakehouse formats do this transactionally — see
-    ``open_table_format_available`` — this is the plain-parquet
-    equivalent.)
+    The new copy is written to ``<path>.__compact_tmp__`` and committed
+    by two renames: the dataset moves aside to ``<path>.__compact_old__``,
+    then the new copy takes its place, and the aside copy is removed.
+    A crash inside that commit leaves the aside copy behind and, between
+    the renames, no ``path`` at all. The next call finishes the
+    interrupted commit before it compacts: the temp copy is complete,
+    because it is written before the first rename.
     """
-    import os
-    import shutil
+    path = path.rstrip("/")
+    tmp = path + ".__compact_tmp__"
+    old = path + ".__compact_old__"
+    if os.path.exists(old):
+        if not os.path.exists(path):
+            os.rename(tmp, path)
+        shutil.rmtree(old)
 
     size = sum(os.path.getsize(os.path.join(root, f))
                for root, _dirs, files in os.walk(path)
@@ -73,136 +56,11 @@ def compact_parquet(spark: SparkSession, path: str,
     df = spark.read.parquet(path)
     df = (df.repartitionByRange(n, *sort_by).sortWithinPartitions(*sort_by)
           if sort_by else df.repartition(n))
-    tmp = path.rstrip("/") + ".__compact_tmp__"
     df.write.mode("overwrite").parquet(tmp)
-    old = path.rstrip("/") + ".__compact_old__"
     os.rename(path, old)
     os.rename(tmp, path)
     shutil.rmtree(old)
     return sum(1 for f in os.listdir(path) if f.endswith(".parquet"))
-
-
-def open_table_format_available(spark: SparkSession, fmt: str = "delta") -> bool:
-    """True when an optional format is actually usable as a data source.
-
-    Probes Spark's DataSource registry (the same lookup
-    ``.format(fmt)`` does), not ``Class.forName`` — stray classes on
-    the classpath without their provider registration would
-    false-positive otherwise (observed: ``AvroFileFormat`` present
-    while the spark-avro module is not deployed).
-    """
-    try:
-        jvm = spark.sparkContext._jvm
-        jvm.org.apache.spark.sql.execution.datasources.DataSource \
-            .lookupDataSource(fmt, spark._jsparkSession.sessionState().conf())
-        return True
-    except Exception:
-        return False
-
-
-def sorted_layout(df: DataFrame, path: str, sort_cols: list[str],
-                  n_files: int = 8) -> None:
-    """Write parquet range-clustered on ``sort_cols`` for data skipping.
-
-    ``repartitionByRange`` + ``sortWithinPartitions`` gives each
-    output file a disjoint value range, so every file's parquet
-    min/max footer statistics become selective: a reader filtering on
-    the sort column skips whole files/row-groups without touching
-    their bytes. At 100 TB this is the difference between scanning a
-    day and scanning a year — the right layout whenever ONE column
-    dominates the query predicates. When several columns share the
-    predicates, linear sort helps only the leading one —
-    ``zorder_layout`` below trades a little per-column tightness for
-    skipping on ALL of them.
-    """
-    (df.repartitionByRange(n_files, *sort_cols)
-       .sortWithinPartitions(*sort_cols)
-       .write.mode("overwrite").parquet(path))
-
-
-def zorder_key(df: DataFrame, cols: list[str], bits: int = 8) -> "F.Column":
-    """Z-order (Morton) clustering key over numeric columns — a pure
-    column expression.
-
-    Each column is normalized to a ``2**bits``-bucket rank with
-    ``width_bucket`` over its actual min/max (one tiny agg collect,
-    the same bounded-model-artifact pattern as centroid training),
-    then the bucket bits are interleaved: bit ``i`` of column ``d``
-    lands at position ``i * n_cols + d``. Rows close in EVERY
-    dimension get close keys, so sorting by the key co-locates them —
-    which is all data skipping needs. Bit-twiddling stays in codegen
-    (``shiftright``/``bitwiseAND``/``shiftleft`` terms, ``bits ×
-    n_cols`` of them); nothing leaves the JVM.
-    """
-    if not cols:
-        raise ValueError("zorder_key needs at least one column")
-    if bits * len(cols) > 63:
-        raise ValueError(f"bits={bits} × {len(cols)} cols exceeds a "
-                         "63-bit key; lower bits")
-    # dates/timestamps cluster by their epoch numeric; anything that
-    # cannot cast to double fails loudly here rather than as an
-    # opaque TypeError below
-    numeric = {}
-    for c in cols:
-        dtype = dict(df.dtypes).get(c)
-        if dtype == "date":
-            numeric[c] = F.datediff(F.col(c), F.lit("1970-01-01"))
-        elif dtype and dtype.startswith("timestamp"):
-            numeric[c] = F.unix_timestamp(F.col(c))
-        else:
-            numeric[c] = F.col(c).cast("double")
-    stats = df.agg(*[f(numeric[c]).alias(f"{f.__name__}_{c}")
-                     for c in cols for f in (F.min, F.max)]).collect()[0]
-    if any(stats[f"min_{c}"] is None for c in cols):
-        raise ValueError(
-            "zorder_key: a cluster column has no non-null values (empty "
-            "input, all-null column, or a type that does not cast to "
-            f"double) — columns: {cols}, dtypes: {df.dtypes}")
-    n_buckets = 2 ** bits
-    buckets = []
-    for c in cols:
-        lo = float(stats[f"min_{c}"])
-        hi = float(stats[f"max_{c}"])
-        if hi <= lo:  # constant column → bucket 0
-            buckets.append(F.lit(0).cast("long"))
-            continue
-        b = F.width_bucket(numeric[c].cast("double"), F.lit(lo),
-                           F.lit(hi), F.lit(n_buckets)) - 1
-        buckets.append(F.least(F.greatest(b, F.lit(0)),
-                               F.lit(n_buckets - 1)).cast("long"))
-    n = len(cols)
-    z = F.lit(0).cast("long")
-    for d, b in enumerate(buckets):
-        for i in range(bits):
-            z = z.bitwiseOR(
-                F.shiftleft(F.shiftright(b, i).bitwiseAND(F.lit(1)),
-                            i * n + d))
-    return z
-
-
-def zorder_layout(df: DataFrame, path: str, cols: list[str],
-                  n_files: int = 8, bits: int = 8) -> None:
-    """Write parquet Z-order-clustered on ``cols`` for
-    multi-dimensional data skipping — in PLAIN parquet.
-
-    Z-order is usually presented as a table-format feature (Delta
-    ``OPTIMIZE ZORDER BY``), but the format only supplies the
-    transaction; the skipping comes from how rows are laid into
-    files, and plain parquet footers carry the same min/max stats.
-    Range-partitioning + sorting by the interleaved-bit key gives
-    every file a tight min/max envelope on EVERY z-column (vs a
-    linear sort, where the second column's per-file range stays ≈
-    the global range), so single-column predicates on any of the
-    ``cols`` skip most files. The trade: per-file ranges on the
-    leading column are a little wider than a pure sort would give —
-    that is the Z-order deal at any scale.
-    """
-    z = zorder_key(df, cols, bits=bits)
-    tagged = df.withColumn("__z", z)
-    (tagged.repartitionByRange(n_files, F.col("__z"))
-           .sortWithinPartitions("__z")
-           .drop("__z")
-           .write.mode("overwrite").parquet(path))
 
 
 def read_binary_files(spark: SparkSession, path: str,

@@ -1,16 +1,17 @@
-"""SQL entry point parity: spark.sql over the registered catalog must
-agree with the DataFrame-first implementations."""
+"""SQL entry point parity: spark.sql over the views ``register_views``
+creates must agree with the DataFrame-first implementations."""
 
 from __future__ import annotations
 
-from mapreducewordcount_spark.catalog import open_catalog, sql
+from mapreducewordcount_spark.sources.tables import register_views
 from tests.conftest import SF_ORACLE
 
 
 def test_sql_entry_matches_dataframe_query(spark):
     from mapreducewordcount_spark.queries.tpch import q1_pricing_summary
 
-    got = sql(spark, SF_ORACLE, """
+    register_views(spark, SF_ORACLE)
+    got = spark.sql("""
         SELECT l_returnflag, l_linestatus,
                round(sum(l_quantity), 2) AS sum_qty,
                round(sum(l_extendedprice), 2) AS sum_base_price,
@@ -32,51 +33,6 @@ def test_sql_entry_matches_dataframe_query(spark):
 def test_catalog_events_view_has_converted_timestamps(spark):
     """The SQL surface must see the same nanos→µs events.ts contract
     as DataFrame users (sources/tables.py), not raw longs."""
-    open_catalog(spark, SF_ORACLE)
+    register_views(spark, SF_ORACLE)
     dtype = dict(spark.table("events").dtypes)["ts"]
     assert dtype == "timestamp"
-
-
-def test_open_catalog_idempotent(spark, monkeypatch):
-    """Repeated sql() calls must register views once per
-    (session, sf_dir), not 10 re-plans per call; a different sf_dir
-    must re-register."""
-    import mapreducewordcount_spark.catalog as cat
-
-    calls = []
-    real = cat.register_views
-    monkeypatch.setattr(cat, "register_views",
-                        lambda *a, **kw: (calls.append(a), real(*a, **kw)))
-    cat._OPENED.pop(spark, None)
-    sql(spark, SF_ORACLE, "SELECT count(*) AS n FROM region").collect()
-    sql(spark, SF_ORACLE, "SELECT count(*) AS n FROM nation").collect()
-    open_catalog(spark, SF_ORACLE)
-    assert len(calls) == 1
-    # switching sf_dir re-registers (views are overwritten, state moves)
-    other = SF_ORACLE.replace("sf0.01", "sf0.001")
-    open_catalog(spark, other)
-    assert len(calls) == 2
-    # ...and switching back re-registers again (no stale-set shortcut)
-    open_catalog(spark, SF_ORACLE)
-    assert len(calls) == 3
-    cat._OPENED.pop(spark, None)
-
-
-def test_open_catalog_heals_dropped_view(spark, monkeypatch):
-    """A cache hit must not trust stale state: if a caller dropped a
-    temp view since registration, open_catalog re-registers instead
-    of letting the next sql() fail resolution (ADVICE r3)."""
-    import mapreducewordcount_spark.catalog as cat
-
-    calls = []
-    real = cat.register_views
-    monkeypatch.setattr(cat, "register_views",
-                        lambda *a, **kw: (calls.append(a), real(*a, **kw)))
-    cat._OPENED.pop(spark, None)
-    open_catalog(spark, SF_ORACLE)
-    assert len(calls) == 1
-    spark.catalog.dropTempView("nation")
-    got = sql(spark, SF_ORACLE,
-              "SELECT count(*) AS n FROM nation").collect()
-    assert len(calls) == 2 and got[0].n > 0
-    cat._OPENED.pop(spark, None)

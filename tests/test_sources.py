@@ -5,8 +5,6 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import types as T
 
-from mapreducewordcount_spark.sources import io as sio
-
 
 def _sample(spark):
     return spark.createDataFrame(
@@ -17,11 +15,11 @@ def _sample(spark):
 def test_csv_roundtrip(spark, tmp_path):
     df = _sample(spark)
     path = str(tmp_path / "csv")
-    sio.write_csv(df, path)
+    df.write.mode("overwrite").option("header", True).csv(path)
     schema = T.StructType([T.StructField("id", T.LongType()),
                            T.StructField("name", T.StringType()),
                            T.StructField("score", T.DoubleType())])
-    back = sio.read_csv(spark, path, schema)
+    back = spark.read.schema(schema).option("header", True).csv(path)
     assert sorted((r.id, r.name, r.score) for r in back.collect()) == \
         sorted((r.id, r.name, r.score) for r in df.collect())
 
@@ -29,8 +27,8 @@ def test_csv_roundtrip(spark, tmp_path):
 def test_json_roundtrip(spark, tmp_path):
     df = _sample(spark)
     path = str(tmp_path / "json")
-    sio.write_json(df, path)
-    back = sio.read_json(spark, path, df.schema)
+    df.write.mode("overwrite").json(path)
+    back = spark.read.schema(df.schema).json(path)
     assert sorted((r.id, r.name, r.score) for r in back.collect()) == \
         sorted((r.id, r.name, r.score) for r in df.collect())
 
@@ -38,7 +36,7 @@ def test_json_roundtrip(spark, tmp_path):
 def test_parquet_partitioned_write(spark, tmp_path):
     df = _sample(spark)
     path = str(tmp_path / "pq")
-    sio.write_parquet(df, path, partition_by=["id"])
+    df.write.mode("overwrite").partitionBy("id").parquet(path)
     back = spark.read.parquet(path)
     assert back.count() == 3
     import os
@@ -52,14 +50,6 @@ def test_orc_roundtrip(spark, tmp_path):
     back = spark.read.orc(path)
     assert sorted((r.id, r.name, r.score) for r in back.collect()) == \
         sorted((r.id, r.name, r.score) for r in df.collect())
-
-
-def test_open_table_formats_gated(spark):
-    # not shipped in this image; the gate must answer False, not raise
-    assert sio.open_table_format_available(spark, "delta") is False
-    assert sio.open_table_format_available(spark, "iceberg") is False
-    # avro is an external module since Spark 2.4; also absent here
-    assert sio.open_table_format_available(spark, "avro") is False
 
 
 def test_events_ts_precision_contract_vs_duckdb(spark):
@@ -168,18 +158,53 @@ def test_compact_parquet_range_clusters(spark, tmp_path):
     assert total == 50_000
 
 
+def _id_sum(spark, path):
+    return spark.read.parquet(path).agg({"id": "sum"}).collect()[0][0]
+
+
+def test_compact_parquet_recovers_crash_before_cleanup(spark, tmp_path):
+    """A crash after the commit's second rename leaves the moved-aside
+    copy behind; the next compact removes it and runs."""
+    import os
+
+    from mapreducewordcount_spark.sources.io import compact_parquet
+
+    path = str(tmp_path / "frag")
+    spark.range(1_000).repartition(8).write.parquet(path)
+    spark.range(1_000).repartition(8).write.parquet(path + ".__compact_old__")
+    compact_parquet(spark, path, target_bytes=10 * 1024 * 1024)
+    assert not os.path.exists(path + ".__compact_old__")
+    assert _id_sum(spark, path) == sum(range(1_000))
+
+
+def test_compact_parquet_recovers_crash_between_renames(spark, tmp_path):
+    """A crash between the commit's two renames leaves no dataset at
+    ``path``, the old copy aside and the complete new copy in the temp
+    directory; the next compact puts the new copy in place and runs."""
+    import os
+
+    from mapreducewordcount_spark.sources.io import compact_parquet
+
+    path = str(tmp_path / "frag")
+    spark.range(1_000).repartition(8).write.parquet(path + ".__compact_old__")
+    spark.range(1_000).repartition(1).write.parquet(path + ".__compact_tmp__")
+    compact_parquet(spark, path, target_bytes=10 * 1024 * 1024)
+    assert not os.path.exists(path + ".__compact_old__")
+    assert not os.path.exists(path + ".__compact_tmp__")
+    assert _id_sum(spark, path) == sum(range(1_000))
+
+
 def test_partitioned_write_prunes_partitions(spark, tmp_path):
     """Hive-style partitionBy layout must show up as PartitionFilters
     at the scan — directory-level pruning, zero bytes read from
     non-matching partitions."""
     from mapreducewordcount_spark.plans import explain_str
-    from mapreducewordcount_spark.sources.io import write_parquet
     from mapreducewordcount_spark.sources.tables import load_table
     from tests.conftest import SF_ORACLE
 
     path = str(tmp_path / "events_by_type")
-    write_parquet(load_table(spark, SF_ORACLE, "events"), path,
-                  partition_by=["event_type"])
+    (load_table(spark, SF_ORACLE, "events").write.mode("overwrite")
+     .partitionBy("event_type").parquet(path))
     got = spark.read.parquet(path).filter("event_type = 'purchase'")
     plan = explain_str(got)
     assert "PartitionFilters" in plan and "purchase" in plan
@@ -187,123 +212,6 @@ def test_partitioned_write_prunes_partitions(spark, tmp_path):
     want = (load_table(spark, SF_ORACLE, "events")
             .filter("event_type = 'purchase'").count())
     assert got.count() == want
-
-
-def _file_ranges(path, col_name):
-    """Per-file (min, max) footer stats for ``col_name``."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    out = []
-    for f in os.listdir(path):
-        if not f.endswith(".parquet"):
-            continue
-        md = pq.read_metadata(os.path.join(path, f))
-        mins, maxs = [], []
-        for rg in range(md.num_row_groups):
-            for ci in range(md.row_group(rg).num_columns):
-                col = md.row_group(rg).column(ci)
-                if col.path_in_schema == col_name:
-                    mins.append(col.statistics.min)
-                    maxs.append(col.statistics.max)
-        out.append((min(mins), max(maxs)))
-    return out
-
-
-def test_zorder_layout_skips_on_every_dimension(spark, tmp_path):
-    """Z-order clustering must tighten per-file min/max envelopes on
-    BOTH z-columns — the multi-dimensional skipping property — where
-    a linear sort leaves the second column's per-file range ≈ the
-    full domain."""
-    from mapreducewordcount_spark.sources.io import (
-        sorted_layout,
-        zorder_layout,
-    )
-
-    side = 64  # 64×64 grid, both dims uniform on [0, 64)
-    df = spark.range(side * side).selectExpr(
-        f"cast(id % {side} as long) as x",
-        f"cast(id div {side} as long) as y")
-    zpath = str(tmp_path / "zorder")
-    lpath = str(tmp_path / "linear")
-    zorder_layout(df, zpath, ["x", "y"], n_files=16, bits=6)
-    sorted_layout(df, lpath, ["x"], n_files=16)
-
-    def avg_span(path, col):
-        r = _file_ranges(path, col)
-        assert len(r) >= 8
-        return sum(hi - lo for lo, hi in r) / len(r)
-
-    full = side - 1
-    # z-order: every file covers a small sub-rectangle on BOTH dims
-    assert avg_span(zpath, "x") < 0.45 * full
-    assert avg_span(zpath, "y") < 0.45 * full
-    # linear sort: tight on x, but y per-file range ≈ whole domain
-    assert avg_span(lpath, "x") < 0.45 * full
-    assert avg_span(lpath, "y") > 0.9 * full
-    # and the rewrite is lossless
-    assert spark.read.parquet(zpath).count() == side * side
-
-
-def test_zorder_key_validates_args(spark):
-    import pytest
-
-    from mapreducewordcount_spark.sources.io import zorder_key
-
-    df = spark.range(10).selectExpr("id as x", "id as y")
-    with pytest.raises(ValueError, match="at least one"):
-        zorder_key(df, [])
-    with pytest.raises(ValueError, match="63-bit"):
-        zorder_key(df, ["x", "y"], bits=32)
-    # empty input → clear error, not an opaque TypeError
-    with pytest.raises(ValueError, match="no non-null values"):
-        zorder_key(df.filter("x < 0"), ["x"])
-
-
-def test_zorder_key_handles_date_columns(spark):
-    """SCALE.md advertises date clustering; dates must map to their
-    epoch numeric, not crash in float()."""
-    from mapreducewordcount_spark.sources.io import zorder_key
-
-    df = spark.range(100).selectExpr(
-        "id as x", "date_add(date'2024-01-01', cast(id as int)) as d")
-    keyed = df.withColumn("z", zorder_key(df, ["x", "d"], bits=4))
-    rows = keyed.collect()
-    assert len(rows) == 100
-    assert len({r.z for r in rows}) > 10  # keys actually vary
-
-
-def test_sorted_layout_files_have_disjoint_ranges(spark, tmp_path):
-    """sorted_layout must produce files whose min/max footer ranges
-    are non-overlapping on the sort column — the property parquet
-    data skipping depends on."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    from mapreducewordcount_spark.sources.io import sorted_layout
-
-    path = str(tmp_path / "orders_sorted")
-    df = spark.range(0, 10_000).selectExpr(
-        "id", "cast(id % 9973 as long) as k")
-    sorted_layout(df, path, ["k"], n_files=6)
-    ranges = []
-    for f in os.listdir(path):
-        if not f.endswith(".parquet"):
-            continue
-        md = pq.read_metadata(os.path.join(path, f))
-        mins, maxs = [], []
-        for rg in range(md.num_row_groups):
-            col = md.row_group(rg).column(1)
-            assert col.path_in_schema == "k"
-            mins.append(col.statistics.min)
-            maxs.append(col.statistics.max)
-        ranges.append((min(mins), max(maxs)))
-    ranges.sort()
-    assert len(ranges) >= 2
-    for (_, hi), (lo, _) in zip(ranges, ranges[1:]):
-        assert hi <= lo, f"overlapping file ranges: {ranges}"
 
 
 @pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])

@@ -92,3 +92,29 @@ def test_py_task_overhead_gaps_per_worker():
     rows = [(7, 5.0, 5.5), (9, 1.0, 1.25), (7, 1.0, 2.0), (9, 2.0, 3.0),
             (7, 2.25, 3.0), (8, 0.0, 1.0)]
     assert sorted(mod.worker_gaps(rows)) == [0.25, 0.75, 2.0]
+
+
+def _public_definitions(paths) -> dict[str, list[str]]:
+    """Public top-level function and class name → defining modules."""
+    defined: dict[str, list[str]] = {}
+    for path in paths:
+        for node in ast.parse(path.read_text(), str(path)).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                 ast.ClassDef)) \
+                    and not node.name.startswith("_"):
+                defined.setdefault(node.name, []).append(
+                    str(path.relative_to(REPO)))
+    return defined
+
+
+def test_public_names_defined_once():
+    """One implementation per capability: no two engine modules define
+    the same public function or class. ``queries/`` is left out, since
+    a query may share its operator's name."""
+    pkg = REPO / PACKAGE
+    paths = sorted(pkg.glob("*.py"))
+    for sub in ("operators", "functions", "sources", "streaming"):
+        paths += sorted((pkg / sub).rglob("*.py"))
+    twice = {name: mods for name, mods in _public_definitions(paths).items()
+             if len(mods) > 1}
+    assert not twice, f"public names defined in more than one module: {twice}"

@@ -8,7 +8,8 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from mapreducewordcount_spark.operators.upsert import merge_upsert, scd2_apply
+from mapreducewordcount_spark.operators.merge import merge_upsert
+from mapreducewordcount_spark.operators.scd2 import scd2_history
 from mapreducewordcount_spark.streaming.jobs import stream_deduped_docs
 
 TS = dt.datetime
@@ -19,9 +20,10 @@ def test_merge_upsert_update_and_insert(spark):
         [(1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0)],
         "id long, name string, v double")
     updates = spark.createDataFrame(
-        [(2, "b2", 21.0), (4, "d", 40.0)], "id long, name string, v double")
+        [(2, "b2", 21.0, 1, "U"), (4, "d", 40.0, 1, "U")],
+        "id long, name string, v double, _version int, _op string")
     got = {r.id: (r.name, r.v) for r in
-           merge_upsert(target, updates, "id").collect()}
+           merge_upsert(target, updates, ["id"]).collect()}
     assert got == {1: ("a", 10.0), 2: ("b2", 21.0),
                    3: ("c", 30.0), 4: ("d", 40.0)}
 
@@ -29,56 +31,54 @@ def test_merge_upsert_update_and_insert(spark):
 def test_merge_upsert_composite_key(spark):
     target = spark.createDataFrame([(1, "x", 1.0), (1, "y", 2.0)],
                                    "id long, sub string, v double")
-    updates = spark.createDataFrame([(1, "y", 9.0)],
-                                    "id long, sub string, v double")
+    updates = spark.createDataFrame(
+        [(1, "y", 9.0, 1, "U")],
+        "id long, sub string, v double, _version int, _op string")
     got = {(r.id, r.sub): r.v for r in
            merge_upsert(target, updates, ["id", "sub"]).collect()}
     assert got == {(1, "x"): 1.0, (1, "y"): 9.0}
 
 
 def test_merge_upsert_multi_row_batch_last_writer_wins(spark):
-    """A batch carrying several rows for one key must collapse to the
-    latest version when ``version_col`` is given — without it every
-    batch row survives the union (documented caller contract)."""
+    """A batch carrying several rows for one key collapses to the
+    row with the latest version."""
     target = spark.createDataFrame([(1, "a", TS(2024, 1, 1))],
                                    "id long, name string, ts timestamp")
     updates = spark.createDataFrame(
-        [(1, "mid", TS(2024, 3, 1)), (1, "new", TS(2024, 6, 1)),
-         (2, "ins", TS(2024, 2, 1))],
-        "id long, name string, ts timestamp")
-    rows = merge_upsert(target, updates, "id", version_col="ts").collect()
+        [(1, "mid", TS(2024, 3, 1), 1, "U"),
+         (1, "new", TS(2024, 6, 1), 2, "U"),
+         (2, "ins", TS(2024, 2, 1), 1, "U")],
+        "id long, name string, ts timestamp, _version int, _op string")
+    rows = merge_upsert(target, updates, ["id"]).collect()
     assert len(rows) == 2
     got = {r.id: r.name for r in rows}
     assert got == {1: "new", 2: "ins"}
 
 
 def test_scd2_closes_and_opens_versions(spark):
-    history = spark.createDataFrame(
-        [(1, "v1", TS(2024, 1, 1), None), (2, "w1", TS(2024, 1, 1), None)],
-        "id long, val string, valid_from timestamp, valid_to timestamp")
-    updates = spark.createDataFrame(
-        [(1, "v2", TS(2024, 6, 1))], "id long, val string, ts timestamp")
-    rows = scd2_apply(history, updates, key="id", ts_col="ts").collect()
+    snapshot = spark.createDataFrame([(1, "v1"), (2, "w1")],
+                                     "id long, val string")
+    changes = spark.createDataFrame(
+        [(1, "v2", 6, "U")], "id long, val string, _version int, _op string")
+    rows = scd2_history(snapshot, changes, ["id"]).collect()
     by_version = {(r.id, r.val): (r.valid_from, r.valid_to) for r in rows}
-    assert by_version[(1, "v1")] == (TS(2024, 1, 1), TS(2024, 6, 1))  # closed
-    assert by_version[(1, "v2")] == (TS(2024, 6, 1), None)           # opened
-    assert by_version[(2, "w1")] == (TS(2024, 1, 1), None)           # untouched
+    assert by_version[(1, "v1")] == (0, 6)     # closed
+    assert by_version[(1, "v2")] == (6, None)  # opened
+    assert by_version[(2, "w1")] == (0, None)  # untouched
 
 
 def test_scd2_multiple_updates_one_batch_single_open_version(spark):
     """Two updates for one key in a batch: the earlier one must close
-    at the later one's timestamp — exactly one open version remains."""
-    history = spark.createDataFrame(
-        [(1, "v1", TS(2024, 1, 1), None)],
-        "id long, val string, valid_from timestamp, valid_to timestamp")
-    updates = spark.createDataFrame(
-        [(1, "v2", TS(2024, 3, 1)), (1, "v3", TS(2024, 6, 1))],
-        "id long, val string, ts timestamp")
-    rows = scd2_apply(history, updates, key="id", ts_col="ts").collect()
+    at the later one's version — exactly one open version remains."""
+    snapshot = spark.createDataFrame([(1, "v1")], "id long, val string")
+    changes = spark.createDataFrame(
+        [(1, "v2", 3, "U"), (1, "v3", 6, "U")],
+        "id long, val string, _version int, _op string")
+    rows = scd2_history(snapshot, changes, ["id"]).collect()
     by_version = {(r.id, r.val): (r.valid_from, r.valid_to) for r in rows}
-    assert by_version[(1, "v1")] == (TS(2024, 1, 1), TS(2024, 3, 1))
-    assert by_version[(1, "v2")] == (TS(2024, 3, 1), TS(2024, 6, 1))
-    assert by_version[(1, "v3")] == (TS(2024, 6, 1), None)
+    assert by_version[(1, "v1")] == (0, 3)
+    assert by_version[(1, "v2")] == (3, 6)
+    assert by_version[(1, "v3")] == (6, None)
     open_rows = [k for k, (_, vt) in by_version.items() if vt is None]
     assert open_rows == [(1, "v3")]
 
@@ -174,7 +174,6 @@ def test_stream_cdc_view_refresh_matches_batch(spark, tmp_path,
     (VERDICT r9 next#6), which must be behaviorally identical."""
     import json
 
-    from mapreducewordcount_spark.operators.merge import merge_upsert
     from mapreducewordcount_spark.streaming import state as store
     from mapreducewordcount_spark.streaming.jobs import (
         start_cdc_agg_refresh,
@@ -486,7 +485,6 @@ def test_stream_gc_collects_superseded_segments_mid_stream(
     import json
     import os
 
-    from mapreducewordcount_spark.operators.merge import merge_upsert
     from mapreducewordcount_spark.streaming import state as store
     from mapreducewordcount_spark.streaming.jobs import (
         start_cdc_agg_refresh,
@@ -594,7 +592,6 @@ def test_stream_gc_versioned_format_drops_old_copies(spark, tmp_path):
     import json
     import os
 
-    from mapreducewordcount_spark.operators.merge import merge_upsert
     from mapreducewordcount_spark.streaming import state as store
     from mapreducewordcount_spark.streaming.jobs import (
         start_cdc_agg_refresh,
