@@ -32,6 +32,13 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """Every registry query as ``fn(spark, sf_dir) -> DataFrame``.
+
+    Release contract: some queries persist intermediates their plan
+    reads on several branches, and the returned frame reads those
+    cached blocks. They stay cached until the code that runs the
+    action calls ``spark.catalog.clearCache()``; call it once a
+    query's result is consumed, before the next query is built."""
     return {name: spec.spark_fn for name, spec in all_queries().items()}
 
 

@@ -394,6 +394,9 @@ def run_session() -> dict:
                 specs[name].spark_fn(spark, sf_dir).write \
                     .mode("overwrite").format("noop").save()
                 runs.append(time.perf_counter() - t0)
+                # every rep starts cold: the next rep must not read the
+                # blocks this one persisted
+                spark.catalog.clearCache()
             timings[name] = round(statistics.median(runs), 3)
         except Exception as exc:  # noqa: BLE001
             timings[name] = None
@@ -412,7 +415,8 @@ def run_session() -> dict:
               "core_total": core_total, "queries": timings, "sf": sf_dir,
               "subset": only or "headline",
               "env_start": env_start, "env_end": _env_fingerprint(),
-              "method": "median-of-3, cache-cleared+GC between queries"}
+              "method": "median-of-3, cache cleared after every rep, "
+                        "GC between queries"}
     if errors:
         report["errors"] = errors
     # self-identify a contended window IN the record (VERDICT r12
@@ -610,7 +614,8 @@ def main() -> None:
         # read as plan changes (VERDICT r12 wrong#1 / next#3)
         "contended": contended,
         "method": (f"{len(reports)} fresh-JVM sessions x (median-of-3 "
-                   "per query, cache-cleared+GC between queries); "
+                   "per query, cache cleared after every rep, GC "
+                   "between queries); "
                    "headline = median session total"),
     }
     if contended:

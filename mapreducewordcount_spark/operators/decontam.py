@@ -27,7 +27,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from mapreducewordcount_spark.cache import persist_tracked, release_query_cache
 from mapreducewordcount_spark.functions.text_metrics import shingles
 
 
@@ -212,14 +211,11 @@ def contamination_report_bloom(train: DataFrame, eval_docs: DataFrame,
     side is only the Bloom survivors — AQE picks the strategy.
 
     The eval n-gram frame is persisted (the Bloom build and the
-    exact-verify join both consume it) through ``cache.py``'s
-    tracked registry: each call releases the PREVIOUS invocation's
-    frames, so repeated library calls in one session never accumulate
-    cached partitions (ADVICE r7); long-lived applications can drop
-    the last frame explicitly via ``release_query_cache`` once the
-    result is consumed."""
-    release_query_cache()
-    ngrams = persist_tracked(eval_ngram_set(eval_docs, text_col, n))
+    exact-verify join both consume it). It stays cached until the
+    caller that runs the action releases it with
+    ``spark.catalog.clearCache()`` once the result is consumed;
+    repeated calls on the same input reuse the one cached plan."""
+    ngrams = eval_ngram_set(eval_docs, text_col, n).persist()
     bits, m = bloom_ngram_filter(ngrams, "ngram", bits_per_elem, k)
     exploded = (train
                 .select(F.col(id_col), F.explode_outer(

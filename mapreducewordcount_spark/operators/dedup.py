@@ -23,6 +23,13 @@ Scale ladder (which one to use at which size):
    cheapest signature, coarser than MinHash.
 5. ``embedding_dup_pairs`` — semantic near-dups over embeddings;
    ``embedding_dup_pairs_lsh`` is its OR-banded sign-LSH scale path.
+
+The pair generators persist the intermediates their plans read on
+several branches (shingle arrays, band tables, signature tables) and
+return a lazy frame that reads them. The persisted blocks live until
+the code that runs the action calls ``spark.catalog.clearCache()``
+once the result is consumed, so several generators built before one
+action each keep their persisted frames in the plan.
 """
 
 from __future__ import annotations
@@ -31,7 +38,6 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from mapreducewordcount_spark.cache import persist_tracked, release_query_cache
 from mapreducewordcount_spark.functions.vectors import cosine_from_norms, norm
 from mapreducewordcount_spark.functions.text_metrics import (
     fingerprint_md5,
@@ -85,8 +91,7 @@ def shingle_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
     """
     # materialized once: sizes, and both sides of the self-join,
     # otherwise re-tokenize the corpus per reference
-    release_query_cache()
-    sh = persist_tracked(_doc_shingles(docs, id_col, text_col, n))
+    sh = _doc_shingles(docs, id_col, text_col, n).persist()
     sizes = sh.select("doc_id", F.size("shingles").alias("n_sh"))
     exploded = sh.select("doc_id", F.explode("shingles").alias("sh"))
     a, b = exploded.alias("a"), exploded.alias("b")
@@ -143,8 +148,7 @@ def prefix_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
     t = float(threshold)
     if not 0.0 < t <= 1.0:
         raise ValueError(f"threshold={t} must be in (0, 1]")
-    release_query_cache()
-    sh = persist_tracked(_doc_shingles(docs, id_col, text_col, n))
+    sh = _doc_shingles(docs, id_col, text_col, n).persist()
     tok = sh.select("doc_id", F.size("shingles").alias("sz"),
                     F.explode("shingles").alias("e"))
     df_freq = tok.groupBy("e").agg(F.count(F.lit(1)).alias("df"))
@@ -154,11 +158,11 @@ def prefix_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
     # self-join — without it Catalyst recomputes the df-join + window
     # lineage twice (the round-1 "materialize frames referenced by
     # multiple joins" lesson; measured −44% at sf0.1)
-    prefix = persist_tracked(
-        tok.join(df_freq, "e")
-        .withColumn("pos", F.row_number().over(w))
-        .filter(F.col("pos") <= p_len)
-        .select("doc_id", "sz", "e"))
+    prefix = (tok.join(df_freq, "e")
+              .withColumn("pos", F.row_number().over(w))
+              .filter(F.col("pos") <= p_len)
+              .select("doc_id", "sz", "e")
+              .persist())
     a = prefix.select(F.col("doc_id").alias("a_id"),
                       F.col("sz").alias("a_sz"), "e")
     b = prefix.select(F.col("doc_id").alias("b_id"),
@@ -261,8 +265,7 @@ def minhash_lsh_pairs(docs: DataFrame, id_col: str = "doc_id",
     round-1 bench tail); persisted blocks materialize inside the live
     execution and read back clean.
     """
-    release_query_cache()
-    sh = persist_tracked(_doc_shingles(docs, id_col, text_col, n))
+    sh = _doc_shingles(docs, id_col, text_col, n).persist()
     banded = _banded_signatures(sh, num_hashes, bands)
     a, b = banded.alias("a"), banded.alias("b")
     candidates = (a.join(b, (F.col("a.band") == F.col("b.band"))
@@ -309,9 +312,9 @@ def _banded_signatures(sh: DataFrame, num_hashes: int,
             f"CAST(signature[{b * rows + r}] AS STRING)"
             for r in range(rows)) + "))"
         for b in range(bands)) + ")"
-    return persist_tracked(sig.select(
+    return sig.select(
         "doc_id",
-        F.posexplode(F.expr(band_arr)).alias("band", "band_hash")))
+        F.posexplode(F.expr(band_arr)).alias("band", "band_hash")).persist()
 
 
 def minhash_lsh_cross_pairs(index_docs: DataFrame, batch_docs: DataFrame,
@@ -330,9 +333,8 @@ def minhash_lsh_cross_pairs(index_docs: DataFrame, batch_docs: DataFrame,
     instead of O(index²-shaped) work. Output (index_id, batch_id,
     jaccard ≥ threshold), exact-verified like the self-join form.
     """
-    release_query_cache()
-    sh_i = persist_tracked(_doc_shingles(index_docs, id_col, text_col, n))
-    sh_b = persist_tracked(_doc_shingles(batch_docs, id_col, text_col, n))
+    sh_i = _doc_shingles(index_docs, id_col, text_col, n).persist()
+    sh_b = _doc_shingles(batch_docs, id_col, text_col, n).persist()
     banded_i = _banded_signatures(sh_i, num_hashes, bands)
     banded_b = _banded_signatures(sh_b, num_hashes, bands)
     i, b = banded_i.alias("i"), banded_b.alias("b")
@@ -545,7 +547,6 @@ def simhash_pairs(docs: DataFrame, id_col: str = "doc_id",
     Empty documents emit NO signature row — see ``simhash_docs``.
     """
     sim = simhash_docs(docs, id_col, text_col)
-    release_query_cache()
     return signature_hamming_pairs(sim, id_col="doc_id",
                                    sig_col="simhash",
                                    max_hamming=max_hamming)
@@ -630,16 +631,14 @@ def signature_hamming_pairs(sigs: DataFrame, id_col: str = "doc_id",
     the shuffle moves signatures, never the underlying content.
     """
     band_plan = hamming_band_plan(max_hamming)  # validates the radius
-    release_query_cache()  # bound storage to this invocation (honest-cold)
-    sig = persist_tracked(
-        sigs.select(F.col(id_col).alias("doc_id"),
-                    F.col(sig_col).alias("__sig")))
+    sig = sigs.select(F.col(id_col).alias("doc_id"),
+                      F.col(sig_col).alias("__sig")).persist()
 
     if collapse_identical:
         # one representative per distinct signature (min id), via a
         # partial-aggregable groupBy — never a window over __sig
-        reps = persist_tracked(
-            sig.groupBy("__sig").agg(F.min("doc_id").alias("doc_id")))
+        reps = (sig.groupBy("__sig").agg(F.min("doc_id").alias("doc_id"))
+                .persist())
         star = (sig.join(reps.select("__sig",
                                      F.col("doc_id").alias("__rep")),
                          "__sig")
@@ -699,12 +698,11 @@ def embedding_dup_pairs(embeddings: DataFrame, id_col: str = "vec_id",
     # embedding_dup_pairs_lsh's docstring and SCALE.md (round 8).
     from mapreducewordcount_spark.sources.tables import spread
 
-    release_query_cache()
-    v = persist_tracked(
-        spread(embeddings)
-        .select(F.col(id_col).alias("id"),
-                F.col(vec_col).alias("vec"),
-                norm(vec_col).alias("nrm")))
+    v = (spread(embeddings)
+         .select(F.col(id_col).alias("id"),
+                 F.col(vec_col).alias("vec"),
+                 norm(vec_col).alias("nrm"))
+         .persist())
     a = v.select(F.col("id").alias("a_id"), F.col("vec").alias("a_vec"),
                  F.col("nrm").alias("a_n"))
     b = v.select(F.col("id").alias("b_id"), F.col("vec").alias("b_vec"),
@@ -749,10 +747,8 @@ def embedding_dup_pairs_lsh(embeddings: DataFrame, id_col: str = "vec_id",
     """
     # both sides of the candidate self-join read the band table;
     # persisted, the banding UDF runs once instead of ~1.5x
-    release_query_cache()
-    banded = persist_tracked(
-        embedding_band_keys(embeddings, id_col, vec_col, dim, n_bands,
-                            band_width, corpus_size))
+    banded = embedding_band_keys(embeddings, id_col, vec_col, dim, n_bands,
+                                 band_width, corpus_size).persist()
     return embedding_pairs_from_banded(banded, embeddings, threshold,
                                        id_col, vec_col)
 
@@ -871,8 +867,7 @@ def winnow_pairs(docs: DataFrame, id_col: str = "doc_id",
     quadratically within their bucket only; drop-list them upstream
     the way a production pipeline drops stop-shingles.
     """
-    release_query_cache()
-    fp = persist_tracked(winnow_fingerprint_docs(docs, id_col, text_col, n, w))
+    fp = winnow_fingerprint_docs(docs, id_col, text_col, n, w).persist()
     exploded = fp.select("doc_id", F.explode("selected").alias("h"))
     a, b = exploded.alias("a"), exploded.alias("b")
     return (a.join(b, (F.col("a.h") == F.col("b.h"))

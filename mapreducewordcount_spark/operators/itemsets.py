@@ -34,7 +34,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from mapreducewordcount_spark.cache import persist_tracked, release_query_cache
 
 
 def basket_sets(items: DataFrame, basket_col: str, item_col: str,
@@ -111,19 +110,16 @@ def pair_affinity(items: DataFrame, basket_col: str, item_col: str,
     rule confidences ``P(b|a)``/``P(a|b)``, and the lift
     ``n_both·N / (n_a·n_b)`` over the capped population.
 
-    Plan: one shuffle to build baskets, one partial-agg pair count,
+    Plan: a basket shuffle per consumer, one partial-agg pair count,
     a broadcast-sized marginal join (items ≪ pairs), and a 1-row
     broadcast cross join for N. The min-support filter runs BEFORE
     the joins, so only surviving pairs pay join cost.
     """
-    release_query_cache()
-    # three consumers (pair counts, marginals, N) reference the basket
-    # frame; unpersisted, Catalyst re-runs the fact-table scan + basket
-    # shuffle once PER consumer (seen as 3× the exchanges in the plan —
-    # the round-1 "materialize frames referenced by multiple joins"
-    # lesson). Persisted, the groupBy lineage runs once.
-    sets = persist_tracked(basket_sets(items, basket_col, item_col,
-                                       max_basket))
+    # three consumers (pair counts, marginals, N) read the basket
+    # frame, each planning its own scan + basket groupBy; caching the
+    # baskets instead measured slower (part_pair_affinity at sf0.1 on
+    # 4 cores: 3.09 s persisted, 2.63 s not, 9 of 10 pairs)
+    sets = basket_sets(items, basket_col, item_col, max_basket)
     exploded = sets.select("basket", F.explode("items").alias("item"))
     n_baskets = sets.agg(
         F.count(F.lit(1)).alias("n_baskets"))

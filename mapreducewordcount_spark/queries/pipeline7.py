@@ -49,14 +49,9 @@ from mapreducewordcount_spark.sources.tables import load_table, spread
 def _chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The chunk table (``cdc_chunk_model``), persisted for the
     queries that read it on several plan branches, so the chunking
-    UDF runs once per query."""
-    from mapreducewordcount_spark.cache import (
-        persist_tracked,
-        release_query_cache,
-    )
-
-    release_query_cache()
-    return persist_tracked(cdc_chunk_model(spark, sf_dir))
+    UDF runs once per query. The blocks stay cached until the caller
+    that runs the action calls ``spark.catalog.clearCache()``."""
+    return cdc_chunk_model(spark, sf_dir).persist()
 
 
 def doc_cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:

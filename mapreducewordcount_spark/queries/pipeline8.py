@@ -79,17 +79,11 @@ def _predicted_langs(spark: SparkSession,
     Full-corpus fitting is correct here: the mixture plan is
     production inference over unlabeled crawl, not an accuracy
     estimate (the holdout protocol lives in ``doc_language_ngram``)."""
-    from mapreducewordcount_spark.cache import (
-        persist_tracked,
-        release_query_cache,
-    )
     from mapreducewordcount_spark.operators import langid
 
     docs = spread(load_table(spark, sf_dir, "documents"))
-    # tracked-released (VERDICT r10 wrong#1): the feature block from a
-    # prior invocation is dropped before this one persists its own
-    release_query_cache()
-    feats = persist_tracked(langid.char_ngram_counts(docs))
+    # featurize ONCE: fit and scoring share the persisted frame
+    feats = langid.char_ngram_counts(docs).persist()
     wt = langid.langid_weights(docs, feats=feats)
     pred = langid.langid_scores(docs, wt, feats=feats)
     return docs, pred

@@ -61,8 +61,8 @@ AFFINITY_MAX_BASKET = 64
 def part_pair_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Market-basket association pairs over lineitem: parts that ship
     together in ≥2 orders, with joint/marginal order counts and lift —
-    the Apriori-style first pass (operators/itemsets.py). One basket
-    shuffle + one partial-agg pair count; marginals and the 1-row
+    the Apriori-style first pass (operators/itemsets.py). Basket
+    shuffles + one partial-agg pair count; marginals and the 1-row
     basket total broadcast onto the surviving pairs."""
     li = load_table(spark, sf_dir, "lineitem")
     rep = pair_affinity(li, "l_orderkey", "l_partkey",

@@ -35,11 +35,18 @@ cluster at 100 TB:
   keeps the cached directory while the archive's stat is unchanged.
 - **session timezone UTC** so timestamp semantics match the DuckDB
   oracle and are deployment-independent.
+- **a per-session warehouse directory** under the temp dir, unless the
+  caller passes ``spark.sql.warehouse.dir``: Spark's default is
+  ``<cwd>/spark-warehouse``, so a catalog table written from a
+  checkout (``sources/bucketed.py``) would land inside it. The
+  directory is removed when the Python process exits.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import SparkSession
@@ -79,7 +86,12 @@ def get_spark(app_name: str = "mapreducewordcount_spark",
     )
     if not os.environ.get("SPARK_MASTER") and "SPARK_HOME_CLUSTER" not in os.environ:
         builder = builder.master(os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]"))
-    for k, v in (extra_conf or {}).items():
+    extra_conf = extra_conf or {}
+    if "spark.sql.warehouse.dir" not in extra_conf:
+        warehouse = tempfile.mkdtemp(prefix="mrwc-warehouse-")
+        atexit.register(shutil.rmtree, warehouse, True)
+        builder = builder.config("spark.sql.warehouse.dir", warehouse)
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

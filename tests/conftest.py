@@ -1,12 +1,22 @@
 from __future__ import annotations
 
 import os
+import tempfile
 
 import pytest
+from hypothesis import settings
+from hypothesis.configuration import set_hypothesis_home_dir
 
 SF_SMOKE = os.environ.get("SPARK_GRAFT_SMOKE_DIR", "/root/testdata/sf0.001")
 SF_ORACLE = os.environ.get("SPARK_GRAFT_ORACLE_DIR", "/root/testdata/sf0.01")
 REFERENCE_CORPUS = "/root/reference/files/inputs"
+
+# A test run writes nothing into the checkout: no example database,
+# and hypothesis's unicode charmap cache goes to the temp dir instead
+# of ``<cwd>/.hypothesis``.
+settings.register_profile("engine", database=None)
+settings.load_profile("engine")
+set_hypothesis_home_dir(os.path.join(tempfile.gettempdir(), "hypothesis"))
 
 
 @pytest.fixture(scope="session")
@@ -15,6 +25,19 @@ def spark():
 
     s = get_spark("mapreducewordcount_spark-tests")
     yield s
+
+
+@pytest.fixture(autouse=True)
+def _clear_spark_cache():
+    """Release what each test persisted, so no later test's plan reads
+    a cached fragment of an earlier one. Queries leave their persisted
+    intermediates to the code that runs the action."""
+    yield
+    from pyspark.sql import SparkSession
+
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        active.catalog.clearCache()
 
 
 @pytest.fixture(scope="session")
@@ -48,3 +71,12 @@ def corpus_dir(tmp_path_factory):
         with open(d / name, "w", encoding="utf-8", newline="") as f:
             f.write(text)
     return str(d)
+
+
+def plan_reads_cache(df) -> bool:
+    """Whether a plan built now from ``df``'s logical plan reads a
+    persisted block (``InMemoryRelation``). ``df``'s own plan was
+    matched against the cache when it was first analyzed; an alias
+    gives a new query execution that looks the cache up again."""
+    qe = df.alias("fresh")._jdf.queryExecution()
+    return "InMemoryRelation" in qe.withCachedData().toString()

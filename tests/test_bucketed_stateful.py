@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import os
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -47,6 +50,33 @@ def test_cobucketed_join_has_no_exchange(spark):
                        str(64 * 1024 * 1024))
         drop_table(spark, "orders_b")
         drop_table(spark, "lineitem_b")
+
+
+def _checkout_snapshot() -> dict[str, int]:
+    """Every file under the checkout (not ``.git``, not
+    ``__pycache__``) with its mtime."""
+    root = Path(__file__).resolve().parent.parent
+    snap = {}
+    for d, dirs, files in os.walk(root):
+        dirs[:] = [x for x in dirs if x not in (".git", "__pycache__")]
+        for f in files:
+            path = os.path.join(d, f)
+            snap[os.path.relpath(path, root)] = os.stat(path).st_mtime_ns
+    return snap
+
+
+def test_bucketed_query_writes_nothing_into_the_checkout(spark):
+    """The catalog tables ``bucketed_order_revenue`` writes land in the
+    session's warehouse directory, never under the working directory
+    the tests run from (the repo root)."""
+    from mapreducewordcount_spark.queries.bucketed_join import (
+        bucketed_order_revenue,
+    )
+
+    before = _checkout_snapshot()
+    bucketed_order_revenue(spark, SF_ORACLE) \
+        .write.mode("overwrite").format("noop").save()
+    assert _checkout_snapshot() == before
 
 
 def test_stateful_running_totals_accumulate_across_batches(spark, tmp_path):

@@ -1,16 +1,16 @@
-"""One tracked-persist registry (``cache.py``) for every persisting
-operator and query: an entry point's release must never sweep a frame
-that the query being built still needs."""
+"""Persisted query intermediates live until the code that runs the
+action clears the cache: the frame a persisting query returns reads
+its cached blocks, and ``spark.catalog.clearCache()`` releases them
+all."""
 
 from __future__ import annotations
 
 import pytest
 
-from mapreducewordcount_spark import cache
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, plan_reads_cache
 
-#: registry queries whose construction persists through
-#: ``cache.persist_tracked`` (a survey of the full registry at sf0.001)
+#: registry queries whose construction persists an intermediate (a
+#: survey of the full registry at sf0.001)
 PERSISTING = (
     "curate_corpus", "curate_corpus_best", "decontam_bloom_report",
     "decontam_minhash_report", "dedup_cluster_stats",
@@ -21,36 +21,38 @@ PERSISTING = (
     "incremental_neardup_report", "leakage_safe_splits",
     "media_audio_fp_pairs", "media_image_dhash_pairs",
     "mixture_on_predicted_lang", "pack_curated_corpus",
-    "part_pair_affinity", "source_drift_tv", "vocab_overlap_hll",
-    "vocab_overlap_hll_sketch",
+    "source_drift_tv", "vocab_overlap_hll_sketch",
+)
+
+#: queries whose persisted pairs feed ``dedup.dup_groups``: its eager
+#: local checkpoint reads the persist while the query is built, and the
+#: returned plan reads the checkpoint instead
+CHECKPOINTED = (
+    "curate_corpus", "curate_corpus_best", "dedup_cluster_stats",
+    "dedup_groups", "dedup_survivors", "leakage_safe_splits",
+    "pack_curated_corpus",
 )
 
 
-@pytest.fixture()
-def recorded(monkeypatch):
-    """Every frame registered through ``persist_tracked`` during the
-    test, including frames a later release already swept."""
-    seen = []
-
-    class Recording(list):
-        def append(self, df):
-            seen.append(df)
-            super().append(df)
-
-    monkeypatch.setattr(cache, "_TRACKED", Recording())
-    yield seen
-    cache.release_query_cache()
-
-
 @pytest.mark.parametrize("name", PERSISTING)
-def test_query_keeps_every_tracked_frame_cached(spark, recorded, name):
-    """When ``spark_fn`` returns, every frame any of the query's
-    operators persisted is still cached."""
+def test_query_keeps_every_tracked_frame_cached(spark, name):
+    """The frames a query persisted are still cached when ``spark_fn``
+    returns, and the returned frame reads them; clearing the cache
+    after the action releases every cached block (local checkpoints
+    are RDD-level state that ``clearCache`` does not own)."""
     from mapreducewordcount_spark.queries import all_queries
 
-    cache.release_query_cache()
-    all_queries()[name].spark_fn(spark, SF_SMOKE)
-    assert recorded, f"{name} no longer persists through cache.py"
-    released = [i for i, df in enumerate(recorded)
-                if not df.storageLevel.useMemory]
-    assert not released, f"{name}: tracked frames {released} were released"
+    jsc = spark.sparkContext._jsc
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    df = all_queries()[name].spark_fn(spark, SF_SMOKE)
+    assert not cache_manager.isEmpty(), f"{name} persists nothing"
+    assert plan_reads_cache(df) != (name in CHECKPOINTED), \
+        f"{name}: the returned plan reads a persisted frame: " \
+        f"{plan_reads_cache(df)}"
+    df.write.mode("overwrite").format("noop").save()
+    assert not jsc.getPersistentRDDs().isEmpty()
+    spark.catalog.clearCache()
+    assert cache_manager.isEmpty()
+    left = jsc.getPersistentRDDs().values()
+    assert all(rdd.rdd().isLocallyCheckpointed() for rdd in left)

@@ -18,9 +18,7 @@ from tests.conftest import SF_ORACLE
 def docs(spark):
     from mapreducewordcount_spark.sources.tables import load_table
 
-    df = load_table(spark, SF_ORACLE, "documents").cache()
-    yield df
-    df.unpersist()  # a lingering cache rewrites other tests' scans
+    return load_table(spark, SF_ORACLE, "documents")
 
 
 def test_minhash_recall_vs_exact(spark, docs):
@@ -298,35 +296,26 @@ def test_prefix_jaccard_agrees_with_quadratic_on_random_corpus(spark):
         assert pf == exact, f"mismatch at threshold {t}"
 
 
-def test_pair_generators_release_prior_invocation_cache(spark):
-    """Each pair-generator invocation unpersists the PREVIOUS
-    invocation's intermediate frames (ADVICE r3: persist-without-
-    unpersist leaked executor storage for the app lifetime), while
-    the current invocation's frames stay hot for its consumer."""
-    from mapreducewordcount_spark import cache
+def test_lazily_composed_pair_generators_keep_their_persists(spark):
+    """Two persisting pair generators built on different inputs before
+    any action both keep reading their persisted intermediates:
+    building the second never unpersists the first one's frames."""
+    from tests.conftest import plan_reads_cache
 
-    cache.release_query_cache()
-    docs = spark.createDataFrame(
+    a = spark.createDataFrame(
         [(i, f"u{i} a b c d e") for i in range(6)],
         "doc_id long, text string")
-    dd.shingle_jaccard_pairs(docs).collect()
-    assert len(cache._TRACKED) == 1
-    first = cache._TRACKED[0]
-    assert first.storageLevel.useMemory  # hot for its own consumer
-
-    # different source → different plan: otherwise storageLevel (a
-    # plan-keyed CacheManager lookup) would see the NEW invocation's
-    # identical-plan persist and mask the release
-    other = spark.createDataFrame(
+    b = spark.createDataFrame(
         [(i, f"v{i} f g h i j") for i in range(6)],
         "doc_id long, text string")
-    dd.minhash_lsh_pairs(other).collect()
-    # the previous invocation's frame was released...
-    assert not first.storageLevel.useMemory
-    assert all(f is not first for f in cache._TRACKED)
-    # ...and the explicit release empties the registry entirely
-    cache.release_query_cache()
-    assert not cache._TRACKED
+    exact = dd.shingle_jaccard_pairs(a)
+    lsh = dd.minhash_lsh_pairs(b)
+    assert plan_reads_cache(exact)
+    assert plan_reads_cache(lsh)
+    # every pair shares 3 of its 5 distinct shingles
+    assert {r.jaccard for r in exact.collect()} == {0.6}
+    assert exact.count() == 15
+    assert {r.jaccard for r in lsh.collect()} <= {0.6}
 
 
 def test_simhash_rowlocal_matches_batch_form(spark):

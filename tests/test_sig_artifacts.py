@@ -177,6 +177,7 @@ def test_artifact_queries_never_write(spark, monkeypatch):
     for name in names:
         (specs[name].spark_fn(spark, SF_SMOKE)
          .write.mode("overwrite").format("noop").save())
+        spark.catalog.clearCache()
     assert _tree_digest(REPO_ROOT / "artifacts") == before
 
 

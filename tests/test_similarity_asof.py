@@ -16,9 +16,7 @@ from tests.conftest import SF_ORACLE
 def emb(spark):
     from mapreducewordcount_spark.sources.tables import load_table
 
-    df = load_table(spark, SF_ORACLE, "embeddings").cache()
-    yield df
-    df.unpersist()  # a lingering cache rewrites other tests' scans
+    return load_table(spark, SF_ORACLE, "embeddings")
 
 
 def _queries(emb):

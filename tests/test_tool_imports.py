@@ -81,6 +81,10 @@ def test_dump_plans_normalizes_session_counters():
         "Project [x#NL, lambda x_N#N] plan_id=N MapPartitionsRDD[N]")
     # names that merely end in digits are plan content, not counters
     assert mod.normalize_plan("col_1#3") == "col_1#N"
+    # the session's warehouse directory differs per session
+    assert mod.normalize_plan("InMemoryFileIndex[file:/tmp/wh-1/t_b]",
+                              "file:/tmp/wh-1") == \
+        "InMemoryFileIndex[file:<warehouse>/t_b]"
 
 
 def test_py_task_overhead_gaps_per_worker():
@@ -118,3 +122,71 @@ def test_public_names_defined_once():
     twice = {name: mods for name, mods in _public_definitions(paths).items()
              if len(mods) > 1}
     assert not twice, f"public names defined in more than one module: {twice}"
+
+
+_EMPTY_FACTORIES = ("set", "list", "dict")
+_LOCKS = ("Lock", "RLock")
+
+
+def _module_level_stores(tree: ast.Module) -> list[tuple[int, str]]:
+    """``(line, source)`` of every module-level lock and every
+    module-level name bound to an empty mutable container. Statements
+    under a module-level ``if``/``try``/``with`` count; function and
+    class bodies do not."""
+    found, todo = [], list(tree.body)
+    while todo:
+        node = todo.pop()
+        if isinstance(node, (ast.If, ast.Try, ast.With)):
+            todo += [n for field in ("body", "orelse", "finalbody")
+                     for n in getattr(node, field, [])]
+            todo += [n for h in getattr(node, "handlers", []) for n in h.body]
+            continue
+        if not isinstance(node, (ast.Assign, ast.AnnAssign)) \
+                or node.value is None:
+            continue
+        value = node.value
+        if isinstance(value, ast.Call):
+            fn = value.func
+            name = fn.attr if isinstance(fn, ast.Attribute) else \
+                getattr(fn, "id", None)
+            store = name in _LOCKS or (name in _EMPTY_FACTORIES
+                                       and not value.args
+                                       and not value.keywords)
+        else:
+            store = (isinstance(value, ast.List) and not value.elts
+                     or isinstance(value, ast.Dict) and not value.keys)
+        if store:
+            found.append((node.lineno, ast.unparse(node)))
+    return found
+
+
+def test_no_module_level_mutable_state():
+    """No package module keeps a module-level lock or a module-level
+    name bound to an empty ``[]``, ``{}``, ``set()``, ``list()`` or
+    ``dict()``: state a query needs lives in its frames or its
+    session, not in a registry shared by every caller in the
+    process."""
+    stores = {
+        str(path.relative_to(REPO)): found
+        for path in sorted((REPO / PACKAGE).rglob("*.py"))
+        if (found := _module_level_stores(
+            ast.parse(path.read_text(), str(path))))}
+    assert not stores, f"module-level mutable state: {stores}"
+
+
+def test_module_level_store_scan_finds_each_form():
+    src = ("import threading\n"
+           "from threading import RLock\n"
+           "A = []\n"
+           "B: dict[str, int] = {}\n"
+           "C = set()\n"
+           "if True:\n"
+           "    D = threading.Lock()\n"
+           "E = RLock()\n"
+           "F = (1, 2)\n"
+           "G = [1]\n"
+           "H = frozenset()\n"
+           "def f():\n"
+           "    local = []\n")
+    found = [line for line, _ in _module_level_stores(ast.parse(src))]
+    assert sorted(found) == [3, 4, 5, 7, 8]

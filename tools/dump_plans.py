@@ -12,9 +12,12 @@ the judge can diff plan claims against committed text.
 
 Session counters are normalized before writing — expression ids
 (``#123`` → ``#N``), exchange plan ids, lambda variable suffixes and
-RDD ids — so two checkouts' dumps compare with plain ``diff``: a line
-that differs is a plan change, not a counter that moved because an
-earlier query built more or fewer expressions.
+RDD ids — and the session's warehouse directory (``get_spark`` makes
+a fresh one per session) becomes ``<warehouse>``, so two checkouts'
+dumps compare with plain ``diff``: a line that differs is a plan
+change, not a counter that moved because an earlier query built more
+or fewer expressions. The cache is cleared after each query, so no
+plan reads a fragment an earlier query persisted.
 """
 
 from __future__ import annotations
@@ -36,8 +39,11 @@ _COUNTERS = (
 )
 
 
-def normalize_plan(text: str) -> str:
-    """Replace the session-counter ids in an explain dump with ``N``."""
+def normalize_plan(text: str, warehouse: str | None = None) -> str:
+    """Replace the session-counter ids in an explain dump with ``N``
+    and the ``warehouse`` directory, if given, with ``<warehouse>``."""
+    if warehouse:
+        text = text.replace(warehouse.removeprefix("file:"), "<warehouse>")
     for pattern, repl in _COUNTERS:
         text = pattern.sub(repl, text)
     return text
@@ -55,6 +61,7 @@ def main() -> int:
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("dump-plans")
+    warehouse = spark.conf.get("spark.sql.warehouse.dir")
     specs = all_queries()
     if not names:
         names = list(HEADLINE)
@@ -67,11 +74,12 @@ def main() -> int:
                 df.explain("formatted")
             with open(os.path.join(outdir, f"{name}_{suffix}.txt"),
                       "w") as f:
-                f.write(normalize_plan(buf.getvalue()))
+                f.write(normalize_plan(buf.getvalue(), warehouse))
             print(f"{name}: ok")
         except Exception as exc:  # noqa: BLE001
             rc = 1
             print(f"{name}: FAILED {type(exc).__name__}: {exc}"[:300])
+        spark.catalog.clearCache()
     spark.stop()
     return rc
 

@@ -90,6 +90,7 @@ for name in sorted(osql):
         if not ok: bad.append(name)
     except Exception as e:
         bad.append(name + " EXC:" + str(e)[:80])
+    spark.catalog.clearCache()
 print("MISMATCHES:", bad if bad else "NONE")
 sys.exit(1 if bad else 0)
 """

@@ -71,6 +71,7 @@ def main() -> int:
             rc = 1
             continue
         got = canon(qs[name](spark, sf_dir).toPandas())
+        spark.catalog.clearCache()
         want = canon(con.execute(osql[name]).df())
         ok = (list(got.columns) == list(want.columns)
               and len(got) == len(want))

@@ -47,6 +47,8 @@ def main() -> int:
         except Exception as exc:  # noqa: BLE001
             errs.append((name, str(exc)[:100]))
             continue
+        finally:
+            spark.catalog.clearCache()
         if "CartesianProduct" in plan:
             cart.append(name)
         n = plan.count("BroadcastNestedLoopJoin")

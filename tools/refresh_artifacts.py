@@ -55,6 +55,7 @@ def refresh(spark, sf_dir: str, check: bool = False,
             sa.materialize_signatures(df, name, key, *fam.sig_cols)
         else:
             sa.materialize_frame(df, name, key, list(fam.sort_cols))
+        spark.catalog.clearCache()
     return stale
 
 
