@@ -16,9 +16,12 @@ Scale ladder (which one to use at which size):
 2. ``minhash_lsh_pairs`` — candidate generation via banded MinHash;
    shuffle cost ~ O(docs × bands), then exact verification only on
    candidates. The scale path for near-dup mining.
-3. ``shingle_jaccard_pairs`` — exact all-pairs via shingle self-join;
-   quadratic in docs sharing a shingle. Correctness oracle and
-   small-corpus tool, not the 100 TB path.
+3. ``shingle_jaccard_pairs`` — the exact path: all pairs via a
+   shingle self-join, quadratic in docs sharing a shingle. Every
+   exact near-dup query runs it, and MinHash output is checked
+   against it; not the 100 TB path. Prefix filtering (AllPairs/PPJoin)
+   returns the same rows 2.5x slower on small-vocabulary corpora,
+   where every prefix shingle is common (SCALE.md).
 4. ``simhash_pairs`` — 64-bit simhash + banded Hamming candidates;
    cheapest signature, coarser than MinHash.
 5. ``embedding_dup_pairs`` — semantic near-dups over embeddings;
@@ -35,7 +38,7 @@ action each keep their persisted frames in the plan.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from mapreducewordcount_spark.functions.vectors import cosine_from_norms, norm
@@ -88,7 +91,11 @@ def shingle_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
 
     Exact but quadratic in docs-per-hot-shingle: at real scale run
     ``minhash_lsh_pairs`` and keep this as the verifier/oracle.
+    ``threshold`` must lie in (0, 1]: the equi-join only ever pairs
+    documents that share a shingle, so a threshold ≤ 0 would silently
+    drop every disjoint pair instead of returning it.
     """
+    _check_threshold(threshold)
     # materialized once: sizes, and both sides of the self-join,
     # otherwise re-tokenize the corpus per reference
     sh = _doc_shingles(docs, id_col, text_col, n).persist()
@@ -112,83 +119,6 @@ def shingle_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
                         F.col("n_inter").cast("double")
                         / (F.col("a_sh") + F.col("b_sh") - F.col("n_inter")))
             .filter(F.col("jaccard") >= threshold)
-            .select("a_id", "b_id", F.round("jaccard", 4).alias("jaccard")))
-
-
-def prefix_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
-                         text_col: str = "text", n: int = 3,
-                         threshold: float = 0.5) -> DataFrame:
-    """Exact n-gram Jaccard pairs at scale: prefix filtering
-    (the AllPairs/PPJoin family), NOT a quadratic self-join.
-
-    Same output contract as ``shingle_jaccard_pairs`` (it computes the
-    same math, so the two must agree row-for-row — pinned in tests),
-    but candidate generation only joins on *prefix* shingles:
-
-    1. order every document's shingle set by ascending global document
-       frequency (rarest first; ties on the shingle string so the
-       order is one total order shared by all docs);
-    2. keep each doc's first ``|S| - ceil(t·|S|) + 1`` shingles (the
-       prefix). Two sets with Jaccard ≥ t must share at least one
-       prefix element under a common total order — pigeonhole: a pair
-       that disagrees on every prefix element has too few elements
-       left to reach the required overlap;
-    3. equi-join prefixes on the shingle (plus the length filter
-       ``t·|A| ≤ |B| ≤ |A|/t`` both ways), then verify exact Jaccard
-       on the candidates only.
-
-    Scale shape: the join input is the rarest fraction of each set, so
-    hot boilerplate shingles (high df) are systematically *excluded*
-    from candidate keys — the opposite of the naive exploded join,
-    where they dominate the shuffle. Shuffle cost ≈ O(docs × prefix),
-    verify cost O(candidates). ``ceil`` is taken with a 1e-9 slack so
-    float noise in ``t·|S|`` can only lengthen a prefix (more
-    candidates), never shorten it (missed pairs).
-    """
-    t = float(threshold)
-    if not 0.0 < t <= 1.0:
-        raise ValueError(f"threshold={t} must be in (0, 1]")
-    sh = _doc_shingles(docs, id_col, text_col, n).persist()
-    tok = sh.select("doc_id", F.size("shingles").alias("sz"),
-                    F.explode("shingles").alias("e"))
-    df_freq = tok.groupBy("e").agg(F.count(F.lit(1)).alias("df"))
-    w = Window.partitionBy("doc_id").orderBy("df", "e")
-    p_len = F.col("sz") - F.ceil(F.col("sz") * t - 1e-9) + 1
-    # persist: the prefix frame feeds BOTH sides of the candidate
-    # self-join — without it Catalyst recomputes the df-join + window
-    # lineage twice (the round-1 "materialize frames referenced by
-    # multiple joins" lesson; measured −44% at sf0.1)
-    prefix = (tok.join(df_freq, "e")
-              .withColumn("pos", F.row_number().over(w))
-              .filter(F.col("pos") <= p_len)
-              .select("doc_id", "sz", "e")
-              .persist())
-    a = prefix.select(F.col("doc_id").alias("a_id"),
-                      F.col("sz").alias("a_sz"), "e")
-    b = prefix.select(F.col("doc_id").alias("b_id"),
-                      F.col("sz").alias("b_sz"), "e")
-    cand = (a.join(b, "e")
-            .filter((F.col("a_id") < F.col("b_id"))
-                    & (F.col("b_sz") >= F.ceil(F.col("a_sz") * t - 1e-9))
-                    & (F.col("a_sz") >= F.ceil(F.col("b_sz") * t - 1e-9)))
-            .select("a_id", "b_id")
-            .distinct())
-    av = sh.select(F.col("doc_id").alias("a_id"),
-                   F.col("shingles").alias("a_el"))
-    bv = sh.select(F.col("doc_id").alias("b_id"),
-                   F.col("shingles").alias("b_el"))
-    inter = F.size(F.array_intersect("a_el", "b_el"))
-    # survivors ≪ corpus in the typical case, but the candidate list
-    # still GROWS with the corpus — a forced broadcast would fail the
-    # job outright past the broadcast limit (ADVICE r5 on the sibling
-    # cross-pairs path). Unhinted, AQE broadcasts it whenever the
-    # runtime size fits (keeping the shingle table shuffle-free) and
-    # degrades to a shuffle join instead of failing when it doesn't.
-    return (cand.join(av, "a_id").join(bv, "b_id")
-            .withColumn("jaccard",
-                        inter.cast("double")
-                        / (F.size("a_el") + F.size("b_el") - inter))
-            .filter(F.col("jaccard") >= t)
             .select("a_id", "b_id", F.round("jaccard", 4).alias("jaccard")))
 
 
@@ -274,23 +204,7 @@ def minhash_lsh_pairs(docs: DataFrame, id_col: str = "doc_id",
                   .select(F.col("a.doc_id").alias("a_id"),
                           F.col("b.doc_id").alias("b_id"))
                   .distinct())
-    a_sh = sh.select(F.col("doc_id").alias("a_id"), F.col("shingles").alias("a_shingles"))
-    b_sh = sh.select(F.col("doc_id").alias("b_id"), F.col("shingles").alias("b_shingles"))
-    # candidates ≪ corpus in the typical case, but the list still
-    # GROWS with the corpus (≥O(docs) at any real dup rate) — a
-    # forced broadcast FAILS the job past the broadcast limit
-    # (ADVICE r5 on the cross-pairs sibling). Unhinted, AQE
-    # broadcasts whenever the runtime size fits (the larger shingle
-    # table never shuffles) and degrades to a shuffle join, not a
-    # failure, when it doesn't.
-    return (candidates.join(a_sh, "a_id").join(b_sh, "b_id")
-            .withColumn("n_inter",
-                        F.size(F.array_intersect("a_shingles", "b_shingles")))
-            .withColumn("jaccard",
-                        F.col("n_inter").cast("double")
-                        / (F.size("a_shingles") + F.size("b_shingles") - F.col("n_inter")))
-            .filter(F.col("jaccard") >= threshold)
-            .select("a_id", "b_id", F.round("jaccard", 4).alias("jaccard")))
+    return _verify_jaccard(candidates, sh, sh, "a_id", "b_id", threshold)
 
 
 def _banded_signatures(sh: DataFrame, num_hashes: int,
@@ -343,26 +257,44 @@ def minhash_lsh_cross_pairs(index_docs: DataFrame, batch_docs: DataFrame,
                   .select(F.col("i.doc_id").alias("index_id"),
                           F.col("b.doc_id").alias("batch_id"))
                   .distinct())
-    i_sh = sh_i.select(F.col("doc_id").alias("index_id"),
-                       F.col("shingles").alias("i_shingles"))
-    b_sh = sh_b.select(F.col("doc_id").alias("batch_id"),
-                       F.col("shingles").alias("b_shingles"))
-    # no forced broadcast (ADVICE r5): the candidate set is O(batch ×
-    # band collisions) and a production batch can exceed the driver's
-    # broadcast limit — a forced hint then FAILS the job. AQE sees the
-    # runtime size and still picks a broadcast join whenever the set
-    # actually is small; oversized candidate sets degrade to a shuffle
-    # join instead of an OOM.
-    return (candidates.join(i_sh, "index_id").join(b_sh, "batch_id")
-            .withColumn("n_inter",
-                        F.size(F.array_intersect("i_shingles", "b_shingles")))
+    return _verify_jaccard(candidates, sh_i, sh_b, "index_id", "batch_id",
+                           threshold)
+
+
+def _check_threshold(threshold: float) -> None:
+    if not 0.0 < threshold <= 1.0:
+        raise ValueError(f"threshold={threshold} must be in (0, 1]")
+
+
+def _verify_jaccard(candidates: DataFrame, sh_a: DataFrame, sh_b: DataFrame,
+                    a_id: str, b_id: str, threshold: float) -> DataFrame:
+    """Exact shingle Jaccard of candidate pairs → (a_id, b_id, jaccard)
+    rows with jaccard ≥ ``threshold``, rounded to 4 places.
+
+    ``candidates`` holds the pair ids in columns ``a_id``/``b_id``;
+    ``sh_a``/``sh_b`` are (doc_id, shingles) frames for each side. Each
+    side's shingle array is named after the first letter of its id
+    column (``a_shingles``, ``i_shingles``, ...).
+
+    No forced broadcast: the candidate set is small in the typical case
+    but still GROWS with the corpus (≥O(docs) at any real dup rate,
+    O(batch × band collisions) across corpora), and a forced hint FAILS
+    the job past the broadcast limit (ADVICE r5). Unhinted, AQE
+    broadcasts whenever the runtime size fits (the larger shingle table
+    never shuffles) and degrades to a shuffle join, not a failure, when
+    it doesn't.
+    """
+    _check_threshold(threshold)
+    a_el, b_el = f"{a_id[0]}_shingles", f"{b_id[0]}_shingles"
+    a_sh = sh_a.select(F.col("doc_id").alias(a_id), F.col("shingles").alias(a_el))
+    b_sh = sh_b.select(F.col("doc_id").alias(b_id), F.col("shingles").alias(b_el))
+    return (candidates.join(a_sh, a_id).join(b_sh, b_id)
+            .withColumn("n_inter", F.size(F.array_intersect(a_el, b_el)))
             .withColumn("jaccard",
                         F.col("n_inter").cast("double")
-                        / (F.size("i_shingles") + F.size("b_shingles")
-                           - F.col("n_inter")))
+                        / (F.size(a_el) + F.size(b_el) - F.col("n_inter")))
             .filter(F.col("jaccard") >= threshold)
-            .select("index_id", "batch_id",
-                    F.round("jaccard", 4).alias("jaccard")))
+            .select(a_id, b_id, F.round("jaccard", 4).alias("jaccard")))
 
 
 def dup_groups(pairs: DataFrame, a_col: str = "a_id",

@@ -46,12 +46,6 @@ def curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     w_fp = Window.partitionBy("fp")
     with_exact = scored.withColumn("exact_keep", F.min("doc_id").over(w_fp))
 
-    # NOTE on the pair generator: prefix_jaccard_pairs is row-identical
-    # (pinned in tests) and is the 100 TB form, but on THIS corpus the
-    # tiny ~31-word vocabulary makes every prefix shingle common, so
-    # its candidate join measured SLOWER than the direct form at sf0.1
-    # (10.3s vs 8.2s warm, measured round 3) — kept as documented
-    # swap-in for real web-scale vocabularies rather than defaulted.
     pairs = dd.shingle_jaccard_pairs(docs, threshold=0.5)
     groups = dd.dup_groups(pairs)  # doc_id, group_id (paired docs only)
 

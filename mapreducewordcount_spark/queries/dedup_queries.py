@@ -3,6 +3,9 @@
 Oracle notes:
 - ``dedup_exact`` / ``dedup_ngram_pairs`` / ``dedup_embedding_pairs`` /
   ``ann_cosine_topk`` are exactly SQL-expressible → full DuckDB oracles.
+- ``dedup_prefix_pairs`` registers ``dedup_ngram_pairs`` (same
+  function, same oracle) under the name of its bench row; SCALE.md
+  records why no prefix-filtering join backs it.
 - ``dedup_minhash_pairs`` shares the *exact-Jaccard* oracle: its LSH
   candidate stage is probabilistic, and the guarantee is
   corpus-measured, not absolute — at 64 hashes / 16 bands a pair AT
@@ -94,14 +97,6 @@ WHERE len(list_intersect(a.shingles, b.shingles))::DOUBLE
       / (len(a.shingles) + len(b.shingles)
          - len(list_intersect(a.shingles, b.shingles))) >= 0.5
 """
-
-
-def dedup_prefix_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact Jaccard pairs via prefix filtering (AllPairs/PPJoin
-    family): same result set as ``dedup_ngram_pairs`` — the same
-    DuckDB oracle — from a subquadratic candidate join."""
-    docs = load_table(spark, sf_dir, "documents")
-    return dd.prefix_jaccard_pairs(docs, threshold=0.5)
 
 
 def dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -751,7 +746,7 @@ QUERIES = {
     "ann_cosine_topk": QuerySpec(ann_cosine_topk, ANN_COSINE_SQL),
     "dedup_exact": QuerySpec(dedup_exact, DEDUP_EXACT_SQL),
     "dedup_ngram_pairs": QuerySpec(dedup_ngram_pairs, DEDUP_PAIRS_SQL),
-    "dedup_prefix_pairs": QuerySpec(dedup_prefix_pairs, DEDUP_PAIRS_SQL),
+    "dedup_prefix_pairs": QuerySpec(dedup_ngram_pairs, DEDUP_PAIRS_SQL),
     "dedup_minhash_pairs": QuerySpec(dedup_minhash_pairs, DEDUP_PAIRS_SQL),
     "dedup_simhash_pairs": QuerySpec(
         dedup_simhash_pairs,

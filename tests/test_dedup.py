@@ -247,53 +247,70 @@ def test_winnow_pairs_rank_near_dups_first(spark):
     assert (1, 3) not in pairs and (2, 3) not in pairs
 
 
-def test_prefix_jaccard_matches_exact_quadratic(spark, docs):
-    """prefix_jaccard_pairs is exact: identical rows (ids AND jaccard
-    values) to the quadratic all-pairs operator — the prefix filter is
-    a complete candidate generator, never a recall trade."""
-    exact = {(r.a_id, r.b_id): r.jaccard for r in
-             dd.shingle_jaccard_pairs(docs, threshold=0.5).collect()}
-    pf = {(r.a_id, r.b_id): r.jaccard for r in
-          dd.prefix_jaccard_pairs(docs, threshold=0.5).collect()}
-    assert exact and pf == exact
+def _brute_force_jaccard(shingle_rows, threshold):
+    """Every pair's exact Jaccard over collected shingle arrays, kept at
+    ``>= threshold`` and rounded HALF_UP to 4 places like ``F.round``."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    sets = sorted((r.doc_id, set(r.shingles)) for r in shingle_rows)
+    out = {}
+    for i, (a_id, a) in enumerate(sets):
+        for b_id, b in sets[i + 1:]:
+            j = len(a & b) / len(a | b)
+            if j >= threshold:
+                out[(a_id, b_id)] = float(Decimal(repr(j)).quantize(
+                    Decimal("0.0001"), ROUND_HALF_UP))
+    return out
 
 
-def test_prefix_jaccard_threshold_one_is_set_equality(spark):
-    rows = [(1, "alpha beta gamma delta"),
-            (2, "alpha beta gamma delta"),        # identical set
-            (3, "alpha beta gamma delta epsilon"),  # superset: j < 1
-            (4, "unrelated words entirely here")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {(r.a_id, r.b_id, r.jaccard)
-           for r in dd.prefix_jaccard_pairs(df, n=3, threshold=1.0).collect()}
-    assert got == {(1, 2, 1.0)}
-
-
-def test_prefix_jaccard_rejects_bad_threshold(spark):
-    df = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
-    for bad in (0.0, -0.1, 1.5):
-        with pytest.raises(ValueError):
-            dd.prefix_jaccard_pairs(df, threshold=bad)
-
-
-@pytest.mark.slow  # heavy sweep: default tier skips (pytest.ini, r14)
-def test_prefix_jaccard_agrees_with_quadratic_on_random_corpus(spark):
-    """Property-style sweep on a constructed corpus with heavy shingle
-    sharing and mixed sizes, across thresholds (float-ceil edges)."""
+def test_shingle_jaccard_matches_brute_force(spark):
+    """The self-join returns exactly the pairs (ids AND jaccard values)
+    a pairwise Python Jaccard over the same shingle arrays finds, across
+    thresholds: on a corpus with heavy shingle sharing and mixed sizes,
+    and on a set-equality corpus where threshold 1.0 keeps only the
+    identical shingle sets."""
     import random
 
     rng = random.Random(7)
     vocab = [f"w{i}" for i in range(30)]
-    rows = [(i, " ".join(rng.choice(vocab)
-                         for _ in range(rng.randint(3, 40))))
-            for i in range(60)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    for t in (0.1, 0.3, 0.5, 0.8):
-        exact = {(r.a_id, r.b_id): r.jaccard for r in
-                 dd.shingle_jaccard_pairs(df, threshold=t).collect()}
-        pf = {(r.a_id, r.b_id): r.jaccard for r in
-              dd.prefix_jaccard_pairs(df, threshold=t).collect()}
-        assert pf == exact, f"mismatch at threshold {t}"
+    shared = [(i, " ".join(rng.choice(vocab)
+                           for _ in range(rng.randint(3, 40))))
+              for i in range(60)]
+    # random docs alone share a few shingles but no pair reaches
+    # j = 0.1; near-copies with 1-6 replaced words spread pairs over
+    # the whole threshold range
+    for i in range(20):
+        words = shared[i][1].split()
+        for _ in range(rng.randint(1, 6)):
+            words[rng.randrange(len(words))] = rng.choice(vocab)
+        shared.append((100 + i, " ".join(words)))
+    set_equality = [(1, "alpha beta gamma delta"),
+                    (2, "alpha beta gamma delta"),        # identical set
+                    (3, "alpha beta gamma delta epsilon"),  # superset: j < 1
+                    (4, "unrelated words entirely here")]
+    found = {}
+    for name, rows in (("shared", shared), ("set_equality", set_equality)):
+        df = spark.createDataFrame(rows, "doc_id long, text string")
+        shingle_rows = dd._doc_shingles(df, "doc_id", "text", 3).collect()
+        for t in (0.1, 0.3, 0.5, 0.8, 1.0):
+            want = _brute_force_jaccard(shingle_rows, t)
+            got = {(r.a_id, r.b_id): r.jaccard for r in
+                   dd.shingle_jaccard_pairs(df, threshold=t).collect()}
+            assert got == want, f"{name}: mismatch at threshold {t}"
+            found[name, t] = len(want)
+    assert found["shared", 0.1] > found["shared", 0.8] > 0
+    assert want == {(1, 2): 1.0}  # set_equality at t = 1.0
+
+
+def test_jaccard_pair_generators_reject_bad_threshold(spark):
+    """A threshold outside (0, 1] raises: the shingle equi-join only
+    pairs documents that share a shingle, so a threshold <= 0 would
+    silently drop every disjoint pair instead of returning it."""
+    df = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
+    for pair_fn in (dd.shingle_jaccard_pairs, dd.minhash_lsh_pairs):
+        for bad in (0.0, -0.1, 1.5):
+            with pytest.raises(ValueError):
+                pair_fn(df, threshold=bad)
 
 
 def test_lazily_composed_pair_generators_keep_their_persists(spark):

@@ -193,18 +193,19 @@ def test_spread_tops_up_broadcast_join_plan(spark):
         spark.sparkContext.defaultParallelism
 
 
-def test_prefix_jaccard_candidates_are_equi_join(spark):
-    """prefix_jaccard_pairs' candidate stage must join on the shingle
-    key (hash/SMJ), never fall back to a nested-loop pair scan — the
-    length filters ride the equi-join as post-conditions."""
-    from mapreducewordcount_spark.operators.dedup import prefix_jaccard_pairs
+def test_shingle_jaccard_join_is_equi_join(spark):
+    """shingle_jaccard_pairs' self-join must join on the shingle key
+    (hash/SMJ), never fall back to a nested-loop pair scan — the
+    ``a.doc_id < b.doc_id`` order filter rides the equi-join as a
+    post-condition."""
+    from mapreducewordcount_spark.operators.dedup import shingle_jaccard_pairs
     from mapreducewordcount_spark.plans import explain_str
     from mapreducewordcount_spark.sources.tables import load_table
 
     docs = load_table(spark, SF_ORACLE, "documents")
-    plan = explain_str(prefix_jaccard_pairs(docs, threshold=0.5))
+    plan = explain_str(shingle_jaccard_pairs(docs, threshold=0.5))
     assert "BroadcastNestedLoopJoin" not in plan, \
-        "prefix-filter candidate generation fell back to a pair scan"
+        "the shingle self-join fell back to a pair scan"
     assert "CartesianProduct" not in plan
 
 
