@@ -266,9 +266,7 @@ def _brute_force_jaccard(shingle_rows, threshold):
 def test_shingle_jaccard_matches_brute_force(spark):
     """The self-join returns exactly the pairs (ids AND jaccard values)
     a pairwise Python Jaccard over the same shingle arrays finds, across
-    thresholds: on a corpus with heavy shingle sharing and mixed sizes,
-    and on a set-equality corpus where threshold 1.0 keeps only the
-    identical shingle sets."""
+    thresholds, on a corpus with heavy shingle sharing and mixed sizes."""
     import random
 
     rng = random.Random(7)
@@ -284,22 +282,44 @@ def test_shingle_jaccard_matches_brute_force(spark):
         for _ in range(rng.randint(1, 6)):
             words[rng.randrange(len(words))] = rng.choice(vocab)
         shared.append((100 + i, " ".join(words)))
-    set_equality = [(1, "alpha beta gamma delta"),
-                    (2, "alpha beta gamma delta"),        # identical set
-                    (3, "alpha beta gamma delta epsilon"),  # superset: j < 1
-                    (4, "unrelated words entirely here")]
+    df = spark.createDataFrame(shared, "doc_id long, text string")
+    shingle_rows = dd._doc_shingles(df, "doc_id", "text", 3).collect()
     found = {}
-    for name, rows in (("shared", shared), ("set_equality", set_equality)):
-        df = spark.createDataFrame(rows, "doc_id long, text string")
-        shingle_rows = dd._doc_shingles(df, "doc_id", "text", 3).collect()
-        for t in (0.1, 0.3, 0.5, 0.8, 1.0):
-            want = _brute_force_jaccard(shingle_rows, t)
-            got = {(r.a_id, r.b_id): r.jaccard for r in
-                   dd.shingle_jaccard_pairs(df, threshold=t).collect()}
-            assert got == want, f"{name}: mismatch at threshold {t}"
-            found[name, t] = len(want)
-    assert found["shared", 0.1] > found["shared", 0.8] > 0
-    assert want == {(1, 2): 1.0}  # set_equality at t = 1.0
+    for t in (0.1, 0.3, 0.5, 0.8, 1.0):
+        want = _brute_force_jaccard(shingle_rows, t)
+        got = {(r.a_id, r.b_id): r.jaccard for r in
+               dd.shingle_jaccard_pairs(df, threshold=t).collect()}
+        assert got == want, f"mismatch at threshold {t}"
+        found[t] = len(want)
+    assert found[0.1] > found[0.8] > 0
+
+
+def test_prefix_jaccard_matches_exact_quadratic(spark, docs):
+    """The ``dedup_prefix_pairs`` query is exact: identical rows (ids
+    AND jaccard values) to a quadratic all-pairs Python Jaccard over
+    the same shingles at its 0.5 threshold, on the sf0.01 corpus."""
+    from mapreducewordcount_spark.queries import all_queries
+
+    shingle_rows = dd._doc_shingles(docs, "doc_id", "text", 3).collect()
+    want = _brute_force_jaccard(shingle_rows, 0.5)
+    got = {(r.a_id, r.b_id): r.jaccard for r in
+           all_queries()["dedup_prefix_pairs"].spark_fn(
+               spark, SF_ORACLE).collect()}
+    assert want and got == want
+
+
+def test_prefix_jaccard_threshold_one_is_set_equality(spark):
+    """At threshold 1.0 the exact join behind ``dedup_prefix_pairs``
+    keeps only documents with identical shingle sets."""
+    rows = [(1, "alpha beta gamma delta"),
+            (2, "alpha beta gamma delta"),        # identical set
+            (3, "alpha beta gamma delta epsilon"),  # superset: j < 1
+            (4, "unrelated words entirely here")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    got = {(r.a_id, r.b_id, r.jaccard)
+           for r in dd.shingle_jaccard_pairs(df, n=3, threshold=1.0)
+           .collect()}
+    assert got == {(1, 2, 1.0)}
 
 
 def test_jaccard_pair_generators_reject_bad_threshold(spark):
