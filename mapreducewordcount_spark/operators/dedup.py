@@ -3,11 +3,12 @@
 Extension scope (SURVEY.md §2.5 / driver north star): the reference
 has no dedup surface; these are built Spark-first as compositions of
 DataFrame ops — no row-at-a-time Python UDFs anywhere. The only
-Python in any hot path is Arrow-batched numpy matrix work
+Python in any hot path is Arrow-batched numpy work
 (``simhash64_expr``'s bit counting, ``band_keys_udf``'s sign
-projections) where the measured hybrid beats both pure expressions
-and row loops; every other stage stays in whole-stage codegen and
-scales by adding executors.
+projections, ``dup_groups``' union-find over the pair set) where the
+measured hybrid beats both pure expressions and row loops; every
+other stage stays in whole-stage codegen and scales by adding
+executors.
 
 Scale ladder (which one to use at which size):
 
@@ -40,6 +41,7 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from mapreducewordcount_spark.functions.vectors import cosine_from_norms, norm
 from mapreducewordcount_spark.functions.text_metrics import (
@@ -297,98 +299,68 @@ def _verify_jaccard(candidates: DataFrame, sh_a: DataFrame, sh_b: DataFrame,
             .select(a_id, b_id, F.round("jaccard", 4).alias("jaccard")))
 
 
-def dup_groups(pairs: DataFrame, a_col: str = "a_id",
-               b_col: str = "b_id", max_iters: int = 20) -> DataFrame:
-    """Connected components over near-dup pairs → (doc_id, group_id).
+def _components(batches):
+    """mapInPandas body of ``dup_groups``: every (src, dst) edge batch
+    of the one task → one (doc_id, group_id) row per vertex.
+
+    Hook-and-shortcut union-find (Shiloach-Vishkin) on numpy arrays:
+    vertices are renumbered to their rank in sorted id order, so the
+    smallest index of a component is its min doc id. Each round hooks
+    the larger root of every edge that still joins two roots under the
+    smaller one (``np.minimum.at``), then shortcuts ``p = p[p]`` until
+    every vertex points at a root. Parents only ever point at a smaller
+    index, so the loop stops exactly when no edge joins two components.
+    """
+    import numpy as np
+
+    frames = [b for b in batches if len(b)]
+    if not frames:
+        return
+    edges = pd.concat(frames, ignore_index=True)
+    ids, ends = np.unique(
+        np.concatenate([edges["src"].to_numpy(), edges["dst"].to_numpy()]),
+        return_inverse=True)
+    src, dst = np.split(ends.ravel(), 2)
+    p = np.arange(len(ids))
+    while True:
+        rs, rd = p[src], p[dst]
+        join = rs != rd
+        if not join.any():
+            break
+        np.minimum.at(p, np.maximum(rs, rd)[join], np.minimum(rs, rd)[join])
+        while True:
+            q = p[p]
+            if np.array_equal(q, p):
+                break
+            p = q
+    yield pd.DataFrame({"doc_id": ids, "group_id": ids[p]})
+
+
+def dup_groups(pairs: DataFrame) -> DataFrame:
+    """Connected components over near-dup pairs (``a_id``, ``b_id``) →
+    one (doc_id, group_id) row per paired document.
 
     Near-dup detection yields *pairs*; deciding what to keep needs
-    *clusters* (A~B, B~C ⇒ {A,B,C} keep one). Minimum-label
-    propagation: every vertex starts labeled with its own id; each
-    iteration every vertex takes the min label in its neighborhood;
-    converged when no label changes. ``group_id`` = min doc id of the
-    component — deterministic keeper choice.
+    *clusters* (A~B, B~C ⇒ {A,B,C} keep one). ``group_id`` = min doc
+    id of the component — deterministic keeper choice; ids keep the
+    input's type. Documents in no pair get no row.
 
-    Scale notes: each iteration combines neighbor-min propagation
-    with DOUBLE pointer halving (``comp := comp(comp)`` applied
-    twice via self-joins — round 14, VERDICT r13 next#5), so label
-    distance contracts ~4× per round and convergence is
-    ~log₄(diameter) rounds — a 100-doc near-dup CHAIN (sliding
-    incremental edits produce exactly that shape) converges in 4
-    rounds where single halving took ~8 and plain propagation needed
-    99 and raised at ``max_iters``. Labels only decrease and every
-    label is a live vertex id, so each halving step preserves the
-    min-label invariant — the CONVERGED labels (min id per
-    component) are identical whatever the halving count; only the
-    round count changes. ``max_iters`` still guards the truly
-    pathological — a non-converged result would be silently wrong,
-    so it raises. Per-round driver cost is ONE job, not two: the
-    ``localCheckpoint`` is lazy and the convergence count is the
-    action that materializes it (the eager form ran a checkpoint job
-    AND a count job per round). ``localCheckpoint`` truncates the
-    lineage so plan size stays constant across iterations (without
-    it the DAG doubles every loop and the driver chokes long before
-    the data does).
+    One lazy stage: the pair set is shuffled into a single partition
+    (``repartition(1)``, so the pair-generating join keeps its own
+    parallelism — ``coalesce(1)`` would pull it into the one task) and
+    ``_components`` runs an exact numpy union-find over it in one Arrow
+    task. The pair set is the bounded survivor set of a near-dup join;
+    a 1M-edge chain runs in 1.5-2.7 s with a 250 MB Python worker on 4
+    cores (SCALE.md gives the bound). Building the frame runs no Spark
+    job.
     """
-    edges = (pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-             .unionByName(pairs.select(F.col(b_col).alias("src"),
-                                       F.col(a_col).alias("dst"))))
-    # materialize the edge list ONCE before iterating: every round
-    # joins `edges`, and a lazy `pairs` plan (a shingle self-join, an
-    # LSH band probe) would otherwise RE-EXECUTE per round — measured
-    # 16 s → ~6 s warm on dedup_cluster_stats at sf0.1, where the
-    # un-checkpointed shingle join dominated every iteration. Edges
-    # are the bounded survivor pair set, cheap to hold.
-    edges = edges.localCheckpoint(eager=True)
-    labels = (edges.select(F.col("src").alias("id")).distinct()
-              .withColumn("comp", F.col("id")))
-    converged = False
-    for _ in range(max_iters):
-        neighbor_min = (edges.join(labels, edges.dst == labels.id)
-                        .groupBy("src").agg(F.min("comp").alias("nmin")))
-        # the previous label rides along as __prev so convergence can
-        # be read off the checkpointed frame with a scan-only count —
-        # the old form re-JOINED updated back to labels per round
-        # (one extra shuffle join per iteration at any scale; the
-        # values compared are in hand anyway, round 13)
-        updated = (labels.join(neighbor_min, labels.id == neighbor_min.src,
-                               "left")
-                   .select(F.col("id"),
-                           F.least(F.col("comp"),
-                                   F.coalesce(F.col("nmin"), F.col("comp")))
-                           .alias("comp"),
-                           F.col("comp").alias("__prev")))
-        # pointer halving ×2: comp := comp(comp), twice. comp values
-        # are vertex ids, so the self-joins always match; labels only
-        # shrink, so each application preserves the min-label
-        # invariant while contracting label distance ~4× per round.
-        for _h in range(2):
-            shortcut = updated.select(F.col("id").alias("cid"),
-                                      F.col("comp").alias("ccomp"))
-            updated = (updated.join(shortcut,
-                                    updated.comp == shortcut.cid, "left")
-                       .select(F.col("id"),
-                               F.coalesce("ccomp", "comp").alias("comp"),
-                               F.col("__prev")))
-        updated = updated.select(
-            F.col("id"), F.col("comp"),
-            (F.col("comp") != F.col("__prev")).alias("__chg"))
-        # lazy checkpoint: the convergence count below is the one
-        # action of the round and materializes the checkpoint blocks
-        # as it runs — the eager form paid a separate checkpoint job
-        # first (two jobs per round; round 14)
-        updated = updated.localCheckpoint(eager=False)
-        changed = updated.filter("__chg").count()
-        labels = updated.select("id", "comp")
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
-            f"dup_groups did not converge in {max_iters} iterations — "
-            "component diameter exceeds max_iters; raise max_iters "
-            "(returning here would silently split real dup clusters)")
-    return labels.select(F.col("id").alias("doc_id"),
-                         F.col("comp").alias("group_id"))
+    id_type = pairs.schema["a_id"].dataType
+    schema = StructType([StructField("doc_id", id_type, False),
+                         StructField("group_id", id_type, False)])
+    return (pairs.select(F.col("a_id").alias("src"),
+                         F.col("b_id").alias("dst"))
+            .repartition(1)
+            .mapInPandas(_components, schema))
 
 
 def simhash64_expr(text_col: str | Column) -> Column:

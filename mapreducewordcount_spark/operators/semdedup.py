@@ -20,8 +20,8 @@ Spark-first composition of pieces this engine already has:
   happens inside its own partition; AQE skew-splits a pathological
   mega-cluster. The cosine threshold prunes pairs immediately after
   the dot product (no pair list is ever materialized un-filtered).
-- **Prune** — ``operators.dedup.dup_groups`` label propagation
-  (min-id keeper per connected component) — the same deterministic
+- **Prune** — ``operators.dedup.dup_groups`` union-find (min-id
+  keeper per connected component) — the same deterministic
   keep rule as the text-dedup ladder, so downstream curation logic
   treats text dups and semantic dups identically.
 
@@ -89,7 +89,7 @@ def semantic_dedup_from_assignments(assignments: DataFrame,
                                     vec_col: str = "embedding") -> DataFrame:
     """The prune half of SemDeDup over a PRE-COMPUTED (id, list_id)
     assignment table (built in-plan or a persisted index):
-    within-cluster exact-cosine pairs → min-label components →
+    within-cluster exact-cosine pairs → min-id components →
     (vec_id, list_id, group_id, keep). Everything here is plain
     joins/aggregates — which is what lets the DuckDB oracle recompute
     it end-to-end from the same assignment artifact."""
@@ -110,13 +110,6 @@ def semantic_dedup_from_assignments(assignments: DataFrame,
                                                   "a_n", "b_n"))
              .filter(F.col("cos") >= threshold)
              .select("a_id", "b_id"))
-    # dup_groups runs eager actions per label-propagation round, and
-    # each round re-derives its edges — without a lineage cut the
-    # corpus-scale assignment + within-cluster pair join would
-    # re-execute every iteration (the round-1 "materialize frames
-    # referenced by multiple joins" lesson). Pairs are the bounded
-    # survivor set (≥-threshold only), cheap to hold.
-    pairs = pairs.localCheckpoint(eager=True)
     groups = dup_groups(pairs)  # (doc_id, group_id) for paired ids only
     return (assignments
             .select(F.col("id").alias(id_col), "list_id")

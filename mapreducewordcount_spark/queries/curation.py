@@ -14,7 +14,7 @@ Deterministic by construction (min-id keepers, fixed thresholds), so
 the whole pipeline is DuckDB-oracled — including the recursive-CTE
 transitive closure. At scale each stage is the operator documented in
 operators/dedup.py (fingerprint groupBy; MinHash-LSH instead of the
-exact pair join; label propagation instead of the recursive CTE) —
+exact pair join; a one-task union-find instead of the recursive CTE) —
 the decision semantics here are the contract both paths satisfy.
 """
 

@@ -250,33 +250,31 @@ def dedup_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     a manual look BEFORE a 100 TB pass commits to keep-one).
 
     Composes the committed near-dup pipeline (``shingle_jaccard_pairs``
-    → ``dup_groups`` min-label components) with two bounded
-    aggregates; singleton documents (never in any pair) are reported
-    as size-1 clusters from set difference, not a join back to pairs.
+    → ``dup_groups`` union-find components) with two bounded
+    aggregates over every document: a paired document sits in its
+    component, any other document is a cluster of its own. The groups
+    feed one branch of the plan, so the pair join and the union-find
+    run once per action; a zero-weight size-1 row keeps the singleton
+    row (n_clusters 0) on a corpus where every document is paired.
 
     Output: (cluster_size, n_clusters, n_docs, n_dropped).
     """
     from mapreducewordcount_spark.operators import dedup as dd
 
     docs = load_table(spark, sf_dir, "documents")
-    pairs = dd.shingle_jaccard_pairs(docs, threshold=0.5)
-    groups = dd.dup_groups(pairs)
-    sizes = (groups.groupBy("group_id")
-             .agg(F.count(F.lit(1)).alias("sz")))
-    multi = (sizes.groupBy(F.col("sz").cast("long")
-                           .alias("cluster_size"))
-             .agg(F.count(F.lit(1)).cast("long").alias("n_clusters"),
-                  F.sum("sz").cast("long").alias("n_docs")))
-    # singletons: total − grouped, two 1-row aggregates (bounded BNLJ)
-    single = (docs.agg(F.count(F.lit(1)).alias("__total"))
-              .crossJoin(groups.agg(F.count(F.lit(1))
-                                    .alias("__grouped")))
-              .select(F.lit(1).cast("long").alias("cluster_size"),
-                      (F.col("__total") - F.col("__grouped"))
-                      .cast("long").alias("n_clusters"),
-                      (F.col("__total") - F.col("__grouped"))
-                      .cast("long").alias("n_docs")))
-    return (multi.unionByName(single)
+    groups = dd.dup_groups(dd.shingle_jaccard_pairs(docs, threshold=0.5))
+    sizes = (docs.select("doc_id")
+             .join(groups, "doc_id", "left")
+             .groupBy(F.coalesce("group_id", "doc_id"))
+             .agg(F.count(F.lit(1)).alias("sz"))
+             .select("sz", F.lit(1).alias("w")))
+    no_single = spark.range(1).select(F.lit(1).cast("long").alias("sz"),
+                                      F.lit(0).alias("w"))
+    return (sizes.unionByName(no_single)
+            .groupBy(F.col("sz").alias("cluster_size"))
+            .agg(F.sum("w").cast("long").alias("n_clusters"),
+                 F.sum(F.col("sz") * F.col("w")).cast("long")
+                 .alias("n_docs"))
             .withColumn("n_dropped",
                         (F.col("n_docs") - F.col("n_clusters"))
                         .cast("long")))
@@ -342,7 +340,7 @@ _LEAK_SALT = "leak"
 def leakage_safe_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train/val/test assignment that cannot leak near-duplicates
     across splits: the split is keyed on each document's dedup
-    CLUSTER REPRESENTATIVE (the min-label component id from the
+    CLUSTER REPRESENTATIVE (the min doc id of its component from the
     committed near-dup pipeline; singletons represent themselves), so
     an entire near-dup cluster moves between splits atomically — the
     eval-decontamination discipline a val/test set needs, since a val
@@ -361,7 +359,8 @@ def leakage_safe_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
     (clusters that straddle under the doc_id-keyed split — what the
     operator prevents). At 100 TB the split column is a row-local
     projection downstream of the dedup pass the pipeline already
-    runs; the audit is two bounded aggregates.
+    runs; the counts are a per-cluster aggregate and one corpus-wide
+    row.
     """
     from mapreducewordcount_spark.functions.sampling import (
         dataset_split,
@@ -369,35 +368,46 @@ def leakage_safe_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreducewordcount_spark.operators import dedup as dd
 
     docs = load_table(spark, sf_dir, "documents")
-    groups = dd.dup_groups(
-        dd.shingle_jaccard_pairs(docs, threshold=0.5))
-    rep = (docs.select("doc_id")
-           .join(groups, "doc_id", "left")
-           .select("doc_id", "group_id",
-                   F.coalesce("group_id", F.col("doc_id"))
-                   .alias("rep_id")))
-    assigned = rep.select(
-        "doc_id", "group_id",
-        dataset_split("rep_id", LEAKAGE_SPLIT_FRACS, salt=_LEAK_SALT)
-        .alias("split"),
-        dataset_split("doc_id", LEAKAGE_SPLIT_FRACS, salt=_LEAK_SALT)
-        .alias("naive_split"))
-    clustered = assigned.filter(F.col("group_id").isNotNull())
-    leaked = (clustered.groupBy("group_id")
-              .agg(F.countDistinct("split").alias("ns"),
-                   F.countDistinct("naive_split").alias("nns"))
-              .agg(F.sum(F.when(F.col("ns") > 1, 1).otherwise(0))
-                   .cast("long").alias("leaked_clusters"),
-                   F.sum(F.when(F.col("nns") > 1, 1).otherwise(0))
-                   .cast("long").alias("naive_leaked_clusters")))
-    per_split = (assigned.groupBy("split")
-                 .agg(F.count(F.lit(1)).cast("long").alias("n_docs"),
-                      F.countDistinct("group_id").cast("long")
-                      .alias("n_clusters"),
-                      F.sum(F.when(F.col("group_id").isNotNull(), 1)
-                            .otherwise(0)).cast("long")
-                      .alias("n_clustered_docs")))
-    return (per_split.crossJoin(F.broadcast(leaked))
+    groups = dd.dup_groups(dd.shingle_jaccard_pairs(docs, threshold=0.5))
+    rep_id = F.coalesce("group_id", "doc_id")
+    assigned = (docs.select("doc_id")
+                .join(groups, "doc_id", "left")
+                .select(F.col("group_id").isNotNull().alias("clustered"),
+                        rep_id.alias("rep_id"),
+                        dataset_split(rep_id, LEAKAGE_SPLIT_FRACS,
+                                      salt=_LEAK_SALT).alias("split"),
+                        dataset_split("doc_id", LEAKAGE_SPLIT_FRACS,
+                                      salt=_LEAK_SALT)
+                        .alias("naive_split")))
+    names = list(LEAKAGE_SPLIT_FRACS)
+    # one row per cluster (an unpaired document is its own): its docs
+    # per split and how many splits each assignment spreads it over
+    clusters = (assigned.groupBy("rep_id")
+                .agg(F.max("clustered").alias("clustered"),
+                     F.countDistinct("split").alias("ns"),
+                     F.countDistinct("naive_split").alias("nns"),
+                     *[F.count(F.when(F.col("split") == s, 1)).alias(s)
+                       for s in names]))
+    # then ONE corpus-wide row, unrolled to a row per split: the
+    # groups feed a single branch, so the pair join and the union-find
+    # run once per action
+    multi = F.col("clustered")
+    totals = clusters.agg(
+        F.array(*[F.struct(
+            F.lit(s).alias("split"),
+            F.sum(s).cast("long").alias("n_docs"),
+            F.count(F.when(multi & (F.col(s) > 0), 1))
+            .alias("n_clusters"),
+            F.sum(F.when(multi, F.col(s)).otherwise(0)).cast("long")
+            .alias("n_clustered_docs")) for s in names]).alias("rows"),
+        F.count(F.when(multi & (F.col("ns") > 1), 1))
+        .alias("leaked_clusters"),
+        F.count(F.when(multi & (F.col("nns") > 1), 1))
+        .alias("naive_leaked_clusters"))
+    return (totals
+            .select(F.inline("rows"), "leaked_clusters",
+                    "naive_leaked_clusters")
+            .filter(F.col("n_docs") > 0)
             .orderBy("split"))
 
 

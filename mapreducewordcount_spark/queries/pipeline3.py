@@ -111,7 +111,7 @@ def dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     the best copy of boilerplate-mangled near-dups rather than the
     one that happened to crawl first.
 
-    Plan: near-dup groups (label propagation at scale, see
+    Plan: near-dup groups (a one-task union-find, see
     operators/dedup.dup_groups) joined to per-doc quality, then one
     groupBy(group_id) whose argmax rides an ordered struct max —
     partial-aggregable, so the component key never concentrates rows
@@ -734,17 +734,17 @@ def curate_corpus_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pairs = dd.shingle_jaccard_pairs(docs, threshold=0.5)
     groups = dd.dup_groups(pairs)  # doc_id, group_id (paired docs only)
-    surv = (groups
-            .join(scored.select("doc_id", "quality"), "doc_id")
-            .groupBy("group_id")
-            .agg(argmax.alias("b"))
-            .select("group_id", (-F.col("b.neg_id")).alias("survivor_id")))
-
+    # each cluster's survivor beside its members, from ONE reference to
+    # the groups (an unpaired doc is its own cluster and survivor), so
+    # the pair join and the union-find run once per action; a cluster's
+    # member list is bounded by the pair set dup_groups holds in a task
+    member = F.struct("doc_id", "quality", "exact_keep")
     out = (scored
            .join(exact, "fp")
            .join(groups, "doc_id", "left")
-           .join(surv, "group_id", "left")
-           .withColumn("near_keep", F.coalesce("survivor_id", "doc_id"))
+           .groupBy(F.coalesce("group_id", "doc_id"))
+           .agg(argmax.alias("b"), F.collect_list(member).alias("m"))
+           .select((-F.col("b.neg_id")).alias("near_keep"), F.inline("m"))
            .withColumn("reason", F.when(
                F.col("quality") < CURATE_QUALITY_MIN, "low_quality")
                .when(F.col("doc_id") != F.col("exact_keep"), "exact_dup")

@@ -11,7 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from mapreducewordcount_spark.operators import dedup as dd
-from tests.conftest import SF_ORACLE
+from tests.conftest import SF_ORACLE, SF_SMOKE
 
 
 @pytest.fixture(scope="module")
@@ -87,18 +87,6 @@ def test_signature_pairs_radius_beyond_old_byte_cap(spark):
     assert {(r.a_id, r.b_id, r.hamming) for r in rows} == {(1, 2, 8)}
 
 
-def test_dup_groups_raises_instead_of_silently_splitting(spark):
-    """A chain longer than max_iters must raise, not return partial
-    (wrong) groups."""
-    chain = spark.createDataFrame([(i, i + 1) for i in range(10)],
-                                  "a_id long, b_id long")
-    with pytest.raises(RuntimeError, match="did not converge"):
-        dd.dup_groups(chain, max_iters=2)
-    # and with enough iterations the same chain is one group
-    got = {r.doc_id: r.group_id for r in dd.dup_groups(chain).collect()}
-    assert set(got.values()) == {0}
-
-
 def test_dup_groups_transitive_closure(spark):
     """A~B, B~C must land in one group even though A~C was never a
     pair (the whole point of consolidating pairs into components)."""
@@ -109,6 +97,134 @@ def test_dup_groups_transitive_closure(spark):
     assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10,
                    20: 20, 21: 20, 22: 20, 23: 20}
 
+
+def _labels(*batches):
+    """``dd._components`` over (src, dst) pandas batches → {id: group}."""
+    import pandas as pd
+
+    frames = (pd.DataFrame({"src": s, "dst": d}) for s, d in batches)
+    return {i: g for out in dd._components(frames)
+            for i, g in zip(out["doc_id"], out["group_id"])}
+
+
+def test_components_empty_input_emits_no_row():
+    import numpy as np
+
+    empty = np.array([], dtype=np.int64)
+    assert _labels() == {}
+    assert _labels((empty, empty)) == {}
+
+
+def test_components_duplicate_and_self_edges():
+    """Repeated edges in either orientation, across batches, change
+    nothing; an a == b edge makes a one-vertex component."""
+    got = _labels(([3, 3, 1], [1, 1, 3]), ([7, 9, 1], [7, 3, 3]))
+    assert got == {1: 1, 3: 1, 9: 1, 7: 7}
+
+
+def test_components_shuffled_chain_keeps_id_type():
+    """A 10,000-vertex chain over shuffled ids, edges in random order
+    and orientation over several batches: one component labeled with
+    its min id, in the input's id type."""
+    import numpy as np
+    import pandas as pd
+
+    rng = np.random.default_rng(5)
+    ids = (rng.permutation(10_000) * 3 + 11).astype(np.int32)
+    src, dst = ids[:-1], ids[1:]
+    flip = rng.random(len(src)) < 0.5
+    src, dst = np.where(flip, dst, src), np.where(flip, src, dst)
+    order = rng.permutation(len(src))
+    src, dst = src[order], dst[order]
+    out = list(dd._components(
+        pd.DataFrame({"src": src[i:i + 3000], "dst": dst[i:i + 3000]})
+        for i in range(0, len(src), 3000)))
+    assert len(out) == 1
+    assert out[0]["doc_id"].dtype == np.int32
+    assert out[0]["group_id"].dtype == np.int32
+    assert sorted(out[0]["doc_id"]) == sorted(ids)
+    assert set(out[0]["group_id"]) == {ids.min()}
+
+
+def test_dup_groups_same_labels_at_any_shuffle_partitioning(spark, docs):
+    """The whole pair set meets in one task, so the labels cannot
+    depend on how the pairs were partitioned upstream."""
+    keys = ("spark.sql.shuffle.partitions",
+            "spark.sql.adaptive.coalescePartitions.enabled")
+    prev = {k: spark.conf.get(k) for k in keys}
+
+    def labels():
+        inputs = {
+            "chain": spark.createDataFrame(
+                [(i, i + 1) for i in range(99)], "a_id long, b_id long"),
+            "closure": spark.createDataFrame(
+                [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (22, 23)],
+                "a_id long, b_id long"),
+            "sf0.01": dd.shingle_jaccard_pairs(docs, threshold=0.5),
+        }
+        return {name: sorted(tuple(r) for r in dd.dup_groups(p).collect())
+                for name, p in inputs.items()}
+
+    try:
+        spark.conf.set(keys[1], "false")
+        got = {}
+        for n in (1, 7):
+            spark.conf.set(keys[0], str(n))
+            got[n] = labels()
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+    assert got[1] == got[7]
+    assert len(got[1]["chain"]) == 100 and got[1]["sf0.01"]
+
+
+#: construct-time Spark jobs of every registry query that calls
+#: ``dup_groups``; only SemDeDup's k-means fit runs any
+DUP_GROUPS_CONSTRUCT_JOBS = {
+    "dedup_groups": 0, "dedup_cluster_stats": 0, "dedup_survivors": 0,
+    "leakage_safe_splits": 0, "curate_corpus": 0, "curate_corpus_best": 0,
+    "pack_curated_corpus": 0, "semantic_dedup_embeddings": 7,
+}
+
+
+@pytest.mark.parametrize("name", DUP_GROUPS_CONSTRUCT_JOBS)
+def test_dup_groups_queries_build_without_jobs(spark, name):
+    """Building the query runs no job for its near-dup components: the
+    union-find is a stage of the plan the caller's action runs."""
+    from mapreducewordcount_spark.queries import all_queries
+    from mapreducewordcount_spark.sources.tables import load_table
+
+    sc = spark.sparkContext
+    load_table(spark, SF_SMOKE, "documents")  # ship the package first
+    group = f"construct:{name}"
+    try:
+        sc.setJobGroup(group, f"build {name}")
+        all_queries()[name].spark_fn(spark, SF_SMOKE)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) == DUP_GROUPS_CONSTRUCT_JOBS[name]
+
+
+@pytest.mark.parametrize("name", DUP_GROUPS_CONSTRUCT_JOBS)
+def test_dup_groups_runs_once_per_action(spark, name):
+    """Each query calls ``dup_groups`` once, and its executed plan runs
+    the union-find once: the groups feed a single branch, so neither
+    the pair join nor the ``_components`` task is evaluated twice."""
+    from mapreducewordcount_spark.queries import all_queries
+
+    df = all_queries()[name].spark_fn(spark, SF_SMOKE)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    # the outermost AdaptiveSparkPlan's sections start their lines; a
+    # persisted frame's nested plan is indented
+    final, initial = plan.split("\n+- == Initial Plan ==\n")
+    assert "isFinalPlan=true" in final
+    assert initial.count("MapInPandas _components(") == 1, initial
+    # SemDeDup finds no pair at the gate SFs, and AQE then drops the
+    # empty groups branch from the final plan
+    assert final.count("MapInPandas _components(") <= 1, final
 
 def test_embedding_dups_symmetric_threshold(spark):
     from mapreducewordcount_spark.sources.tables import load_table
@@ -415,9 +531,9 @@ def test_signature_pairs_collapse_identical_star_form(spark):
 
 
 def test_dup_groups_long_chain_converges_log_rounds(spark):
-    """A 100-vertex CHAIN (doc i ~ doc i+1 — the sliding-edit shape)
-    must converge well inside max_iters thanks to pointer halving;
-    plain diameter-bounded propagation needed 99 rounds and raised."""
+    """A 100-vertex CHAIN (doc i ~ doc i+1 — the sliding-edit shape,
+    diameter 99) is ONE component labeled with its min id: the
+    union-find is exact whatever the diameter."""
     from mapreducewordcount_spark.operators.dedup import dup_groups
 
     pairs = spark.createDataFrame(
@@ -504,19 +620,3 @@ def test_lsh_degenerate_vectors_never_band(spark):
     out_dirty = {(r.a_id, r.b_id, r.cos) for r in dd.embedding_dup_pairs_lsh(
         dirty, threshold=0.3, dim=8, n_bands=4, band_width=4).collect()}
     assert out_clean == out_dirty
-
-
-def test_dup_groups_double_halving_round_budget(spark):
-    """Round 14: double pointer-halving contracts label distance ~4×
-    per round, so the 100-vertex chain must converge within 5 rounds
-    (4 to reach the fixpoint + 1 to observe no change). The single-
-    halving form needed ~7 — this pins the round budget so a
-    regression to slower convergence fails loudly."""
-    from mapreducewordcount_spark.operators.dedup import dup_groups
-
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(99)], "a_id long, b_id long")
-    got = {r.doc_id: r.group_id
-           for r in dup_groups(pairs, max_iters=5).collect()}
-    assert len(got) == 100
-    assert set(got.values()) == {0}

@@ -327,10 +327,9 @@ def test_curate_best_quality_argmax_keepers(spark, tmp_path):
 
 def test_curate_best_no_fp_or_group_window(spark):
     """Both argmax keepers must be partial-agg groupBy forms — no
-    Window over the corpus fp / group_id keys (hot-key rule). The only
-    acceptable windows are inside dup_groups' label propagation, which
-    operates on the pair set, not the corpus; assert none appear over
-    the md5 fp column by checking the full plan for Window nodes."""
+    Window over the corpus fp / group_id keys (hot-key rule). The
+    near-dup components come from dup_groups' union-find, which runs no
+    window either, so the full plan must hold no Window node at all."""
     from mapreducewordcount_spark.queries.pipeline3 import curate_corpus_best
 
     plan = curate_corpus_best(spark, SF_SMOKE)._jdf.queryExecution() \
