@@ -9,7 +9,6 @@ hash permutations). No row-at-a-time Python UDFs in any hot path.
 
 from mapreducewordcount_spark.functions.tokenize import (  # noqa: F401
     PUNCT_CLASS,
-    normalize_word,
     tokenize_expr,
     tokenize_parity,
 )

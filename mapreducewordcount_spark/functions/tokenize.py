@@ -7,10 +7,11 @@ Reference semantics (pinned in SURVEY.md §2.3 from
 
 Two modes, per SURVEY.md §7 step 1:
 
-- **native** (default, fast path): pure column expressions —
-  whitespace split + ends-only ASCII-punctuation strip + lower.
-  Stays entirely inside whole-stage codegen; zero Python in the hot
-  path. Documented delta vs the reference: no Treebank contraction
+- **native** (default, fast path): one ``regexp_extract_all`` scan
+  of the lowered line does the whitespace split, the ends-only
+  ASCII-punctuation strip and the drop of empties; no Python and no
+  higher-order function in the hot path.
+  Documented delta vs the reference: no Treebank contraction
   splitting (``Don't`` stays one token ``don't`` instead of
   ``do`` + ``n't``).
 - **parity** (conformance path): Treebank tokenization via an
@@ -42,34 +43,43 @@ if TYPE_CHECKING:
 #: via ``word.strip(string.punctuation)`` (``src/worker.py:50``).
 PUNCT_CLASS = r"!-/:-@\[-`{-~"
 
-_STRIP_ENDS = rf"^[{PUNCT_CLASS}]+|[{PUNCT_CLASS}]+$"
+# the split set of Python str.split(): (?U) makes \s Unicode-aware
+# (NBSP etc.); U+001C-U+001F are separators Java's \s leaves out
+_WS = r"\s\x1c-\x1f"
 
-
-def normalize_word(col: Column | str) -> Column:
-    """strip ASCII punctuation from both ends, then Unicode-lowercase.
-
-    Mirrors ``src/worker.py:50-52``: ends-only strip (``O.K.`` →
-    ``O.K`` → ``o.k``; interior punctuation survives), full Unicode
-    ``lower()``. Unicode punctuation is *not* stripped — same as the
-    reference.
-    """
-    return F.lower(F.regexp_replace(col, _STRIP_ENDS, ""))
+#: One word: a whitespace run with its ASCII punctuation stripped from
+#: both ends. It starts and ends on a non-space, non-punctuation code
+#: point; between them anything but whitespace, interior punctuation
+#: included. A run made only of punctuation has no match.
+TOKEN = rf"(?U)[^{_WS}{PUNCT_CLASS}](?:[^{_WS}]*[^{_WS}{PUNCT_CLASS}])?"
 
 
 def tokenize_expr(col: Column | str) -> Column:
     """Native-mode tokenizer: text line → array<string> of clean words.
 
-    Pure column expression (split / transform / filter) so Catalyst
-    keeps the whole stage in codegen. Pipeline = whitespace split →
-    per-token ends-strip+lower → drop empties, i.e. reference stages
-    D4,D5,D6,D7 (SURVEY.md §2.1) minus Treebank contraction rules.
+    One regex scan per line, ``regexp_extract_all(lower(line), TOKEN)``:
+    each match is ``t.strip(string.punctuation)`` for one whitespace
+    run ``t`` (Python ``str.split()``), and runs that strip to nothing
+    never match. Reference stages D4,D5,D6,D7 (SURVEY.md §2.1) minus
+    Treebank contraction rules. Lowering the line before the scan
+    equals lowering each word after it: ``lower`` maps ASCII
+    punctuation and whitespace to themselves, no code point lowers
+    into either, and final-sigma context never crosses whitespace.
+
+    The pattern is a literal, compiled once. The older split →
+    ``transform(regexp_replace, lower)`` → ``filter`` shape was the
+    map stage's main cost: Spark interprets those higher-order
+    functions outside codegen, every token ran its own
+    ``regexp_replace``, and ``String.split`` recompiled its pattern
+    per line (SCALE.md, "Native tokenizer").
     """
-    # the split set of Python str.split(): (?U) → Unicode-aware \s (NBSP
-    # etc.), plus the U+001C-U+001F separators Java's \s leaves out
-    words = F.split(F.col(col) if isinstance(col, str) else col,
-                    r"(?U)[\s\x1c-\x1f]+")
-    cleaned = F.transform(words, lambda w: F.lower(F.regexp_replace(w, _STRIP_ENDS, "")))
-    return F.filter(cleaned, lambda w: F.length(w) > 0)
+    text = F.col(col) if isinstance(col, str) else col
+    # bytes that are not UTF-8: lower() decodes them its own way (one
+    # U+FFFD per maximal subpart), the regex engine as Java does, so
+    # such a line is first re-encoded through a Java string
+    text = F.when(F.is_valid_utf8(text), text).otherwise(
+        F.decode(F.encode(text, "UTF-8"), "UTF-8"))
+    return F.regexp_extract_all(F.lower(text), F.lit(TOKEN), 0)
 
 
 # --------------------------------------------------------------------------

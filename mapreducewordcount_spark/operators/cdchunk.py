@@ -183,11 +183,15 @@ def cdc_chunk_table(docs: DataFrame, id_col: str = "doc_id",
     index a dedup store would persist. Chunks tile each document
     exactly (offsets contiguous from 0 to its length)."""
     chunker = _chunk_udf(window, mask_bits, min_chunk, max_chunk)
+    # posexplode_outer + a filter on the position, not posexplode:
+    # from a plain posexplode Catalyst infers size(__chunks) > 0 and
+    # pushes it below the caller's exchange, so the UDF would run twice
     return (docs
             .select(F.col(id_col).alias("doc_id"),
                     chunker(F.col(text_col)).alias("__chunks"))
             .select("doc_id",
-                    F.posexplode("__chunks").alias("chunk_idx", "c"))
+                    F.posexplode_outer("__chunks").alias("chunk_idx", "c"))
+            .where(F.col("chunk_idx").isNotNull())
             .select("doc_id", "chunk_idx", "c.offset", "c.length",
                     "c.chunk_md5"))
 

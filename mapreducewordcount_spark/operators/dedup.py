@@ -694,10 +694,14 @@ def embedding_band_keys(embeddings: DataFrame, id_col: str = "vec_id",
         band_width = derive_band_width(n)
     planes = _fixed_planes(dim, n_bands * band_width)
     mk_keys = band_keys_udf(planes, n_bands, band_width)
+    # posexplode_outer + a filter on the position, not posexplode:
+    # from a plain posexplode Catalyst infers size(keys) > 0 and pushes
+    # it below spread's exchange, so the UDF would run twice per row
     return (spread(embeddings)
             .select(F.col(id_col).alias("id"),
                     mk_keys(F.col(vec_col)).alias("keys"))
-            .select("id", F.posexplode("keys").alias("band", "key")))
+            .select("id", F.posexplode_outer("keys").alias("band", "key"))
+            .where(F.col("band").isNotNull()))
 
 
 def embedding_band_candidates(banded: DataFrame) -> DataFrame:

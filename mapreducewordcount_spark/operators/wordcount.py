@@ -40,7 +40,9 @@ def word_counts(lines: DataFrame, text_col: str = "value",
                 mode: str = "native") -> DataFrame:
     """lines → ``DataFrame[word: string, count: bigint]``.
 
-    ``mode='native'`` keeps tokenization in whole-stage codegen;
+    ``mode='native'`` tokenizes each line with one regex scan
+    (``tokenize_expr``), with no per-token higher-order function,
+    which Spark would interpret outside codegen;
     ``mode='parity'`` routes through the Treebank tokenizer
     (Arrow-batched mapInPandas) for reference-exact token semantics.
     """

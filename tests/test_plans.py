@@ -225,3 +225,51 @@ def test_ivf_routing_is_shuffle_free(spark):
     plan = explain_str(assigned)
     assert "Exchange" not in plan, plan
     assert "Window" not in plan, plan
+
+
+def _udf_evals_per_path(node, above=(), worst=None) -> dict:
+    """Python UDF name → the most times it is evaluated on one
+    root-to-leaf path of a physical plan (JVM ``SparkPlan``), cached
+    relations and query stages included."""
+    worst = {} if worst is None else worst
+    if node.nodeName() == "AdaptiveSparkPlan":
+        return _udf_evals_per_path(node.executedPlan(), above, worst)
+    if node.nodeName() in ("ArrowEvalPython", "BatchEvalPython"):
+        udfs = node.udfs()
+        above = above + tuple(udfs.apply(i).name() for i in range(udfs.size()))
+        for name in set(above):
+            worst[name] = max(worst.get(name, 0), above.count(name))
+    children = node.children()
+    kids = [children.apply(i) for i in range(children.size())]
+    if node.nodeName() == "InMemoryTableScan":
+        kids.append(node.relation().cachedPlan())
+    if "QueryStage" in node.getClass().getSimpleName():
+        kids.append(node.plan())
+    for kid in kids:
+        _udf_evals_per_path(kid, above, worst)
+    return worst
+
+
+@pytest.mark.parametrize("query", [
+    "doc_cdc_chunks", "dedup_embedding_pairs_lsh", "ann_lsh_topk",
+    "lsh_band_model", "cdc_chunk_model", "doc_cdc_chunk_dedup",
+    "doc_chunk_share_pairs", "doc_chunk_gc_report"])
+def test_arrow_udf_runs_once_per_input_row(spark, query):
+    """An Arrow UDF whose array output is exploded runs once per input
+    row. From a plain ``posexplode`` Catalyst infers a
+    ``size(udf(x)) > 0`` filter and pushes it below the exchange, so
+    the UDF ran a second time on the same rows; ``posexplode_outer``
+    plus a filter on the position keeps the UDF to one evaluation on
+    every plan path."""
+    from mapreducewordcount_spark.queries import all_queries
+    from mapreducewordcount_spark.queries.dedup_queries import lsh_band_model
+    from mapreducewordcount_spark.queries.pipeline6 import cdc_chunk_model
+    from tests.conftest import SF_SMOKE
+
+    build = {"lsh_band_model": lsh_band_model,
+             "cdc_chunk_model": cdc_chunk_model}.get(query)
+    if build is None:
+        build = all_queries()[query].spark_fn
+    df = build(spark, SF_SMOKE)
+    evals = _udf_evals_per_path(df._jdf.queryExecution().executedPlan())
+    assert evals and set(evals.values()) == {1}, evals

@@ -14,7 +14,10 @@ Axes covered (pick via argv, default runs all):
   single    — local[1], 1 shuffle partition
 
 Each axis runs in a fresh interpreter (a JVM reuses the first
-session's configs otherwise). This harness caught a real bug in
+session's configs otherwise), with a temporary working directory, so
+what a foreign session writes relative to its cwd (the default
+``spark-warehouse/`` of ``saveAsTable``) stays out of the checkout
+and is removed after the axis. This harness caught a real bug in
 round 1: ``round(avg(money), 4)`` flipping on exact rounding
 boundaries with summation order.
 
@@ -27,6 +30,7 @@ import math
 import os
 import subprocess
 import sys
+import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -107,8 +111,9 @@ def main() -> int:
         code = _CHILD.format(repo=REPO, entry=entry,
                              conf=json.dumps(AXES[axis]), sf_dir=sf_dir)
         print(f"=== axis: {axis}")
-        r = subprocess.run([sys.executable, "-c", code],
-                           capture_output=True, text=True)
+        with tempfile.TemporaryDirectory(prefix="gate-sim-") as cwd:
+            r = subprocess.run([sys.executable, "-c", code], cwd=cwd,
+                               capture_output=True, text=True)
         tail = [ln for ln in r.stdout.splitlines() if "MISMATCHES" in ln]
         print(tail[-1] if tail else f"NO OUTPUT (rc={r.returncode})\n{r.stderr[-500:]}")
         rc |= r.returncode
