@@ -93,7 +93,6 @@ def main(argv: list[str] | None = None) -> int:
         os.environ["SPARK_GRAFT_CPUS"] = str(args.workers)
 
     from mapreducewordcount_spark.operators.wordcount import (
-        rename_to_reference_layout,
         wordcount_pipeline,
         write_wordcount_output,
     )
@@ -102,7 +101,6 @@ def main(argv: list[str] | None = None) -> int:
     spark = get_spark("mapreducewordcount_spark-cli")
     counts = wordcount_pipeline(spark, input_dir, mode=mode)
     write_wordcount_output(counts, output_dir, m=m)
-    rename_to_reference_layout(output_dir, m=m)
     print(f"wrote {m} bucket files to {output_dir}")
     return 0
 

@@ -43,15 +43,17 @@ if TYPE_CHECKING:
 #: via ``word.strip(string.punctuation)`` (``src/worker.py:50``).
 PUNCT_CLASS = r"!-/:-@\[-`{-~"
 
-# the split set of Python str.split(): (?U) makes \s Unicode-aware
-# (NBSP etc.); U+001C-U+001F are separators Java's \s leaves out
-_WS = r"\s\x1c-\x1f"
+#: The split set of Python ``str.split()`` as a regex char class:
+#: under ``(?U)`` ``\s`` is Unicode-aware (NBSP etc.); U+001C-U+001F are
+#: separators Java's ``\s`` leaves out.
+WS_CLASS = r"\s\x1c-\x1f"
 
 #: One word: a whitespace run with its ASCII punctuation stripped from
 #: both ends. It starts and ends on a non-space, non-punctuation code
 #: point; between them anything but whitespace, interior punctuation
 #: included. A run made only of punctuation has no match.
-TOKEN = rf"(?U)[^{_WS}{PUNCT_CLASS}](?:[^{_WS}]*[^{_WS}{PUNCT_CLASS}])?"
+TOKEN = (rf"(?U)[^{WS_CLASS}{PUNCT_CLASS}]"
+         rf"(?:[^{WS_CLASS}]*[^{WS_CLASS}{PUNCT_CLASS}])?")
 
 
 def tokenize_expr(col: Column | str) -> Column:

@@ -43,6 +43,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
+from mapreducewordcount_spark.functions.tokenize import WS_CLASS
 from mapreducewordcount_spark.functions.vectors import cosine_from_norms, norm
 from mapreducewordcount_spark.functions.text_metrics import (
     fingerprint_md5,
@@ -384,7 +385,7 @@ def simhash64_expr(text_col: str | Column) -> Column:
     pinned by a parity test. Empty/blank text → all ties → 0.
     """
     c = F.col(text_col) if isinstance(text_col, str) else text_col
-    ws = F.filter(F.split(F.lower(c), r"(?U)\s+"),
+    ws = F.filter(F.split(F.lower(c), f"(?U)[{WS_CLASS}]+"),
                   lambda w: F.length(w) > 0)
     hashes = F.transform(ws, lambda w: F.xxhash64(w))
     # the UDF is built at call time: pandas_udf parses its return-type
@@ -463,14 +464,12 @@ def simhash_docs(docs: DataFrame, id_col: str = "doc_id",
     Empty documents emit NO signature row: every zero-token doc would
     otherwise hash to simhash=0, so k blank docs would fabricate a
     k(k-1)/2 Hamming-0 clique and pair with any real doc whose
-    signature legitimately lands on 0 (ADVICE r5). The filter reuses
-    the same tokenizer split; codegen CSE makes the duplicate
-    tokenization free.
+    signature legitimately lands on 0 (ADVICE r5). A text has a word
+    iff it holds a code point outside the separator set, so the filter
+    is one ``rlike`` and the split runs once, in the signature.
     """
-    toks = F.filter(F.split(F.lower(F.col(text_col)), r"(?U)\s+"),
-                    lambda w: F.length(w) > 0)
     return (docs
-            .filter(F.size(toks) > 0)  # null text → size -1 → dropped too
+            .filter(F.col(text_col).rlike(f"(?U)[^{WS_CLASS}]"))  # null → dropped
             .select(F.col(id_col).alias("doc_id"),
                     simhash64_expr(text_col).alias("simhash")))
 

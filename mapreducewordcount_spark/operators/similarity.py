@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -64,22 +65,35 @@ def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
             .select("query_id", "neighbor_id", "rank", "cos"))
 
 
-def _fixed_planes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
-    """Deterministic pseudo-random hyperplanes (LCG, no numpy RNG state).
+#: the LCG ``state ← A·state + C (mod 2^64)`` behind ``_fixed_planes``
+_LCG_A, _LCG_C = 6364136223846793005, 1442695040888963407
 
+
+def _fixed_planes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
+    """Deterministic pseudo-random hyperplanes, ``(n_planes, dim)``.
+
+    Row-major, plane ``i`` coordinate ``j`` is the LCG's step
+    ``i·dim + j + 1`` from ``seed``, its top 53 bits mapped to (-1, 1).
     Driver-side constants folded into the plan; same seed → same
     bucketing on every run and every retry.
+
+    The steps come from affine jump-ahead in ``uint64``, which wraps
+    mod 2^64 like the LCG: step ``k`` is ``A_k·seed + C_k``, and the
+    coefficients of steps ``L+1..2L`` are those of ``1..L`` composed
+    with step ``L``, so ~log2(n) vector operations replace a Python
+    step per coordinate (bit-identical to the stepwise loop, pinned by
+    a test).
     """
-    planes = []
-    state = seed
-    for _ in range(n_planes):
-        row = []
-        for _ in range(dim):
-            state = (state * 6364136223846793005 + 1442695040888963407) % (1 << 64)
-            # map top 53 bits to (-1, 1)
-            row.append((state >> 11) / float(1 << 53) * 2.0 - 1.0)
-        planes.append(row)
-    return planes
+    n = dim * n_planes
+    mul = np.array([_LCG_A], dtype=np.uint64)   # A_k, k = 1..len
+    add = np.array([_LCG_C], dtype=np.uint64)   # C_k
+    with np.errstate(over="ignore"):
+        while len(mul) < n:
+            mul, add = (np.concatenate([mul, mul * mul[-1]]),
+                        np.concatenate([add, mul * add[-1] + add]))
+        state = mul[:n] * np.uint64(seed) + add[:n]
+    top = (state >> np.uint64(11)).astype(np.float64)
+    return (top / float(1 << 53) * 2.0 - 1.0).reshape(n_planes, dim)
 
 
 def derive_band_width(corpus_size: int) -> int:
@@ -101,7 +115,7 @@ def derive_band_width(corpus_size: int) -> int:
     return max(8, math.ceil(math.log2(max(corpus_size, 2))))
 
 
-def band_keys_udf(planes: list[list[float]], n_bands: int,
+def band_keys_udf(planes: np.ndarray, n_bands: int,
                   band_width: int):
     """Arrow-batched banded sign-LSH keys: ``array<long>`` of
     ``n_bands`` keys, band ``b`` packing sign bits
@@ -121,9 +135,7 @@ def band_keys_udf(planes: list[list[float]], n_bands: int,
     expressions). Constructed at call time — pandas_udf parses its
     return type against the active session.
     """
-    import numpy as np
-
-    P = np.array(planes, dtype=np.float64).T  # (dim, n_planes)
+    P = np.asarray(planes, dtype=np.float64).T  # (dim, n_planes)
     w = np.int64(1) << np.arange(band_width, dtype=np.int64)
 
     def keys(batch: pd.Series) -> pd.Series:
@@ -278,8 +290,6 @@ def _assign_to_rows(df: DataFrame, cent_rows: list, vec: str,
     the largest level and derive every smaller level by
     ``route_rank <= p`` — the candidate sets are nested by
     construction (same stable ordering at every prefix length)."""
-    import numpy as np
-
     if not cent_rows:
         out = df.withColumn("list_id", F.lit(None).cast("long"))
         if with_rank:

@@ -3,8 +3,12 @@
 Pipeline (SURVEY.md §2.1, stages D1-D14 of the reference):
 
     scan(*.txt) → flatMap(tokenize) → strip-punct → filter(non-empty)
-    → lower → partition(ord(w[0]) % M) → count-by-key
+    → lower → count-by-key → partition(ord(w[0]) % M)
     → sort-within-partition → sink("{word} {count}")
+
+Spark runs the stages up to the count and each word's bucket; the
+sink collects ``(bucket, word, count)`` as Arrow, and the driver sorts
+it and writes the ``out-<b>`` files.
 
 Spark-first mapping: the manual shuffle via ``mr-<map>-<bucket>``
 intermediate files (``src/worker.py:76-80``, one file-open *per
@@ -19,14 +23,15 @@ shuffling terabytes of raw tokens and gigabytes of partial counts.
 output, so we keep the combine — SURVEY.md §2.1 D11.)
 
 Quirks consciously NOT replicated (SURVEY.md §7): the empty-bucket
-KeyError (``src/worker.py:126``) — empty buckets here are empty
-output partitions; and the worker early-exit liveness bug
+KeyError (``src/worker.py:126``) — an empty bucket here is an empty
+``out-<b>`` file; and the worker early-exit liveness bug
 (``src/driver.py:199``) — no analog exists.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -60,57 +65,59 @@ def wordcount_pipeline(spark: SparkSession, input_dir: str,
 
 
 def write_wordcount_output(counts: DataFrame, out_dir: str, m: int) -> None:
-    """Reference-shaped text sink (stages D9,D12,D13,D14).
+    """Reference-shaped text sink (stages D9,D12,D13,D14): one action.
 
-    One directory per bucket (``bucket=<b>/``, the engine's
-    ``out-<reduce_id>`` analog), each file lexicographically sorted by
-    code point (``src/worker.py:136``; Spark's UTF8-binary collation),
-    rows rendered ``"{word} {count}"`` single-space LF
-    (``src/worker.py:137``). ``mode("overwrite")`` replaces the
-    reference's rmtree+mkdir reset (``src/driver.py:24-39``).
+    The counts are collected as one Arrow table of ``(bucket, word,
+    count)``, so the count-by-key shuffle is the only one. The driver
+    sorts it by ``(bucket, word)`` — Arrow compares strings as unsigned
+    UTF-8 bytes, Spark's UTF8_BINARY collation and Python's code-point
+    order (``src/worker.py:136``) — and writes ``out-<b>`` for every
+    ``b < m``, one ``"{word} {count}"`` LF line per word
+    (``src/worker.py:137``), an empty file for an empty bucket (where
+    the reference itself KeyErrors, ``src/worker.py:126``). ``out_dir``
+    is replaced first, the reference's rmtree+mkdir reset
+    (``src/driver.py:24-39``).
 
-    ``repartition(m, bucket)`` pins exactly one output file per bucket
-    — parity wants exactly M files. At real scale drop the repartition
-    and let each bucket write many files; the bucket → file-set
-    mapping (not file *count*) is the durable contract.
+    The driver holds the distinct-word table, bounded by
+    ``spark.driver.maxResultSize``; the reference's reducer held a
+    whole bucket in a ``Counter`` (SCALE.md, "Word count").
 
-    The write runs under ``per_file_splits``, so the corpus scan gives
+    The collect runs under ``per_file_splits``, so the corpus scan gives
     each input file its own map split, largest first.
     """
-    out = (counts
-           .withColumn("bucket", bucket_expr("word", m))
-           .repartition(m, "bucket")
-           # sort by (bucket, word): satisfies the partitioned writer's
-           # required ordering on the partition column, so it keeps our
-           # secondary word order instead of re-sorting by bucket alone
-           .sortWithinPartitions("bucket", "word")
-           .select("bucket",
-                   F.concat_ws(" ", "word", "count").alias("value")))
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    rows = counts.select(bucket_expr("word", m).alias("bucket"), "word",
+                         "count")
     with per_file_splits(counts.sparkSession):
-        out.write.mode("overwrite").partitionBy("bucket").text(out_dir)
+        table = rows.toArrow()
+    table = table.sort_by([("bucket", "ascending"), ("word", "ascending")])
+
+    def sep(text: bytes) -> pa.Scalar:
+        return pa.scalar(text, pa.large_binary())
+
+    # "{word} {count}\n" per row, the words kept as bytes like the text
+    # writer kept them; then each bucket's run of rows joined into one
+    # value (the table is sorted by bucket, so a bucket is a row range)
+    lines = pc.binary_join_element_wise(
+        table["word"].cast(pa.large_binary()), sep(b" "),
+        table["count"].cast(pa.string()).cast(pa.large_binary()),
+        sep(b"\n"), sep(b""))
+    bounds = np.searchsorted(table["bucket"].to_numpy(), np.arange(m + 1))
+    files = pc.binary_join(pa.LargeListArray.from_arrays(
+        pa.array(bounds, pa.int64()), lines.combine_chunks()), sep(b""))
+    if os.path.exists(out_dir):
+        shutil.rmtree(out_dir)
+    os.makedirs(out_dir)
+    for b in range(m):
+        with open(os.path.join(out_dir, f"out-{b}"), "wb") as f:
+            f.write(files[b].as_buffer())
 
 
 def rename_to_reference_layout(out_dir: str, m: int) -> None:
-    """Flatten ``bucket=<b>/part-*`` dirs to flat ``out-<b>`` files.
-
-    The reference names reduce outputs ``out-<reduce_task_id>``
-    (``src/worker.py:133-137``); Spark names them
-    ``bucket=<b>/part-<uuid>``. This post-write shim concatenates
-    each bucket's part files (already sorted; single file per bucket
-    under the parity writer) into the reference's flat name, emitting
-    an EMPTY ``out-<b>`` for buckets with no words — the case where
-    the reference itself KeyErrors (``src/worker.py:126``).
-    """
-    import shutil
-
-    for b in range(m):
-        target = os.path.join(out_dir, f"out-{b}")
-        src_dir = os.path.join(out_dir, f"bucket={b}")
-        with open(target, "wb") as out:
-            if os.path.isdir(src_dir):
-                for part in sorted(os.listdir(src_dir)):
-                    if part.startswith("part-"):
-                        with open(os.path.join(src_dir, part), "rb") as f:
-                            shutil.copyfileobj(f, out)
-        if os.path.isdir(src_dir):
-            shutil.rmtree(src_dir)
+    """Does nothing: ``write_wordcount_output`` already writes the
+    reference's flat ``out-<b>`` files. Kept for callers written
+    against the older partitioned-write sink, whose ``bucket=<b>/``
+    part files this step concatenated."""

@@ -42,7 +42,7 @@ from mapreducewordcount_spark.operators import dedup as dd
 from mapreducewordcount_spark.operators import similarity as sim
 from mapreducewordcount_spark.queries import QuerySpec
 from mapreducewordcount_spark.sources import sig_artifacts as _sig_artifacts
-from mapreducewordcount_spark.sources.tables import load_table
+from mapreducewordcount_spark.sources.tables import load_table, table_rows
 
 # Words CTE shared by the shingle oracles — mirrors the native
 # tokenizer (functions/tokenize.py): whitespace split, ASCII-punct
@@ -226,8 +226,12 @@ FROM reach GROUP BY id
 
 def lsh_band_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(id, band, key) sign-LSH band table — the model table of
-    ``dedup_embedding_pairs_lsh`` and ``ann_lsh_topk``."""
-    return dd.embedding_band_keys(load_table(spark, sf_dir, "embeddings"))
+    ``dedup_embedding_pairs_lsh`` and ``ann_lsh_topk``. The band width
+    derives from the row count in the parquet footers, so building it
+    runs no Spark job."""
+    return dd.embedding_band_keys(
+        load_table(spark, sf_dir, "embeddings"),
+        corpus_size=table_rows(sf_dir, "embeddings"))
 
 
 def dedup_embedding_pairs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -240,7 +244,8 @@ def dedup_embedding_pairs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     (pytest-pinned, numpy-computed) banding is value-checked. Recall
     vs the exact operator stays pinned in tests."""
     return dd.embedding_dup_pairs_lsh(
-        load_table(spark, sf_dir, "embeddings"), threshold=0.45)
+        load_table(spark, sf_dir, "embeddings"), threshold=0.45,
+        corpus_size=table_rows(sf_dir, "embeddings"))
 
 
 LSH_PAIRS_SQL = f"""

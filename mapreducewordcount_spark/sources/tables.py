@@ -110,6 +110,15 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return normalize_events_ts(spark.read.parquet(path))
 
 
+def table_rows(sf_dir: str, name: str) -> int:
+    """Row count of a ``load_table`` table, read from its parquet
+    footers on the driver: no Spark job, ~1 ms at every TESTDATA
+    scale factor."""
+    import pyarrow.dataset as ds
+
+    return ds.dataset(f"{sf_dir}/{name}.parquet").count_rows()
+
+
 def load_tables(spark: SparkSession, sf_dir: str,
                 names: tuple[str, ...] = TABLES) -> dict[str, DataFrame]:
     return {n: load_table(spark, sf_dir, n) for n in names}

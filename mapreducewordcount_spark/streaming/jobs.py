@@ -434,24 +434,20 @@ def start_wordcount_to_reference_sink(lines: DataFrame, out_dir: str, m: int,
     ``foreachBatch`` is the escape hatch for sinks Spark doesn't ship:
     each micro-batch delivers the *complete* updated counts (complete
     output mode), and the batch function reuses the engine's batch
-    writer + rename shim — one code path for batch and streaming
-    output contracts. The checkpoint dir makes restarts resume from
-    the last committed batch (epoch-based exactly-once at the sink:
-    a re-delivered batch id can be detected and skipped; the rewrite
-    here is idempotent, which is the simpler sufficient property).
+    writer — one code path for batch and streaming output contracts.
+    The checkpoint dir makes restarts resume from the last committed
+    batch (epoch-based exactly-once at the sink: a re-delivered batch
+    id can be detected and skipped; the rewrite here is idempotent,
+    which is the simpler sufficient property).
 
     Returns the started StreamingQuery (caller stops it).
     """
-    from mapreducewordcount_spark.operators.wordcount import (
-        rename_to_reference_layout,
-        write_wordcount_output,
-    )
+    from mapreducewordcount_spark.operators.wordcount import write_wordcount_output
 
     counts = stream_word_counts(lines).withColumnRenamed("cnt", "count")
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         write_wordcount_output(batch_df, out_dir, m=m)
-        rename_to_reference_layout(out_dir, m=m)
 
     return (counts.writeStream.outputMode("complete")
             .option("checkpointLocation", checkpoint_dir)

@@ -507,6 +507,23 @@ def test_simhash_rowlocal_matches_batch_form(spark):
     assert got[5] == got[6] == 0        # empty → all ties → 0
 
 
+def test_simhash_splits_on_python_separators(spark):
+    """SimHash words are ``str.split()`` words: U+001C-U+001F separate
+    words as a space does (Java's ``\\s`` leaves them out), and a text
+    made only of them has no word, so it gets no signature row."""
+    from mapreducewordcount_spark.operators.dedup import simhash64_expr
+
+    docs = spark.createDataFrame(
+        [(1, "a\x1cb"), (2, "a b"), (3, "a\x1fb\x1dc"), (4, "a\tb c"),
+         (5, "\x1c\x1e")], "doc_id long, text string")
+    got = {r.doc_id: r.sh for r in docs.select(
+        "doc_id", simhash64_expr("text").alias("sh")).collect()}
+    assert got[1] == got[2] != 0
+    assert got[3] == got[4] != got[1]
+    assert got[5] == 0
+    assert {r.doc_id for r in dd.simhash_docs(docs).collect()} == {1, 2, 3, 4}
+
+
 def test_signature_pairs_collapse_identical_star_form(spark):
     """collapse_identical=True: a 3-member identical-signature cluster
     emits 2 star rows (rep ↔ member, hamming 0) instead of 3 clique

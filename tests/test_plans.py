@@ -227,25 +227,32 @@ def test_ivf_routing_is_shuffle_free(spark):
     assert "Window" not in plan, plan
 
 
-def _udf_evals_per_path(node, above=(), worst=None) -> dict:
-    """Python UDF name → the most times it is evaluated on one
-    root-to-leaf path of a physical plan (JVM ``SparkPlan``), cached
-    relations and query stages included."""
-    worst = {} if worst is None else worst
+def _plan_children(node) -> list:
+    """The children of a physical plan node (JVM ``SparkPlan``), plus
+    the plan behind an adaptive plan, a cached relation or a query
+    stage."""
     if node.nodeName() == "AdaptiveSparkPlan":
-        return _udf_evals_per_path(node.executedPlan(), above, worst)
-    if node.nodeName() in ("ArrowEvalPython", "BatchEvalPython"):
-        udfs = node.udfs()
-        above = above + tuple(udfs.apply(i).name() for i in range(udfs.size()))
-        for name in set(above):
-            worst[name] = max(worst.get(name, 0), above.count(name))
+        return [node.executedPlan()]
     children = node.children()
     kids = [children.apply(i) for i in range(children.size())]
     if node.nodeName() == "InMemoryTableScan":
         kids.append(node.relation().cachedPlan())
     if "QueryStage" in node.getClass().getSimpleName():
         kids.append(node.plan())
-    for kid in kids:
+    return kids
+
+
+def _udf_evals_per_path(node, above=(), worst=None) -> dict:
+    """Python UDF name → the most times it is evaluated on one
+    root-to-leaf path of a physical plan, cached relations and query
+    stages included."""
+    worst = {} if worst is None else worst
+    if node.nodeName() in ("ArrowEvalPython", "BatchEvalPython"):
+        udfs = node.udfs()
+        above = above + tuple(udfs.apply(i).name() for i in range(udfs.size()))
+        for name in set(above):
+            worst[name] = max(worst.get(name, 0), above.count(name))
+    for kid in _plan_children(node):
         _udf_evals_per_path(kid, above, worst)
     return worst
 
@@ -273,3 +280,27 @@ def test_arrow_udf_runs_once_per_input_row(spark, query):
     df = build(spark, SF_SMOKE)
     evals = _udf_evals_per_path(df._jdf.queryExecution().executedPlan())
     assert evals and set(evals.values()) == {1}, evals
+
+
+def _splits_per_path(node) -> int:
+    """The most ``split`` expressions on one root-to-leaf path of a
+    physical plan, cached relations and query stages included."""
+    exprs = node.expressions()
+    here = sum(exprs.apply(i).toString().count("split(")
+               for i in range(exprs.size()))
+    return here + max(map(_splits_per_path, _plan_children(node)), default=0)
+
+
+@pytest.mark.parametrize("query", ["dedup_simhash_pairs", "simhash_model"])
+def test_simhash_splits_each_document_once(spark, query):
+    """SimHash tokenizes a document once: the empty-document filter is
+    one ``rlike``, so the only ``split`` on any plan path is the
+    signature's."""
+    from mapreducewordcount_spark.queries import all_queries
+    from mapreducewordcount_spark.queries.dedup_queries import simhash_model
+    from tests.conftest import SF_SMOKE
+
+    build = (simhash_model if query == "simhash_model"
+             else all_queries()[query].spark_fn)
+    plan = build(spark, SF_SMOKE)._jdf.queryExecution().executedPlan()
+    assert _splits_per_path(plan) == 1

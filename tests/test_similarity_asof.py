@@ -393,3 +393,56 @@ def test_ivfpq_append_drift_report_invariants(spark, emb):
             assert r.retrain == (r.drift_ratio >= IVFPQ_RETRAIN_DRIFT)
         else:
             assert r.retrain is False
+
+
+def _stepwise_planes(dim: int, n_planes: int, seed: int = 42):
+    """The plane LCG stepped once per coordinate in Python — the
+    reference for ``_fixed_planes``'s jump-ahead."""
+    planes, state = [], seed
+    for _ in range(n_planes):
+        row = []
+        for _ in range(dim):
+            state = (state * 6364136223846793005
+                     + 1442695040888963407) % (1 << 64)
+            row.append((state >> 11) / float(1 << 53) * 2.0 - 1.0)
+        planes.append(row)
+    return planes
+
+
+@pytest.mark.parametrize("dim,n_planes,seed", [
+    (64, 576, 42), (64, 640, 42), (8, 16, 42), (4, 8, 42), (1, 1, 42),
+    (3, 7, 7), (5, 3, (1 << 64) - 1)])
+def test_fixed_planes_match_stepwise_lcg(dim, n_planes, seed):
+    """The jump-ahead planes are bit-identical to the stepwise LCG."""
+    import numpy as np
+
+    from mapreducewordcount_spark.operators.similarity import _fixed_planes
+
+    got = _fixed_planes(dim, n_planes, seed)
+    want = np.array(_stepwise_planes(dim, n_planes, seed), dtype=np.float64)
+    assert got.shape == (n_planes, dim)
+    assert got.tobytes() == want.tobytes()
+
+
+@pytest.mark.parametrize("name", ["dedup_embedding_pairs_lsh",
+                                  "lsh_band_model"])
+def test_lsh_construction_runs_no_jobs(spark, name):
+    """Building an LSH query runs no Spark job: the band width comes
+    from the embeddings' parquet footers, not from a ``count()``."""
+    from mapreducewordcount_spark.queries import all_queries
+    from mapreducewordcount_spark.queries.dedup_queries import lsh_band_model
+    from mapreducewordcount_spark.sources.tables import load_table
+    from tests.conftest import SF_SMOKE
+
+    build = (lsh_band_model if name == "lsh_band_model"
+             else all_queries()[name].spark_fn)
+    sc = spark.sparkContext
+    load_table(spark, SF_SMOKE, "embeddings")  # ship the package first
+    group = f"construct:{name}"
+    try:
+        sc.setJobGroup(group, f"build {name}")
+        build(spark, SF_SMOKE)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []

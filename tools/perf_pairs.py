@@ -24,8 +24,11 @@ the metric (a run that failed) counts as a change loss, and no metric
 shows a gain when the change failed more operations than the parent.
 The better direction of each metric comes from the change's
 ``BENCHMARK.json`` (lower when not listed). Every run's correctness
-and failed-operation count is printed too; ``--log`` appends each
-run's result object as one JSON line.
+and failed-operation count is printed too, and per side the median of
+each query's ``per_query_median_s`` and of the host's CPU probe
+(``host.cpu_probe_s``), which tell a slower query from a slower host.
+``--log`` appends each run's result object and its ``{"record": ...}``
+line as one JSON line.
 """
 
 from __future__ import annotations
@@ -54,8 +57,9 @@ def better_directions(spec: dict) -> dict[str, str]:
 
 
 def run_once(spec: dict, checkout: Path, workload: str, seed: int,
-             trace: int) -> dict:
-    """One benchmark run; its last stdout line is the result object."""
+             trace: int) -> tuple[dict, dict]:
+    """One benchmark run: (the result object, its last stdout line;
+    the record, its ``{"record": ...}`` line, or ``{}``)."""
     cmd = spec["command"] + [
         "--workload", workload, "--seed", str(seed),
         "--seconds", str(spec["run_seconds"]), "--trace", str(trace)]
@@ -70,7 +74,11 @@ def run_once(spec: dict, checkout: Path, workload: str, seed: int,
         result = {"correct": False, "attempted": 0, "failed": 1,
                   "metrics": {}}
     result["exit_code"] = proc.returncode
-    return result
+    record = {}
+    for line in lines:
+        if line.startswith('{"record"'):
+            record = json.loads(line)["record"]
+    return result, record
 
 
 def quartiles(values: list[float]) -> tuple[float, float, float]:
@@ -98,6 +106,26 @@ def verdict(pairs: list[tuple[float | None, float | None]], better: str
     gap = sign * (p_med - c_med)
     holds = wins >= 0.9 * len(pairs) and gap > q3 - q1
     return wins, ties, holds
+
+
+def host_report(records: dict[str, list[dict]]) -> None:
+    """Per side, the median over runs of each query's
+    ``per_query_median_s`` and of every ``host.cpu_probe_s`` reading."""
+    queries = sorted(set().union(*(r.get("per_query_median_s", {})
+                                   for side in SIDES
+                                   for r in records[side])))
+    rows = [(f"query {q}", [[r["per_query_median_s"][q]
+                             for r in records[side]
+                             if q in r.get("per_query_median_s", {})]
+                            for side in SIDES]) for q in queries]
+    rows.append(("host.cpu_probe_s",
+                 [[v for r in records[side]
+                   for v in r.get("host", {}).get("cpu_probe_s", [])]
+                  for side in SIDES]))
+    for name, values in rows:
+        cells = [f"{statistics.median(v):.4g}" if v else "-" for v in values]
+        print(f"{name:32} {'median':>8} parent {cells[0]:>10} "
+              f"change {cells[1]:>10}")
 
 
 def report(results: dict[str, list[dict]], better: dict[str, str]) -> None:
@@ -140,16 +168,20 @@ def main(argv: list[str] | None = None) -> int:
                     help="inclusive range A-B, or one seed")
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--log", type=Path,
-                    help="append every run's result as a JSON line")
+                    help="append every run's result and record as a "
+                    "JSON line")
     args = ap.parse_args(argv)
     dirs = {"parent": args.parent.resolve(), "change": args.change.resolve()}
     spec = json.loads((dirs["change"] / "BENCHMARK.json").read_text())
     results: dict[str, list[dict]] = {side: [] for side in SIDES}
+    records: dict[str, list[dict]] = {side: [] for side in SIDES}
     for i, seed in enumerate(args.seeds):
         order = SIDES if i % 2 == 0 else SIDES[::-1]
         for side in order:
-            res = run_once(spec, dirs[side], args.workload, seed, args.trace)
+            res, rec = run_once(spec, dirs[side], args.workload, seed,
+                                args.trace)
             results[side].append(res)
+            records[side].append(rec)
             shown = {k: round(v["value"], 4)
                      for k, v in sorted(res["metrics"].items())
                      if k.endswith("makespan_s") or k == "setup_s"}
@@ -158,8 +190,10 @@ def main(argv: list[str] | None = None) -> int:
             if args.log:
                 with args.log.open("a") as fh:
                     fh.write(json.dumps({"seed": seed, "side": side,
-                                         "result": res}) + "\n")
+                                         "result": res, "record": rec})
+                             + "\n")
     report(results, better_directions(spec))
+    host_report(records)
     return 0 if all(r["correct"] for side in SIDES
                     for r in results[side]) else 1
 
