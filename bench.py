@@ -1,9 +1,10 @@
 #!/usr/bin/env python
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR.
 
-Prints ONE JSON line:
+Prints ONE JSON line to stdout and writes no file:
   {"metric": "headline_total", "value": <sec>, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": <dir>, "sessions": {...}}
+   "core_total": <sec>, "queries": {name: sec, ...}, "sf": <dir>,
+   "subset": ..., "sessions": {...}, "method": ..., ...}
 
 Each query is executed to completion through the ``noop`` sink
 (full computation, no driver collect, no disk write) — the same
@@ -12,19 +13,22 @@ cost rather than toPandas serialization.
 
 Noise control, two levels:
 
-- WITHIN a session (round-5, VERDICT r4 #3): each query is the
-  MEDIAN of 3 runs (absorbs one-off GC pauses), and between queries
-  the harness clears Spark's block-manager cache and asks both heaps
-  for a GC so query N+1 does not pay query N's heap debt.
-- ACROSS sessions (round-6, VERDICT r5 wrong#1): session-level
-  variance on heavyweight queries is ±10-35% (JIT state, OS cache,
-  heap shape), and a single committed session can sit far outside
-  the builder's own measured band — the r5 artifact did. The
-  harness now runs ``$SPARK_GRAFT_BENCH_SESSIONS`` (default 2)
-  FRESH-JVM sessions sequentially and reports the per-session
-  totals plus min/median/max, with the headline = the MEDIAN
-  session's total and per-query times = across-session medians.
-  Cross-round comparisons should read the band, not the point.
+- WITHIN a session: each query is the MEDIAN of 3 runs (absorbs
+  one-off GC pauses), and between queries the harness clears
+  Spark's block-manager cache and asks both heaps for a GC so query
+  N+1 does not pay query N's heap debt.
+- ACROSS sessions: session-level variance on heavyweight queries is
+  ±10-35% (JIT state, OS cache, heap shape). The harness runs
+  ``$SPARK_GRAFT_BENCH_SESSIONS`` (default 3) FRESH-JVM sessions
+  sequentially and reports the per-session totals plus
+  min/median/max, with the headline = the MEDIAN session's total and
+  per-query times = across-session medians.
+
+Each session also times perfbench's fixed single-threaded loop
+(``perfbench/spans.py::cpu_probe_s``) at its start and at its end and
+reports the pair as ``cpu_probe_s``: a slower core shows up there,
+not only in the query times. There is no threshold and no verdict;
+a reader compares the readings.
 
 Methodology details in BASELINE.md.
 """
@@ -34,7 +38,6 @@ from __future__ import annotations
 import gc
 import json
 import os
-import re
 import statistics
 import subprocess
 import sys
@@ -44,6 +47,8 @@ from pathlib import Path
 _REPO = str(Path(__file__).resolve().parent)
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
+
+from perfbench.spans import cpu_probe_s  # noqa: E402
 
 #: representative slice of the operator surface: scan+agg, joins,
 #: window, as-of, sessionize, wordcount, dedup (exact + LSH), ANN,
@@ -196,140 +201,13 @@ CORE = HEADLINE[:24]
 assert CORE[-1] == "source_overlap_matrix", "frozen core displaced"
 
 
-def _env_fingerprint() -> dict:
-    """Machine-state snapshot recorded with every bench report
-    (VERDICT r8 next#3): rounds 7 and 8 both measured a UNIFORM
-    1.15-1.3x inflation across untouched queries — a machine-state
-    signature, not a plan regression — and the fingerprint is what
-    lets a round distinguish the two without re-bisecting. Best
-    effort: any missing /proc or /sys source records as None."""
-    fp: dict = {"cpus": os.cpu_count()}
-    try:
-        with open("/proc/loadavg") as f:
-            fp["loadavg"] = [float(x) for x in f.read().split()[:3]]
-    except Exception:  # noqa: BLE001
-        fp["loadavg"] = None
-    try:
-        mem = {}
-        with open("/proc/meminfo") as f:
-            for line in f:
-                k, v = line.split(":", 1)
-                if k in ("MemTotal", "MemAvailable", "Cached",
-                         "Dirty", "SwapFree"):
-                    mem[k] = int(v.strip().split()[0])  # kB
-        fp["meminfo_kb"] = mem
-    except Exception:  # noqa: BLE001
-        fp["meminfo_kb"] = None
-    try:
-        gov = Path("/sys/devices/system/cpu/cpu0/cpufreq"
-                   "/scaling_governor")
-        fp["cpu_governor"] = gov.read_text().strip() \
-            if gov.exists() else None
-    except Exception:  # noqa: BLE001
-        fp["cpu_governor"] = None
-    try:
-        with open("/proc/stat") as f:
-            first = f.readline().split()
-        # aggregate jiffies since boot: (busy, total, steal) — two
-        # snapshots give machine-wide utilization AND hypervisor
-        # steal share over the bench window (steal is the smoking gun
-        # for host-level contention a guest can't otherwise see)
-        vals = [int(x) for x in first[1:]]
-        steal = vals[7] if len(vals) > 7 else 0
-        # busy excludes idle, iowait AND steal so cpu_util_pct and
-        # steal_pct partition the window consistently (ADVICE r9 —
-        # counting steal inside busy double-counted stolen time)
-        fp["cpu_jiffies"] = {"busy": sum(vals) - vals[3] - vals[4] - steal,
-                             "total": sum(vals),
-                             "steal": steal}
-    except Exception:  # noqa: BLE001
-        fp["cpu_jiffies"] = None
-    # deterministic single-core calibration: the same fixed pure-
-    # Python loop every round (min-of-3) — two reports whose scores
-    # differ materially ran on effectively different machines, and
-    # their wall-clock totals must not be compared raw
-    try:
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.perf_counter()
-            s = 0
-            for i in range(2_000_000):
-                s += i * i
-            best = min(best, time.perf_counter() - t0)
-        fp["cpu_score_ms"] = round(best * 1000, 1)
-    except Exception:  # noqa: BLE001
-        fp["cpu_score_ms"] = None
-    # single-thread DRAM bandwidth (best-of-3 256 MB numpy copy —
-    # far beyond LLC): the noisy-neighbor tell cpu_score can't see.
-    # A compute-bound loop reads clean while a bandwidth-hungry
-    # co-tenant slows every shuffle/scan (tools/fp_watch.py r12).
-    try:
-        import numpy as np
-        a = np.empty(32 * 1024 * 1024, dtype=np.float64)  # 256 MB
-        a[:] = 1.0
-        bw_best = float("inf")
-        for _ in range(3):
-            t0 = time.perf_counter()
-            b = a.copy()
-            bw_best = min(bw_best, time.perf_counter() - t0)
-            del b
-        # copy reads + writes 256 MB each → 512 MB moved
-        fp["membw_gbps"] = round((2 * a.nbytes / bw_best) / 1e9, 2)
-    except Exception:  # noqa: BLE001
-        fp["membw_gbps"] = None
-    return fp
-
-
-#: contention thresholds for the self-flagging bench record (VERDICT
-#: r12 wrong#1 / next#3). A session whose window violates any of
-#: these is marked ``"contended": true`` in its own JSON so a
-#: downstream reader can't mistake contention tails for plan changes:
-#: - steal_pct > 1%: hypervisor actively de-scheduling this guest
-#:   (clean-era sessions read < 0.5%; the driver's r11/r12 noisy
-#:   runs read 5.5%/3.88%)
-#: - cpu_score_ms start/end drift > 10%: the machine's single-core
-#:   speed changed DURING the session — whatever was measured
-#:   between the two snapshots straddles two machine states
-#: - membw_gbps < 3.5 on either snapshot: this host reads
-#:   5.4-6.5 GB/s single-thread in zero-steal windows
-#:   (artifacts/fp_watch_r12/13.log); dips below ~4 co-occur with
-#:   co-tenant episodes, so 3.5 flags only severe bandwidth theft
-CONTENTION = {"steal_pct": 1.0, "score_drift": 0.10,
-              "membw_floor_gbps": 3.5}
-
-
-def _contention_reasons(sess_env: dict) -> list[str]:
-    """Violations of the CONTENTION thresholds for one condensed
-    session env (the ``_session_env`` shape). Empty list = clean."""
-    reasons: list[str] = []
-    steal = sess_env.get("steal_pct")
-    if steal is not None and steal > CONTENTION["steal_pct"]:
-        reasons.append(f"steal_pct {steal} > {CONTENTION['steal_pct']}")
-    scores = [(sess_env.get(side) or {}).get("cpu_score_ms")
-              for side in ("start", "end")]
-    if all(isinstance(s, (int, float)) for s in scores) and min(scores):
-        drift = abs(scores[1] - scores[0]) / min(scores)
-        if drift > CONTENTION["score_drift"]:
-            reasons.append(
-                f"cpu_score_ms drift {drift:.0%} "
-                f"({scores[0]} -> {scores[1]}) > "
-                f"{CONTENTION['score_drift']:.0%}")
-    for side in ("start", "end"):
-        bw = (sess_env.get(side) or {}).get("membw_gbps")
-        if bw is not None and bw < CONTENTION["membw_floor_gbps"]:
-            reasons.append(
-                f"membw_gbps {bw} ({side}) < "
-                f"{CONTENTION['membw_floor_gbps']}")
-    return reasons
-
-
 def run_session() -> dict:
     """One fresh-session measurement pass: per-query median-of-3."""
     from mapreducewordcount_spark.queries import all_queries
     from mapreducewordcount_spark.session import get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    env_start = _env_fingerprint()
+    probe_start = cpu_probe_s()
     spark = get_spark("bench")
     specs = all_queries()
 
@@ -357,15 +235,11 @@ def run_session() -> dict:
         gc.collect()
 
     # per-query isolation: one broken query must degrade the report
-    # (null timing + error string), never erase it — a bench harness
-    # should degrade, not vanish (round-2 lesson).
+    # (null timing + error string), never erase it.
     # SPARK_GRAFT_BENCH_ONLY=core (or a comma list of query names)
-    # restricts the session to a subset — the clean-gap instrument:
-    # this host's contention episodes leave ~3-6 min quiet gaps, too
-    # short for a full headline session but enough for the frozen
-    # 24-query CORE, whose core_total is the cross-round regression
-    # number anyway. The report carries ``subset`` so a reader (and
-    # compare_bench's per-query ratios) can't mistake a core-only
+    # restricts the session to a subset, e.g. the frozen 24-query
+    # CORE. The report carries ``subset`` so a reader (and
+    # compare_bench's per-query ratios) can't mistake a subset
     # session's headline_total for a full run's.
     only = os.environ.get("SPARK_GRAFT_BENCH_ONLY", "")
     if only == "core":
@@ -375,9 +249,8 @@ def run_session() -> dict:
         names = tuple(n for n in HEADLINE if n in wanted)
         unknown = sorted(wanted - set(HEADLINE))
         if unknown:
-            # a typo'd name must not silently shrink the subset
-            # (ADVICE r12): the session still runs, but the record
-            # and stderr both say what was dropped
+            # a typo'd name must not silently shrink the subset: the
+            # session still runs, and stderr says what was dropped
             print(f"SPARK_GRAFT_BENCH_ONLY names not in HEADLINE, "
                   f"ignored: {', '.join(unknown)}", file=sys.stderr)
     else:
@@ -403,136 +276,79 @@ def run_session() -> dict:
             errors[name] = f"{type(exc).__name__}: {exc}"[:500]
             print(f"bench query {name} failed: {errors[name]}",
                   file=sys.stderr)
+    spark.stop()
 
     total = round(sum(v for v in timings.values() if v is not None), 3)
     core_total = round(sum(v for n, v in timings.items()
                            if n in CORE and v is not None), 3)
-    # key order matters (VERDICT r10 wrong#4): the driver's capture
-    # truncates long report lines from the END, so the per-query map
-    # and the round-over-round core_total — the regression instrument
-    # — come FIRST; fingerprints and method strings ride the tail.
+    # key order matters: a capture that truncates long report lines
+    # from the END still keeps the per-query map and core_total
     report = {"metric": "headline_total", "value": total, "unit": "sec",
               "core_total": core_total, "queries": timings, "sf": sf_dir,
               "subset": only or "headline",
-              "env_start": env_start, "env_end": _env_fingerprint(),
               "method": "median-of-3, cache cleared after every rep, "
                         "GC between queries"}
     if errors:
         report["errors"] = errors
-    # self-identify a contended window IN the record (VERDICT r12
-    # wrong#1): a downstream reader of a single noisy session must
-    # not have to cross-check fp_watch logs to distrust its tails
-    reasons = _contention_reasons(_session_env(report))
-    report["contended"] = bool(reasons)
-    if reasons:
-        report["contended_reasons"] = reasons
-    spark.stop()
+    report["host"] = {"cpu_probe_s": [round(probe_start, 4),
+                                      round(cpu_probe_s(), 4)]}
     return report
 
 
-def _session_env(report: dict) -> dict:
-    """Condense one session's start/end fingerprints, deriving the
-    machine-wide CPU utilization across its window from the two
-    /proc/stat jiffy snapshots."""
-    start, end = report.get("env_start"), report.get("env_end")
-    out = {"start": start, "end": end, "cpu_util_pct": None,
-           "steal_pct": None}
-    try:
-        db = end["cpu_jiffies"]["busy"] - start["cpu_jiffies"]["busy"]
-        dt = end["cpu_jiffies"]["total"] - start["cpu_jiffies"]["total"]
-        ds = (end["cpu_jiffies"].get("steal", 0)
-              - start["cpu_jiffies"].get("steal", 0))
-        if dt > 0:
-            out["cpu_util_pct"] = round(100.0 * db / dt, 1)
-            out["steal_pct"] = round(100.0 * ds / dt, 2)
-    except (KeyError, TypeError):
-        pass
-    return out
+def combine_sessions(reports: list[dict]) -> dict:
+    """One report over several sessions' reports: the median session's
+    totals, per-query medians across sessions, and each session's
+    ``cpu_probe_s`` pair in session order."""
+    totals = sorted(r["value"] for r in reports)
+    core_totals = sorted(r.get("core_total", 0.0) for r in reports)
+    queries: dict[str, float | None] = {}
+    for name in HEADLINE:
+        vals = [r["queries"].get(name) for r in reports]
+        vals = [v for v in vals if v is not None]
+        queries[name] = round(statistics.median(vals), 3) if vals else None
+    errors: dict[str, str] = {}
+    for r in reports:
+        errors.update(r.get("errors", {}))
+
+    report = {
+        "metric": "headline_total",
+        # the median SESSION total — a total that actually happened,
+        # not a sum of cross-session per-query medians. Even counts
+        # take the UPPER median (conservative: never flatters the
+        # engine with the lucky session).
+        "value": totals[len(totals) // 2],
+        "unit": "sec",
+        # the frozen 24-query comparison core (see CORE): the number
+        # to compare round-over-round; the headline total grows with
+        # coverage by construction
+        "core_total": core_totals[len(core_totals) // 2],
+        "queries": queries,  # per-query: median across sessions
+        "sf": reports[0]["sf"],
+        "subset": reports[0].get("subset", "headline"),
+        "sessions": {"n": len(reports), "totals": totals,
+                     "core_totals": core_totals,
+                     "min": totals[0], "median": totals[len(totals) // 2],
+                     "max": totals[-1],
+                     "cpu_probe_s": [r["host"]["cpu_probe_s"]
+                                     for r in reports]},
+        "method": (f"{len(reports)} fresh-JVM sessions x (median-of-3 "
+                   "per query, cache cleared after every rep, GC "
+                   "between queries); "
+                   "headline = median session total"),
+    }
+    if errors:
+        report["errors"] = errors
+    return report
 
 
-def _round_no() -> int:
-    """Current build round: ``SPARK_GRAFT_ROUND`` if set, else
-    1 + the highest committed ``BENCH_r{N}.json`` in the repo root
-    (the driver writes one per completed round, so during round N
-    the highest on disk is N−1)."""
-    env = os.environ.get("SPARK_GRAFT_ROUND")
-    if env and env.isdigit():
-        return int(env)
-    best = 0
-    for p in Path(_REPO).glob("BENCH_r*.json"):
-        # anchored: a seq-suffixed file (BENCH_r12.2.json, stem
-        # "BENCH_r12.2") must parse as round 12, not 122 — digit
-        # concatenation scattered future artifacts (ADVICE r12)
-        m = re.match(r"BENCH_r(\d+)", p.stem)
-        if m:
-            best = max(best, int(m.group(1)))
-    return best + 1
-
-
-def _emit(report: dict, line: dict | None = None) -> None:
-    """Print the report line AND commit the full report to an
-    IMMUTABLE per-round artifact (VERDICT r11 wrong#1 / next#3):
-    ``artifacts/bench_r{N}.json`` if free, else ``bench_r{N}.2.json``
-    etc. — a later run in the same round can never silently replace
-    an earlier committed record (r11 demonstrated the failure: the
-    driver's contended 1-session run overwrote the working-tree copy
-    of the 3-session episode artifact). ``bench_latest.json`` stays
-    as a mutable convenience copy; ``tools/compare_bench.py`` prefers
-    the per-round files. The printed line (``line`` if given, else
-    the full report) leads with the per-query map so even a truncated
-    stdout capture keeps the regression instrument intact (VERDICT
-    r10 wrong#4)."""
-    line = dict(line if line is not None else report)
-    try:
-        art_dir = Path(_REPO) / "artifacts"
-        art_dir.mkdir(exist_ok=True)
-        rnd = _round_no()
-        dest = art_dir / f"bench_r{rnd}.json"
-        seq = 1
-        while dest.exists():
-            seq += 1
-            dest = art_dir / f"bench_r{rnd}.{seq}.json"
-        with open(dest, "w") as f:
-            json.dump(report, f, indent=1)
-        with open(art_dir / "bench_latest.json", "w") as f:
-            json.dump(report, f, indent=1)
-        line["artifact"] = f"artifacts/{dest.name}"
-        # truncation-proof per-round summary (VERDICT r13 next#3):
-        # BENCH_r12.json's captured tail was cut mid-JSON, nulling the
-        # whole r12↔r13 comparison even though the data existed. This
-        # COMMITTED compact file (per-query medians + condensed env
-        # only, no fingerprint tail) lets any later round rebuild
-        # bench_vs_prev from the repo alone. Last full-headline run of
-        # a round wins — subset sessions must not shadow it, and the
-        # core count is in the name so a scaling leg on a bigger host
-        # never shadows the headline of another.
-        if report.get("subset", "headline") == "headline":
-            cpus = int(os.environ.get("SPARK_GRAFT_CPUS",
-                                      os.cpu_count() or 0))
-            summary = {
-                "round": rnd, "value": report.get("value"),
-                "core_total": report.get("core_total"),
-                "unit": "sec", "sf": report.get("sf"),
-                "cpus": cpus,
-                "queries": report.get("queries"),
-                "sessions": report.get("sessions"),
-                "env": line.get("env"),
-                "contended": report.get("contended"),
-                "contended_reasons": report.get("contended_reasons"),
-                "method": report.get("method"),
-                "artifact": f"artifacts/{dest.name}",
-            }
-            with open(Path(_REPO) / f"BENCH_SUMMARY_r{rnd}_c{cpus}.json",
-                      "w") as f:
-                json.dump(summary, f, indent=1)
-    except Exception as exc:  # noqa: BLE001 — artifact is best-effort
-        print(f"bench artifact write failed: {exc!r}", file=sys.stderr)
-    print(json.dumps(line))
+def _emit(report: dict) -> None:
+    """Print the report as one JSON line on stdout — its only output."""
+    print(json.dumps(report))
 
 
 def main() -> None:
     if "--session" in sys.argv:
-        print(json.dumps(run_session()))
+        _emit(run_session())
         return
     n_sessions = int(os.environ.get("SPARK_GRAFT_BENCH_SESSIONS", "3"))
     if n_sessions <= 1:
@@ -568,67 +384,7 @@ def main() -> None:
         reports.append(json.loads(line))
     if not reports:
         raise SystemExit("all bench sessions failed")
-
-    totals = sorted(r["value"] for r in reports)
-    core_totals = sorted(r.get("core_total", 0.0) for r in reports)
-    queries: dict[str, float | None] = {}
-    for name in HEADLINE:
-        vals = [r["queries"].get(name) for r in reports]
-        vals = [v for v in vals if v is not None]
-        queries[name] = round(statistics.median(vals), 3) if vals else None
-    errors: dict[str, str] = {}
-    for r in reports:
-        errors.update(r.get("errors", {}))
-
-    env = [_session_env(r) for r in reports]
-    per_sess_reasons = [_contention_reasons(e) for e in env]
-    contended = any(per_sess_reasons)
-    report = {
-        "metric": "headline_total",
-        # the median SESSION total — a total that actually happened,
-        # not a sum of cross-session per-query medians. Even counts
-        # take the UPPER median (conservative: never flatters the
-        # engine with the lucky session).
-        "value": totals[len(totals) // 2],
-        "unit": "sec",
-        # the frozen 24-query comparison core (see CORE): the number
-        # to compare round-over-round; the headline total grows with
-        # coverage by construction
-        "core_total": core_totals[len(core_totals) // 2],
-        "queries": queries,  # per-query: median across sessions
-        "sf": reports[0]["sf"],
-        "subset": reports[0].get("subset", "headline"),
-        "sessions": {"n": len(reports), "totals": totals,
-                     "core_totals": core_totals,
-                     "min": totals[0], "median": totals[len(totals) // 2],
-                     "max": totals[-1]},
-        # per-session machine-state fingerprints (VERDICT r8 next#3):
-        # cpu_util_pct is MACHINE-WIDE busy share over the session
-        # window — anything far above this process's fair share marks
-        # an externally-loaded (inflated) session. The printed line
-        # carries only the condensed numbers (score/util/steal); the
-        # full start/end fingerprints live in the committed artifact.
-        "env": env,
-        # true when ANY session violated a CONTENTION threshold —
-        # the record self-identifies so r12.14-style tails can't be
-        # read as plan changes (VERDICT r12 wrong#1 / next#3)
-        "contended": contended,
-        "method": (f"{len(reports)} fresh-JVM sessions x (median-of-3 "
-                   "per query, cache cleared after every rep, GC "
-                   "between queries); "
-                   "headline = median session total"),
-    }
-    if contended:
-        report["contended_reasons"] = [
-            r for rs in per_sess_reasons for r in rs]
-    if errors:
-        report["errors"] = errors
-    slim_env = [{
-        "start": {"cpu_score_ms": (e.get("start") or {}).get("cpu_score_ms")},
-        "end": {"cpu_score_ms": (e.get("end") or {}).get("cpu_score_ms")},
-        "cpu_util_pct": e.get("cpu_util_pct"),
-        "steal_pct": e.get("steal_pct")} for e in env]
-    _emit(report, line={**report, "env": slim_env})
+    _emit(combine_sessions(reports))
 
 
 if __name__ == "__main__":

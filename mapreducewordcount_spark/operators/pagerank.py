@@ -28,17 +28,9 @@ scanned, never mutated. For long chains, ``localCheckpoint`` every
 ~10 rounds cuts lineage (the SemDeDup closure-loop precedent,
 ``operators/semdedup.py``); at 3 rounds it is unnecessary.
 
-The default contract requires a DANGLING-FREE edge set (every src
-also appears as a dst, e.g. by symmetrizing a bipartite relation) —
-the right shape for the gate's bipartite query. Real web/citation
-graphs have dangling nodes (out-degree 0); ``dangling="redistribute"``
-applies the standard treatment (Page et al.: a dangling node's rank
-is split uniformly over ALL nodes) at the cost of one extra
-aggregate per iteration — the dangling-mass sum, a 1-row frame
-crossJoined back in (broadcast by construction), never a driver
-action inside the loop. Total rank is then conserved up to the
-deterministic integer-div leaks (property-pinned in
-tests/test_pagerank.py).
+The contract requires a DANGLING-FREE edge set (every src also
+appears as a dst, e.g. by symmetrizing a bipartite relation) — the
+right shape for the gate's bipartite query.
 Reference parity: none (extension surface §2.5).
 """
 
@@ -52,30 +44,18 @@ R0 = 1_000_000  # one unit of rank, in micro-units
 
 def pagerank_fixed_point(edges: DataFrame, *, iterations: int = 3,
                          damping_num: int = 850,
-                         damping_denom: int = 1000,
-                         dangling: str = "contract") -> DataFrame:
+                         damping_denom: int = 1000) -> DataFrame:
     """Ranks after ``iterations`` fixed-point rounds.
 
     ``edges``: (src BIGINT, dst BIGINT) — deduplicated directed
     edges. Returns ``(node, rank)`` with rank in micro-units.
 
-    ``dangling="contract"`` (default): caller guarantees every node
-    with an in-edge also has an out-edge; the node universe is the
-    out-node set and no redistribution runs (the gate query's
-    symmetrized-bipartite shape). ``dangling="redistribute"``: the
-    node universe is src ∪ dst and each round adds the uniform
-    dangling share ``dangling_mass div n_nodes`` inside the damping
-    term — ``rank' = base + (d·(inbound + dmass div N)) div denom``,
-    still all-BIGINT, still engine/partitioning-invariant.
+    The caller guarantees every node with an in-edge also has an
+    out-edge; the node universe is the out-node set (the gate query's
+    symmetrized-bipartite shape).
     """
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
-    if dangling not in ("contract", "redistribute"):
-        raise ValueError(f"unknown dangling mode {dangling!r}")
-    if dangling == "redistribute":
-        return _pagerank_redistribute(edges, iterations=iterations,
-                                      damping_num=damping_num,
-                                      damping_denom=damping_denom)
     # deliberately NOT persisted: edges/degrees are reused every
     # iteration, but caching them hides their stats inside an
     # InMemoryRelation and AQE stops planning broadcast joins —
@@ -103,53 +83,6 @@ def pagerank_fixed_point(edges: DataFrame, *, iterations: int = 3,
                  .select("node",
                          (F.lit(base)
                           + F.expr(f"({damping_num} * coalesce(s, 0))"
-                                   f" div {damping_denom}"))
-                         .cast("long").alias("rank")))
-    return ranks
-
-
-def _pagerank_redistribute(edges: DataFrame, *, iterations: int,
-                           damping_num: int,
-                           damping_denom: int) -> DataFrame:
-    """Dangling-aware variant: node universe src ∪ dst; each round's
-    dangling mass (sum of ranks at out-degree-0 nodes) is shared
-    uniformly via a 1-row aggregate crossJoined back in — broadcast
-    by construction, O(nodes) extra work per round, no driver action
-    inside the loop."""
-    e = edges.select("src", "dst").distinct()
-    deg = e.groupBy(F.col("src").alias("node")) \
-           .agg(F.count(F.lit(1)).alias("deg"))
-    nodes = (e.select(F.col("src").alias("node"))
-              .unionByName(e.select(F.col("dst").alias("node")))
-              .distinct())
-    # out-degree per node, 0 for dangling — the 0 marks rows whose
-    # rank feeds the redistribution sum instead of the edge join
-    degall = (nodes.join(deg, "node", "left")
-                   .select("node", F.coalesce("deg", F.lit(0))
-                           .cast("long").alias("deg")))
-    n_nodes = nodes.agg(F.count(F.lit(1)).alias("n_nodes"))
-    ranks = nodes.select("node", F.lit(R0).cast("long").alias("rank"))
-    base = (R0 * (damping_denom - damping_num)) // damping_denom
-
-    for _ in range(iterations):
-        rd = ranks.join(degall, "node")
-        contrib = (rd.filter(F.col("deg") > 0)
-                     .select("node", F.expr("rank div deg").alias("c"))
-                     .join(e, F.col("node") == F.col("src"))
-                     .groupBy(F.col("dst").alias("node"))
-                     .agg(F.sum("c").alias("s")))
-        dmass = (rd.filter(F.col("deg") == 0)
-                   .agg(F.coalesce(F.sum("rank"), F.lit(0))
-                        .cast("long").alias("dmass")))
-        share = (dmass.crossJoin(n_nodes)  # 1×1 rows — broadcast NLJ
-                 .select(F.expr("dmass div n_nodes").alias("dshare")))
-        ranks = (nodes
-                 .join(contrib, "node", "left")
-                 .crossJoin(share)
-                 .select("node",
-                         (F.lit(base)
-                          + F.expr(f"({damping_num} *"
-                                   f" (coalesce(s, 0) + dshare))"
                                    f" div {damping_denom}"))
                          .cast("long").alias("rank")))
     return ranks

@@ -111,7 +111,9 @@ def _ship_package(spark: SparkSession) -> None:
     Ships once per SparkContext: ``get_spark`` and every ``load_table``
     call this (the correctness driver hands ``load_table`` sessions
     ``get_spark`` did not build), and only the first call on a context
-    hashes the package and adds the zip.
+    writes the zip and adds it. The zip goes into a directory of its
+    own that is removed when the Python process exits, so no session
+    leaves one behind in the temp dir.
     """
     import zipfile
 
@@ -119,22 +121,16 @@ def _ship_package(spark: SparkSession) -> None:
     if getattr(sc, "_mrwc_pkg_shipped", False):
         return
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    zip_path = os.path.join(tempfile.gettempdir(),
-                            f"mapreducewordcount_spark-{__spark_pkg_version()}.zip")
-    if not os.path.exists(zip_path):
-        # unique temp name per process: a shared fixed ".tmp" lets two
-        # concurrent sessions interleave writes and publish a corrupt zip
-        fd, tmp = tempfile.mkstemp(dir=os.path.dirname(zip_path),
-                                   suffix=".zip.tmp")
-        os.close(fd)
-        with zipfile.ZipFile(tmp, "w") as zf:
-            for root, _dirs, files in os.walk(pkg_dir):
-                for f in files:
-                    if f.endswith(".py"):
-                        full = os.path.join(root, f)
-                        rel = os.path.relpath(full, os.path.dirname(pkg_dir))
-                        zf.write(full, rel)
-        os.replace(tmp, zip_path)
+    zip_dir = tempfile.mkdtemp(prefix="mrwc-pkg-")
+    atexit.register(shutil.rmtree, zip_dir, True)
+    zip_path = os.path.join(zip_dir, "mapreducewordcount_spark-pkg.zip")
+    with zipfile.ZipFile(zip_path, "w") as zf:
+        for root, _dirs, files in os.walk(pkg_dir):
+            for f in files:
+                if f.endswith(".py"):
+                    full = os.path.join(root, f)
+                    rel = os.path.relpath(full, os.path.dirname(pkg_dir))
+                    zf.write(full, rel)
     sc.addPyFile(zip_path)
     # flagged only after a successful add: a failed ship leaves the
     # next call free to retry
@@ -179,18 +175,3 @@ def _skip_unchanged_zip_rereads() -> None:
 
     invalidate_caches.stamps = {}
     zipimport.zipimporter.invalidate_caches = invalidate_caches
-
-
-def __spark_pkg_version() -> str:
-    import hashlib
-
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    h = hashlib.sha256()
-    for root, _dirs, files in sorted(os.walk(pkg_dir)):
-        for f in sorted(files):
-            if f.endswith(".py"):
-                p = os.path.join(root, f)
-                h.update(p.encode())
-                with open(p, "rb") as fh:
-                    h.update(fh.read())
-    return h.hexdigest()[:12]

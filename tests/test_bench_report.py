@@ -1,84 +1,50 @@
-"""Bench report contract (VERDICT r10 wrong#4): the printed line must
-lead with the regression instrument (queries map + core_total before
-any fingerprint material) and the full report must go to the
-committed artifact — so a truncated driver capture still yields every
-per-query row to tools/compare_bench.py."""
+"""Bench report contract: the printed line leads with the regression
+instrument (the queries map and core_total), carries each session's
+``cpu_probe_s`` start/end readings, and is the harness's only output —
+``bench.py`` writes no file into the checkout."""
 
 from __future__ import annotations
 
 import json
+import os
+import subprocess
 import sys
+from pathlib import Path
+
+from tests.conftest import SF_SMOKE
+from tests.test_bucketed_stateful import _checkout_snapshot
+
+REPO = Path(__file__).resolve().parent.parent
+
+
+def _session_report(total, probes):
+    return {"metric": "headline_total", "value": total, "unit": "sec",
+            "core_total": total / 2,
+            "queries": {"q1_pricing_summary": total / 2,
+                        "q3_top_orders": total / 2},
+            "sf": "x", "subset": "headline", "method": "m",
+            "host": {"cpu_probe_s": probes}}
 
 
 def test_emit_orders_line_and_writes_artifact(tmp_path, monkeypatch,
                                               capsys):
+    """The combined line leads with queries and core_total, carries one
+    cpu_probe_s pair per session, and nothing lands under ``_REPO``
+    (the report is stdout only)."""
     import bench
 
     monkeypatch.setattr(bench, "_REPO", str(tmp_path))
-    monkeypatch.setenv("SPARK_GRAFT_CPUS", "4")
-    report = {"metric": "headline_total", "value": 1.0, "unit": "sec",
-              "core_total": 0.5, "queries": {"q1": 0.1, "q2": 0.2},
-              "sf": "x", "env": [{"start": {"big": "blob" * 100}}]}
-    line_report = {**report, "env": [{"start": {"cpu_score_ms": 93.0}}]}
-    bench._emit(report, line=line_report)
-    out = capsys.readouterr().out.strip().splitlines()[-1]
-    d = json.loads(out)
+    monkeypatch.chdir(tmp_path)
+    reports = [_session_report(2.0, [0.05, 0.06]),
+               _session_report(1.0, [0.05, 0.07])]
+    bench._emit(bench.combine_sessions(reports))
+    d = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     keys = list(d)
-    # queries + core_total precede env on the line (truncation-proof)
-    assert keys.index("core_total") < keys.index("env")
-    assert keys.index("queries") < keys.index("env")
-    # the line carries the slim env, the artifact the full one;
-    # with no BENCH_r*.json in the (tmp) repo root the round is 1
-    assert d["env"] == [{"start": {"cpu_score_ms": 93.0}}]
-    assert d["artifact"] == "artifacts/bench_r1.json"
-    art = json.load(open(tmp_path / "artifacts" / "bench_r1.json"))
-    assert art["env"][0]["start"]["big"] == "blob" * 100
-    assert art["queries"] == {"q1": 0.1, "q2": 0.2}
-    # bench_latest.json stays as the mutable convenience copy
-    latest = json.load(open(tmp_path / "artifacts" / "bench_latest.json"))
-    assert latest == art
-    # the headline summary is named by round AND core count, so a run
-    # on another core count cannot shadow it
-    assert [p.name for p in tmp_path.glob("BENCH_SUMMARY_*")] == \
-        ["BENCH_SUMMARY_r1_c4.json"]
-    summary = json.load(open(tmp_path / "BENCH_SUMMARY_r1_c4.json"))
-    assert summary["cpus"] == 4 and summary["round"] == 1
-
-
-def test_emit_per_round_artifacts_are_immutable(tmp_path, monkeypatch,
-                                                capsys):
-    """VERDICT r11 wrong#1: a second same-round run must NOT replace
-    the round's committed record — each _emit lands in a fresh file."""
-    import bench
-
-    monkeypatch.setattr(bench, "_REPO", str(tmp_path))
-    monkeypatch.setenv("SPARK_GRAFT_ROUND", "12")
-    first = {"metric": "headline_total", "value": 1.0, "unit": "sec",
-             "queries": {"q1": 0.1}}
-    second = {"metric": "headline_total", "value": 2.0, "unit": "sec",
-              "queries": {"q1": 0.9}}
-    bench._emit(first)
-    bench._emit(second)
-    lines = [json.loads(x) for x in
-             capsys.readouterr().out.strip().splitlines()]
-    assert lines[0]["artifact"] == "artifacts/bench_r12.json"
-    assert lines[1]["artifact"] == "artifacts/bench_r12.2.json"
-    a1 = json.load(open(tmp_path / "artifacts" / "bench_r12.json"))
-    a2 = json.load(open(tmp_path / "artifacts" / "bench_r12.2.json"))
-    assert a1["value"] == 1.0 and a2["value"] == 2.0  # both survive
-    latest = json.load(open(tmp_path / "artifacts" / "bench_latest.json"))
-    assert latest["value"] == 2.0  # convenience copy tracks the last run
-
-
-def test_round_no_from_committed_bench_files(tmp_path, monkeypatch):
-    import bench
-
-    monkeypatch.setattr(bench, "_REPO", str(tmp_path))
-    monkeypatch.delenv("SPARK_GRAFT_ROUND", raising=False)
-    assert bench._round_no() == 1
-    (tmp_path / "BENCH_r07.json").write_text("{}")
-    (tmp_path / "BENCH_r11.json").write_text("{}")
-    assert bench._round_no() == 12
+    assert keys[:8] == ["metric", "value", "unit", "core_total",
+                        "queries", "sf", "subset", "sessions"]
+    assert d["value"] == 2.0 and d["core_total"] == 1.0  # upper median
+    assert d["sessions"]["cpu_probe_s"] == [[0.05, 0.06], [0.05, 0.07]]
+    assert list(tmp_path.iterdir()) == []
 
 
 def test_salvage_recovers_leading_queries_from_truncation():
@@ -94,69 +60,6 @@ def test_salvage_recovers_leading_queries_from_truncation():
     assert len(rep["queries"]) >= 20
     assert rep["core_total"] == 3.3
     assert all(k.startswith("q") for k in rep["queries"])
-
-def test_round_no_ignores_seq_suffixed_root_files(tmp_path, monkeypatch):
-    """ADVICE r12: digit concatenation parsed BENCH_r12.2.json as
-    round 122; the anchored regex must read it as round 12 and skip
-    non-matching stems entirely."""
-    import bench
-
-    monkeypatch.setattr(bench, "_REPO", str(tmp_path))
-    monkeypatch.delenv("SPARK_GRAFT_ROUND", raising=False)
-    (tmp_path / "BENCH_r12.json").write_text("{}")
-    (tmp_path / "BENCH_r12.2.json").write_text("{}")
-    (tmp_path / "BENCH_report3.json").write_text("{}")  # no r\d+ prefix
-    assert bench._round_no() == 13
-
-
-def _fp(score=95.0, membw=6.0):
-    return {"cpu_score_ms": score, "membw_gbps": membw}
-
-
-def test_contention_reasons_synthetic_fingerprints():
-    """VERDICT r12 next#3: the bench record self-identifies a
-    contended window. Each threshold fires independently on a
-    synthetic condensed-session env; a clean window fires none."""
-    import bench
-
-    clean = {"start": _fp(), "end": _fp(96.0), "steal_pct": 0.2}
-    assert bench._contention_reasons(clean) == []
-
-    stolen = {"start": _fp(), "end": _fp(), "steal_pct": 3.88}
-    assert any("steal_pct" in r for r in
-               bench._contention_reasons(stolen))
-
-    drifted = {"start": _fp(90.0), "end": _fp(120.0), "steal_pct": 0.1}
-    assert any("drift" in r for r in
-               bench._contention_reasons(drifted))
-
-    starved = {"start": _fp(membw=2.9), "end": _fp(), "steal_pct": 0.1}
-    assert any("membw" in r for r in
-               bench._contention_reasons(starved))
-
-    # missing probes (old records, no numpy) must not flag
-    sparse = {"start": {"cpu_score_ms": None, "membw_gbps": None},
-              "end": {}, "steal_pct": None}
-    assert bench._contention_reasons(sparse) == []
-
-
-def test_run_session_report_carries_contended_flag(monkeypatch):
-    """The single-session shape (the driver's usual capture) gets the
-    flag computed from its own env_start/env_end — no fp_watch
-    cross-check needed to distrust a noisy record."""
-    import bench
-
-    report = {"queries": {"q1": 0.1},
-              "env_start": {"cpu_score_ms": 95.0, "membw_gbps": 6.1,
-                            "cpu_jiffies": {"busy": 100, "total": 1000,
-                                            "steal": 50}},
-              "env_end": {"cpu_score_ms": 96.0, "membw_gbps": 6.0,
-                          "cpu_jiffies": {"busy": 300, "total": 2000,
-                                          "steal": 90}}}
-    sess = bench._session_env(report)
-    assert sess["steal_pct"] == 4.0  # (90-50)/(2000-1000)
-    reasons = bench._contention_reasons(sess)
-    assert reasons and any("steal" in r for r in reasons)
 
 
 def test_compare_bench_refuses_cross_subset_value(capsys):
@@ -191,3 +94,22 @@ def test_compare_bench_refuses_cross_subset_value(capsys):
     assert "CONTENDED" in out
     assert "core_total: old" in out      # core is still comparable
     assert "value: old" not in out       # headline ratio suppressed
+
+
+def test_bench_run_writes_nothing_into_the_checkout():
+    """A real one-session, one-query ``bench.py`` run from the repo root
+    leaves the checkout as it found it and prints a line whose
+    ``host.cpu_probe_s`` holds the start and end readings."""
+    env = {**os.environ, "SPARK_GRAFT_BENCH_SESSIONS": "1",
+           "SPARK_GRAFT_BENCH_ONLY": "q1_pricing_summary",
+           "SPARK_GRAFT_SF_DIR": SF_SMOKE}
+    before = _checkout_snapshot()
+    proc = subprocess.run([sys.executable, "bench.py"], cwd=REPO, env=env,
+                          capture_output=True, text=True, timeout=600)
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert _checkout_snapshot() == before
+    d = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert list(d["queries"]) == ["q1_pricing_summary"]
+    assert d["queries"]["q1_pricing_summary"] > 0
+    probes = d["host"]["cpu_probe_s"]
+    assert len(probes) == 2 and all(p > 0 for p in probes)

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import importlib
 import os
+import subprocess
 import sys
 import zipfile
 import zipimport
@@ -194,3 +195,24 @@ def test_package_ships_once_per_context(spark):
     shipped = [p for p in spark.sparkContext._python_includes
                if p.startswith("mapreducewordcount_spark-")]
     assert len(shipped) == 1, spark.sparkContext._python_includes
+
+
+def test_package_zip_removed_at_exit(tmp_path):
+    """The zip ``get_spark`` ships lives in the temp dir only while the
+    process that wrote it runs: nothing is left behind at its exit."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = (
+        "import glob, os, tempfile\n"
+        "from mapreducewordcount_spark.session import get_spark\n"
+        "get_spark('zip-leak')\n"
+        "print(len(glob.glob(os.path.join(tempfile.gettempdir(), '**',"
+        " 'mapreducewordcount_spark-*.zip'), recursive=True)))\n")
+    env = {**os.environ, "TMPDIR": str(tmp_path),
+           "PYTHONPATH": os.pathsep.join(
+               [repo, os.environ.get("PYTHONPATH", "")])}
+    proc = subprocess.run([sys.executable, "-c", script], cwd=tmp_path,
+                          env=env, capture_output=True, text=True,
+                          timeout=300)
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert proc.stdout.strip().splitlines()[-1] == "1"  # shipped from here
+    assert list(tmp_path.rglob("mapreducewordcount_spark-*.zip")) == []

@@ -13,8 +13,10 @@ Reading the output:
 - ``cpu_score ratio`` far from 1.0 → different machine states; trust
   the normalized numbers and per-query RATIO SHAPE (uniform ≈ machine,
   mixed ≈ plan changes), not raw totals.
-- pre-round-9 reports carry no fingerprint → the tool says so and
-  prints raw ratios only.
+- reports from before round 9, and every report of the current
+  ``bench.py`` (which records ``cpu_probe_s`` start/end readings in
+  place of the fingerprint), carry no ``cpu_score_ms`` → the tool
+  says so and prints raw ratios only.
 """
 
 from __future__ import annotations
@@ -25,8 +27,6 @@ import sys
 
 
 def load(path: str) -> dict:
-    import os
-
     with open(path) as f:
         d = json.load(f)
     rep = d.get("parsed", d)  # driver wrapper or raw report
@@ -38,22 +38,6 @@ def load(path: str) -> dict:
         print(f"note: {path} carries no parsed report; "
               f"salvaged {len(rep.get('queries', {}))} query rows "
               "from its truncated tail")
-    # prefer the immutable per-round artifact the line points at
-    # (VERDICT r11 next#3): it is the lossless full report, and it
-    # cannot have been clobbered by a later same-round run the way
-    # bench_latest.json can. Resolve relative to the repo root
-    # (this file lives in tools/).
-    art = rep.get("artifact")
-    if isinstance(art, str) and art != "artifacts/bench_latest.json":
-        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        art_path = os.path.join(repo, art)
-        if os.path.exists(art_path):
-            with open(art_path) as f:
-                full = json.load(f)
-            if full.get("queries"):
-                print(f"note: {path} → using its committed artifact "
-                      f"{art}")
-                return full
     return rep
 
 
@@ -143,8 +127,8 @@ def main() -> None:
         cal = None
         missing = [n for n, s in (("old", s_old), ("new", s_new))
                    if not s]
-        print(f"no fingerprint in: {', '.join(missing)} "
-              "(pre-round-9 report) — raw ratios only")
+        print(f"no cpu_score_ms fingerprint in: {', '.join(missing)} "
+              "— raw ratios only")
 
     shared = sorted(q for q, v in old.get("queries", {}).items()
                     if v and new.get("queries", {}).get(q))
